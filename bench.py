@@ -540,7 +540,7 @@ def main() -> None:
     # total stays best-of-2 over the stable HEADLINE list for
     # round-over-round comparability.
     others: dict[str, float] = {}
-    loud_queries: dict[str, float] = {}
+    loud_queries: dict[str, dict] = {}
     errors: list[str] = []
     headline_set = set(HEADLINE)
     for name, entry in QUERIES.items():
@@ -681,6 +681,9 @@ def main() -> None:
                     "best3": round(best_t, 3),
                     **({"best3_steal": round(best_s, 2)} if best_s >= 0 else {}),
                     "applied": round(min(applied, t_sweep), 3),
+                    # the applied value is the prior round's timing, not
+                    # one measured in this session
+                    **({"capped_to_prior": True} if best_t < t_old < t_sweep else {}),
                 }
                 if applied < t_sweep:
                     if name in timings:

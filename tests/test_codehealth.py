@@ -5,7 +5,8 @@ sources/readers.py where the second definition silently shadowed the
 first — harmless there, but the class of bug (a later paste-in
 redefining an earlier symbol) is invisible at runtime. This walks every
 module in the package with ``ast`` and fails on any name bound twice at
-module or class scope by def/class statements.
+module or class scope by def/class statements. A second scan keeps
+temporary session-setting changes behind ``session.conf_scope``.
 """
 
 from __future__ import annotations
@@ -44,3 +45,54 @@ def test_no_duplicate_top_level_definitions():
         tree = ast.parse(py.read_text(), filename=str(py))
         problems.extend(_duplicate_defs(tree, str(py.relative_to(PKG.parent))))
     assert not problems, "shadowed definitions:\n" + "\n".join(problems)
+
+
+# Permanent session settings, allowed by (module, key): parquet files
+# with nanosecond timestamps can only be read with nanosAsLong on, for
+# the rest of the session.
+_PERMANENT_CONF_SETS = {
+    ("queries/registry.py", "spark.sql.legacy.parquet.nanosAsLong"),
+    ("streaming/jobs.py", "spark.sql.legacy.parquet.nanosAsLong"),
+}
+
+
+def _conf_flips(tree: ast.Module, rel: str) -> list[str]:
+    """Every ``<x>.conf.set(...)`` / ``<x>.conf.unset(...)`` call and
+    every name bound to ``<x>.conf`` (the aliasing way round the call
+    check), minus the permanent sets allowed above."""
+    found: list[str] = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("set", "unset")
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"
+        ):
+            key = node.args[0] if node.args else None
+            if (
+                isinstance(key, ast.Constant)
+                and (rel, key.value) in _PERMANENT_CONF_SETS
+            ):
+                continue
+            found.append(f"{rel}:{node.lineno} .conf.{node.func.attr}(...)")
+        elif (
+            isinstance(node, ast.Assign)
+            and isinstance(node.value, ast.Attribute)
+            and node.value.attr == "conf"
+        ):
+            found.append(f"{rel}:{node.lineno} alias of .conf")
+    return found
+
+
+def test_session_settings_change_only_through_conf_scope():
+    """A temporary session-setting change anywhere in the package goes
+    through ``session.conf_scope``, which restores (or unsets) every key
+    on exit; hand-rolled get/set/finally flips are rejected here."""
+    problems: list[str] = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        if rel == "session.py":
+            continue
+        problems.extend(_conf_flips(ast.parse(py.read_text(), filename=str(py)), rel))
+    assert not problems, "use session.conf_scope:\n" + "\n".join(problems)

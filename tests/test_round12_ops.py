@@ -85,10 +85,10 @@ def test_scc_broadcast_and_shuffle_twins_agree(spark, tmp_path):
     filed = spark.read.parquet(p)
     assert state_broadcast_ok(filed) is True  # broadcast form
     got_shuffle = sorted(
-        map(tuple, strongly_connected_components(mem, loop_partitions=4).collect())
+        map(tuple, strongly_connected_components(mem).collect())
     )
     got_bc = sorted(
-        map(tuple, strongly_connected_components(filed, loop_partitions=4).collect())
+        map(tuple, strongly_connected_components(filed).collect())
     )
     assert got_shuffle == got_bc
     comp = {n: c for n, c in got_shuffle}

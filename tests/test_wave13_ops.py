@@ -39,6 +39,31 @@ def test_lsh_tuning_rows_are_consistent(spark):
     assert probs == sorted(probs, reverse=True)
 
 
+def test_lsh_tuning_single_document_matches_oracle(spark, tmp_path):
+    """One document has no candidate pairs: the counts are 0, not NULL,
+    exactly as the DuckDB oracle's COUNT(*) reports them."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from ug_dwh_etl_spark.queries.registry import QUERIES
+
+    docs = str(tmp_path / "documents.parquet")
+    pq.write_table(pq.read_table(f"{SF}/documents.parquet").slice(0, 1), docs)
+    q = QUERIES["dedup_lsh_tuning_curve"]
+    rows = q.fn(spark, str(tmp_path)).collect()
+    assert rows and all(r.n_candidates == 0 and r.true_positives == 0 for r in rows)
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
+    want = con.execute(q.oracle).fetchall()
+    con.close()
+
+    def canon(rs):  # DuckDB returns DECIMAL where Spark returns double
+        return sorted(tuple(None if v is None else float(v) for v in r) for r in rs)
+
+    assert canon(rows) == canon(want)
+
+
 def test_langid_confusion_shares_sum_to_one(spark):
     rows = _run(spark, "text_langid_confusion").collect()
     by_true = {}

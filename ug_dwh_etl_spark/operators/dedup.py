@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.operators import hashing as H
+from ug_dwh_etl_spark.operators.graph import loop_posture
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -534,14 +535,11 @@ def near_dup_labels(
     the near-dup component (components with diameter > iterations would
     need more rounds, which at scale is the standard
     large-star/small-star loop over the same join shape)."""
-    spark = df.sparkSession
     # the label table is |docs|-sized and the pair graph is sparse — size
     # the iteration's shuffles to that, not the fact-table session
-    # default, and checkpoint the final result eagerly while the setting
+    # default, and checkpoint the final result eagerly while the posture
     # is active (same pattern + rationale as operators/graph.pagerank)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
+    with loop_posture(df, keep_aqe=True):
         pairs = minhash_lsh_pairs(df, id_col, text_col)
         edges = (
             pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
@@ -564,8 +562,6 @@ def near_dup_labels(
         result = labels.localCheckpoint(eager=True)
         edges.unpersist()
         return result
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def near_dup_clusters(

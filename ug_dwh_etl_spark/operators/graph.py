@@ -25,57 +25,45 @@ sf0.001); at 4 decimals the flip probability is ~1e-5 per row.
 
 from __future__ import annotations
 
+import contextlib
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
+from ug_dwh_etl_spark.session import conf_scope
+
 DAMPING = 0.85
 
-class _LoopConf:
-    """Runtime posture for an iterative |V|-state loop: size the loop's
-    shuffles to the (tiny) state AND disable AQE for the loop's
-    duration — AQE's per-stage re-optimization and query-stage
+
+@contextlib.contextmanager
+def loop_posture(
+    edges: DataFrame, local_default: int = 16, keep_aqe: bool = False
+) -> Iterator[None]:
+    """Runtime posture for an iterative |V|-state loop over ``edges``:
+    size the loop's shuffles to the (tiny) state AND disable AQE for the
+    loop's duration — AQE's per-stage re-optimization and query-stage
     materialization are pure overhead on kilobyte-scale state (measured
     at sf0.1: the 4-round BFS plan 3.9s -> 2.9s with AQE off, 2.3s with
-    the state side also broadcast). Every operator eagerly
-    localCheckpoints its result while the posture is active, so the
-    restore in __exit__ cannot affect the returned frame. At cluster
-    scale on skewed graphs, pass loop_partitions=None to keep AQE's
-    skew-join handling. ``keep_aqe=True`` sizes the shuffles but leaves
-    AQE on — the right posture for loops whose per-round work is
-    E-sized, not |V|-sized (the star-contraction rounds measured 5.0s
-    with AQE vs 8.3s without at sf0.1: AQE's partition coalescing DOES
-    pay when the loop moves the edge relation). No-op when
-    loop_partitions is None.
+    the state side also broadcast). Operators checkpoint their loop
+    state inside the block, so the loop runs at this posture even though
+    the confs are restored on exit, and release what they persisted.
+    ``keep_aqe=True`` sizes the shuffles but leaves AQE on — the right
+    posture for loops whose per-round work is E-sized, not |V|-sized
+    (the star-contraction rounds measured 5.0s with AQE vs 8.3s without
+    at sf0.1: AQE's partition coalescing DOES pay when the loop moves
+    the edge relation).
 
-    Callers size ``loop_partitions`` with ``derive_loop_partitions``
-    (implemented, not just documented): the count scales with the edge
-    relation's file count, so at warehouse scale the loop shuffles
-    grow with the data while the local fixture keeps the measured
-    local posture."""
-
-    def __init__(self, spark, loop_partitions, keep_aqe=False):
-        self.spark, self.n, self.prev = spark, loop_partitions, None
-        self.keep_aqe = keep_aqe
-
-    def __enter__(self):
-        if self.n is not None:
-            c = self.spark.conf
-            self.prev = (
-                c.get("spark.sql.shuffle.partitions"),
-                c.get("spark.sql.adaptive.enabled"),
-            )
-            c.set("spark.sql.shuffle.partitions", str(self.n))
-            if not self.keep_aqe:
-                c.set("spark.sql.adaptive.enabled", "false")
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is not None:
-            c = self.spark.conf
-            c.set("spark.sql.shuffle.partitions", self.prev[0])
-            c.set("spark.sql.adaptive.enabled", self.prev[1])
-        return False
-
+    The partition count comes from ``derive_loop_partitions``: it scales
+    with the edge relation's file count, so at warehouse scale the loop
+    shuffles grow with the data while the local fixture keeps the
+    measured local posture."""
+    n = derive_loop_partitions(edges, local_default)
+    confs = {"spark.sql.shuffle.partitions": str(n)}
+    if not keep_aqe:
+        confs["spark.sql.adaptive.enabled"] = "false"
+    with conf_scope(edges.sparkSession, confs):
+        yield
 
 
 def derive_loop_partitions(
@@ -136,13 +124,44 @@ def out_degrees(edges: DataFrame, src: str = "src") -> DataFrame:
     return edges.groupBy(src).agg(F.count(F.lit(1)).alias("outdeg"))
 
 
+def node_universe(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """(node) — every endpoint of the edge list, once."""
+    return (
+        edges.select(F.col(src).alias("node"))
+        .union(edges.select(F.col(dst).alias("node")))
+        .distinct()
+    )
+
+
+def _contribs(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(c_src, c_dst, w=1/outdeg(c_src)) — the PageRank contribution
+    edge list."""
+    return edges.join(out_degrees(edges, src), src).select(
+        F.col(src).alias("c_src"),
+        F.col(dst).alias("c_dst"),
+        (F.lit(1.0) / F.col("outdeg")).alias("w"),
+    )
+
+
+def _symmetric(
+    edges: DataFrame, src: str, dst: str, undirected: bool = False
+) -> DataFrame:
+    """(a, b) — the distinct undirected adjacency of the edge list;
+    ``undirected=True`` declares ``edges`` already is one (no shuffle)."""
+    sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    if undirected:
+        return sym
+    return sym.unionByName(
+        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    ).distinct()
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = DAMPING,
     src: str = "src",
     dst: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """(node, rank) after ``iterations`` synchronous updates.
 
@@ -150,34 +169,28 @@ def pagerank(
     nothing (the simple variant — matches the unrolled oracle exactly).
     Ranks start at 1.0; rank_{i+1} = (1-d) + d·Σ_in rank_i/outdeg.
 
-    ``loop_partitions`` sizes the iteration's shuffles: the loop state is
-    |V|-sized (node, inflow) rows, far smaller than the fact tables the
-    session's shuffle-partition default is tuned for, and per-iteration
-    task overhead multiplies by the iteration count (64 partitions is
-    4x slower than 16 on the sf0.1 graph). When set, the final result is
-    eagerly localCheckpoint-ed inside the call — the whole iteration
-    dataflow is planned and executed at this size, and the returned
-    frame carries no lineage (the iterative-algorithm checkpoint
-    pattern; at cluster scale use ``checkpoint`` to a reliable store).
+    The iteration's shuffles are sized by ``loop_posture``: the loop
+    state is |V|-sized (node, inflow) rows, far smaller than the fact
+    tables the session's shuffle-partition default is tuned for, and
+    per-iteration task overhead multiplies by the iteration count (64
+    partitions is 4x slower than 16 on the sf0.1 graph). The final
+    result is eagerly localCheckpoint-ed inside the call — the whole
+    iteration dataflow is planned and executed at this size, and the
+    returned frame carries no lineage (the iterative-algorithm
+    checkpoint pattern; at cluster scale use ``checkpoint`` to a
+    reliable store).
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    spark = edges.sparkSession
-    with _LoopConf(spark, loop_partitions):
+    with loop_posture(edges):
         # edges may be an expensive derivation (e.g. a distinct over a fact
         # table): persist it — it is scanned 3x building the invariants below
         edges = edges.persist()
-        nodes = (
-            edges.select(F.col(src).alias("node"))
-            .union(edges.select(F.col(dst).alias("node")))
-            .distinct()
-        )
-        deg = out_degrees(edges, src)
+        nodes = node_universe(edges, src, dst)
         # contribution edge list: (src, dst, 1/outdeg) — computed once,
         # reused every iteration (cache: it is the loop invariant)
         contrib_edges = (
-            edges.join(deg, src)
-            .select(F.col(src).alias("c_src"), F.col(dst).alias("c_dst"), (F.lit(1.0) / F.col("outdeg")).alias("w"))
+            _contribs(edges, src, dst)
             # persist hash-partitioned on the join key: every iteration's
             # join reuses this distribution, so only the (small) inflow side
             # shuffles per iteration — the edge relation moves ONCE total
@@ -208,17 +221,16 @@ def pagerank(
         result = nodes.join(inflow, "node", "left").select(
             "node", rank_of(F.col("inflow")).alias("rank")
         )
-        if loop_partitions is not None:
-            # one eager materialization while the lowered setting is
-            # active: the WHOLE iteration dataflow is planned and run at
-            # loop_partitions (conf is read at action time, which for a
-            # lazy return value would be after the finally restores it),
-            # and the returned frame carries no lineage to recompute
-            result = result.localCheckpoint(eager=True)
-            # checkpoint severed the lineage — the cached invariants
-            # can't be needed again; free them immediately
-            contrib_edges.unpersist()
-            edges.unpersist()
+        # one eager materialization while the posture is active: the
+        # WHOLE iteration dataflow is planned and run at the loop's
+        # partition count (conf is read at action time, which for a
+        # lazy return value would be after the posture is restored),
+        # and the returned frame carries no lineage to recompute
+        result = result.localCheckpoint(eager=True)
+        # checkpoint severed the lineage — the cached invariants can't
+        # be needed again; free them immediately
+        contrib_edges.unpersist()
+        edges.unpersist()
         return result
 
 
@@ -271,7 +283,6 @@ def pagerank_incremental(
     damping: float = DAMPING,
     src: str = "src",
     dst: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Maintain fixed-iteration PageRank under an EDGE DELTA without
     re-iterating the whole graph: incremental view maintenance of the
@@ -305,25 +316,15 @@ def pagerank_incremental(
     run, so per-day cost is the delta phase only."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    spark = edges_base.sparkSession
-    with _LoopConf(spark, loop_partitions):
+    with loop_posture(edges_full):
         d = damping
         rank_of = lambda c: F.lit(1.0 - d) + F.lit(d) * F.coalesce(c, F.lit(0.0))  # noqa: E731
         eb = edges_base.persist()
         ef = edges_full.persist()
-
-        def contribs(edges: DataFrame) -> DataFrame:
-            deg = out_degrees(edges, src)
-            return edges.join(deg, src).select(
-                F.col(src).alias("c_src"),
-                F.col(dst).alias("c_dst"),
-                (F.lit(1.0) / F.col("outdeg")).alias("w"),
-            )
-
-        ceb = contribs(eb).repartition("c_src").persist()
+        ceb = _contribs(eb, src, dst).repartition("c_src").persist()
         # changed contributions: full-outer on the edge key, keep rows
         # whose weight moved (new edge, or src out-degree changed)
-        j = contribs(ef).alias("f").join(
+        j = _contribs(ef, src, dst).alias("f").join(
             ceb.alias("b"),
             (F.col("f.c_src") == F.col("b.c_src"))
             & (F.col("f.c_dst") == F.col("b.c_dst")),
@@ -395,11 +396,7 @@ def pagerank_incremental(
                 t1.unionByName(t2).groupBy("node").agg(F.sum("dflow").alias("dinf"))
             )
 
-        nodes = (
-            ef.select(F.col(src).alias("node"))
-            .union(ef.select(F.col(dst).alias("node")))
-            .distinct()
-        )
+        nodes = node_universe(ef, src, dst)
         lb = inflow_b[-1].select(
             F.col("node").alias("bn"), F.col("inflow").alias("binf")
         )
@@ -424,7 +421,6 @@ def connected_components(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    loop_partitions: int | None = None,
     undirected: bool = False,
 ) -> DataFrame:
     """(node, component) after ``iterations`` rounds of BOUNDED
@@ -434,19 +430,13 @@ def connected_components(
     Same fixed dataflow as the dedup cluster operator
     (operators.dedup.near_dup_labels), generalized to any edge table:
     exactly unrollable into a SQL oracle, shuffles sized to the |V|
-    label table via ``loop_partitions``, eager localCheckpoint while
-    the sizing is active. ``undirected=True`` declares ``edges`` is
+    label table by ``loop_posture``, eager localCheckpoint while the
+    posture is active. ``undirected=True`` declares ``edges`` is
     already the symmetric distinct adjacency (skips one shuffle).
     Unbounded-diameter graphs need the large-star/small-star loop over
     the same join shape."""
-    spark = edges.sparkSession
-    with _LoopConf(spark, loop_partitions):
-        sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        if not undirected:
-            sym = sym.unionByName(
-                edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            ).distinct()
-        undirected_df = sym.persist()
+    with loop_posture(edges):
+        undirected_df = _symmetric(edges, src, dst, undirected).persist()
         labels = (
             undirected_df.select(F.col("a").alias("node"))
             .distinct()
@@ -465,9 +455,9 @@ def connected_components(
                 ).alias("label"),
             )
         result = labels.select("node", F.col("label").alias("component"))
-        # Cut the lineage and release the pinned edge relation on EVERY
-        # path — leaving the adjacency persisted for the session
-        # lifetime is the same leak class fixed in dedup.minhash_lsh_pairs.
+        # Cut the lineage and release the pinned edge relation —
+        # leaving the adjacency persisted for the session lifetime is
+        # the same leak class fixed in dedup.minhash_lsh_pairs.
         result = result.localCheckpoint(eager=True)
         undirected_df.unpersist()
         return result
@@ -512,7 +502,6 @@ def strongly_connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 50,
-    loop_partitions: int | None = None,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """(node, scc_id) — EXACT strongly connected components of a
@@ -540,7 +529,8 @@ def strongly_connected_components(
 
     Posture: every propagation step JOINS the full edge relation, so
     per-round work is E-sized, not |V|-sized — AQE stays on (measured
-    at sf0.1: 9.7s with AQE forced off vs 6.5s with it on).
+    at sf0.1: 9.7s with AQE forced off vs 6.5s with it on), and the
+    loop's shuffles start from 8 partitions, not 16.
 
     The label state is |V|-bounded, NOT broadcast-safe unconditionally
     (round-11 verdict): ``state_broadcast_ok`` gates the broadcast form
@@ -552,11 +542,10 @@ def strongly_connected_components(
     the (d, dir)-partitioned edge checkpoint, the state stays hash-
     partitioned on (node, dir) so consecutive steps and the convergence
     probe add NO exchange on the state side, and nothing |V|-sized is
-    ever collected to the driver (tools/scc_ab_probe.py is the twin A/B
-    harness; results verified equal)."""
-    spark = edges.sparkSession
+    ever collected to the driver (the two forms are verified equal in
+    tests/test_round12_ops.py)."""
     bc_state = state_broadcast_ok(edges)
-    with _LoopConf(spark, loop_partitions, keep_aqe=True):
+    with loop_posture(edges, local_default=8, keep_aqe=True):
         # assume_distinct: the caller guarantees one row per edge (e.g.
         # a materialized artifact whose build ends in distinct()) — skip
         # the redundant dedup shuffle + its eager checkpoint job
@@ -564,12 +553,7 @@ def strongly_connected_components(
         if not assume_distinct:
             e0 = e0.distinct()
         e0 = e0.localCheckpoint(eager=True)
-        nodes = (
-            e0.select(F.col("s").alias("node"))
-            .union(e0.select(F.col("d").alias("node")))
-            .distinct()
-        )
-        active = nodes.select(
+        active = node_universe(e0, "s", "d").select(
             "node", F.lit("0").alias("color")
         ).localCheckpoint(eager=True)
 
@@ -748,7 +732,6 @@ def connected_components_converged(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int = 50,
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """(node, component) by alternating large-star/small-star
     contraction to a FIXPOINT — the production unbounded-diameter
@@ -768,9 +751,8 @@ def connected_components_converged(
     graphs, 2-5 rounds on real link graphs; eager localCheckpoint per
     round cuts the growing lineage exactly like the PageRank loop.
     Rounds are E-sized (the star steps move the edge relation), so
-    this loop keeps AQE on — see _LoopConf."""
-    spark = edges.sparkSession
-    with _LoopConf(spark, loop_partitions, keep_aqe=True):
+    this loop keeps AQE on — see ``loop_posture``."""
+    with loop_posture(edges, keep_aqe=True):
         e = (
             edges.select(
                 F.greatest(F.col(src), F.col(dst)).alias("u"),
@@ -849,7 +831,6 @@ def personalized_pagerank(
     damping: float = DAMPING,
     src: str = "src",
     dst: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass concentrated on ``seeds``
     (a (node) frame) instead of spread uniformly — rank_{i+1}(v) =
@@ -861,14 +842,9 @@ def personalized_pagerank(
     tiny and broadcast into the node table once."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    spark = edges.sparkSession
-    with _LoopConf(spark, loop_partitions):
+    with loop_posture(edges):
         edges = edges.persist()
-        nodes = (
-            edges.select(F.col(src).alias("node"))
-            .union(edges.select(F.col(dst).alias("node")))
-            .distinct()
-        )
+        nodes = node_universe(edges, src, dst)
         n_seeds = seeds.select(F.col("node")).distinct().agg(
             F.count(F.lit(1)).alias("ns")
         )
@@ -887,17 +863,7 @@ def personalized_pagerank(
             )
             .persist()
         )
-        deg = out_degrees(edges, src)
-        ce = (
-            edges.join(deg, src)
-            .select(
-                F.col(src).alias("c_src"),
-                F.col(dst).alias("c_dst"),
-                (F.lit(1.0) / F.col("outdeg")).alias("w"),
-            )
-            .repartition("c_src")
-            .persist()
-        )
+        ce = _contribs(edges, src, dst).repartition("c_src").persist()
         rank = tp.select("node", F.col("p").alias("rank"))
         for _ in range(iterations):
             inflow = (
@@ -953,9 +919,7 @@ def sql_personalized_pagerank(
     return "WITH " + ",\n    ".join(parts)
 
 
-def kcore_rounds(
-    edges: DataFrame, k: int, rounds: int, loop_partitions: int | None = None
-) -> DataFrame:
+def kcore_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     """Bounded k-core peeling: repeatedly drop nodes of degree < k (and
     their edges) for a FIXED number of rounds, reporting
     (round, n_nodes, n_edges) after each peel — the degeneracy-ordering
@@ -972,7 +936,11 @@ def kcore_rounds(
     unrollable as the DuckDB oracle (``sql_kcore_rounds``). The full
     peel-to-fixpoint variant would loop until the edge count is stable
     (same convergence harness as ``connected_components_converged``).
+    Each round's surviving edges are re-keyed on ``a`` into
+    ``derive_loop_partitions`` partitions; the result stays lazy, so no
+    session setting is scoped around it.
     """
+    n_parts = derive_loop_partitions(edges, 16)
     stats: list[DataFrame] = []
     e = edges.select("a", "b").localCheckpoint(eager=False)
     for r in range(rounds + 1):
@@ -995,9 +963,7 @@ def kcore_rounds(
             .join(keep.select(F.col("node").alias("b")), "b", "left_semi")
             .select("a", "b")
         )
-        if loop_partitions:
-            e = e.repartition(loop_partitions, "a")
-        e = e.localCheckpoint(eager=False)
+        e = e.repartition(n_parts, "a").localCheckpoint(eager=False)
     out = stats[0]
     for s in stats[1:]:
         out = out.unionByName(s)
@@ -1034,7 +1000,6 @@ def hits(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """(node, side, score) — HITS hub/authority scores after a fixed
     number of synchronous update rounds (Kleinberg 1999; the reference
@@ -1055,12 +1020,11 @@ def hits(
     dst-copy's partitioning, every hub update the src-copy's, so edges
     shuffle once per cached copy for the whole run and only the
     |V|-sized score vectors move per iteration (the pagerank pattern,
-    ``pagerank`` above). ``loop_partitions`` sizes those |V| shuffles.
+    ``pagerank`` above). ``loop_posture`` sizes those |V| shuffles.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    spark = edges.sparkSession
-    with _LoopConf(spark, loop_partitions):
+    with loop_posture(edges):
         e = edges.select(F.col(src).alias("s"), F.col(dst).alias("p"))
         e_by_s = e.repartition("s").persist()
         e_by_p = e.repartition("p").persist()
@@ -1137,7 +1101,6 @@ def bfs_distances(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    loop_partitions: int | None = None,
     undirected: bool = False,
 ) -> DataFrame:
     """(node, dist) — minimum hop distance from any seed node within
@@ -1159,7 +1122,6 @@ def bfs_distances(
     harness as ``connected_components_converged`` (stop when the
     reached count is stable).
     """
-    spark = edges.sparkSession
     # decide ONCE, from the edge relation's measured footprint, whether
     # the growing reached set may be broadcast (state_broadcast_ok). At
     # fixture scale it may (the r11 plan, zero reshuffles of the
@@ -1167,13 +1129,8 @@ def bfs_distances(
     # shuffle join against the persisted pre-partitioned adjacency —
     # the 100 TB plan (the adjacency side still never moves).
     bc_state = state_broadcast_ok(edges)
-    with _LoopConf(spark, loop_partitions):
-        sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        if not undirected:
-            sym = sym.unionByName(
-                edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-            ).distinct()
-        und = sym.repartition("a").persist()
+    with loop_posture(edges):
+        und = _symmetric(edges, src, dst, undirected).repartition("a").persist()
         dist = seeds.select("node", F.lit(0).alias("dist"))
         for _ in range(rounds):
             reached = F.broadcast(dist) if bc_state else dist
@@ -1217,7 +1174,6 @@ def label_propagation(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    loop_partitions: int | None = None,
 ) -> DataFrame:
     """(node, community) after ``rounds`` SYNCHRONOUS label-propagation
     updates over the undirected view (Raghavan et al. 2007): each node
@@ -1234,18 +1190,11 @@ def label_propagation(
     Scale shape: per round, one join of the |V|-sized label table
     against the once-shuffled adjacency relation, one (node, label)
     count, one per-node argmax window PARTITIONED by node — all keyed
-    shuffles sized by ``loop_partitions``. Synchronous LPA on bipartite
+    shuffles sized by ``loop_posture``. Synchronous LPA on bipartite
     graphs can oscillate; a bounded round count is the standard remedy
     (and what makes the result well-defined)."""
-    spark = edges.sparkSession
-    with _LoopConf(spark, loop_partitions):
-        und = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-            .distinct()
-            .repartition("b")
-            .persist()
-        )
+    with loop_posture(edges):
+        und = _symmetric(edges, src, dst).repartition("b").persist()
         labels = und.select(F.col("a").alias("node")).distinct().select(
             "node", F.col("node").alias("label")
         )

@@ -100,26 +100,24 @@ def backfill_run(
         "bq_orphan_urls": e5_orphan_urls,
         "bq_backlinks": e7_backlink_metrics,
     }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for tbl, fn in appends.items():
-            # compute the (date-independent) table ONCE and persist it
-            # across the date loop — per-(date,table) recompute would
-            # multiply the scan+transform cost by len(dates)
-            base = fn(spark, sf_dir).persist()
-            try:
-                for d in dates:
-                    (
-                        base.withColumn("crawl_date", F.lit(d).cast("date"))
-                        .write.mode("overwrite")
-                        .partitionBy("crawl_date")
-                        .parquet(f"{warehouse_dir}/{tbl}")
-                    )
-            finally:
-                base.unpersist()
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    for tbl, fn in appends.items():
+        # compute the (date-independent) table ONCE and persist it
+        # across the date loop — per-(date,table) recompute would
+        # multiply the scan+transform cost by len(dates)
+        base = fn(spark, sf_dir).persist()
+        try:
+            for d in dates:
+                (
+                    base.withColumn("crawl_date", F.lit(d).cast("date"))
+                    .write.mode("overwrite")
+                    # per-write, not the session conf: concurrent
+                    # pipelines on the same session keep their own mode
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("crawl_date")
+                    .parquet(f"{warehouse_dir}/{tbl}")
+                )
+        finally:
+            base.unpersist()
     return {
         tbl: spark.read.parquet(f"{warehouse_dir}/{tbl}").count()
         for tbl in appends

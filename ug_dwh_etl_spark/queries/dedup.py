@@ -1004,9 +1004,7 @@ def embed_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = embedding_cosine_pairs(
         table(spark, sf_dir, "embeddings"), "vec_id", "embedding", 0.3
     ).select("id_a", "id_b")
-    comp = connected_components_converged(
-        pairs, src="id_a", dst="id_b", loop_partitions=16
-    )
+    comp = connected_components_converged(pairs, src="id_a", dst="id_b")
     return (
         comp.groupBy(F.col("component").alias("cluster_id"))
         .agg(F.count(F.lit(1)).alias("n_vecs"))
@@ -1286,20 +1284,16 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             cond = c if cond is None else (cond | c)
         return cond
 
+    def n_rows(cond):
+        # an empty candidate set sums to NULL; the oracle's COUNT(*) is 0
+        return F.coalesce(F.sum(F.when(cond, 1).otherwise(0)), F.lit(0)).cast("long")
+
     aggs = []
     for bands, rows in _LSH_CONFIGS:
         tag = f"{bands}_{rows}"
+        aggs.append(n_rows(is_cand(bands, rows)).alias(f"nc_{tag}"))
         aggs.append(
-            F.sum(F.when(is_cand(bands, rows), 1).otherwise(0))
-            .cast("long")
-            .alias(f"nc_{tag}")
-        )
-        aggs.append(
-            F.sum(
-                F.when(is_cand(bands, rows) & F.col("it").isNotNull(), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias(f"tp_{tag}")
+            n_rows(is_cand(bands, rows) & F.col("it").isNotNull()).alias(f"tp_{tag}")
         )
     stats = flagged.agg(*aggs).crossJoin(
         F.broadcast(
@@ -1476,9 +1470,7 @@ def dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     vp = verify_pairs_jaccard(docs, pairs, "doc_id", "text", 0.5).select(
         "id_a", "id_b"
     )
-    comp = connected_components_converged(
-        vp, src="id_a", dst="id_b", loop_partitions=16
-    )
+    comp = connected_components_converged(vp, src="id_a", dst="id_b")
     qual = quality_scores(docs, "doc_id", "text").select("doc_id", "alpha_ratio")
     mem = comp.join(qual, comp["node"] == qual["doc_id"]).select(
         F.col("component").alias("cluster_id"), "doc_id", "alpha_ratio"

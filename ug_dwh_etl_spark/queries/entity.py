@@ -178,9 +178,7 @@ def _er_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         pairs = _candidate_pairs(spark, sf_dir).select("id_a", "id_b")
-        return connected_components_converged(
-            pairs, src="id_a", dst="id_b", loop_partitions=16
-        )
+        return connected_components_converged(pairs, src="id_a", dst="id_b")
 
     return materialize_once(spark, sf_dir, "er_components", build)
 

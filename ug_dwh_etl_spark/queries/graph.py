@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.operators.graph import (
-    derive_loop_partitions as _lp,
+    node_universe,
     pagerank,
     pagerank_incremental,
     strongly_connected_components,
@@ -22,6 +22,7 @@ from ug_dwh_etl_spark.operators.graph import (
     sql_pagerank,
 )
 from ug_dwh_etl_spark.queries.registry import register, table
+from ug_dwh_etl_spark.session import conf_scope
 
 # supplier s<k> links to part p<k>; prefixes keep the two node
 # namespaces disjoint so the graph is a real bipartite link graph
@@ -52,8 +53,7 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("graph_pagerank", sql_pagerank(_EDGES_SQL, iterations=3))
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _edges(spark, sf_dir)
-    ranks = pagerank(e, iterations=3, loop_partitions=_lp(e, 16))
+    ranks = pagerank(_edges(spark, sf_dir), iterations=3)
     return ranks.select("node", F.round("rank", 4).alias("rank"))
 
 
@@ -117,12 +117,10 @@ def graph_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the 4dp half-grid (14.34925 at sf0.001), where even cold Spark
     vs DuckDB flips; measured 3dp margins are >=2.6e-7 at both SFs,
     ~1e7x the float-order noise."""
-    ef = _ivm_edges(spark, sf_dir, base_only=False)
     ranks = pagerank_incremental(
         _ivm_edges(spark, sf_dir, base_only=True),
-        ef,
+        _ivm_edges(spark, sf_dir, base_only=False),
         iterations=3,
-        loop_partitions=_lp(ef, 16),
     )
     return ranks.select("node", F.round("rank", 3).alias("rank"))
 
@@ -180,7 +178,7 @@ def graph_cheirank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _edges(spark, sf_dir).select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )
-    ranks = pagerank(edges, iterations=3, loop_partitions=_lp(edges, 16))
+    ranks = pagerank(edges, iterations=3)
     return ranks.select("node", F.round("rank", 4).alias("rank"))
 
 
@@ -220,8 +218,7 @@ def graph_components_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration count."""
     from ug_dwh_etl_spark.operators.graph import connected_components_converged
 
-    ce = _community_edges(spark, sf_dir)
-    comp = connected_components_converged(ce, loop_partitions=_lp(ce, 16))
+    comp = connected_components_converged(_community_edges(spark, sf_dir))
     return (
         comp.groupBy(F.col("component"))
         .agg(F.count(F.lit(1)).alias("n_nodes"))
@@ -329,13 +326,11 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded dataflow, so the comparison is exact either way."""
     from ug_dwh_etl_spark.operators.graph import connected_components
 
-    cu = _community_und(spark, sf_dir)
     comp = connected_components(
-        cu,
+        _community_und(spark, sf_dir),
         iterations=3,
         src="a",
         dst="b",
-        loop_partitions=_lp(cu, 16),
         undirected=True,
     )
     return (
@@ -466,10 +461,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    e = _edges(spark, sf_dir)
-    ranks = personalized_pagerank(
-        e, seeds, iterations=3, loop_partitions=_lp(e, 16)
-    )
+    ranks = personalized_pagerank(_edges(spark, sf_dir), seeds, iterations=3)
     return (
         ranks.filter(F.col("rank") > 0)
         .select("node", F.round(F.col("rank") * 1000, 6).alias("rank_permille"))
@@ -507,7 +499,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # the shared artifact is already the distinct pair set
     from ug_dwh_etl_spark.operators.graph import kcore_rounds
 
-    return kcore_rounds(edges, k=4, rounds=3, loop_partitions=_lp(edges, 16))
+    return kcore_rounds(edges, k=4, rounds=3)
 
 
 # --- common-neighbor link prediction -------------------------------------------
@@ -604,8 +596,7 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid argument as graph_pagerank)."""
     from ug_dwh_etl_spark.operators.graph import hits
 
-    e = _edges(spark, sf_dir)
-    scores = hits(e, iterations=3, loop_partitions=_lp(e, 16))
+    scores = hits(_edges(spark, sf_dir), iterations=3)
     return scores.select("node", "side", F.round("score", 4).alias("score"))
 
 
@@ -633,14 +624,12 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.concat(F.lit("s"), F.col("s_suppkey").cast("string")).alias("node"))
         .distinct()
     )
-    und = _und(spark, sf_dir)
     d = bfs_distances(
-        und,
+        _und(spark, sf_dir),
         seeds,
         rounds=4,
         src="a",
         dst="b",
-        loop_partitions=_lp(und, 16),
         undirected=True,
     )
     return d.select("node", F.col("dist").cast("int").alias("dist"))
@@ -662,11 +651,7 @@ def _lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "lpa_partition",
-        lambda: label_propagation(
-            _edges(spark, sf_dir),
-            rounds=3,
-            loop_partitions=_lp(_edges(spark, sf_dir), 16),
-        ),
+        lambda: label_propagation(_edges(spark, sf_dir), rounds=3),
     )
 
 
@@ -1171,9 +1156,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     precisely because the fixture's blocks bound it; the Spark side
     never materializes closure pairs (state is |V| labels)."""
     se = _scc_edges(spark, sf_dir)
-    comp = strongly_connected_components(
-        se, loop_partitions=_lp(se, 8), assume_distinct=True
-    )
+    comp = strongly_connected_components(se, assume_distinct=True)
     return comp.groupBy("scc_id").agg(F.count(F.lit(1)).alias("n_members"))
 
 
@@ -1279,22 +1262,13 @@ def graph_anf_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the entire point vs materializing reachable sets."""
     from ug_dwh_etl_spark.operators import hashing as H
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
         return _anf_run(spark, sf_dir, H)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _anf_run(spark: SparkSession, sf_dir: str, H) -> DataFrame:
     edges = _ivm_edges(spark, sf_dir, base_only=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    hashed = nodes.select(
+    hashed = node_universe(edges).select(
         "node",
         *[
             H.md5_long(F.concat(F.col("node"), F.lit(f"|anf{r}"))).alias(f"h{r}")

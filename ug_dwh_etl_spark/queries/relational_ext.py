@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.queries.registry import register, table
+from ug_dwh_etl_spark.session import conf_scope
 
 
 # --- min/max-per-group (TPC-H Q2 shape: correlated subquery → window) ---------
@@ -1601,17 +1602,8 @@ def join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bloom false positives only let extra rows REACH the join, which
     drops them — the result is exact, hence the plain-join oracle.
     The injected filter is plan-asserted in tests/test_pushdown.py."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, _BLOOM_CONFS):
         return bloom_pruned_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # --- gaps-and-islands: merge overlapping per-customer order windows ------------

@@ -9,9 +9,33 @@ upper bound for the local scale factors.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
+
+
+@contextlib.contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, object]) -> Iterator[None]:
+    """Set session confs for the duration of the block and restore each
+    on exit; a key that had no value before is unset again. The one
+    place in the package that changes a session setting temporarily —
+    a plan that must run under the scoped values has to execute (e.g.
+    an eager localCheckpoint) inside the block, because confs are read
+    at action time."""
+    c = spark.conf
+    prev = {k: c.get(k, None) for k in confs}
+    for k, v in confs.items():
+        c.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                c.unset(k)
+            else:
+                c.set(k, v)
 
 
 def cpu_count() -> int:

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 from pyspark.sql.types import LongType, StructType
 
+from ug_dwh_etl_spark.session import conf_scope
+
 # Final StreamingQueryProgress of the most recent run_stream_to_memory
 # run (dict, or None before any run) — state-store row counts for
 # observability and the scale probe.
@@ -126,35 +128,31 @@ def run_stream_to_memory(
     thousand keys; a cluster deployment passes ~2-3x total cores."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        with _checkpoint_dir(None, f"ckpt_{name}_") as ckpt:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            # expose the final progress for observability/scale probes
-            # (state-store row counts per stateful operator); module-level
-            # because callers only see the returned batch DataFrame
-            global LAST_PROGRESS, LAST_BATCH_PLAN
-            LAST_PROGRESS = q.lastProgress
-            # last micro-batch's EXECUTED physical plan, for the same
-            # anti-pattern audit the batch queries get (tools/
-            # audit_plans.py) — must be read before stop() drops the
-            # execution; explainInternal(True) is the py4j spelling of
-            # StreamingQuery.explain(extended=True)
-            try:
-                LAST_BATCH_PLAN = q._jsq.explainInternal(True)
-            except Exception:
-                LAST_BATCH_PLAN = None
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    state = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    with conf_scope(spark, state), _checkpoint_dir(None, f"ckpt_{name}_") as ckpt:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        # expose the final progress for observability/scale probes
+        # (state-store row counts per stateful operator); module-level
+        # because callers only see the returned batch DataFrame
+        global LAST_PROGRESS, LAST_BATCH_PLAN
+        LAST_PROGRESS = q.lastProgress
+        # last micro-batch's EXECUTED physical plan, for the same
+        # anti-pattern audit the batch queries get (tools/
+        # audit_plans.py) — must be read before stop() drops the
+        # execution; explainInternal(True) is the py4j spelling of
+        # StreamingQuery.explain(extended=True)
+        try:
+            LAST_BATCH_PLAN = q._jsq.explainInternal(True)
+        except Exception:
+            LAST_BATCH_PLAN = None
     return spark.table(name)
 
 

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ug_dwh_etl_spark.session import conf_scope
 from ug_dwh_etl_spark.streaming.jobs import read_events_stream, run_stream_to_memory
 
 # state keeps the value total as integer CENTS, not a double: the state
@@ -133,23 +134,7 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    # transformWithState is only supported on the RocksDB state store
-    # (the JNI lib ships inside Spark's own jars); scope the provider
-    # switch to this query — the HDFS-backed default stays in place for
-    # every other stateful op
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_stream_to_memory(updated, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
+    out = _with_rocksdb(spark, lambda: run_stream_to_memory(updated, "update"))
     return out.groupBy("user_id").agg(
         F.max("n_events_cum").alias("n_events"),
         F.round(F.max("total_value_cum"), 2).alias("total_value"),
@@ -220,19 +205,7 @@ def stream_user_type_counts_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_stream_to_memory(updated, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
+    out = _with_rocksdb(spark, lambda: run_stream_to_memory(updated, "update"))
     return out.groupBy("user_id").agg(
         F.max("n_types_cum").alias("n_types"),
         F.max("n_events_cum").alias("n_events"),
@@ -345,19 +318,7 @@ def stream_user_median_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_stream_to_memory(updated, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
+    out = _with_rocksdb(spark, lambda: run_stream_to_memory(updated, "update"))
     # the complete-data row per user = the one with the largest n_cum
     # (monotone); min-of-struct argmax, no window
     return (
@@ -1164,22 +1125,13 @@ def _session_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _with_rocksdb(spark: SparkSession, run) -> DataFrame:
-    """transformWithState is only supported on the RocksDB state store;
-    scope the provider switch to the wrapped run (the stream_user_totals
-    _tws convention, factored for the timer/TTL queries)."""
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    """transformWithState is only supported on the RocksDB state store
+    (the JNI lib ships inside Spark's own jars); scope the provider
+    switch to the wrapped run — the HDFS-backed default stays in place
+    for every other stateful op."""
+    provider = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with conf_scope(spark, {"spark.sql.streaming.stateStore.providerClass": provider}):
         return run()
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
 
 
 def stream_session_timeout_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1317,45 +1269,41 @@ def _run_stream_drain_then_stop(
 
     name = f"mem_{_uuid.uuid4().hex[:12]}"
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        with _checkpoint_dir(None, f"ckpt_{name}_") as ckpt:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            deadline = _time.time() + 300
-            saw_data = False
-            while q.isActive and _time.time() < deadline:
-                if q.awaitTermination(0.25):
-                    break
-                p = q.lastProgress
-                if p is None:
-                    continue
-                if p["numInputRows"] > 0:
-                    saw_data = True
-                elif saw_data:
-                    break  # a no-data batch after data: source drained
-            # expose progress + the executed micro-batch plan to the
-            # plan audit (run_stream_to_memory convention) BEFORE stop()
-            # drops the execution
-            from ug_dwh_etl_spark.streaming import jobs as _jobs
+    state = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    with conf_scope(spark, state), _checkpoint_dir(None, f"ckpt_{name}_") as ckpt:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        deadline = _time.time() + 300
+        saw_data = False
+        while q.isActive and _time.time() < deadline:
+            if q.awaitTermination(0.25):
+                break
+            p = q.lastProgress
+            if p is None:
+                continue
+            if p["numInputRows"] > 0:
+                saw_data = True
+            elif saw_data:
+                break  # a no-data batch after data: source drained
+        # expose progress + the executed micro-batch plan to the
+        # plan audit (run_stream_to_memory convention) BEFORE stop()
+        # drops the execution
+        from ug_dwh_etl_spark.streaming import jobs as _jobs
 
-            _jobs.LAST_PROGRESS = q.lastProgress
-            try:
-                _jobs.LAST_BATCH_PLAN = q._jsq.explainInternal(True)
-            except Exception:
-                _jobs.LAST_BATCH_PLAN = None
-            q.stop()
-            q.awaitTermination()
-        return spark.table(name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        _jobs.LAST_PROGRESS = q.lastProgress
+        try:
+            _jobs.LAST_BATCH_PLAN = q._jsq.explainInternal(True)
+        except Exception:
+            _jobs.LAST_BATCH_PLAN = None
+        q.stop()
+        q.awaitTermination()
+    return spark.table(name)
 
 
 def stream_user_totals_ttl_tws(
