@@ -6,7 +6,9 @@ first — harmless there, but the class of bug (a later paste-in
 redefining an earlier symbol) is invisible at runtime. This walks every
 module in the package with ``ast`` and fails on any name bound twice at
 module or class scope by def/class statements. A second scan keeps
-temporary session-setting changes behind ``session.conf_scope``.
+temporary session-setting changes behind ``session.conf_scope``, a
+third fails on package definitions no user path reaches, and a fourth
+on scratch paths keyed by the process id.
 """
 
 from __future__ import annotations
@@ -96,3 +98,186 @@ def test_session_settings_change_only_through_conf_scope():
             continue
         problems.extend(_conf_flips(ast.parse(py.read_text(), filename=str(py)), rel))
     assert not problems, "use session.conf_scope:\n" + "\n".join(problems)
+
+
+# --- reachability -----------------------------------------------------------
+#
+# User paths: registered queries, ``__spark_entry__.py``, the bench and
+# perfbench CLIs, ``python -m ug_dwh_etl_spark`` and ``tools/``. A
+# top-level package definition none of them reaches is code only the
+# tests keep alive (or nothing at all).
+
+REPO = PKG.parent
+_ENTRY_FILES = (
+    REPO / "__spark_entry__.py",
+    REPO / "bench.py",
+    PKG / "__main__.py",
+    *sorted((REPO / "tools").glob("*.py")),
+    *sorted((REPO / "perfbench").glob("*.py")),
+)
+
+
+def _modname(path: pathlib.Path) -> str:
+    parts = list(path.relative_to(REPO).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+class _Mod:
+    def __init__(self, path: pathlib.Path) -> None:
+        self.path = path
+        self.name = _modname(path)
+        self.tree = ast.parse(path.read_text(), filename=str(path))
+        self.defs = {
+            n.name: n
+            for n in self.tree.body
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        }
+        # every import binding in the file, function-local ones included
+        self.aliases: dict[str, tuple[str, str | None]] = {}
+        for node in ast.walk(self.tree):
+            for local, target in self.imports(node):
+                self.aliases[local] = target
+
+    def imports(self, node: ast.AST) -> list[tuple[str, tuple[str, str | None]]]:
+        """(local name, (module, symbol or None)) bound by an import
+        (the repo has no relative imports)."""
+        if isinstance(node, ast.Import):
+            return [
+                (a.asname, (a.name, None)) if a.asname
+                else (a.name.split(".")[0], (a.name.split(".")[0], None))
+                for a in node.names
+            ]
+        if isinstance(node, ast.ImportFrom):
+            return [(a.asname or a.name, (node.module, a.name)) for a in node.names]
+        return []
+
+
+def _unreached_package_defs() -> dict[str, int]:
+    """``{"<path> <name>": line}`` for every top-level package def or
+    class no user path reaches."""
+    mods = {m.name: m for m in map(_Mod, sorted(PKG.rglob("*.py")))}
+    entries = [mods.get(_modname(p)) or _Mod(p) for p in _ENTRY_FILES]
+    seen: set[tuple[str, str | None]] = set()
+    todo: list[tuple[str, str | None]] = []
+
+    def mark(mod: str, name: str | None = None) -> None:
+        if mod not in mods:
+            return
+        if name is not None:
+            m = mods[mod]
+            if f"{mod}.{name}" in mods:
+                mod, name = f"{mod}.{name}", None
+            elif name not in m.defs:
+                if name in m.aliases:  # a re-export
+                    mark(*m.aliases[name])
+                return
+        # importing a module runs its parent packages too
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):
+            key = (".".join(parts[:i]), None)
+            if key[0] in mods and key not in seen:
+                seen.add(key)
+                todo.append(key)
+        if name is not None and (mod, name) not in seen:
+            seen.add((mod, name))
+            todo.append((mod, name))
+
+    def resolve(m: _Mod, node: ast.AST) -> tuple[str, str | None] | None:
+        """The (module, symbol) a Name or dotted Attribute chain names."""
+        if isinstance(node, ast.Name):
+            if node.id in m.aliases:
+                return m.aliases[node.id]
+            return (m.name, node.id) if node.id in m.defs else None
+        if isinstance(node, ast.Attribute):
+            base = resolve(m, node.value)
+            if base is not None and base[1] is None:
+                return base[0], node.attr
+            if base is not None and f"{base[0]}.{base[1]}" in mods:
+                return f"{base[0]}.{base[1]}", node.attr
+        return None
+
+    def visit(m: _Mod, nodes: list[ast.AST]) -> None:
+        for top in nodes:
+            for node in ast.walk(top):
+                for _, target in m.imports(node):
+                    mark(*target)
+                if isinstance(node, (ast.Name, ast.Attribute)):
+                    target = resolve(m, node)
+                    if target is not None:
+                        mark(*target)
+
+    def module_body(m: _Mod) -> list[ast.AST]:
+        body: list[ast.AST] = []
+        for stmt in m.tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                body += stmt.decorator_list + [stmt.args]
+            elif isinstance(stmt, ast.ClassDef):
+                body += stmt.decorator_list + stmt.bases + stmt.keywords
+            else:
+                body.append(stmt)
+        return body
+
+    def registered(node: ast.AST) -> bool:
+        return any(
+            isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+            for d in getattr(node, "decorator_list", [])
+        )
+
+    for e in entries:
+        visit(e, [e.tree])
+        if e.name in mods:
+            for name in e.defs:
+                mark(e.name, name)
+    for m in mods.values():
+        for name, node in m.defs.items():
+            if registered(node):
+                mark(m.name, name)
+    while todo:
+        mod, name = todo.pop()
+        m = mods[mod]
+        visit(m, module_body(m) if name is None else [m.defs[name]])
+
+    return {
+        f"{m.path.relative_to(REPO)} {name}": node.lineno
+        for m in mods.values()
+        for name, node in m.defs.items()
+        if (m.name, name) not in seen
+    }
+
+
+# Tested library code no user path calls yet. Each either gains a caller
+# on a user path or is deleted with its tests; the set only shrinks.
+_NO_USER_CALLER_YET = {
+    "ug_dwh_etl_spark/operators/quality.py observed",
+    "ug_dwh_etl_spark/operators/skew.py salted_broadcast_left",
+    "ug_dwh_etl_spark/operators/storage.py write_clustered",
+    "ug_dwh_etl_spark/sinks/writers.py merge_upsert",
+    "ug_dwh_etl_spark/streaming/jobs.py incremental_rollup_pipeline",
+    "ug_dwh_etl_spark/streaming/jobs.py merge_rollup_delta",
+}
+
+
+def test_every_package_definition_is_on_a_user_path():
+    """AST scan: a top-level def or class in the package that no user
+    path reaches is a second path beside a live one, kept alive only by
+    its tests — delete it (and those tests) or give it a caller."""
+    dead = _unreached_package_defs()
+    new = sorted(f"{k} (line {v})" for k, v in dead.items() if k not in _NO_USER_CALLER_YET)
+    assert not new, "reached only from tests/ or nowhere:\n" + "\n".join(new)
+    stale = sorted(_NO_USER_CALLER_YET - dead.keys())
+    assert not stale, "now reached or deleted, drop from the list:\n" + "\n".join(stale)
+
+
+def test_no_pid_keyed_paths_in_the_package():
+    """Per-process scratch goes through ``queries.registry.scratch_dir``;
+    a path keyed by ``os.getpid()`` outlives its process and is read as
+    its own by a later process that is given the same pid."""
+    found = [
+        f"{py.relative_to(REPO)}:{node.lineno}"
+        for py in sorted(PKG.rglob("*.py"))
+        for node in ast.walk(ast.parse(py.read_text(), filename=str(py)))
+        if isinstance(node, ast.Attribute) and node.attr == "getpid"
+    ]
+    assert not found, "os.getpid() in the package:\n" + "\n".join(found)

@@ -1,20 +1,15 @@
 """Multimodal plumbing tests: schema, Arrow batch shape, deterministic
-fake features, codec stubs."""
+fake features."""
 
 from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from ug_dwh_etl_spark.operators.multimodal import (
     FEATURE_DIM,
     _fake_features,
-    decode_image,
     extract_features,
     media_from_documents,
-    resize_image,
-    sample_frames,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -39,9 +34,3 @@ def test_extract_features_batch_path(spark):
     assert len(row.features) == FEATURE_DIM
     assert row.features == _fake_features(text)
     assert all(0.0 <= v < 1.0 for v in row.features)
-
-
-def test_codec_stubs_raise(spark):
-    for fn, args in ((decode_image, (b"x",)), (resize_image, (b"x", 1, 1)), (sample_frames, (b"x", 100))):
-        with pytest.raises(NotImplementedError):
-            fn(*args)

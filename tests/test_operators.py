@@ -210,27 +210,6 @@ def test_observed_metrics_free_with_action(spark, tmp_path):
     assert obs.get == {"rows": 1000, "null_v": 100}
 
 
-def test_sentence_udtf_lateral(spark):
-    from ug_dwh_etl_spark.operators.textstats import sentence_udtf
-
-    spark.udtf.register("split_sentences", sentence_udtf())
-    spark.createDataFrame(
-        [(1, "One fish. Two fish."), (2, "Red fish")], ["doc_id", "text"]
-    ).createOrReplaceTempView("mini_docs")
-    rows = spark.sql(
-        """
-        SELECT doc_id, s.pos, s.sentence
-        FROM mini_docs, LATERAL split_sentences(text) AS s
-        ORDER BY doc_id, s.pos
-        """
-    ).collect()
-    assert [(r.doc_id, r.pos, r.sentence) for r in rows] == [
-        (1, 0, "One fish"),
-        (1, 1, "Two fish"),
-        (2, 0, "Red fish"),
-    ]
-
-
 def test_merge_asof_tolerance_edges(spark):
     """merge_asof edge cases the oracle fixture may not cover: no prior
     right row (NULL), exact same-day tie (right wins the <= comparison),

@@ -166,80 +166,6 @@ def test_stream_incremental_neardup_across_micro_batches(spark, tmp_path):
     assert pairs == {(1, 10), (1, 20), (10, 20)}
 
 
-def test_corpus_daily_ingest_two_days(spark, tmp_path):
-    """The orchestrated daily plan end to end over two days: quality
-    gate, exact dedup vs the fingerprint index, near-dup vs the LSH
-    index, and append-only index maintenance — day 2 must reject dups
-    of BOTH the seed corpus and day 1's survivors, and the store must
-    hold exactly the curated union afterwards."""
-    from ug_dwh_etl_spark.plans.corpus_daily import (
-        corpus_daily_ingest,
-        init_corpus_store,
-    )
-
-    # ≥30 words to clear the quality gate's min_words
-    base = (
-        "the quick brown fox jumps over the lazy dog and then runs far "
-        "away into the green forest where it finds some food and water "
-        "before it sleeps for the night under a big old tree"
-    )
-    other = (
-        "spark executes relational plans with whole stage codegen and "
-        "exchanges data between stages through shuffle files that are "
-        "written by map tasks and fetched by reduce tasks over the network"
-    )
-    root = str(tmp_path / "corpus")
-    seed = _docs(spark, [(1, base), (2, other)])
-    init_corpus_store(spark, root, seed, "doc_id", "text")
-
-    day1 = _docs(
-        spark,
-        [
-            (7, base),          # near-dup (actually exact) of corpus 1 -> drop
-            (8, "too short"),   # fails the gate -> drop
-            (9, other + " with a small extra tail of additional words"),
-            #  ^ near-dup of corpus 2 -> drop
-            (11, base.replace("fox", "wolf").replace("dog", "cat")
-                 .replace("forest", "meadow").replace("tree", "rock")
-                 .replace("night", "evening").replace("water", "milk")
-                 .replace("food", "grain").replace("green", "wide")
-                 .replace("quick", "slow").replace("brown", "grey")
-                 .replace("lazy", "calm").replace("big", "tall")),
-            #  ^ heavily-edited variant: should SURVIVE (low jaccard)
-        ],
-    )
-    s1 = corpus_daily_ingest(spark, root, day1)
-    assert s1["n_dropped_quality"] == 1
-    assert s1["n_appended"] == 1
-    survivors1 = {
-        r.doc_id
-        for r in spark.read.parquet(f"{root}/docs").select("doc_id").collect()
-    }
-    assert survivors1 == {1, 2, 11}
-
-    day2 = _docs(
-        spark,
-        [
-            (3, day1.filter("doc_id = 11").first().text + " and extra tail"),
-            #  ^ NEAR-dup (not exact — fingerprint differs) of day-1
-            #    survivor 11; id 3 < 11, but the stored side is
-            #    immutable: 3 must drop at the near-dup stage
-            (21, "entirely novel second day content about distributed "
-                 "query engines and their cost based optimizers which "
-                 "choose join orders using statistics gathered from data "
-                 "and cached in the catalog for later reuse by planners"),
-        ],
-    )
-    s2 = corpus_daily_ingest(spark, root, day2)
-    assert s2["n_dropped_neardup"] == 1  # id 3 dropped against stored 11
-    assert s2["n_appended"] == 1
-    final = {
-        r.doc_id
-        for r in spark.read.parquet(f"{root}/docs").select("doc_id").collect()
-    }
-    assert final == {1, 2, 11, 21}
-
-
 def test_incremental_neardup_reingested_id_keeps_exact_jaccard(spark, tmp_path):
     """A batch doc whose id ALREADY exists in the stored index (a
     re-ingest) must not double-count its shingle rows: pairs between it

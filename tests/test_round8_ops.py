@@ -207,19 +207,12 @@ def test_scan_pruned_append_accumulates_stats(spark, tmp_path):
 def test_manifest_pruning_query_reads_fewer_files(spark):
     """The registered query's table must actually prune: re-open the
     per-process table it staged and verify the planning arithmetic."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
+    from ug_dwh_etl_spark.queries.registry import scratch_dir
     from ug_dwh_etl_spark.queries.scale import storage_manifest_pruning
 
     storage_manifest_pruning(spark, SF).collect()
-    from ug_dwh_etl_spark.queries.registry import sfdir_key
-
-    root = os.path.join(
-        tempfile.gettempdir(), f"snaptable_pruned_{os.getpid()}", sfdir_key(SF)
-    )
-    t = SnapshotTable(root)
+    t = SnapshotTable(scratch_dir("snaptable_pruned", SF))
     _, read, total = t.scan_pruned(
         spark, "o_orderdate", "1995-06-01 00:00:00", "1995-12-31 23:59:59"
     )
@@ -254,19 +247,15 @@ def test_batch_id_commit_is_idempotent(spark, tmp_path):
 
 def test_stream_ingest_lands_one_commit_per_microbatch(spark):
     import os
-    import tempfile
 
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
+    from ug_dwh_etl_spark.queries.registry import scratch_dir
     from ug_dwh_etl_spark.streaming.jobs import stream_snapshot_ingest
 
     out = stream_snapshot_ingest(spark, SF)
     n = sum(r.n_orders for r in out.collect())
     assert n == spark.read.parquet(f"{SF}/orders.parquet").count()
-    from ug_dwh_etl_spark.queries.registry import sfdir_key
-
-    root = os.path.join(
-        tempfile.gettempdir(), f"snap_ingest_{os.getpid()}", sfdir_key(SF), "table"
-    )
+    root = os.path.join(scratch_dir("snap_ingest", SF), "table")
     snaps = SnapshotTable(root).snapshots()
     assert len(snaps) == 8
     assert all(m["operation"] == "append" for m in snaps)
@@ -380,24 +369,34 @@ def test_kmv_tile_merge_equals_direct_sketch(spark):
 
 
 def test_lake_daily_ingest_compacts_and_expires(spark, tmp_path):
-    """30 daily ticks: table always equals the union of ingests, file
-    count stays bounded by compaction, history bounded by retention,
-    pruning still works after compaction rewrites."""
-    from ug_dwh_etl_spark.plans.lake_daily import lake_daily_ingest
-
+    """30 daily append ticks on the snapshot table, each landing an
+    idempotent (batch_id) append, rewriting the live snapshot as one
+    range-clustered overwrite once it holds more than 12 files and
+    expiring all but the last 5 snapshots: table always equals the union
+    of ingests, file count stays bounded by compaction, history bounded
+    by retention, pruning still works after compaction rewrites."""
     t = _snaptable(tmp_path)
+
+    def tick(inc, day):
+        landed = t.commit_append(inc, stats_cols=("k",), batch_id=day)
+        files = len(t.manifest(landed).get("files", []))
+        if files > 12:
+            live = t.read_as_of(spark, landed)
+            t.commit_overwrite(
+                live.repartitionByRange(max(2, files // 4), "k"), stats_cols=("k",)
+            )
+        t.expire_snapshots(keep_from=max(1, t.latest_snapshot_id() - 4))
+        return landed
+
     total = 0
     for day in range(30):
         inc = (
             spark.range(day * 100, day * 100 + 100)
             .withColumn("k", F.format_string("%06d", F.col("id")))
         )
-        log = lake_daily_ingest(
-            spark, t, inc, stats_col="k", batch_id=day,
-            compact_above_files=12, keep_snapshots=5,
-        )
+        landed = tick(inc, day)
         total += 100
-        assert t.read_as_of(spark).count() == total, (day, log)
+        assert t.read_as_of(spark).count() == total, (day, landed)
     # compaction bounded the live file count
     live_files = len(t.manifest(t.latest_snapshot_id()).get("files", []))
     assert live_files <= 16
@@ -408,10 +407,7 @@ def test_lake_daily_ingest_compacts_and_expires(spark, tmp_path):
     replay = spark.range(0, 100).withColumn(
         "k", F.format_string("%06d", F.col("id"))
     )
-    lake_daily_ingest(
-        spark, t, replay, stats_col="k", batch_id=29,
-        compact_above_files=12, keep_snapshots=5,
-    )
+    tick(replay, 29)
     assert t.read_as_of(spark).count() == total
     # a WIDER retention horizon than what survives must also be safe
     t.expire_snapshots(keep_from=max(1, t.latest_snapshot_id() - 20))

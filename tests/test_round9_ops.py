@@ -321,8 +321,12 @@ def test_expire_snapshots_removes_orphan_delete_dirs(spark, tmp_path):
 
 
 def test_lake_daily_mor_upsert_cadence(spark, tmp_path):
+    """A daily merge-on-read upsert cadence on the snapshot table: each
+    tick lands an idempotent (batch_id) upsert, folds the equality
+    deletes once more than 3 are outstanding and expires all but the
+    last 8 snapshots. The table always equals the upsert model, a
+    replayed day is a no-op, and stats pruning still works."""
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
-    from ug_dwh_etl_spark.plans.lake_daily import lake_daily_ingest
 
     t = SnapshotTable(str(tmp_path / "lake"))
     model: dict[int, int] = {}
@@ -333,23 +337,26 @@ def test_lake_daily_mor_upsert_cadence(spark, tmp_path):
             F.lit(day).cast("long").alias("v"),
             F.format_string("%03d", F.col("id")).alias("s"),
         )
-        log = lake_daily_ingest(
-            spark, t, inc, stats_col="s", batch_id=day, key_cols=["k"],
-            compact_above_deletes=3, keep_snapshots=8,
-        )
+        landed = t.commit_merge_on_read(inc, ["k"], stats_cols=("s",), batch_id=day)
+        if len(t.manifest(landed).get("deletes", [])) > 3:
+            t.compact_deletes(spark, stats_cols=("s",))
+        t.expire_snapshots(keep_from=max(1, t.latest_snapshot_id() - 7))
         for k in range(day, day + 4):
             model[k] = day
         # outstanding delete files stay bounded by the trigger
-        latest = t.manifest(t.latest_snapshot_id())
-        assert len(latest.get("deletes", [])) <= 3 + 1
+        assert len(t.manifest(t.latest_snapshot_id()).get("deletes", [])) <= 3
         # replaying the same day's batch is a no-op
-        log2 = lake_daily_ingest(
-            spark, t, inc, stats_col="s", batch_id=day, key_cols=["k"],
-            compact_above_deletes=3, keep_snapshots=8,
-        )
-        assert log2["appended_snapshot"] <= log["appended_snapshot"]
+        assert t.commit_merge_on_read(inc, ["k"], stats_cols=("s",), batch_id=day) <= landed
         got = {r.k: r.v for r in t.read_as_of(spark).collect()}
         assert got == model, f"day {day}"
+    # retention bounded the manifest log
+    assert len(t.snapshots()) <= 8
+    # a WIDER retention horizon than what survives must also be safe
+    t.expire_snapshots(keep_from=max(1, t.latest_snapshot_id() - 20))
+    # stats pruning still functional on the compacted layout
+    df, read, tot = t.scan_pruned(spark, "s", "003", "005")
+    assert 0 < read <= tot
+    assert df.filter(F.col("s").between("003", "005")).count() == 3
 
 
 def test_paragraph_dedup_keeps_each_paragraph_exactly_once(spark):

@@ -231,30 +231,3 @@ def test_optimize_table_composes_retention_and_zorder(spark, tmp_path):
     )
     assert stats2["dropped_partitions"] == ["2026-06-01"]
     assert stats2["n_rows"] == 0
-
-
-def test_write_with_bloom_adds_filters_and_reads_back(spark, tmp_path):
-    # bloom bytes must actually land in the files (size strictly grows
-    # on identical data), and point lookups must stay correct
-    import os
-
-    from ug_dwh_etl_spark.operators.storage import write_with_bloom
-
-    df = spark.range(50_000).selectExpr(
-        "id", "cast(conv(substring(md5(cast(id as string)), 1, 8), 16, 10) as string) as k"
-    )
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloomed")
-    df.coalesce(1).write.parquet(plain)
-    write_with_bloom(df.coalesce(1), bloomed, ["k"], expected_ndv=50_000)
-
-    def total(p):
-        return sum(
-            os.path.getsize(os.path.join(p, f))
-            for f in os.listdir(p)
-            if f.endswith(".parquet")
-        )
-
-    assert total(bloomed) > total(plain)
-    probe = df.filter("id = 4242").collect()[0]["k"]
-    got = spark.read.parquet(bloomed).filter(F.col("k") == probe).collect()
-    assert [r["id"] for r in got] == [4242]

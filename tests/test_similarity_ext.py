@@ -36,46 +36,27 @@ def test_ivf_topk_recall_vs_exact(spark):
     assert len(exact & approx) >= 3
 
 
-def test_ivf_index_probe_matches_inline_ivf_and_prunes(spark, tmp_path):
+def test_ivf_topk_prunes_to_the_query_clusters(spark):
+    """Inline IVF search scores only the query's n_probe nearest
+    clusters, and ranks them exactly as brute-force cosine restricted
+    to those clusters would."""
     from pyspark.sql import functions as F
 
-    from ug_dwh_etl_spark.operators.similarity import (
-        ivf_index_probe,
-        ivf_index_write,
-        ivf_topk,
-    )
+    from ug_dwh_etl_spark.operators.similarity import CENTROIDS
 
-    sf_dir = "/root/testdata/sf0.001"
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    path = str(tmp_path / "ivf")
-    ivf_index_write(emb, path)
+    emb = _emb(spark)
+    qvec = [float(v) for v in emb.filter(F.col("vec_id") == 7).first().embedding]
+    probe = sorted(
+        range(N_CENTROIDS),
+        key=lambda j: (sum((q - c) ** 2 for q, c in zip(qvec, CENTROIDS[j])), j),
+    )[:2]
+    clusters = {r.vec_id: r.cluster for r in ivf_assign(emb).select("vec_id", "cluster").collect()}
 
-    qrow = emb.filter(F.col("vec_id") == 7).select("embedding").first()
-    qvec = [float(v) for v in qrow.embedding]
-
-    # probe includes the query row itself (cosine 1.0) — drop it, then
-    # the remaining ranking must equal the inline ivf_topk result
-    got = [
-        (r.vec_id, r.cosine)
-        for r in ivf_index_probe(spark, path, qvec, k=6, n_probe=2).collect()
-        if r.vec_id != 7
-    ][:5]
-    want = [(r.vec_id, r.cosine) for r in ivf_topk(emb, 7, k=5, n_probe=2).collect()]
+    got = [(r.vec_id, r.cosine) for r in ivf_topk(emb, 7, k=5, n_probe=2).collect()]
+    assert len(got) == 5 and all(clusters[v] in probe for v, _ in got)
+    in_probe = emb.filter(F.col("vec_id").isin([v for v, c in clusters.items() if c in probe]))
+    want = [(r.vec_id, r.cosine) for r in cosine_topk(in_probe, query_id=7, k=5).collect()]
     assert got == want
-
-    # partition pruning: the probe's scan node must carry a non-empty
-    # PartitionFilters entry on the cluster column (inputFiles() can't be
-    # used here — it lists the relation's files ignoring filters)
-    import contextlib
-    import io
-
-    probed = ivf_index_probe(spark, path, qvec, k=5, n_probe=2)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probed.explain(True)
-    plan = buf.getvalue()
-    after = plan.split("PartitionFilters: [", 1)[1]
-    assert not after.startswith("]") and "cluster" in after[:200]
 
 
 def test_dequantize_roundtrip_bounded_error(spark):

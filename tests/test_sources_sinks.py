@@ -86,104 +86,6 @@ def test_merge_upsert_unpartitioned(spark, tmp_path):
     assert got == {(1, "A"), (2, "b")}
 
 
-def test_paged_rest_python_datasource(spark):
-    from ug_dwh_etl_spark.sources.pyds import PagedRestDataSource
-
-    spark.dataSource.register(PagedRestDataSource)
-    df = (
-        spark.read.format("paged_rest")
-        .option("total_rows", "250")
-        .option("chunk_size", "100")
-        .load()
-    )
-    # one input partition per page — the scheduler parallelizes fetches
-    assert df.rdd.getNumPartitions() == 3
-    rows = df.collect()
-    assert len(rows) == 250
-    assert len({r.url for r in rows}) == 250
-    first = next(r for r in rows if r.url.endswith("/page/0"))
-    assert first.page_rank == 1.0
-
-
-def test_paged_rest_stream_catches_up_like_cron(spark, tmp_path):
-    from ug_dwh_etl_spark.sources.pyds import PagedRestDataSource
-
-    spark.dataSource.register(PagedRestDataSource)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def run_once():
-        q = (
-            spark.readStream.format("paged_rest")
-            .option("total_rows", "300")
-            .option("chunk_size", "100")
-            .option("pages_per_batch", "2")
-            .load()
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(out).count()
-
-    # each cron-style run ingests the next 2 pages; idempotent once caught up
-    assert run_once() == 200
-    assert run_once() == 300
-    assert run_once() == 300
-    urls = spark.read.parquet(out).select("url").distinct().count()
-    assert urls == 300
-
-
-def test_read_orc_and_text_roundtrip(spark, tmp_path):
-    from ug_dwh_etl_spark.sources.readers import read_orc, read_text
-
-    orc_path = str(tmp_path / "t.orc")
-    spark.range(100).withColumnRenamed("id", "k").write.orc(orc_path)
-    assert read_orc(spark, orc_path).count() == 100
-
-    txt_dir = tmp_path / "txt"
-    txt_dir.mkdir()
-    (txt_dir / "a.txt").write_text("line1\nline2\nline3\n")
-    df = read_text(spark, str(txt_dir), normalize_col="text")
-    assert df.columns == ["text"]
-    assert df.count() == 3
-
-
-def test_read_xml_sitemap(spark, tmp_path):
-    # sitemap shape the orphan pipeline consumes (sf_orphan_data.py:67-68),
-    # via Spark 4's built-in XML datasource
-    from ug_dwh_etl_spark.sources.readers import read_xml
-
-    p = tmp_path / "sitemap.xml"
-    p.write_text(
-        '<?xml version="1.0"?><urlset>'
-        "<url><loc>https://ex.com/a</loc><priority>0.8</priority></url>"
-        "<url><loc>https://ex.com/b/c</loc><priority>0.5</priority></url>"
-        "</urlset>"
-    )
-    df = read_xml(spark, str(p), row_tag="url")
-    assert df.columns == ["loc", "priority"]
-    assert df.count() == 2
-    assert {r.loc for r in df.collect()} == {"https://ex.com/a", "https://ex.com/b/c"}
-
-
-def test_read_binary_files_glob(spark, tmp_path):
-    # multimodal blob ingest: one row per file, content as binary
-    from ug_dwh_etl_spark.sources.readers import read_binary_files
-
-    b = tmp_path / "blobs"
-    b.mkdir()
-    for i in range(3):
-        (b / f"img_{i}.bin").write_bytes(bytes([i]) * (10 + i))
-    (b / "skip.txt").write_text("not a blob")
-    df = read_binary_files(spark, str(b), glob="*.bin")
-    rows = df.select("path", "length", "content").collect()
-    assert len(rows) == 3
-    got = {os.path.basename(r.path): (r.length, bytes(r.content)) for r in rows}
-    assert got["img_2.bin"] == (12, bytes([2]) * 12)
-
-
 def test_read_csv_malformed_rows_quarantine(spark, tmp_path):
     # feed drift: a row with a non-numeric amount; PERMISSIVE nulls the
     # field and captures the raw line, DROPMALFORMED discards the row
@@ -225,31 +127,6 @@ def test_ignore_corrupt_parquet_files(spark, tmp_path):
         spark.read.option("ignoreCorruptFiles", True).parquet(str(d)).count()
     )
     assert ok == 10
-
-
-def test_webhook_alert_datasource_writer(spark, tmp_path):
-    # the K4 alert sink as a Spark 4 Python DataSource WRITER: rows
-    # post from executors in batches; the spool stub stands in for HTTP
-    import json
-
-    from ug_dwh_etl_spark.sources.pyds import WebhookAlertDataSource
-
-    spark.dataSource.register(WebhookAlertDataSource)
-    ep = str(tmp_path / "spool" / "alerts.jsonl")
-    df = spark.range(25).selectExpr(
-        "id", "concat('violation-', id) AS title", "'dq' AS kind"
-    )
-    (
-        df.write.format("webhook_alert")
-        .option("endpoint", ep)
-        .option("batch_size", "10")
-        .mode("append")
-        .save()
-    )
-    lines = [json.loads(line) for line in open(ep)]
-    assert len(lines) == 25
-    assert {r["id"] for r in lines} == set(range(25))
-    assert all(r["title"] == f"violation-{r['id']}" and r["kind"] == "dq" for r in lines)
 
 
 def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
@@ -304,106 +181,3 @@ def test_prune_history_drops_only_expired_partitions(spark, tmp_path):
     } == {"2026-02-01"}
     # idempotent: second run drops nothing
     assert prune_history(path, "crawl_date", keep=lambda d: d >= "2026-01-15") == []
-
-
-def test_snapshot_diff_classifies_all_change_types(spark):
-    import pyspark.sql.functions as F
-
-    from ug_dwh_etl_spark.operators.storage import snapshot_diff
-
-    old = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    # new snapshot: drop key 0, modify key 1's price, add a shifted key
-    new = (
-        old.filter(F.col("o_orderkey") != 0)
-        .withColumn(
-            "o_totalprice",
-            F.when(F.col("o_orderkey") == 1, F.col("o_totalprice") + 1.0).otherwise(
-                F.col("o_totalprice")
-            ),
-        )
-        .unionByName(old.limit(1).withColumn("o_orderkey", F.lit(10_000_000)))
-    )
-    d = snapshot_diff(old, new, ["o_orderkey"])
-    counts = {r.change_type: r.n for r in d.groupBy("change_type").agg(
-        F.count(F.lit(1)).alias("n")).collect()}
-    n_old = old.count()
-    assert counts.get("removed") == 1
-    assert counts.get("added") == 1
-    assert counts.get("changed") == 1
-    assert counts.get("unchanged") == n_old - 2
-    # the CDC feed view: only the non-identical rows
-    feed = {(r.o_orderkey, r.change_type) for r in d.filter(
-        F.col("change_type") != "unchanged").collect()}
-    assert (0, "removed") in feed and (1, "changed") in feed
-
-
-def test_snapshot_diff_sees_null_shift_and_type_changes(spark):
-    """Regression: xxhash64 over raw columns skips NULLs without mixing,
-    which made (x, NULL) vs (NULL, x) collide; the JSON-struct hash must
-    classify both a null-shift and a cross-type change as 'changed'."""
-    from ug_dwh_etl_spark.operators.storage import snapshot_diff
-
-    old = spark.createDataFrame([(1, "x", None), (2, "1", "y")], "k long, a string, b string")
-    new = spark.createDataFrame([(1, None, "x"), (2, "1", "y")], "k long, a string, b string")
-    got = {r.k: r.change_type for r in snapshot_diff(old, new, ["k"]).collect()}
-    assert got == {1: "changed", 2: "unchanged"}
-
-
-def test_orc_round_trip(spark, tmp_path):
-    from ug_dwh_etl_spark.sources.readers import read_orc
-
-    src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    p = str(tmp_path / "orders_orc")
-    src.write.orc(p)
-    back = read_orc(spark, p)
-    assert back.count() == src.count()
-    assert set(back.columns) == set(src.columns)
-    # pushdown survives the format: an equality filter returns the row
-    key = src.limit(1).collect()[0]["o_orderkey"]
-    assert back.filter(back.o_orderkey == key).count() == 1
-
-
-def test_write_training_shards_is_range_ordered(spark, tmp_path):
-    """The training-shard sink must produce n range-disjoint, internally
-    sorted JSONL files whose union is the input, byte-stable across
-    re-runs (the reproducible-epoch contract)."""
-    import json as _json
-    import os
-
-    from ug_dwh_etl_spark.queries.registry import QUERIES
-    from ug_dwh_etl_spark.sinks.writers import write_training_shards
-
-    shuffled = QUERIES["corpus_global_shuffle"].fn(spark, "/root/testdata/sf0.001")
-    out = str(tmp_path / "shards")
-    manifest = write_training_shards(shuffled, out, order_col="pos", n_shards=4)
-    assert manifest["n_rows"] == shuffled.count()
-    assert manifest["n_files"] == 4
-    assert manifest["bytes"] > 0
-    ranges = []
-    for f in sorted(os.listdir(out)):
-        if not f.startswith("part-"):
-            continue
-        vals = [
-            _json.loads(line)["pos"]
-            for line in open(os.path.join(out, f))
-            if line.strip()
-        ]
-        if not vals:
-            continue
-        assert vals == sorted(vals)  # sorted within shard
-        ranges.append((min(vals), max(vals)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # range-disjoint shards
-    # byte-stable re-run
-    again = str(tmp_path / "shards2")
-    write_training_shards(shuffled, again, order_col="pos", n_shards=4)
-    c1 = b"".join(
-        open(os.path.join(out, f), "rb").read()
-        for f in sorted(os.listdir(out)) if f.startswith("part-")
-    )
-    c2 = b"".join(
-        open(os.path.join(again, f), "rb").read()
-        for f in sorted(os.listdir(again)) if f.startswith("part-")
-    )
-    assert c1 == c2

@@ -145,9 +145,9 @@ def _state_rows(spark, name: str) -> int:
     # state store — report the log's row count (the thing that must
     # grow O(batch), not O(history))
     if name == "stream_cdc_count_distinct":
-        import tempfile
+        from ug_dwh_etl_spark.queries.registry import scratch_dir
 
-        log = os.path.join(tempfile.gettempdir(), f"cdc_cd_{os.getpid()}", "log")
+        log = os.path.join(scratch_dir("cdc_cd"), "log")
         try:
             return spark.read.parquet(log).count()
         except Exception:

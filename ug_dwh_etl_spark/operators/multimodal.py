@@ -157,23 +157,3 @@ def extract_features_arrow(media: DataFrame) -> DataFrame:
 
     cols = media.select("media_id", "media_type", "payload")
     return cols.repartition("media_type").mapInArrow(run, schema=FEATURE_SCHEMA)
-
-
-# --- codec stubs ---------------------------------------------------------------
-
-def decode_image(payload: bytes) -> object:
-    """STUB — real implementation needs PIL/opencv (not in this
-    container): ``Image.open(io.BytesIO(payload))``."""
-    raise NotImplementedError(
-        "image decode requires PIL/opencv; use _fake_features for plumbing tests"
-    )
-
-
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """STUB — real implementation: decode → resample → re-encode."""
-    raise NotImplementedError("image resize requires PIL/opencv")
-
-
-def sample_frames(payload: bytes, every_ms: int) -> list[bytes]:
-    """STUB — real implementation: ffmpeg/pyav keyframe extraction."""
-    raise NotImplementedError("video frame sampling requires ffmpeg/pyav")

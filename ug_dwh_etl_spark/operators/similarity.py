@@ -320,56 +320,6 @@ def sql_centroid_dist(embedding_expr: str, j: int) -> str:
     )
 
 
-# --- storage-integrated IVF index (write once, probe many) ---------------------
-
-def ivf_index_write(embeddings: DataFrame, path: str) -> None:
-    """Materialize the IVF layout: the embedding table written
-    PARTITIONED BY the nearest-centroid cluster id. This is the
-    at-ingest half of ANN-at-scale — on a 100 TB corpus every probe
-    after this is a partition-pruned scan of n_probe/K of the files,
-    enforced by the storage layout rather than a runtime filter."""
-    from ug_dwh_etl_spark.operators.dedup import spread
-
-    (
-        ivf_assign(spread(embeddings))
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(path)
-    )
-
-
-def ivf_index_probe(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 2,
-) -> DataFrame:
-    """Probe a written IVF index with a raw query vector.
-
-    The n_probe nearest clusters are computed driver-side (K x dim
-    flops against the engine's centroid constants — never a Spark job),
-    then pushed as a partition filter: the scan reads ONLY those
-    cluster directories (asserted via inputFiles in the tests)."""
-    dists = sorted(
-        (
-            sum((q - c) ** 2 for q, c in zip(query_vec, CENTROIDS[j])),
-            j,
-        )
-        for j in range(N_CENTROIDS)
-    )
-    probe_clusters = [j for _, j in dists[:n_probe]]
-    q_lit = "array(" + ", ".join(f"{float(v)!r}D" for v in query_vec) + ")"
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("cluster").isin(probe_clusters))
-        .select("vec_id", F.expr(cosine_sql("embedding", q_lit)).alias("cos_raw"))
-        .orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.round("cos_raw", 6).alias("cosine"))
-    )
-
-
 def knn_join(embeddings: DataFrame, query_mod: int, k: int = 3) -> DataFrame:
     """Batched exact k-NN join: top-k cosine neighbors for EVERY query
     vector (here the deterministic subset ``vec_id % query_mod == 0``)
@@ -687,7 +637,7 @@ def kmeans_step(embeddings: DataFrame) -> DataFrame:
     decimals BEFORE the reassignment distances so the argmin is
     bitwise-reproducible cross-engine (same discipline as the seeded
     IVF assignment); production would persist `assigned` across the two
-    passes the way ivf_index_write persists the cluster layout.
+    passes, partitioned by cluster.
     """
     from pyspark.sql import Window
 

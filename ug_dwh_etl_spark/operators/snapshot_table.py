@@ -281,8 +281,8 @@ class SnapshotTable:
         # every manifest carries the full {batch_id: snapshot_id} map of
         # its ancestry, so replay protection survives expire_snapshots —
         # scanning only SURVIVING manifests would shrink the protection
-        # window to the retention horizon (e.g. lake_daily's 7 snapshots
-        # at 2 commits/tick protect only ~3-4 days of replays).
+        # window to the retention horizon (e.g. 7 kept snapshots at 2
+        # commits per daily tick protect only ~3-4 days of replays).
         known: dict[str, int] = {}
         if parent is not None:
             pm = self.manifest(parent)

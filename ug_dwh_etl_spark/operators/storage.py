@@ -172,55 +172,6 @@ def write_zordered(
     writer.parquet(path)
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list[str],
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """Row-level change-data capture between two table snapshots: keys
-    present only in ``new`` are 'added', only in ``old`` 'removed', in
-    both with differing content 'changed', else 'unchanged'. The
-    BigQuery-side reference overwrote snapshots blindly
-    (`sf_html_data.py:178` if_exists='replace'); a lake that wants
-    incident forensics or incremental downstream feeds diffs them.
-
-    Scale shape: each side is reduced MAP-SIDE to (key, xxhash64 of the
-    compared columns) before the single key-partitioned full outer join
-    — the shuffle carries one long per row, never the row payload, and
-    the same partitioning serves both sides. Returns key columns +
-    ``change_type``; aggregate it for a reconciliation summary or
-    filter out 'unchanged' for a CDC feed.
-
-    Contract: key columns must be non-null (a NULL key never equi-joins,
-    so such a row would surface as a spurious added+removed pair — the
-    same key-hygiene requirement as merge_upsert)."""
-    import pyspark.sql.functions as F
-
-    if compare_cols is None:
-        compare_cols = [c for c in old.columns if c not in key_cols]
-    def hashed(df: DataFrame, alias: str) -> DataFrame:
-        # hash the JSON of the compared struct (nulls kept): xxhash64
-        # over raw columns SKIPS null inputs without mixing, so a value
-        # shifting between columns around a NULL would collide, and a
-        # bare string cast hides cross-type changes (1 vs '1')
-        row = F.to_json(
-            F.struct(*[F.col(c) for c in compare_cols]),
-            {"ignoreNullFields": "false"},
-        )
-        return df.select(*key_cols, F.xxhash64(row).alias(alias))
-    o = hashed(old, "_h_old")
-    n = hashed(new, "_h_new")
-    j = o.join(n, key_cols, "full_outer")
-    change = (
-        F.when(F.col("_h_old").isNull(), F.lit("added"))
-        .when(F.col("_h_new").isNull(), F.lit("removed"))
-        .when(F.col("_h_old") != F.col("_h_new"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select(*key_cols, change.alias("change_type"))
-
-
 def optimize_table(
     spark: SparkSession,
     path: str,
@@ -285,28 +236,3 @@ def optimize_table(
         # or the operator ran per-partition
         "n_rows": out.count() if count_rows else None,
     }
-
-
-def write_with_bloom(
-    df,
-    path: str,
-    bloom_cols: list[str],
-    expected_ndv: int = 100_000,
-    mode: str = "overwrite",
-) -> None:
-    """Parquet write with COLUMN BLOOM FILTERS on the named columns —
-    the storage-side complement of the runtime bloom join
-    (queries/relational_ext.join_bloom_pruned): point-lookup predicates
-    on a non-sort column (needle-in-haystack id probes, CDC key checks)
-    skip entire row groups whose bloom says 'definitely absent', where
-    min/max footer stats are useless because a hash-distributed id
-    spans every file's full range. Costs ~1.2 bytes/NDV per row group
-    at the default FPP; size it with expected_ndv. Readers that predate
-    bloom support ignore the extra bytes — the format stays plain
-    parquet."""
-    writer = df.write.mode(mode)
-    for c in bloom_cols:
-        writer = writer.option(f"parquet.bloom.filter.enabled#{c}", "true").option(
-            f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv)
-        )
-    writer.parquet(path)

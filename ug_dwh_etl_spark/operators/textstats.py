@@ -275,29 +275,6 @@ def repetition_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def sentence_udtf():
-    """Python UDTF (Spark 4): one row in, N sentence rows out, usable
-    from SQL as a table function (``SELECT * FROM split_sentences(...)``
-    or LATERAL).
-
-    Caveat (design rule: UDFs are the slow path): a plain delimiter
-    split belongs in ``explode(split(...))`` — JVM-side, codegen'd,
-    proven by the ``lateral_explode_type_words`` query. Reach for a UDTF
-    only when the expansion logic is genuinely Python (a tokenizer
-    model, a parser); this one exists to pin the API + registration
-    shape with a test."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="pos INT, sentence STRING")
-    class SplitSentences:
-        def eval(self, text: str):
-            for i, s in enumerate(x.strip() for x in (text or "").split(".")):
-                if s:
-                    yield i, s
-
-    return SplitSentences
-
-
 def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, n_chars, entropy) — per-document Shannon entropy (bits) of
     the character distribution, the cheap perplexity proxy that flags

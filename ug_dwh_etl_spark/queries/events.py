@@ -1220,13 +1220,21 @@ _KMV_DOM = float(1 << 60)
     ska AS (SELECT h FROM va ORDER BY h LIMIT {_KMV_K}),
     skb AS (SELECT h FROM vb ORDER BY h LIMIT {_KMV_K}),
     sku AS (SELECT h FROM (SELECT h FROM va UNION SELECT h FROM vb) ORDER BY h LIMIT {_KMV_K}),
+    st AS (
+      SELECT 'a' AS sk, COUNT(*) AS c, MAX(h) AS kth FROM ska
+      UNION ALL SELECT 'b', COUNT(*), MAX(h) FROM skb
+      UNION ALL SELECT 'u', COUNT(*), MAX(h) FROM sku),
+    card AS (
+      SELECT sk, c, CASE WHEN c < {_KMV_K} THEN c * 1.0
+                         ELSE ({_KMV_K} - 1) * {_KMV_DOM} / kth END AS est
+      FROM st),
     est AS (
-      SELECT ({_KMV_K} - 1) * {_KMV_DOM} / (SELECT MAX(h) FROM ska) AS est_a,
-             ({_KMV_K} - 1) * {_KMV_DOM} / (SELECT MAX(h) FROM skb) AS est_b,
-             ({_KMV_K} - 1) * {_KMV_DOM} / (SELECT MAX(h) FROM sku) AS est_u,
+      SELECT (SELECT est FROM card WHERE sk = 'a') AS est_a,
+             (SELECT est FROM card WHERE sk = 'b') AS est_b,
+             (SELECT est FROM card WHERE sk = 'u') AS est_u,
              (SELECT COUNT(*) FROM sku
               WHERE h IN (SELECT h FROM ska) AND h IN (SELECT h FROM skb))
-               * 1.0 / {_KMV_K} AS j_est,
+               * 1.0 / (SELECT c FROM card WHERE sk = 'u') AS j_est,
              (SELECT COUNT(*) FROM va WHERE h IN (SELECT h FROM vb)) AS exact_overlap
     )
     SELECT CAST(ROUND(est_a) AS BIGINT) AS est_viewers,
@@ -1244,7 +1252,10 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     each cohort's distinct user ids ARE the sketch; cardinality is
     (k-1)/kth-min (normalized), and the intersection comes from how
     many of the union-sketch's members sit in both cohort sketches
-    (J_est = that count / k, |A∩B| ≈ J_est · |A∪B|_est).
+    (J_est = that count / |union sketch|, |A∩B| ≈ J_est · |A∪B|_est).
+    A sketch of fewer than k hashes holds its whole cohort, so its
+    cardinality is that count, exactly (the standard KMV rule, Beyer et
+    al., SIGMOD 2007, and the one the stream twin applies).
 
     The 100 TB story: each sketch is a per-partition partial top-k
     (TakeOrderedAndProject — no shuffle of the cohort, k·8 bytes over
@@ -1273,13 +1284,17 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ska = va.orderBy("h").limit(_KMV_K)
     skb = vb.orderBy("h").limit(_KMV_K)
     sku = va.union(vb).distinct().orderBy("h").limit(_KMV_K)
-    est_a = ska.agg((F.lit((_KMV_K - 1) * _KMV_DOM) / F.max("h")).alias("est_a"))
-    est_b = skb.agg((F.lit((_KMV_K - 1) * _KMV_DOM) / F.max("h")).alias("est_b"))
-    est_u = sku.agg((F.lit((_KMV_K - 1) * _KMV_DOM) / F.max("h")).alias("est_u"))
+    n = F.count(F.lit(1))
+    card = F.when(n < _KMV_K, n.cast("double")).otherwise(
+        F.lit((_KMV_K - 1) * _KMV_DOM) / F.max("h")
+    )
+    est_a = ska.agg(card.alias("est_a"))
+    est_b = skb.agg(card.alias("est_b"))
+    est_u = sku.agg(card.alias("est_u"), n.alias("n_u"))
     j_est = (
         sku.join(F.broadcast(ska), "h", "semi")
         .join(F.broadcast(skb), "h", "semi")
-        .agg((F.count(F.lit(1)) / F.lit(float(_KMV_K))).alias("j_est"))
+        .agg(n.alias("n_both"))
     )
     exact = va.join(vb, "h", "semi").agg(
         F.count(F.lit(1)).alias("exact_overlap")
@@ -1289,6 +1304,7 @@ def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(est_u))
         .crossJoin(F.broadcast(j_est))
         .crossJoin(F.broadcast(exact))
+        .withColumn("j_est", F.col("n_both") / F.col("n_u"))
     )
     return row.select(
         F.round("est_a").cast("long").alias("est_viewers"),

@@ -79,11 +79,10 @@ def multimodal_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling PLAN for the video rows: one output row per
     500 ms sample position, derived from metadata duration — the
     scheduling half of frame extraction, computed relationally
-    (sequence + explode, zero Python). The decode half consumes this
-    exact relation through mapInPandas against the stubbed codec
-    (operators/multimodal.py sample_frames), so at 100 TB the expensive
-    stage is driven by a partitionable frame-task table instead of
-    per-file driver loops."""
+    (sequence + explode, zero Python). A decode stage (ffmpeg/pyav, not
+    in this engine) would consume this exact relation through
+    mapInPandas, so at 100 TB the expensive stage is driven by a
+    partitionable frame-task table instead of per-file driver loops."""
     media = media_from_documents(table(spark, sf_dir, "documents")).filter(
         F.col("media_type") == "video"
     )

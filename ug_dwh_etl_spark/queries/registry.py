@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -80,22 +86,16 @@ def materialize_once(
     """Compute-once-read-everywhere for derived relations several
     queries share (the link-graph edge table, the LPA partition, the ER
     closure): ``build()`` runs the first time a (process, sf_dir, name)
-    triple is seen and its result is written to a per-process parquet
-    path; every later caller reads the parquet. This is the warehouse
-    posture at 100 TB — a shared derived artifact is materialized by
-    the first pipeline that needs it and JOINED by the rest, not
-    re-derived per query. Per-process + per-sf_dir keying keeps driver
-    rounds, gates, and scale probes isolated from each other."""
-    import hashlib
-    import os
-    import tempfile
-
+    triple is seen and its result is written under this process's
+    scratch root; every later caller reads the parquet. This is the
+    warehouse posture at 100 TB — a shared derived artifact is
+    materialized by the first pipeline that needs it and JOINED by the
+    rest, not re-derived per query. Per-process + per-sf_dir keying
+    keeps oracle gates, benchmark runs and scale probes isolated from
+    each other."""
     import time
 
-    key = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join(
-        tempfile.gettempdir(), f"mat_{name}_{os.getpid()}", key
-    )
+    path = scratch_dir(f"mat_{name}", sf_dir)
     built = not os.path.exists(os.path.join(path, "_SUCCESS"))
     t0 = time.perf_counter()
     if built:
@@ -110,10 +110,25 @@ def materialize_once(
     return spark.read.parquet(path)
 
 
-def sfdir_key(sf_dir: str) -> str:
-    """Collision-proof per-sf_dir path segment for per-process work dirs
-    (sha1 of the FULL path — basename keying collides across scale-probe
-    mode dirs that share a leaf like 'x4')."""
-    import hashlib
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_ROOT: str | None = None
 
-    return hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
+
+def scratch_dir(name: str, sf_dir: str | None = None) -> str:
+    """This process's work directory for ``name`` (and ``sf_dir``):
+    ``<root>/<name>/<sha1(sf_dir)[:12]>``, or ``<root>/<name>`` without
+    an sf_dir. The sha1 of the FULL path keeps scale-probe dirs that
+    share a leaf like 'x4' apart. ``<root>`` is one ``mkdtemp`` per
+    process, made on first use and removed at exit, so nothing outlives
+    the process and no later process can read it as its own. The
+    directory itself is not created; callers keep their own staging
+    guards."""
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="spark_graft_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+    path = os.path.join(_SCRATCH_ROOT, name)
+    if sf_dir is None:
+        return path
+    return os.path.join(path, hashlib.sha1(sf_dir.encode()).hexdigest()[:12])

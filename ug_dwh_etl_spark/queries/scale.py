@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.operators.bucketing import bucketed_join, write_bucketed
 from ug_dwh_etl_spark.operators.skew import salted_agg
-from ug_dwh_etl_spark.queries.registry import register, sfdir_key, table
+from ug_dwh_etl_spark.queries.registry import register, scratch_dir, table
 
 
 @register(
@@ -728,17 +728,10 @@ def storage_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     history); commits are rename-atomic, so readers never see a torn
     table (tested under concurrent overwrite in
     tests/test_round8_ops.py)."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable", sf_dir)
     t = SnapshotTable(root)
     # guard on the EXPECTED FINAL snapshot id, not table-nonempty: a
     # same-process retry after a crash mid-staging (e.g. after commit 1
@@ -796,17 +789,10 @@ def storage_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-only). This is the needle-in-100 TB read path: time travel
     picks the snapshot, stats pruning picks the files, partition/rowgroup
     pushdown does the rest."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_pruned_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_pruned", sf_dir)
     t = SnapshotTable(root)
     # staging-complete means snapshot 1 exists (single-commit staging;
     # commits are rename-atomic, so a crash mid-commit leaves None and
@@ -869,17 +855,10 @@ def storage_manifest_df_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     match proves the distributed planner dropped no rows; files_read <
     files_total and parity with the driver-side scan_pruned planner are
     pinned in tests/test_round11_ops.py."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_mdf_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_mdf", sf_dir)
     t = SnapshotTable(root)
     if t.latest_snapshot_id() != 1:
         import shutil
@@ -937,17 +916,10 @@ def storage_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round8_ops.py). This is the reference's
     if_exists='replace' upgraded to keyed upserts with history, the
     piece BigQuery DML did for it (SURVEY.md K1/K2)."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_merge_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_merge", sf_dir)
     t = SnapshotTable(root)
     # expected-final-id guard: staging is 2 commits (overwrite + merge);
     # a retry after a crash between them must wipe and restage, or the
@@ -1011,17 +983,10 @@ def storage_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot stays time-travelable (tests assert both reads agree).
     Write cost O(increment), read amplification bounded by maintenance
     — the heavy-update posture copy-on-write cannot afford at 100 TB."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_mor_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_mor", sf_dir)
     t = SnapshotTable(root)
     # expected-final-id guard: staging is 3 commits (overwrite +
     # merge-on-read + compaction); anything short restages from scratch
@@ -1086,17 +1051,10 @@ def storage_point_lookup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     "which shard holds this customer" path a support lookup or GDPR
     locate takes — manifest arithmetic + a couple of file reads, never
     a table scan."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_bloom_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_bloom", sf_dir)
     t = SnapshotTable(root)
     if t.latest_snapshot_id() != 1:
         import shutil
@@ -1159,20 +1117,13 @@ def storage_zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/storage.py). The oracle computes the identical aggregate
     from the raw relation; the files_read(zorder) < files_read(1-D)
     assertion lives in tests/test_round10_ops.py."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
     from ug_dwh_etl_spark.operators.storage import zorder_frame
 
     o = table(spark, sf_dir, "orders").withColumn(
         "day", F.datediff("o_orderdate", F.lit("1990-01-01")).cast("long")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_zorder_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_zorder", sf_dir)
     t = SnapshotTable(root)
     if t.latest_snapshot_id() != 1:
         import shutil
@@ -1235,18 +1186,12 @@ def storage_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     for gated ingestion: the audit costs a branch read, a failed audit
     costs a pointer delete, and no reader ever sees a half-validated
     table."""
-    import os
-    import tempfile
 
     from ug_dwh_etl_spark.operators.quality import expect
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_wap_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_wap", sf_dir)
     t = SnapshotTable(root)
     # expected-final-state guard: LATEST == 2 (drop_branch reclaims the
     # failed stage's id, so the published head is v2) and no leftover
@@ -1321,19 +1266,12 @@ def storage_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     query results, which is the entire contract of partition evolution:
     repartition the FUTURE of a 100 TB table (finer grain as it grows)
     without a rewrite job over its past."""
-    import os
-    import tempfile
-
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
 
     o = table(spark, sf_dir, "orders").withColumn(
         "o_year", F.date_format("o_orderdate", "yyyy")
     ).select("o_orderkey", "o_year", "o_orderstatus", "o_totalprice", "o_orderdate")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"snaptable_spec_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    root = scratch_dir("snaptable_spec", sf_dir)
     t = SnapshotTable(root)
     if t.latest_snapshot_id() != 3:
         import shutil

@@ -17,7 +17,7 @@ from ug_dwh_etl_spark.plans.semantic import (
     oracle_for_spec,
     trailing_oracle_for_spec,
 )
-from ug_dwh_etl_spark.queries.registry import register
+from ug_dwh_etl_spark.queries.registry import register, scratch_dir
 
 _REV_BY_REGION = MetricSpec(
     metrics=("revenue", "n_orders", "avg_order_value"),
@@ -115,7 +115,6 @@ def semantic_rollup_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     covering rollup; the compiler refuses non-additive metrics and
     fact-side filters (tested)."""
     import os
-    import tempfile
 
     from ug_dwh_etl_spark.plans.semantic import materialize_rollup
 
@@ -126,9 +125,7 @@ def semantic_rollup_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # fixed per-process path + overwrite mode: repeated gate/bench runs
     # reuse one directory instead of leaking a mkdtemp per invocation
-    path = os.path.join(
-        tempfile.gettempdir(), f"semantic_rollup_{os.getpid()}", "brand_flag"
-    )
+    path = os.path.join(scratch_dir("semantic_rollup"), "brand_flag")
     materialize_rollup(base, spark, sf_dir, path)
     routed = MetricSpec(
         metrics=("gross_revenue", "n_lines"), dimensions=("brand",), fact="lineitem"
@@ -161,16 +158,13 @@ def semantic_trailing_window_routed(spark: SparkSession, sf_dir: str) -> DataFra
     the rollup, never rescan the fact (plan-asserted in
     tests/test_semantic.py)."""
     import os
-    import tempfile
 
     from ug_dwh_etl_spark.plans.semantic import (
         compile_trailing_window,
         materialize_rollup,
     )
 
-    path = os.path.join(
-        tempfile.gettempdir(), f"semantic_rollup_{os.getpid()}", "date_status"
-    )
+    path = os.path.join(scratch_dir("semantic_rollup"), "date_status")
     materialize_rollup(_TRAILING_BASE, spark, sf_dir, path)
     return compile_trailing_window(
         _TRAILING_BASE, spark, sf_dir, rollup=path,

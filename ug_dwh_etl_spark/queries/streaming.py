@@ -509,9 +509,12 @@ def q_stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     WITH va AS (SELECT DISTINCT ('0x' || substr(md5(user_id::VARCHAR || '|kmv'), 1, 15))::BIGINT AS h
                 FROM events WHERE event_type = 'view'),
-    ska AS (SELECT h FROM va ORDER BY h LIMIT 64)
-    SELECT CAST(ROUND(63 * 1152921504606846976.0 / (SELECT MAX(h) FROM ska)) AS BIGINT)
+    ska AS (SELECT h FROM va ORDER BY h LIMIT 64),
+    st AS (SELECT COUNT(*) AS c, MAX(h) AS kth FROM ska)
+    SELECT CASE WHEN c < 64 THEN c
+                ELSE CAST(ROUND(63 * 1152921504606846976.0 / kth) AS BIGINT) END
              AS est_viewers
+    FROM st
     """,
 )
 def q_stream_kmv_viewers(spark: SparkSession, sf_dir: str) -> DataFrame:

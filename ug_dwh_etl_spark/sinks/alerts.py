@@ -30,14 +30,3 @@ class LoggingAlertSink(AlertSink):
     def send(self, title: str, message: str) -> None:
         self.alerts.append((title, message))
         logger.warning("ALERT %s: %s", title, message)
-
-
-class WebhookAlertSink(AlertSink):
-    """Shape of the real Teams MessageCard POST (`sf_html_data.py:28-49`).
-    Stubbed: the build environment has no network egress."""
-
-    def __init__(self, url: str):
-        self.url = url
-
-    def send(self, title: str, message: str) -> None:
-        raise NotImplementedError("network stub: POST MessageCard JSON to self.url")

@@ -16,11 +16,9 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-import pyspark.sql.functions as F
 from pyspark.storagelevel import StorageLevel
 
 
@@ -214,55 +212,3 @@ def prune_history(
             shutil.rmtree(full)
             dropped.append(value)
     return dropped
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    order_col: str,
-    n_shards: int,
-    fmt: str = "json",
-) -> dict:
-    """Write a deterministically-ordered, sharded training export:
-    range-partition on ``order_col`` into ``n_shards`` files, sort
-    within each shard, and write as ``fmt`` (``json`` → JSONL, the
-    lingua-franca training-corpus format; ``parquet`` for typed
-    columns). The companion sink to ``corpus_global_shuffle``: feed it
-    that query's salted hash key and the corpus lands on disk in a
-    reproducible pseudo-random global order, one contiguous key range
-    per shard, so a training reader streams shards sequentially and
-    re-runs produce byte-stable epochs.
-
-    Range partition + sortWithinPartitions is the no-global-sort
-    spelling: the sort folds into each shard's local spill machinery
-    instead of a single-reducer ORDER BY. Crash-safe via the same
-    staging-directory swap as the snapshot sink. Returns a small
-    manifest dict {n_files, n_rows, bytes} (metadata-sized — the rows
-    count comes from the written parquet files' footers, or a cheap
-    line count over the written JSONL text; never a re-parse with
-    schema inference of what was just written)."""
-    spark = df.sparkSession
-    staging = f"{path}__staging_{uuid.uuid4().hex[:8]}"
-    shaped = df.repartitionByRange(n_shards, F.col(order_col)).sortWithinPartitions(
-        order_col
-    )
-    writer = shaped.write.mode("overwrite")
-    if fmt == "json":
-        writer.json(staging)
-    elif fmt == "parquet":
-        writer.parquet(staging)
-    else:
-        raise ValueError(f"unsupported training-shard format: {fmt}")
-    swap_dir(staging, path)
-    if fmt == "parquet":
-        # count() over a parquet scan folds to footer row-count metadata.
-        n_rows = spark.read.parquet(path).count()
-    else:
-        # JSONL: one line per row — spark.read.text is a raw line scan,
-        # no JSON re-parse / schema inference of what was just written.
-        n_rows = spark.read.text(path).count()
-    files = [
-        f for f in os.listdir(path) if f.startswith("part-")
-    ]
-    total = sum(os.path.getsize(os.path.join(path, f)) for f in files)
-    return {"n_files": len(files), "n_rows": n_rows, "bytes": total}

@@ -76,60 +76,3 @@ def read_json(spark: SparkSession, path: str, schema: StructType | None = None) 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES) -> dict[str, DataFrame]:
     """Load the synthetic star schema from a scale-factor directory."""
     return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
-
-
-def read_text(
-    spark: SparkSession, path: str, whole: bool = False, normalize_col: str = "value"
-) -> DataFrame:
-    """Line-oriented text scan (one row per line; ``whole=True`` gives
-    one row per file) — the raw-corpus entry point for the text/dedup
-    operators when documents arrive as flat files rather than parquet."""
-    df = spark.read.option("wholetext", whole).text(path)
-    return df.withColumnRenamed("value", normalize_col)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: StructType | None = None,
-) -> DataFrame:
-    """XML scan via Spark 4's built-in XML datasource (sitemaps, feed
-    exports — the reference's orphan pipeline consumes sitemap URL
-    lists, sf_orphan_data.py:67-68). ``rowTag`` picks the repeating
-    element; attributes surface as ``_attr`` columns. Schema inference
-    costs an extra pass — pass an explicit StructType for registered
-    sources, same policy as read_csv."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return normalize_names(reader.load(path))
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Binary-blob scan (``binaryFile`` source): one row per file with
-    (path, modificationTime, length, content) — the ingest path for
-    multimodal payloads (images/audio/video) that downstream
-    mapInPandas decoders consume (operators/multimodal.py). Partition
-    count follows spark.sql.files.maxPartitionBytes, so a directory of
-    millions of small blobs parallelizes without driver-side listing
-    loops; pair with compact_table for the small-file problem."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    return reader.load(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """ORC scan — the other columnar format a lake migration inherits
-    (Hive-era tables). Same predicate-pushdown/column-pruning behavior
-    as the parquet scans; round-tripped in
-    tests/test_sources_sinks.py::test_orc_round_trip (no DuckDB-side
-    oracle — DuckDB has no ORC reader, so this source is test-proven
-    rather than oracle-proven)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)

@@ -739,10 +739,8 @@ def stream_incremental_neardup(
     hashes are computed ONCE per micro-batch (persisted), feeding both
     the match and the index appends. The emitted-pair collect is
     result-sized (the pairs ARE the query output), not data-sized."""
-    import hashlib
     import os
     import shutil
-    import tempfile
 
     from ug_dwh_etl_spark.operators.dedup import (
         doc_shingle_hashes,
@@ -763,12 +761,10 @@ def stream_incremental_neardup(
         # minhash signatures over the whole corpus per process was the
         # #1 wall cost of this query (round-9 verdict ask #4), and in
         # the daily model the index already exists before any ingest.
-        index_root = os.path.join(
-            tempfile.gettempdir(),
-            f"lsh_stream_idx_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}"
-            f"_{os.getpid()}",
-        )
         from ug_dwh_etl_spark.queries.dedup import lsh_corpus_index
+        from ug_dwh_etl_spark.queries.registry import scratch_dir
+
+        index_root = scratch_dir("lsh_stream_idx", sf_dir)
 
         art_bands, art_sh = lsh_corpus_index(spark, sf_dir)
         bands_path = os.path.join(index_root, "bands")
@@ -963,9 +959,8 @@ def stream_cdc_count_distinct(
     split."""
     import os
     import shutil
-    import tempfile
 
-    from ug_dwh_etl_spark.queries.registry import read_events
+    from ug_dwh_etl_spark.queries.registry import read_events, scratch_dir
 
     if state_root is None:
         # fixed per-process path (the semantic-rollup convention): repeated
@@ -973,7 +968,7 @@ def stream_cdc_count_distinct(
         # per invocation. The delta LOG must start empty each run (it is
         # append-only during the stream), so it is explicitly reset; the
         # base is overwrite-mode already.
-        state_root = os.path.join(tempfile.gettempdir(), f"cdc_cd_{os.getpid()}")
+        state_root = scratch_dir("cdc_cd")
     base_path = os.path.join(state_root, "base")
     log_path = os.path.join(state_root, "log")
     shutil.rmtree(log_path, ignore_errors=True)
@@ -1115,18 +1110,13 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     lakehouse landing path: micro-batch appends, snapshot isolation for
     readers, no rewrite of old data."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F  # noqa: F811
 
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
-    from ug_dwh_etl_spark.queries.registry import sfdir_key
+    from ug_dwh_etl_spark.queries.registry import scratch_dir
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"snap_ingest_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    work = scratch_dir("snap_ingest", sf_dir)
     src = os.path.join(work, "src")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
@@ -1204,7 +1194,6 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     source is an 8-file split with maxFilesPerTrigger=1, so the run
     genuinely exercises 8 micro-batches."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F  # noqa: F811
 
@@ -1215,7 +1204,7 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ug_dwh_etl_spark.queries.registry import (
         materialize_once,
-        sfdir_key,
+        scratch_dir,
         table,
     )
     from pyspark.sql import Window
@@ -1254,11 +1243,7 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"sem_ingest_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    work = scratch_dir("sem_ingest", sf_dir)
     src = os.path.join(work, "src")
     out = os.path.join(work, "verdicts")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
@@ -1361,19 +1346,14 @@ def stream_wap_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing path where 'abort' costs a pointer delete instead of a
     restore."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F  # noqa: F811
 
     from ug_dwh_etl_spark.operators.quality import expect
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
-    from ug_dwh_etl_spark.queries.registry import sfdir_key
+    from ug_dwh_etl_spark.queries.registry import scratch_dir
 
-    work = os.path.join(
-        tempfile.gettempdir(),
-        f"snap_wap_ingest_{os.getpid()}",
-        sfdir_key(sf_dir),
-    )
+    work = scratch_dir("snap_wap_ingest", sf_dir)
     src = os.path.join(work, "src")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):

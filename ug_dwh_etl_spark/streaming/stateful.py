@@ -1081,13 +1081,10 @@ def _stage_time_buckets(spark: SparkSession, sf_dir: str, n: int = 4) -> str:
     ((ts_us - min) * n) div (max - min + 1)."""
     import os
     import shutil
-    import tempfile
 
-    from ug_dwh_etl_spark.queries.registry import sfdir_key, table
+    from ug_dwh_etl_spark.queries.registry import scratch_dir, table
 
-    work = os.path.join(
-        tempfile.gettempdir(), f"sess_timeout_{os.getpid()}", sfdir_key(sf_dir)
-    )
+    work = scratch_dir("sess_timeout", sf_dir)
     src = os.path.join(work, "src")
     marker = os.path.join(work, "_STAGED")
     if not os.path.exists(marker):
