@@ -7,8 +7,10 @@ redefining an earlier symbol) is invisible at runtime. This walks every
 module in the package with ``ast`` and fails on any name bound twice at
 module or class scope by def/class statements. A second scan keeps
 temporary session-setting changes behind ``session.conf_scope``, a
-third fails on package definitions no user path reaches, and a fourth
-on scratch paths keyed by the process id.
+third fails on package definitions no user path reaches, a fourth on
+imports in package ``__init__.py`` files (which would hide such
+definitions from the third), and a fifth on scratch paths keyed by the
+process id.
 """
 
 from __future__ import annotations
@@ -54,7 +56,6 @@ def test_no_duplicate_top_level_definitions():
 # the rest of the session.
 _PERMANENT_CONF_SETS = {
     ("queries/registry.py", "spark.sql.legacy.parquet.nanosAsLong"),
-    ("streaming/jobs.py", "spark.sql.legacy.parquet.nanosAsLong"),
 }
 
 
@@ -247,27 +248,27 @@ def _unreached_package_defs() -> dict[str, int]:
     }
 
 
-# Tested library code no user path calls yet. Each either gains a caller
-# on a user path or is deleted with its tests; the set only shrinks.
-_NO_USER_CALLER_YET = {
-    "ug_dwh_etl_spark/operators/quality.py observed",
-    "ug_dwh_etl_spark/operators/skew.py salted_broadcast_left",
-    "ug_dwh_etl_spark/operators/storage.py write_clustered",
-    "ug_dwh_etl_spark/sinks/writers.py merge_upsert",
-    "ug_dwh_etl_spark/streaming/jobs.py incremental_rollup_pipeline",
-    "ug_dwh_etl_spark/streaming/jobs.py merge_rollup_delta",
-}
-
-
 def test_every_package_definition_is_on_a_user_path():
     """AST scan: a top-level def or class in the package that no user
     path reaches is a second path beside a live one, kept alive only by
     its tests — delete it (and those tests) or give it a caller."""
-    dead = _unreached_package_defs()
-    new = sorted(f"{k} (line {v})" for k, v in dead.items() if k not in _NO_USER_CALLER_YET)
-    assert not new, "reached only from tests/ or nowhere:\n" + "\n".join(new)
-    stale = sorted(_NO_USER_CALLER_YET - dead.keys())
-    assert not stale, "now reached or deleted, drop from the list:\n" + "\n".join(stale)
+    dead = sorted(f"{k} (line {v})" for k, v in _unreached_package_defs().items())
+    assert not dead, "reached only from tests/ or nowhere:\n" + "\n".join(dead)
+
+
+def test_package_inits_import_nothing():
+    """A layer ``__init__.py`` that re-exports names runs with every
+    import of its package, so the reachability scan above would count
+    each re-exported definition as reached. Only ``queries/__init__.py``
+    imports: loading every query module is how queries register."""
+    found = [
+        f"{py.relative_to(REPO)}:{node.lineno}"
+        for py in sorted(PKG.rglob("__init__.py"))
+        if py != PKG / "queries" / "__init__.py"
+        for node in ast.walk(ast.parse(py.read_text(), filename=str(py)))
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+    ]
+    assert not found, "imports in a package __init__.py:\n" + "\n".join(found)
 
 
 def test_no_pid_keyed_paths_in_the_package():

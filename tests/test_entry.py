@@ -33,7 +33,11 @@ def test_cli_query_and_pipeline(spark, tmp_path, capsys):
 
     assert main(["query", "macro_url_levels", "--sf-dir", "/root/testdata/sf0.001", "--limit", "2"]) == 0
     assert main(["pipeline", "e5", "--sf-dir", "/root/testdata/sf0.001", "--out", str(tmp_path)]) == 0
-    assert spark.read.parquet(str(tmp_path / "e5")).count() > 0
+    # a history table: appended under its warehouse name, stamped
+    landed = spark.read.parquet(str(tmp_path / "bq_orphan_urls"))
+    assert landed.count() > 0
+    assert "crawl_date" in landed.columns
+    assert any((tmp_path / "bq_orphan_urls").glob("crawl_date=*"))
     assert main(["list"]) == 0
     assert "q1_pricing_summary" in capsys.readouterr().out
 

@@ -5,20 +5,10 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from ug_dwh_etl_spark.functions import (
-    concat_cols,
-    concat_ws_skipnull,
-    days_between,
-    fill_cast,
-    lenient_int,
-    locale_decimal,
-    normalize_name,
-    normalize_names,
-    parse_ts,
-    regex_case,
-    rlike_any,
-    url_levels,
-)
+from ug_dwh_etl_spark.functions.dates import days_between
+from ug_dwh_etl_spark.functions.numeric import fill_cast, lenient_int, locale_decimal
+from ug_dwh_etl_spark.functions.text import concat_ws_skipnull, regex_case, rlike_any
+from ug_dwh_etl_spark.functions.urls import url_levels
 
 
 def rows(df):
@@ -54,12 +44,6 @@ def test_regex_case_order(spark):
     assert rows(out) == [("Internal",), ("White",), ("Ext",)]
 
 
-def test_concat_cols_null_safe(spark):
-    df = spark.createDataFrame([("a", None, "c")], "x string, y string, z string")
-    out = df.select(concat_cols(["x", "y", "z"]).alias("c"))
-    assert rows(out) == [("ac",)]
-
-
 def test_concat_ws_skipnull(spark):
     # concatenate_agents shape (sf_html_data.py:120-124): skip missing
     df = spark.createDataFrame([("a", None, "c")], "x string, y string, z string")
@@ -88,35 +72,9 @@ def test_fill_cast_intended_semantics(spark):
     assert rows(out) == [(1.5,), (0.0,), (0.0,)]
 
 
-def test_parse_ts_lenient(spark):
-    df = spark.createDataFrame([("2024-01-02 03:04:05",), ("junk",)], "s string")
-    out = df.select(parse_ts("s").cast("string").alias("t"))
-    assert rows(out) == [("2024-01-02 03:04:05",), (None,)]
-
-
-def test_parse_ts_german_date(spark):
-    # Midoco '%d.%m.%Y' (product_data.py:60)
-    df = spark.createDataFrame([("31.12.2023",)], "s string")
-    out = df.select(F.to_date(parse_ts("s", "d.M.yyyy")).cast("string").alias("d"))
-    assert rows(out) == [("2023-12-31",)]
-
-
 def test_days_between(spark):
     df = spark.createDataFrame(
         [("2024-01-10 08:00:00", "2024-01-01 23:00:00")], "a string, b string"
     )
     out = df.select(days_between(F.col("a").cast("timestamp"), F.col("b").cast("timestamp")).alias("d"))
     assert rows(out) == [(9,)]
-
-
-def test_normalize_name_rule():
-    # regex \s+|-|" → _, lowercase (sf_html_data.py:167-170)
-    assert normalize_name('Status  Code') == "status_code"
-    assert normalize_name('Flesch-Reading-Ease') == "flesch_reading_ease"
-    assert normalize_name('"Weird"') == "_weird_"
-
-
-def test_normalize_names_with_renames(spark):
-    df = spark.createDataFrame([(1, 2)], ["Status Code", "Crawl-Depth"])
-    out = normalize_names(df, {"crawl_depth": "depth"})
-    assert out.columns == ["status_code", "depth"]

@@ -192,24 +192,6 @@ def test_e4_union_aligns_by_name_with_null_fill(spark):
     assert all(r["source_page"] is None and r["alt_text"] is None for r in crawl_rows)
 
 
-def test_observed_metrics_free_with_action(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from ug_dwh_etl_spark.operators.quality import observed
-
-    df = spark.range(1000).withColumn(
-        "v", F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id"))
-    )
-    df2, obs = observed(
-        df,
-        "dq",
-        F.count(F.lit(1)).alias("rows"),
-        F.sum(F.col("v").isNull().cast("long")).alias("null_v"),
-    )
-    df2.write.mode("overwrite").parquet(str(tmp_path / "out"))
-    assert obs.get == {"rows": 1000, "null_v": 100}
-
-
 def test_merge_asof_tolerance_edges(spark):
     """merge_asof edge cases the oracle fixture may not cover: no prior
     right row (NULL), exact same-day tie (right wins the <= comparison),

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.operators.bucketing import bucketed_join, write_bucketed
-from ug_dwh_etl_spark.operators.skew import salted_agg, salted_broadcast_left
+from ug_dwh_etl_spark.operators.skew import salted_agg
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -29,18 +29,6 @@ def test_salted_agg_equals_plain(spark):
     ).collect()
     norm = lambda rows: sorted((r.event_type, r.n, round(r.s, 6)) for r in rows)
     assert norm(plain) == norm(salted)
-
-
-def test_salted_join_equals_plain(spark):
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    cust = spark.read.parquet(f"{SF_DIR}/customer.parquet").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    plain = orders.join(cust, "o_custkey").count()
-    salted = salted_broadcast_left(
-        orders, cust, "o_custkey", salt_from=["o_orderkey"], n_salt=8
-    ).count()
-    assert plain == salted
 
 
 def test_bucketed_join_has_no_exchange(spark):
@@ -68,7 +56,7 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_compact_table_reduces_files(spark, tmp_path):
-    from ug_dwh_etl_spark.operators.storage import compact_table
+    from ug_dwh_etl_spark.operators.storage import optimize_table
 
     path = str(tmp_path / "frag")
     spark.range(10_000).repartition(32).write.parquet(path)
@@ -76,38 +64,10 @@ def test_compact_table_reduces_files(spark, tmp_path):
 
     before = sum(f.endswith(".parquet") for f in os.listdir(path))
     assert before == 32
-    compact_table(spark, path, target_file_bytes=1 << 30)
+    stats = optimize_table(spark, path, target_file_bytes=1 << 30)
     after = sum(f.endswith(".parquet") for f in os.listdir(path))
-    assert after == 1
+    assert after == stats["n_files"] == 1
     assert spark.read.parquet(path).count() == 10_000
-
-
-def test_write_clustered_files_have_disjoint_ranges(spark, tmp_path):
-    import pyarrow.parquet as pq
-    import os
-
-    from ug_dwh_etl_spark.operators.storage import write_clustered
-
-    path = str(tmp_path / "clustered")
-    df = spark.range(0, 100_000).withColumnRenamed("id", "k")
-    write_clustered(df, path, ["k"], n_files=4)
-
-    ranges = []
-    for f in os.listdir(path):
-        if f.endswith(".parquet"):
-            md = pq.read_metadata(os.path.join(path, f))
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                col = md.row_group(rg).column(0)
-                mins.append(col.statistics.min)
-                maxs.append(col.statistics.max)
-            ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) == 4
-    # non-overlapping: every file's max < next file's min
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 < lo2
-    assert spark.read.parquet(path).count() == 100_000
 
 
 def test_hll_sketches_merge_across_partitions(spark):
@@ -158,10 +118,12 @@ def test_percentile_approx_tracks_exact(spark):
 def test_write_zordered_narrows_both_dims(spark, tmp_path):
     """Per-file min/max rectangles of a z-ordered write must beat a
     plain write on the WORSE dimension — the footer-stats file-skipping
-    guarantee behind operators.storage.write_zordered."""
+    guarantee behind optimize_table's Z-order rewrite."""
+    import math
+
     import pyspark.sql.functions as F
 
-    from ug_dwh_etl_spark.operators.storage import write_zordered
+    from ug_dwh_etl_spark.operators.storage import _dir_bytes, optimize_table
 
     orders = spark.read.parquet(f"{SF_DIR}/orders.parquet").selectExpr(
         "o_orderkey", "o_custkey", "datediff(to_date(o_orderdate), date'1992-01-01') AS d"
@@ -183,7 +145,10 @@ def test_write_zordered_narrows_both_dims(spark, tmp_path):
     plain = str(tmp_path / "plain")
     zord = str(tmp_path / "zord")
     orders.repartition(8).write.parquet(plain)
-    write_zordered(orders, zord, "o_custkey", "d", n_files=8)
+    orders.repartition(8).write.parquet(zord)
+    # a target of 1/8 of the table's bytes asks for 8 files
+    target = math.ceil(_dir_bytes(zord) / 8)
+    optimize_table(spark, zord, zorder_cols=("o_custkey", "d"), target_file_bytes=target)
 
     assert len(spark.read.parquet(zord).inputFiles()) >= 4
     assert max_dim_frac(zord) < 0.7 * max_dim_frac(plain)

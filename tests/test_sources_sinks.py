@@ -1,4 +1,4 @@
-"""Source/sink tests: CSV variants, REST pagination fan-out, writers."""
+"""Source/sink tests: REST pagination fan-out, writers, table maintenance."""
 
 from __future__ import annotations
 
@@ -9,17 +9,7 @@ import pyspark.sql.functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ug_dwh_etl_spark.sinks.writers import append_history, fan_out, overwrite_snapshot
-from ug_dwh_etl_spark.sources.readers import read_csv
 from ug_dwh_etl_spark.sources.rest import paginated_ingest
-
-
-def test_read_csv_semicolon_latin1(spark, tmp_path):
-    # Midoco feed shape: ';'-delimited latin-1 (product_data.py:56)
-    p = tmp_path / "bookings.csv"
-    p.write_bytes("Buchungs-Nr;Preis\n1;1.234,56\n".encode("latin-1"))
-    df = read_csv(spark, str(p), sep=";", encoding="ISO-8859-1")
-    assert df.columns == ["buchungs_nr", "preis"]
-    assert df.count() == 1
 
 
 def test_paginated_ingest_distributed(spark):
@@ -60,63 +50,6 @@ def test_fan_out_single_upstream(spark, tmp_path):
     assert spark.read.parquet(paths[1]).count() == 1
 
 
-def test_merge_upsert_replaces_and_inserts(spark, tmp_path):
-    from ug_dwh_etl_spark.sinks.writers import merge_upsert
-
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2")], ["k", "v", "day"]
-    )
-    merge_upsert(base, path, keys=["k"], partition_col="day")
-    updates = spark.createDataFrame(
-        [(2, "B", "d1"), (4, "d", "d2")], ["k", "v", "day"]
-    )
-    merge_upsert(updates, path, keys=["k"], partition_col="day")
-    got = {(r.k, r.v, r.day) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "a", "d1"), (2, "B", "d1"), (3, "c", "d2"), (4, "d", "d2")}
-
-
-def test_merge_upsert_unpartitioned(spark, tmp_path):
-    from ug_dwh_etl_spark.sinks.writers import merge_upsert
-
-    path = str(tmp_path / "flat")
-    merge_upsert(spark.createDataFrame([(1, "a")], ["k", "v"]), path, keys=["k"])
-    merge_upsert(spark.createDataFrame([(1, "A"), (2, "b")], ["k", "v"]), path, keys=["k"])
-    got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
-    assert got == {(1, "A"), (2, "b")}
-
-
-def test_read_csv_malformed_rows_quarantine(spark, tmp_path):
-    # feed drift: a row with a non-numeric amount; PERMISSIVE nulls the
-    # field and captures the raw line, DROPMALFORMED discards the row
-    from pyspark.sql.types import DoubleType
-
-    from ug_dwh_etl_spark.sources.readers import read_csv
-
-    p = tmp_path / "feed.csv"
-    p.write_text("id,amount\n1,10.5\n2,not_a_number\n3,7.25\n")
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("amount", DoubleType()),
-            StructField("_corrupt_record", StringType()),
-        ]
-    )
-    df = read_csv(spark, str(p), schema=schema, normalize=False).cache()
-    assert df.count() == 3
-    bad = df.filter(F.col("_corrupt_record").isNotNull()).collect()
-    assert len(bad) == 1 and bad[0]._corrupt_record == "2,not_a_number"
-    assert bad[0].amount is None
-
-    schema2 = StructType(
-        [StructField("id", LongType()), StructField("amount", DoubleType())]
-    )
-    dropped = read_csv(
-        spark, str(p), schema=schema2, normalize=False, mode="DROPMALFORMED"
-    )
-    assert [r.id for r in dropped.orderBy("id").collect()] == [1, 3]
-
-
 def test_ignore_corrupt_parquet_files(spark, tmp_path):
     # a truncated/garbage file in the table directory must not sink the
     # whole 100 TB scan when ignoreCorruptFiles is on
@@ -134,7 +67,7 @@ def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from ug_dwh_etl_spark.sinks.writers import append_history, compact_partitions
+    from ug_dwh_etl_spark.operators.storage import optimize_table
 
     hist = str(tmp_path / "hist")
     # simulate many micro-batch appends: 8 tiny files per day
@@ -148,18 +81,11 @@ def test_compact_partitions_reduces_files_and_preserves_rows(spark, tmp_path):
     assert before >= 16
     total_before = spark.read.parquet(hist).count()
 
-    # compact only day 1 (the nightly "compact yesterday" mode)
-    compact_partitions(spark, hist, partitions=["2026-01-01"])
-    day1 = glob.glob(f"{hist}/crawl_date=2026-01-01/*.parquet")
-    assert len(day1) == 1
-    # untouched day keeps its files
-    day2 = glob.glob(f"{hist}/crawl_date=2026-01-02/*.parquet")
-    assert len(day2) >= 8
-    assert spark.read.parquet(hist).count() == total_before
-
-    # whole-table compaction
-    after = compact_partitions(spark, hist)
-    assert after <= 2
+    stats = optimize_table(spark, hist, partition_col="crawl_date")
+    # one small table, one file, split by the hive partition it keeps
+    for day in ("2026-01-01", "2026-01-02"):
+        assert len(glob.glob(f"{hist}/crawl_date={day}/*.parquet")) == 1
+    assert stats["n_files"] == 2
     assert spark.read.parquet(hist).count() == total_before
 
 

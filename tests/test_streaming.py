@@ -1,19 +1,13 @@
-"""Streaming surface tests: AvailableNow jobs equal their batch twins;
-foreachBatch incremental append processes only the delta."""
+"""Streaming surface tests: AvailableNow jobs equal their batch twins."""
 
 from __future__ import annotations
 
 import pytest
-import shutil
 
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.queries.events import events_hourly_tumbling
-from ug_dwh_etl_spark.streaming.jobs import (
-    available_now_pipeline,
-    stream_dedup_events,
-    stream_hourly_tumbling,
-)
+from ug_dwh_etl_spark.streaming.jobs import stream_dedup_events, stream_hourly_tumbling
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,25 +22,6 @@ def test_stream_tumbling_equals_batch(spark):
 def test_stream_dedup_count(spark):
     n_unique = stream_dedup_events(spark, SF_DIR).first()["n_unique"]
     assert n_unique > 0
-
-
-def test_available_now_incremental_append(spark, tmp_path):
-    out = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    transform = lambda df: df.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-
-    available_now_pipeline(spark, SF_DIR, transform, out, checkpoint=ckpt)
-    first = spark.read.parquet(out).count()
-    assert first > 0
-
-    # second run with the same checkpoint: no new files -> no new rows
-    available_now_pipeline(spark, SF_DIR, transform, out, checkpoint=ckpt)
-    assert spark.read.parquet(out).count() == first
-
-    # fresh checkpoint -> reprocesses everything (the cron re-run model)
-    shutil.rmtree(ckpt)
-    available_now_pipeline(spark, SF_DIR, transform, out, checkpoint=ckpt)
-    assert spark.read.parquet(out).count() == 2 * first
 
 
 def test_transform_with_state_twin(spark):
@@ -64,97 +39,6 @@ def test_transform_with_state_twin(spark):
         for r in stream_user_totals_tws(spark, "/root/testdata/sf0.001").collect()
     }
     assert len(got) > 0
-
-
-def test_incremental_rollup_equals_batch(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from ug_dwh_etl_spark.queries.registry import table
-    from ug_dwh_etl_spark.streaming.jobs import (
-        incremental_rollup_pipeline,
-        merge_rollup_delta,
-    )
-
-    sf_dir = "/root/testdata/sf0.001"
-    ev = table(spark, sf_dir, "events")
-    expected = {
-        (str(r.day), r.event_type): (r.n, round(r.total_value, 2))
-        for r in ev.groupBy(F.to_date("ts").alias("day"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .collect()
-    }
-
-    # arbitrary batch split: merge two disjoint halves as separate deltas
-    out = str(tmp_path / "rollup_manual")
-    merge_rollup_delta(ev.filter(F.col("event_id") % 2 == 0), out)
-    merge_rollup_delta(ev.filter(F.col("event_id") % 2 == 1), out)
-    # total_value is DECIMAL in the stored rollup — compare as float
-    got = {
-        (str(r.day), r.event_type): (r.n, round(float(r.total_value), 2))
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == expected
-
-    # end-to-end streaming run produces the same view
-    out2 = str(tmp_path / "rollup_stream")
-    incremental_rollup_pipeline(spark, sf_dir, out2, checkpoint=str(tmp_path / "ck"))
-    got2 = {
-        (str(r.day), r.event_type): (r.n, round(float(r.total_value), 2))
-        for r in spark.read.parquet(out2).collect()
-    }
-    assert got2 == expected
-
-
-def test_available_now_pipeline_gates_and_quarantines(spark, tmp_path):
-    # per-micro-batch DQ: a non-blocking gate alerts but lands; a
-    # blocking gate diverts the batch to quarantine
-    from ug_dwh_etl_spark.plans.pipeline import Gate
-    from ug_dwh_etl_spark.sinks.alerts import LoggingAlertSink
-    from ug_dwh_etl_spark.streaming.jobs import available_now_pipeline
-
-    alert = LoggingAlertSink()
-    out = str(tmp_path / "out")
-    q = str(tmp_path / "quarantine")
-
-    available_now_pipeline(
-        spark,
-        SF_DIR,
-        transform=lambda df: df.select("event_id", "event_type", "value"),
-        out_path=out,
-        checkpoint=str(tmp_path / "ck1"),
-        gates=(
-            Gate(
-                violation=F.col("value") > -1e18,  # always fires: alert-only
-                title="warn gate",
-                message="values present",
-            ),
-        ),
-        alert=alert,
-    )
-    assert alert.alerts and alert.alerts[0][0] == "warn gate"
-    assert spark.read.parquet(out).count() > 0
-
-    available_now_pipeline(
-        spark,
-        SF_DIR,
-        transform=lambda df: df.select("event_id", "event_type", "value"),
-        out_path=str(tmp_path / "never"),
-        checkpoint=str(tmp_path / "ck2"),
-        gates=(
-            Gate(
-                violation=F.col("value") > -1e18,
-                title="block gate",
-                message="bad batch",
-                blocking=True,
-            ),
-        ),
-        alert=alert,
-        quarantine_path=q,
-    )
-    import os
-
-    assert not os.path.exists(str(tmp_path / "never"))
-    assert spark.read.parquet(q).count() > 0
 
 
 def test_stream_source_handles_directory_layout(spark, tmp_path):
@@ -432,7 +316,7 @@ def test_streaming_observe_reports_dq_metrics_inline(spark, tmp_path):
     """The observation API on a STREAM: per-batch row/null counts ride
     the existing pass (no second scan), surfaced in progress events —
     the zero-extra-cost DQ counters a 100 TB ingest keeps per
-    micro-batch (streaming twin of operators.quality.observed)."""
+    micro-batch, through ``DataFrame.observe`` directly."""
     from ug_dwh_etl_spark.queries.registry import read_events
     from ug_dwh_etl_spark.streaming.jobs import read_events_stream
 

@@ -8,8 +8,11 @@ cron scripts switches to.
 
 Each reference script maps onto ``pipeline eN`` (E1 crawl, E2 ranks,
 E3 bookings run with gates + history/snapshot sinks; E4-E8 compute their
-transform chain and land a snapshot table), mirroring the reference's
-cron entry points (`/root/reference/README.md:12`).
+transform chain and land it under ``<out>/bq_*`` with the sink mode
+``daily`` uses: history tables append with a ``crawl_date`` stamp,
+snapshot tables replace), mirroring the reference's cron entry points
+(`/root/reference/README.md:12`). ``maintain`` runs retention and the
+one table rewrite (compaction or Z-order) on a parquet table.
 """
 
 from __future__ import annotations
@@ -201,19 +204,10 @@ def main(argv: list[str] | None = None) -> int:
         print(f"{pipe.name}: gates {'passed' if ok else 'FAILED'}, sinks written to {args.out}")
         return 0 if ok else 1
 
-    from ug_dwh_etl_spark.plans import reference_pipelines_ext as ext
-    from ug_dwh_etl_spark.sinks.writers import overwrite_snapshot
+    from ug_dwh_etl_spark.plans.daily import land
 
-    fn = {
-        "e4": ext.e4_images_inventory,
-        "e5": ext.e5_orphan_urls,
-        "e6": ext.e6_inlinks_edges,
-        "e7": ext.e7_backlink_metrics,
-        "e8": ext.e8_hreflang_issues,
-    }[args.name]
-    df = fn(spark, args.sf_dir)
-    overwrite_snapshot(df, f"{args.out}/{args.name}")
-    print(f"{args.name}: {spark.read.parquet(f'{args.out}/{args.name}').count()} rows written to {args.out}/{args.name}")
+    tbl = land(spark, args.sf_dir, args.out, args.name)
+    print(f"{args.name}: {spark.read.parquet(f'{args.out}/{tbl}').count()} rows in {args.out}/{tbl}")
     return 0
 
 

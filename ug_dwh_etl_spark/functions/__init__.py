@@ -4,36 +4,3 @@ Every row-wise pandas ``.apply`` lambda in the reference is re-expressed
 here as a native Spark Column expression (JVM-side, whole-stage-codegen
 eligible). This package ships ZERO Python UDFs: see SURVEY.md §2.12.
 """
-
-from ug_dwh_etl_spark.functions.urls import url_levels, URL_LEVEL_NAMES
-from ug_dwh_etl_spark.functions.text import (
-    rlike_any,
-    bool_label,
-    regex_case,
-    concat_cols,
-    concat_ws_skipnull,
-    PICTURE_EXT_PATTERN,
-)
-from ug_dwh_etl_spark.functions.dates import parse_ts, to_day, stamp_date, days_between
-from ug_dwh_etl_spark.functions.numeric import locale_decimal, lenient_int, fill_cast
-from ug_dwh_etl_spark.functions.names import normalize_name, normalize_names
-
-__all__ = [
-    "url_levels",
-    "URL_LEVEL_NAMES",
-    "rlike_any",
-    "bool_label",
-    "regex_case",
-    "concat_cols",
-    "concat_ws_skipnull",
-    "PICTURE_EXT_PATTERN",
-    "parse_ts",
-    "to_day",
-    "stamp_date",
-    "days_between",
-    "locale_decimal",
-    "lenient_int",
-    "fill_cast",
-    "normalize_name",
-    "normalize_names",
-]

@@ -1,4 +1,4 @@
-"""Date / timestamp macros (SURVEY.md §2.10 C5, C6, C9, C11)."""
+"""Date / timestamp macros (SURVEY.md §2.10 C5, C9, C11)."""
 
 from __future__ import annotations
 
@@ -8,15 +8,6 @@ import pyspark.sql.functions as F
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
-
-
-def parse_ts(col: Column | str, fmt: str = "yyyy-MM-dd HH:mm:ss") -> Column:
-    """C5/C6 — timestamp parse with an explicit pattern. The reference
-    parses '%Y-%m-%d %H:%M:%S' (`sf_html_data.py:143`),
-    ISO-8601 Z (`Audisto/audisto.py:83`) and '%d.%m.%Y'
-    (`Midoco/product_data.py:60`). try_to_timestamp keeps the
-    errors='coerce' leniency."""
-    return F.try_to_timestamp(_c(col), F.lit(fmt))
 
 
 def to_day(col: Column | str) -> Column:

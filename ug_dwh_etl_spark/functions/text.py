@@ -1,4 +1,4 @@
-"""String / regex / conditional macros (SURVEY.md §2.10 C2-C4, C7-C8).
+"""String / regex / conditional macros (SURVEY.md §2.10 C2-C4, C8).
 
 All native Column expressions — the reference does each of these as a
 row-at-a-time pandas lambda.
@@ -10,11 +10,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column
 import pyspark.sql.functions as F
-
-# C2: the reference's picture-extension test, case-insensitive
-# (`sf_html_data.py:148`, `sf_with_backlinkdata.py:79`).
-PICTURE_EXT_PATTERN = r"(?i)\.(jpg|jpeg|png|gif|webp|svg|bmp|ico)\b"
-
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
@@ -43,15 +38,6 @@ def regex_case(col: Column | str, cases: Sequence[tuple[str, str]], default: str
         expr = clause if expr is None else expr.when(col.rlike(pattern), F.lit(label))
     assert expr is not None
     return expr.otherwise(F.lit(default))
-
-
-def concat_cols(cols: Sequence[Column | str]) -> Column:
-    """C7 — horizontal string concat of N columns (the reference's
-    ``astype(str).sum(axis=1)`` over content-* columns,
-    `sf_html_data.py:134-136`). NULLs become empty string so one NULL
-    column doesn't null the whole row (pandas str(NaN)='nan' divergence
-    is intentional — documented in SURVEY.md §5)."""
-    return F.concat(*[F.coalesce(_c(c).cast("string"), F.lit("")) for c in cols])
 
 
 def concat_ws_skipnull(sep: str, cols: Sequence[Column | str]) -> Column:

@@ -1,7 +1,9 @@
 """Incremental view maintenance (IVM) for JOIN views.
 
-The aggregate side of IVM lives in ``streaming.jobs.merge_rollup_delta``
-(monoid rollups merged per delta); this is the JOIN side: a
+The aggregate side of IVM is a monoid merge per delta
+(``ivm_count_distinct_view`` and its stream twin
+``stream_cdc_count_distinct`` sum multiplicities over base ∪ delta
+log); this is the JOIN side: a
 materialized view V = A ⋈ B is maintained under inserts with the
 bilinear delta rule
 

@@ -31,22 +31,6 @@ def expect(
     return not violated
 
 
-def observed(df: DataFrame, name: str, *metrics: Column):
-    """Attach zero-extra-pass DQ metrics to a DataFrame: the returned
-    ``Observation``'s ``.get`` yields the aggregates computed DURING the
-    next action on the frame — no second scan, unlike ``expect`` (which
-    pays a targeted existence probe). Use for always-on pipeline
-    telemetry (row counts, null counts, domain violations) where the
-    reference printed eyeball checkpoints (`sf_html_data.py:92,...`).
-
-    Returns (df_with_observation, observation).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    return df.observe(obs, *metrics), obs
-
-
 def contract_check(df: DataFrame, rules: list[tuple[str, Column]]) -> DataFrame:
     """Declarative data-contract validation: ``rules`` is a list of
     (constraint_name, boolean aggregate Column); the result has one row

@@ -9,10 +9,6 @@ enough that even one post-split partition won't fit an executor:
   (key, salt) — the hot key fans out over ``n_salt`` reducers — phase 2
   merges the partials per key. Works for any decomposable aggregate
   (count/sum/min/max); result is EXACTLY the plain groupBy.
-- ``salted_broadcast_left``: replicate-the-small-side join. The skewed
-  big side gets a deterministic salt in [0, n); the small side is
-  exploded n times so every (key, salt) pair still matches. Join output
-  is row-identical to the unsalted join.
 
 Salts are derived from a hash of stable columns (never ``rand()``) so
 task retries and the DuckDB oracle are deterministic.
@@ -58,21 +54,3 @@ def salted_agg(
             for out, (col, fn) in aggs.items()
         ]
     )
-
-
-def salted_broadcast_left(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_from: Sequence[str],
-    n_salt: int = 16,
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, explode the small side
-    n_salt times, join on (key, salt). Use when one key dominates and
-    the small side is broadcastable anyway — the explode is cheap and
-    the hot key's rows spread over n_salt tasks."""
-    big_s = big.withColumn("_salt", salt_col(salt_from, n_salt))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-    )
-    return big_s.join(F.broadcast(small_s), [key, "_salt"]).drop("_salt")

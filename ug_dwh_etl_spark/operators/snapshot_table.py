@@ -613,10 +613,8 @@ class SnapshotTable:
         and the result lands as ONE new snapshot — readers switch from
         the whole old table to the whole new one atomically, and the
         pre-merge state stays time-travelable. This is the Iceberg
-        copy-on-write MERGE INTO shape (the sibling of
-        sinks.writers.merge_upsert, which rewrites a live path in
-        place); :meth:`commit_merge_on_read` is the delete-file twin a
-        heavier write rate needs."""
+        copy-on-write MERGE INTO shape; :meth:`commit_merge_on_read` is
+        the delete-file twin a heavier write rate needs."""
         if self.latest_snapshot_id() is None:
             return self._commit(df, "merge", stats_cols)
         current = self.read_as_of(df.sparkSession)

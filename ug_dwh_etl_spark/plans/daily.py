@@ -12,6 +12,8 @@ the isolation of 8 separate cron processes."""
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
@@ -32,8 +34,28 @@ from ug_dwh_etl_spark.sinks.alerts import AlertSink
 from ug_dwh_etl_spark.sinks.writers import append_history, overwrite_snapshot
 
 
-def _stamped(df: DataFrame) -> DataFrame:
-    return df.withColumn("crawl_date", stamp_date())
+# Where each transform-only pipeline lands: pipeline → (warehouse table,
+# frame builder, history?). History tables append with a ``crawl_date``
+# stamp; snapshot tables replace.
+OUTPUTS: dict[str, tuple[str, Callable[[SparkSession, str], DataFrame], bool]] = {
+    "e4": ("bq_images", e4_images_inventory, True),
+    "e5": ("bq_orphan_urls", e5_orphan_urls, True),
+    "e6": ("bq_inlinks", e6_inlinks_edges, False),
+    "e7": ("bq_backlinks", e7_backlink_metrics, True),
+    "e8": ("bq_hreflang_issues", e8_hreflang_issues, False),
+}
+
+
+def land(spark: SparkSession, sf_dir: str, warehouse_dir: str, pipeline: str) -> str:
+    """Run one of ``OUTPUTS``' pipelines into its table under
+    ``warehouse_dir`` with that table's sink mode; returns the table."""
+    tbl, build, history = OUTPUTS[pipeline]
+    df = build(spark, sf_dir)
+    if history:
+        append_history(df.withColumn("crawl_date", stamp_date()), f"{warehouse_dir}/{tbl}")
+    else:
+        overwrite_snapshot(df, f"{warehouse_dir}/{tbl}")
+    return tbl
 
 
 def daily_run(
@@ -50,30 +72,10 @@ def daily_run(
         e3_bookings_pipeline(sf_dir, out_dir=warehouse_dir),
     ):
         pipe.run(spark, alert=alert)
-
-    appends = {
-        "bq_images": e4_images_inventory(spark, sf_dir),
-        "bq_orphan_urls": e5_orphan_urls(spark, sf_dir),
-        "bq_backlinks": e7_backlink_metrics(spark, sf_dir),
-    }
-    replaces = {
-        "bq_inlinks": e6_inlinks_edges(spark, sf_dir),
-        "bq_hreflang_issues": e8_hreflang_issues(spark, sf_dir),
-    }
-    for tbl, df in appends.items():
-        append_history(_stamped(df), f"{warehouse_dir}/{tbl}")
-    for tbl, df in replaces.items():
-        overwrite_snapshot(df, f"{warehouse_dir}/{tbl}")
+    tables = [land(spark, sf_dir, warehouse_dir, key) for key in OUTPUTS]
 
     counts: dict[str, int] = {}
-    for tbl in (
-        "bq_content_history",
-        "bq_content",
-        "bq_audisto_ranks",
-        "bq_bookings",
-        *appends,
-        *replaces,
-    ):
+    for tbl in ("bq_content_history", "bq_content", "bq_audisto_ranks", "bq_bookings", *tables):
         try:
             counts[tbl] = spark.read.parquet(f"{warehouse_dir}/{tbl}").count()
         except Exception:  # noqa: BLE001 — a gated-off sink may not exist
@@ -95,16 +97,12 @@ def backfill_run(
     replaces exactly its own ``crawl_date=`` partition and never
     double-appends — at 100 TB a backfill touches O(dates) partitions,
     not the table. Returns {table: total rows} after the run."""
-    appends = {
-        "bq_images": e4_images_inventory,
-        "bq_orphan_urls": e5_orphan_urls,
-        "bq_backlinks": e7_backlink_metrics,
-    }
-    for tbl, fn in appends.items():
+    history = [(tbl, build) for tbl, build, hist in OUTPUTS.values() if hist]
+    for tbl, build in history:
         # compute the (date-independent) table ONCE and persist it
         # across the date loop — per-(date,table) recompute would
         # multiply the scan+transform cost by len(dates)
-        base = fn(spark, sf_dir).persist()
+        base = build(spark, sf_dir).persist()
         try:
             for d in dates:
                 (
@@ -120,5 +118,5 @@ def backfill_run(
             base.unpersist()
     return {
         tbl: spark.read.parquet(f"{warehouse_dir}/{tbl}").count()
-        for tbl in appends
+        for tbl, _build in history
     }

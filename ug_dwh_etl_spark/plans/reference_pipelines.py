@@ -34,8 +34,25 @@ from ug_dwh_etl_spark.plans.pipeline import Gate, Pipeline
 from ug_dwh_etl_spark.sinks.writers import append_history, overwrite_snapshot
 from ug_dwh_etl_spark.sources.rest import paginated_ingest
 
-# Same deterministic URL material as queries/macros.py.
-_URL_SPARK = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(doc_id AS STRING))"
+# Deterministic page URL built from fixture columns, shared by every
+# pipeline and macro query that derives crawl pages from documents.
+# split('/') → [https:, '', www.example.com, <lang>, <source>, p<id>]
+URL_SPARK = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(doc_id AS STRING))"
+# C2: the reference's picture-extension test (`sf_html_data.py:148`,
+# `sf_with_backlinkdata.py:79`); rlike_any makes it case-insensitive.
+PIC_RE = r"\.(jpg|jpeg|png|gif|webp|svg|bmp|ico)$"
+
+
+def doc_ext() -> F.Column:
+    """The file extension a crawl-page stand-in gets from its doc_id. A
+    factory, not a constant: building a Column needs a live
+    SparkContext in classic mode, so it must not run at import time."""
+    return (
+        F.when(F.col("doc_id") % 4 == 0, ".jpg")
+        .when(F.col("doc_id") % 4 == 1, ".PNG")
+        .when(F.col("doc_id") % 4 == 2, ".html")
+        .otherwise(".pdf")
+    )
 
 
 # --- E1: crawl pipeline (sf_html_data.py) -------------------------------------
@@ -43,15 +60,9 @@ _URL_SPARK = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(d
 def e1_transform(docs: DataFrame) -> DataFrame:
     """The sf_html_data chain: derive → split → classify → cast → project
     (`sf_html_data.py:109-173`)."""
-    ext = (
-        F.when(F.col("doc_id") % 4 == 0, ".jpg")
-        .when(F.col("doc_id") % 4 == 1, ".PNG")
-        .when(F.col("doc_id") % 4 == 2, ".html")
-        .otherwise(".pdf")
-    )
-    df = docs.withColumn("address", F.concat(F.expr(_URL_SPARK), ext))
+    df = docs.withColumn("address", F.concat(F.expr(URL_SPARK), doc_ext()))
     df = with_url_levels(df, "address")
-    is_pic = rlike_any("address", [r"\.(jpg|jpeg|png|gif|webp|svg|bmp|ico)$"])
+    is_pic = rlike_any("address", [PIC_RE])
     df = df.withColumn("doctype", bool_label(is_pic, "Picture", "HTML"))
     df = df.withColumn(
         "website_type",

@@ -32,25 +32,12 @@ import pyspark.sql.functions as F
 from ug_dwh_etl_spark.functions.numeric import fill_cast
 from ug_dwh_etl_spark.functions.text import bool_label, regex_case, rlike_any
 from ug_dwh_etl_spark.functions.urls import with_url_levels
-
-# Same deterministic URL material as queries/macros.py / E1.
-_URL_SPARK = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(doc_id AS STRING))"
-PIC_RE = r"\.(jpg|jpeg|png|gif|webp|svg|bmp|ico)$"
-
-# Column factories, not module constants: building a Column needs a live
-# SparkContext in classic mode, so these must not run at import time.
-def _ext() -> F.Column:
-    return (
-        F.when(F.col("doc_id") % 4 == 0, ".jpg")
-        .when(F.col("doc_id") % 4 == 1, ".PNG")
-        .when(F.col("doc_id") % 4 == 2, ".html")
-        .otherwise(".pdf")
-    )
+from ug_dwh_etl_spark.plans.reference_pipelines import PIC_RE, URL_SPARK, doc_ext
 
 
 def _docs_with_address(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.withColumn("address", F.concat(F.expr(_URL_SPARK), _ext()))
+    return docs.withColumn("address", F.concat(F.expr(URL_SPARK), doc_ext()))
 
 
 # --- E4: image inventory (sf_images_data.py) ----------------------------------

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ug_dwh_etl_spark.functions.urls import url_levels_sql
+from ug_dwh_etl_spark.plans.reference_pipelines import URL_SPARK
+from ug_dwh_etl_spark.queries.macros import URL_DUCK
 from ug_dwh_etl_spark.queries.registry import register, table
 
 TABLES = (
@@ -184,17 +186,13 @@ def register_sql_macros(spark: SparkSession) -> None:
         spark.sql(ddl)
 
 
-_MACRO_URL = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(doc_id AS STRING))"
-_MACRO_URL_DUCK = "'https://www.example.com/' || lang || '/' || source || '/p' || doc_id::VARCHAR"
-
-
 @register(
     "sql_macro_rollup",
     f"""
     SELECT string_split(address, '/')[3] AS root,
            string_split(address, '/')[4] AS directory,
            CAST(COUNT(*) AS BIGINT) AS n
-    FROM (SELECT {_MACRO_URL_DUCK} AS address FROM documents)
+    FROM (SELECT {URL_DUCK} AS address FROM documents)
     GROUP BY root, directory
     """,
 )
@@ -206,7 +204,7 @@ def sql_macro_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT url_root(address) AS root,
                url_directory(address) AS directory,
                COUNT(*) AS n
-        FROM (SELECT {_MACRO_URL} AS address FROM documents)
+        FROM (SELECT {URL_SPARK} AS address FROM documents)
         GROUP BY root, directory
         """
     )

@@ -413,9 +413,8 @@ def events_rollup_hour_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     store maintains as separate tables, as one partial-aggregated
     shuffle. The grand-total row is dropped (HAVING day IS NOT NULL);
     grain labels which level a row belongs to. At 100 TB this is the
-    nightly rollup feeding the incremental delta-merge pipeline
-    (streaming/jobs.py incremental_rollup_pipeline) — same shape, and
-    the day level prunes to touched partitions."""
+    nightly rollup an incremental delta merge would maintain — same
+    shape, and the day level prunes to touched partitions."""
     ev = table(spark, sf_dir, "events")
     b = ev.select(
         F.date_trunc("day", "ts").alias("day"),
@@ -1705,8 +1704,8 @@ def sketch_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket): {_CMS_D}*{_CMS_W} cells of state no matter how many
     events or users — the fixed-memory frequency sketch you hold per
     partition and MERGE by cell-wise addition at 100 TB (the grid is a
-    monoid, so it also drops into merge_rollup_delta's incremental
-    model). Probing joins the tiny grid back by the same hash."""
+    monoid, so it also drops into a per-delta incremental merge).
+    Probing joins the tiny grid back by the same hash."""
     ev = table(spark, sf_dir, "events")
     from ug_dwh_etl_spark.operators.hashing import md5_long
 

@@ -22,23 +22,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from ug_dwh_etl_spark.plans.reference_pipelines import URL_SPARK
+from ug_dwh_etl_spark.queries.macros import URL_DUCK
 from ug_dwh_etl_spark.queries.registry import QUERIES, register, table
 
-_URL_SPARK = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(doc_id AS STRING))"
-_URL_DUCK = "'https://www.example.com/' || lang || '/' || source || '/p' || doc_id::VARCHAR"
 
 _HIST_DUCK = f"""
-    c1 AS (SELECT {_URL_DUCK} AS address, '2026-01-01' AS crawl_date,
+    c1 AS (SELECT {URL_DUCK} AS address, '2026-01-01' AS crawl_date,
                   n_chars::BIGINT AS metric
            FROM documents WHERE doc_id % 17 <> 3),
-    c2 AS (SELECT {_URL_DUCK} AS address, '2026-01-02' AS crawl_date,
+    c2 AS (SELECT {URL_DUCK} AS address, '2026-01-02' AS crawl_date,
                   (n_chars + CASE WHEN doc_id % 7 = 0 THEN 50 ELSE 0 END)::BIGINT AS metric
            FROM documents WHERE doc_id % 13 <> 5)
 """
 
 
 def _crawls(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    docs = table(spark, sf_dir, "documents").withColumn("address", F.expr(_URL_SPARK))
+    docs = table(spark, sf_dir, "documents").withColumn("address", F.expr(URL_SPARK))
     c1 = docs.filter(F.col("doc_id") % 17 != 3).select(
         "address",
         F.lit("2026-01-01").alias("crawl_date"),

@@ -15,12 +15,11 @@ from ug_dwh_etl_spark.functions.dates import days_between, to_day
 from ug_dwh_etl_spark.functions.numeric import fill_cast, lenient_int, locale_decimal
 from ug_dwh_etl_spark.functions.text import bool_label, concat_ws_skipnull, regex_case, rlike_any
 from ug_dwh_etl_spark.functions.urls import url_levels
+from ug_dwh_etl_spark.plans.reference_pipelines import PIC_RE, URL_SPARK, doc_ext
 from ug_dwh_etl_spark.queries.registry import register, table
 
-# Deterministic URL built from fixture columns — same expression on both
-# engines. split('/') → [https:, '', www.example.com, <lang>, <source>, p<id>]
-_URL_SPARK = "concat('https://www.example.com/', lang, '/', source, '/p', CAST(doc_id AS STRING))"
-_URL_DUCK = "'https://www.example.com/' || lang || '/' || source || '/p' || doc_id::VARCHAR"
+# The oracle spelling of plans.reference_pipelines.URL_SPARK.
+URL_DUCK = "'https://www.example.com/' || lang || '/' || source || '/p' || doc_id::VARCHAR"
 
 
 # --- C1: url_levels — the signature macro ------------------------------------
@@ -34,11 +33,11 @@ _URL_DUCK = "'https://www.example.com/' || lang || '/' || source || '/p' || doc_
            string_split(u, '/')[6] AS page_level2,
            string_split(u, '/')[7] AS page_level3,
            string_split(u, '/')[8] AS page_level4
-    FROM (SELECT doc_id, {_URL_DUCK} AS u FROM documents)
+    FROM (SELECT doc_id, {URL_DUCK} AS u FROM documents)
     """,
 )
 def macro_url_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = table(spark, sf_dir, "documents").withColumn("u", F.expr(_URL_SPARK))
+    docs = table(spark, sf_dir, "documents").withColumn("u", F.expr(URL_SPARK))
     return docs.select("doc_id", *url_levels("u").values())
 
 
@@ -51,24 +50,18 @@ def macro_url_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 'Picture' ELSE 'HTML' END AS doctype
     FROM (
       SELECT doc_id,
-             {_URL_DUCK} ||
+             {URL_DUCK} ||
              CASE doc_id % 4 WHEN 0 THEN '.jpg' WHEN 1 THEN '.PNG'
                              WHEN 2 THEN '.html' ELSE '.pdf' END AS address
       FROM documents)
     """,
 )
 def macro_doctype_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ext = (
-        F.when(F.col("doc_id") % 4 == 0, ".jpg")
-        .when(F.col("doc_id") % 4 == 1, ".PNG")
-        .when(F.col("doc_id") % 4 == 2, ".html")
-        .otherwise(".pdf")
-    )
     docs = (
         table(spark, sf_dir, "documents")
-        .withColumn("address", F.concat(F.expr(_URL_SPARK), ext))
+        .withColumn("address", F.concat(F.expr(URL_SPARK), doc_ext()))
     )
-    is_pic = rlike_any("address", [r"\.(jpg|jpeg|png|gif|webp|svg|bmp|ico)$"])
+    is_pic = rlike_any("address", [PIC_RE])
     return docs.select("doc_id", "address", bool_label(is_pic, "Picture", "HTML").alias("doctype"))
 
 

@@ -14,9 +14,9 @@ from ug_dwh_etl_spark.plans.reference_pipelines_ext import (
     e7_backlink_metrics,
     e8_hreflang_issues,
 )
+from ug_dwh_etl_spark.queries.macros import URL_DUCK
 from ug_dwh_etl_spark.queries.registry import register
 
-_URL_DUCK = "'https://www.example.com/' || lang || '/' || source || '/p' || doc_id::VARCHAR"
 _EXT_DUCK = (
     "CASE doc_id % 4 WHEN 0 THEN '.jpg' WHEN 1 THEN '.PNG' WHEN 2 THEN '.html' ELSE '.pdf' END"
 )
@@ -35,7 +35,7 @@ _WT_DUCK = """CASE WHEN regexp_matches({c}, '^https://www\\.example\\.com/') THE
     "pipeline_e4_images",
     f"""
     WITH base AS (
-      SELECT doc_id, lang, source, n_chars, {_URL_DUCK} || {_EXT_DUCK} AS address
+      SELECT doc_id, lang, source, n_chars, {URL_DUCK} || {_EXT_DUCK} AS address
       FROM documents),
     pics AS (SELECT * FROM base WHERE regexp_matches(address, '{_PIC_DUCK}')),
     html_images AS (
@@ -66,7 +66,7 @@ def pipeline_e4_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_e5_orphans",
     f"""
     WITH base AS (
-      SELECT doc_id, n_chars, {_URL_DUCK} || {_EXT_DUCK} AS address
+      SELECT doc_id, n_chars, {URL_DUCK} || {_EXT_DUCK} AS address
       FROM documents),
     gsc AS (
       SELECT address,

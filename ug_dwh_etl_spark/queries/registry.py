@@ -33,19 +33,13 @@ def register(name: str, oracle: str | None):
     return deco
 
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events reader tolerant of the fixture's timestamp physical type.
-
-    The generator has shipped events.ts as both TIMESTAMP(NANOS) (which
-    Spark's vectorized reader rejects without the nanosAsLong escape
-    hatch) and TIMESTAMP(MICROS) (plain timestamp read). Probe the
-    footer schema and convert long-nanos to a timestamp only when the
-    file actually stores nanos — micros files pass through untouched
-    (DuckDB's view narrows ns → µs identically, so oracles agree either
-    way)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
+def events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events fixture as stored, tolerant of its timestamp physical
+    type: the generator has shipped events.ts as both TIMESTAMP(NANOS)
+    (which Spark's reader rejects without the nanosAsLong escape hatch,
+    then reads as long) and TIMESTAMP(MICROS). Probe the footer schema
+    and turn the escape hatch on only when the file needs it. Batch and
+    stream readers both start here."""
     path = f"{sf_dir}/events.parquet"
     try:
         df = spark.read.parquet(path)
@@ -53,14 +47,27 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
-    if isinstance(df.schema["ts"].dataType, LongType):
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        # micros files arrive as TIMESTAMP_NTZ; normalize to TIMESTAMP
-        # (LTZ) — watermarks require it, and with the session pinned to
-        # UTC the wall-clock values are identical to DuckDB's naive read
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """``ts`` as a TIMESTAMP (LTZ), batch or stream: long nanos become
+    micros; micros files arrive as TIMESTAMP_NTZ and are cast —
+    watermarks require LTZ, and with the session pinned to UTC the
+    wall-clock values are identical to DuckDB's naive read (its view
+    narrows ns → µs the same way, so oracles agree either way)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    if isinstance(df.schema["ts"].dataType, LongType):
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table with ``ts`` as a TIMESTAMP, whichever layout the
+    fixture stores."""
+    return normalize_event_ts(events_raw(spark, sf_dir))
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1741,7 +1741,7 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup must equal the oracle's full re-join. Refresh cost at scale
     is the point: every delta term has a |Δ|-sized side, so maintaining
     a 100 TB join view tracks arrival rate, not view size — the join
-    analogue of merge_rollup_delta's monoid merge."""
+    analogue of a monoid rollup's per-delta merge."""
     from ug_dwh_etl_spark.operators.ivm import refresh_join_view
 
     orders = table(spark, sf_dir, "orders").select(
@@ -2591,7 +2591,7 @@ def dq_primary_key_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     result: row count vs distinct declared-key count per table (the
     composite (orderkey, linenumber) for lineitem) — the first DQ gate
     any ingest runs (dq_contract_orders checks VALUES; this checks
-    IDENTITY, the precondition for every merge_upsert and dedup
+    IDENTITY, the precondition for every keyed merge and dedup
     decision upstream). One scan + one map-side-combinable distinct per
     table, outputs are 10 rows, and at 100 TB each distinct is the
     same shuffle its table's dedup would pay anyway — run it as the

@@ -171,7 +171,7 @@ def _zorder_stats_sql() -> str:
 
 @register("storage_zorder_stats", _zorder_stats_sql())
 def storage_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layout diagnostic behind operators.storage.write_zordered: bucket
+    """Layout diagnostic behind optimize_table's Z-order rewrite: bucket
     orders 16 ways under three layouts — insertion order (append),
     single-column range clustering, and the 32-bit Morton key — and
     measure the min/max rectangle a parquet file would carry under each.

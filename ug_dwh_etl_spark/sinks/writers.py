@@ -75,116 +75,6 @@ def fan_out(df: DataFrame, sinks: list[Callable[[DataFrame], None]]) -> None:
         df.unpersist()
 
 
-def merge_upsert(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_col: str | None = None,
-) -> None:
-    """Upsert ``df`` into the parquet table at ``path`` by ``keys``:
-    existing rows whose key appears in ``df`` are replaced, new keys are
-    inserted — the MERGE the reference approximates with its daily
-    append+replace pair, done as one operation.
-
-    Mechanics: survivors = existing ⟕̸ updates (left anti on the key),
-    merged = survivors ∪ updates, written to a staging dir then swapped
-    in. The staging write is what makes self-overwrite safe (Spark
-    cannot overwrite a path it is lazily reading).
-
-    Scale: with ``partition_col`` set, only the partitions whose values
-    occur in ``df`` are rewritten (read-side partition pruning + dynamic
-    partition overwrite) — at a 100 TB history table, an incremental day
-    touches one partition, not the table. On a production lake this
-    operator maps 1:1 onto Delta/Iceberg MERGE INTO; the parquet
-    staging-swap here keeps the same semantics without a table format.
-    """
-    spark = df.sparkSession
-    if not os.path.exists(path):
-        w = df.write.mode("overwrite")
-        if partition_col:
-            w = w.partitionBy(partition_col)
-        w.parquet(path)
-        return
-
-    existing = spark.read.parquet(path)
-    if partition_col is not None:
-        parts = [r[0] for r in df.select(partition_col).distinct().collect()]
-        untouched = existing.filter(~existing[partition_col].isin(parts))
-        affected = existing.filter(existing[partition_col].isin(parts))
-    else:
-        untouched = None
-        affected = existing
-    survivors = affected.join(df.select(*keys).distinct(), keys, "left_anti")
-    merged = survivors.unionByName(df)
-    if untouched is not None:
-        merged = merged.unionByName(untouched)
-
-    staging = path.rstrip("/") + ".staging"
-    w = merged.write.mode("overwrite")
-    if partition_col:
-        w = w.partitionBy(partition_col)
-    w.parquet(staging)
-    swap_dir(staging, path)
-
-
-def compact_partitions(
-    spark,
-    path: str,
-    partition_col: str | None = "crawl_date",
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partitions: list | None = None,
-) -> int:
-    """Small-file compaction for append/streaming output — the table
-    maintenance job every micro-batch sink needs: each AvailableNow tick
-    and each history append lands more small part-files, and at 100 TB a
-    scan's task count (and the NameNode/listing pressure) is the FILE
-    count, not the byte count.
-
-    Rewrites the table (or only ``partitions`` of it — the usual mode:
-    compact yesterday after the day closes) into ~``target_file_bytes``
-    files per partition via a byte-size-derived ``repartition``, writes
-    to a staging dir, and atomically swaps with the same crash-safe,
-    single-writer ``swap_dir`` contract as ``overwrite_snapshot``.
-    Returns the file count after compaction. The partition-subset path
-    never reads or rewrites untouched partitions (partition-pruned scan,
-    per-partition swap)."""
-    import glob as _glob
-
-    def _bytes(d: str) -> int:
-        return sum(
-            os.path.getsize(f)
-            for f in _glob.glob(f"{d}/**/*.parquet", recursive=True)
-        )
-
-    def _nfiles(d: str) -> int:
-        return len(_glob.glob(f"{d}/**/*.parquet", recursive=True))
-
-    def _compact_one(src_df: DataFrame, src_bytes: int, staging: str, live: str) -> None:
-        n = max(1, round(src_bytes / target_file_bytes))
-        w = src_df.repartition(n).write.mode("overwrite")
-        w.parquet(staging)
-        swap_dir(staging, live)
-
-    root = path.rstrip("/")
-    if partition_col is not None and partitions:
-        for p in partitions:
-            live = f"{root}/{partition_col}={p}"
-            df = spark.read.parquet(live)
-            _compact_one(df, _bytes(live), live + ".staging", live)
-    else:
-        df = spark.read.parquet(root)
-        cols = [c for c in df.columns]
-        b = _bytes(root)
-        staging = root + ".staging"
-        n = max(1, round(b / target_file_bytes))
-        w = df.repartition(n).write.mode("overwrite")
-        if partition_col is not None and partition_col in cols:
-            w = w.partitionBy(partition_col)
-        w.parquet(staging)
-        swap_dir(staging, root)
-    return _nfiles(root)
-
-
 def prune_history(
     path: str,
     partition_col: str,

@@ -10,10 +10,10 @@ oracle check both assert it).
 
 Scale notes:
 - Streaming aggregation state lives in the state store keyed by
-  (window, group) — at 100 TB/day the watermark bounds it; the memory
-  sink + complete mode used for the local oracle runs is test plumbing
-  only, the production path is append mode + parquet/Kafka sink
-  (``available_now_pipeline``).
+  (window, group) — at 100 TB/day the watermark bounds it. Most jobs
+  land in a memory sink (``run_stream_to_memory``) because their result
+  is a registered query's answer; the ingest jobs (``stream_*_ingest``,
+  ``stream_cdc_count_distinct``) write parquet through ``foreachBatch``.
 - ``dropDuplicatesWithinWatermark`` keeps only in-horizon event ids in
   state, the unbounded-history dedup the reference can't do at all.
 """
@@ -21,18 +21,14 @@ Scale notes:
 from __future__ import annotations
 
 import contextlib
-import shutil
 import tempfile
 import uuid
-from collections.abc import Callable, Iterator, Sequence
-from typing import TYPE_CHECKING
-
-if TYPE_CHECKING:
-    from ug_dwh_etl_spark.plans.pipeline import Gate
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.types import LongType, StructType
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ug_dwh_etl_spark.session import conf_scope
 
@@ -43,40 +39,10 @@ LAST_PROGRESS: dict | None = None
 LAST_BATCH_PLAN: str | None = None
 
 
-def events_raw_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """Schema for the streaming events source, probed from the parquet
-    footer (metadata-only read — no data scan).
-
-    The fixture generator has shipped events.ts as both TIMESTAMP(NANOS)
-    (which Spark reads only as long via the nanosAsLong escape hatch)
-    and TIMESTAMP(MICROS) (native timestamp); the streaming reader needs
-    an explicit schema, so take whatever the batch footer conversion
-    yields rather than hardcoding one — same convention as
-    queries.registry.read_events."""
-    path = f"{sf_dir}/events.parquet"
-    try:
-        schema = spark.read.parquet(path).schema
-        schema["ts"]  # force resolution
-        return schema
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(path).schema
-
-
-@contextlib.contextmanager
-def _checkpoint_dir(explicit: str | None, prefix: str) -> Iterator[str]:
-    """Yield a checkpoint location; remove it afterwards ONLY when we
-    created it ourselves (an explicit checkpoint is the caller's durable
-    incremental state — a temp one is single-run by construction, and
-    leaving it would accrete /tmp garbage across test and bench runs)."""
-    if explicit is not None:
-        yield explicit
-        return
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield tmp
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+def _checkpoint_dir(prefix: str) -> tempfile.TemporaryDirectory:
+    """A single-run checkpoint location, removed afterwards: leaving it
+    would accrete /tmp garbage across test and bench runs."""
+    return tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
 
 
 def stream_table_source(
@@ -101,25 +67,23 @@ def stream_table_source(
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events fixture (S1 streaming twin)."""
-    raw = stream_table_source(spark, sf_dir, "events", events_raw_schema(spark, sf_dir))
-    if isinstance(raw.schema["ts"].dataType, LongType):
-        raw = raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        # micros files arrive as TIMESTAMP_NTZ; watermarks require
-        # TIMESTAMP (LTZ) — identical wall-clock under the UTC session
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    """File-source stream over the events fixture (S1 streaming twin):
+    the batch reader's footer probe gives the schema, and ``ts`` is
+    normalized the same way."""
+    from ug_dwh_etl_spark.queries.registry import events_raw, normalize_event_ts
+
+    schema = events_raw(spark, sf_dir).schema
+    return normalize_event_ts(stream_table_source(spark, sf_dir, "events", schema))
 
 
-def run_stream_to_memory(
-    stream_df: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int = 8,
-) -> DataFrame:
-    """Run a streaming frame to completion (AvailableNow) into a memory
-    sink and return the materialized result. Test/oracle plumbing — the
-    production sink path is ``available_now_pipeline``.
+@contextlib.contextmanager
+def _memory_stream(
+    stream_df: DataFrame, output_mode: str, state_partitions: int
+) -> Iterator[StreamingQuery]:
+    """Start ``stream_df`` AvailableNow into a fresh memory table (named
+    ``query.name``) and yield the running query; the caller decides
+    when it is done. On exit, record the final progress and the last
+    micro-batch's executed plan, then stop the query.
 
     ``state_partitions`` becomes the state-store partition count (fixed
     for the checkpoint's lifetime at first start): size it to expected
@@ -127,9 +91,8 @@ def run_stream_to_memory(
     (2x cores) would pay 64 state-store inits per micro-batch for a few
     thousand keys; a cluster deployment passes ~2-3x total cores."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
     state = {"spark.sql.shuffle.partitions": str(state_partitions)}
-    with conf_scope(spark, state), _checkpoint_dir(None, f"ckpt_{name}_") as ckpt:
+    with conf_scope(stream_df.sparkSession, state), _checkpoint_dir(f"ckpt_{name}_") as ckpt:
         q = (
             stream_df.writeStream.format("memory")
             .queryName(name)
@@ -138,22 +101,33 @@ def run_stream_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        # expose the final progress for observability/scale probes
-        # (state-store row counts per stateful operator); module-level
-        # because callers only see the returned batch DataFrame
+        yield q
+        # module-level because callers only see the returned batch
+        # DataFrame: state-store row counts for the scale probe, and the
+        # EXECUTED plan for the same anti-pattern audit the batch
+        # queries get (tools/audit_plans.py) — read before stop() drops
+        # the execution; explainInternal(True) is the py4j spelling of
+        # StreamingQuery.explain(extended=True)
         global LAST_PROGRESS, LAST_BATCH_PLAN
         LAST_PROGRESS = q.lastProgress
-        # last micro-batch's EXECUTED physical plan, for the same
-        # anti-pattern audit the batch queries get (tools/
-        # audit_plans.py) — must be read before stop() drops the
-        # execution; explainInternal(True) is the py4j spelling of
-        # StreamingQuery.explain(extended=True)
         try:
             LAST_BATCH_PLAN = q._jsq.explainInternal(True)
         except Exception:
             LAST_BATCH_PLAN = None
-    return spark.table(name)
+        q.stop()
+
+
+def run_stream_to_memory(
+    stream_df: DataFrame,
+    output_mode: str = "complete",
+    state_partitions: int = 8,
+) -> DataFrame:
+    """Run a streaming frame to completion (AvailableNow) into a memory
+    sink and return the materialized result — the registered streaming
+    queries' answer. See ``_memory_stream`` for ``state_partitions``."""
+    with _memory_stream(stream_df, output_mode, state_partitions) as q:
+        q.awaitTermination()
+    return stream_df.sparkSession.table(q.name)
 
 
 def stream_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,68 +258,6 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.agg(F.count(F.lit(1)).alias("n_unique"))
 
 
-def available_now_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    transform: Callable[[DataFrame], DataFrame],
-    out_path: str,
-    checkpoint: str | None = None,
-    gates: Sequence["Gate"] = (),
-    alert=None,
-    quarantine_path: str | None = None,
-) -> None:
-    """The cron-replacement shape (§2.11): AvailableNow stream →
-    ``foreachBatch`` running a BATCH transform → date-partitioned append.
-    Re-running after new files arrive processes only the delta — exactly
-    the reference's daily incremental append (K1), minus the cron.
-
-    ``gates`` run the batch DQ checks (§2.13 Q1: the reference alerts
-    per cron run, `sf_html_data.py:95-105`) against EVERY micro-batch:
-    a non-blocking violation alerts and still lands; a blocking one
-    diverts the whole batch to ``quarantine_path`` so bad data never
-    reaches the serving table while the stream keeps running. Blocking
-    gates REQUIRE a quarantine path: silently dropping a failed batch
-    while the checkpoint advances would lose the data permanently."""
-    from ug_dwh_etl_spark.operators.quality import expect
-
-    if quarantine_path is None and any(g.blocking for g in gates):
-        raise ValueError(
-            "available_now_pipeline: blocking gates need quarantine_path — "
-            "a dropped micro-batch is unrecoverable once the checkpoint commits"
-        )
-
-    src = read_events_stream(spark, sf_dir)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df).withColumn("crawl_date", F.current_date())
-        ok = True
-        if gates:
-            out = out.persist()
-            for gate in gates:
-                passed = expect(
-                    out, gate.violation, gate.title, gate.message, alert=alert
-                )
-                ok = ok and (passed or not gate.blocking)
-        target = out_path if ok else quarantine_path
-        if target is not None:
-            (
-                out.write.mode("append")
-                .partitionBy("crawl_date")
-                .parquet(target)
-            )
-        if gates:
-            out.unpersist()
-
-    with _checkpoint_dir(checkpoint, "ckpt_pipeline_") as ckpt:
-        q = (
-            src.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
 def stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming training-corpus ingest: documents arrive as a file
     stream, each micro-batch passes the C4/Gopher quality gate
@@ -432,79 +344,6 @@ def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFram
     )
     out = run_stream_to_memory(joined, "append")
     return out.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_attributed"))
-
-
-def incremental_rollup_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    out_path: str,
-    checkpoint: str | None = None,
-) -> None:
-    """Incrementally-maintained materialized view — the reference's
-    'each data analysis question is separately queried on a daily basis'
-    BigQuery tables (`/root/reference/README.md:15`), maintained by
-    delta-merge instead of daily full recompute.
-
-    Each micro-batch aggregates ONLY its delta (day x event_type counts
-    and value sums), then merges into the rollup table by re-aggregating
-    (old ∪ delta) per key — count and sum are decomposable, so the merge
-    is exact regardless of how the stream is chopped into batches
-    (proven by the batch-equality test). At 100 TB the rollup is
-    partitioned by day and the merge rewrites only the days present in
-    the delta (same partition-pruned pattern as sinks.merge_upsert)."""
-    src = read_events_stream(spark, sf_dir)
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_rollup_delta(batch_df, out_path)
-
-    with _checkpoint_dir(checkpoint, "ckpt_rollup_") as ckpt:
-        q = (
-            src.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
-def merge_rollup_delta(batch_df: DataFrame, out_path: str) -> None:
-    """Merge one delta into the (day, event_type) rollup table:
-    re-aggregate (existing ∪ delta-agg) and staging-swap. Separated from
-    the streaming wrapper so tests can drive arbitrary batch splits."""
-    import os
-
-    from ug_dwh_etl_spark.sinks.writers import swap_dir
-
-    spark = batch_df.sparkSession
-    delta = (
-        batch_df.groupBy(
-            F.to_date("ts").alias("day"), "event_type"
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: partial sums are re-merged on EVERY delta, so
-            # double accumulation would drift with batch split order;
-            # decimal keeps the merge exact. Cast back to (18,2) so the
-            # stored table schema stays fixed across merges.
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("decimal(18,2)")
-            .alias("total_value"),
-        )
-    )
-    if os.path.exists(out_path):
-        existing = spark.read.parquet(out_path)
-        merged = (
-            existing.unionByName(delta)
-            .groupBy("day", "event_type")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("total_value").cast("decimal(18,2)").alias("total_value"),
-            )
-        )
-    else:
-        merged = delta
-    staging = out_path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").parquet(staging)
-    swap_dir(staging, out_path)
 
 
 def stream_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -846,7 +685,7 @@ def stream_incremental_neardup(
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
             .parquet(f"{sf_dir.rstrip('/')}/documents.parquet")
         )
-    with _checkpoint_dir(None, "ckpt_incdedup_") as ckpt:
+    with _checkpoint_dir("ckpt_incdedup_") as ckpt:
         q = (
             src.writeStream.foreachBatch(handle)
             .option("checkpointLocation", ckpt)
@@ -950,8 +789,8 @@ def stream_cdc_count_distinct(
     counts) is materialized once; each micro-batch derives its inserts
     (+1, the day's ingest rows) and deletes (-1, the purge rows) and
     APPENDS its grouped dmult rows to the log — O(batch) per batch, no
-    state rewrite (the LSM shape; a real deployment compacts the log
-    into the base periodically, exactly like ``compact_history``). The
+    state rewrite (the LSM shape; a real deployment folds the log into
+    the base periodically). The
     view folds base + log at read time: multiplicities are summed, rows
     with mult > 0 counted per group. The fold is commutative, so
     arrival order across micro-batches cannot matter — proven by the
@@ -960,7 +799,7 @@ def stream_cdc_count_distinct(
     import os
     import shutil
 
-    from ug_dwh_etl_spark.queries.registry import read_events, scratch_dir
+    from ug_dwh_etl_spark.queries.registry import events_raw, read_events, scratch_dir
 
     if state_root is None:
         # fixed per-process path (the semantic-rollup convention): repeated
@@ -979,8 +818,7 @@ def stream_cdc_count_distinct(
         F.count(F.lit(1)).cast("long").alias("mult")
     ).write.mode("overwrite").parquet(base_path)
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = stream_table_source(spark, sf_dir, "events", schema)
+    raw = stream_table_source(spark, sf_dir, "events", events_raw(spark, sf_dir).schema)
 
     def handle(batch_df: DataFrame, _bid: int) -> None:
         inserts = batch_df.filter(F.col("event_id") % 10 == 0).select(
@@ -1006,7 +844,7 @@ def stream_cdc_count_distinct(
             pass
         delta.write.mode("append").parquet(log_path)
 
-    with _checkpoint_dir(None, "ckpt_cdc_cd_") as ckpt:
+    with _checkpoint_dir("ckpt_cdc_cd_") as ckpt:
         q = (
             raw.writeStream.foreachBatch(handle)
             .option("checkpointLocation", ckpt)
@@ -1161,7 +999,7 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             except Exception:
                 pass
 
-        with _checkpoint_dir(None, "ckpt_snap_ingest_") as ckpt:
+        with _checkpoint_dir("ckpt_snap_ingest_") as ckpt:
             (
                 stream.writeStream.foreachBatch(land)
                 .option("checkpointLocation", ckpt)
@@ -1312,7 +1150,7 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        with _checkpoint_dir(None, "ckpt_sem_ingest_") as ckpt:
+        with _checkpoint_dir("ckpt_sem_ingest_") as ckpt:
             (
                 stream.writeStream.foreachBatch(verdicts)
                 .option("checkpointLocation", ckpt)
@@ -1421,7 +1259,7 @@ def stream_wap_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             except Exception:
                 pass
 
-        with _checkpoint_dir(None, "ckpt_wap_ingest_") as ckpt:
+        with _checkpoint_dir("ckpt_wap_ingest_") as ckpt:
             (
                 stream.writeStream.foreachBatch(land)
                 .option("checkpointLocation", ckpt)

@@ -31,7 +31,11 @@ from pyspark.sql.types import (
 )
 
 from ug_dwh_etl_spark.session import conf_scope
-from ug_dwh_etl_spark.streaming.jobs import read_events_stream, run_stream_to_memory
+from ug_dwh_etl_spark.streaming.jobs import (
+    _memory_stream,
+    read_events_stream,
+    run_stream_to_memory,
+)
 
 # state keeps the value total as integer CENTS, not a double: the state
 # is folded over micro-batches in arrival order, and float addition is
@@ -1258,24 +1262,9 @@ def _run_stream_drain_then_stop(
     ``handleInputRows`` and this family registers no timers, so every
     emission happens in data batches — we poll progress and stop after
     the first no-data batch that follows the drained source."""
-    import tempfile
     import time as _time
-    import uuid as _uuid
 
-    from ug_dwh_etl_spark.streaming.jobs import _checkpoint_dir
-
-    name = f"mem_{_uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
-    state = {"spark.sql.shuffle.partitions": str(state_partitions)}
-    with conf_scope(spark, state), _checkpoint_dir(None, f"ckpt_{name}_") as ckpt:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
+    with _memory_stream(stream_df, output_mode, state_partitions) as q:
         deadline = _time.time() + 300
         saw_data = False
         while q.isActive and _time.time() < deadline:
@@ -1288,19 +1277,7 @@ def _run_stream_drain_then_stop(
                 saw_data = True
             elif saw_data:
                 break  # a no-data batch after data: source drained
-        # expose progress + the executed micro-batch plan to the
-        # plan audit (run_stream_to_memory convention) BEFORE stop()
-        # drops the execution
-        from ug_dwh_etl_spark.streaming import jobs as _jobs
-
-        _jobs.LAST_PROGRESS = q.lastProgress
-        try:
-            _jobs.LAST_BATCH_PLAN = q._jsq.explainInternal(True)
-        except Exception:
-            _jobs.LAST_BATCH_PLAN = None
-        q.stop()
-        q.awaitTermination()
-    return spark.table(name)
+    return stream_df.sparkSession.table(q.name)
 
 
 def stream_user_totals_ttl_tws(
