@@ -14,8 +14,11 @@ _EDGES = [
 ]
 
 
-def _edges(spark):
-    return spark.createDataFrame(_EDGES, ["src", "dst"])
+_INPUTS = {
+    "graph": _EDGES,
+    "empty": [],
+    "single_edge": [(1, 2)],
+}
 
 
 def _seeds(spark):
@@ -23,41 +26,89 @@ def _seeds(spark):
 
 
 _OPERATORS = {
-    "pagerank": lambda s: G.pagerank(_edges(s), 2),
-    "pagerank_incremental": lambda s: G.pagerank_incremental(
-        _edges(s).filter(F.col("src") != 7), _edges(s), 2
+    "pagerank": lambda s, e: G.pagerank(e, 2),
+    "pagerank_incremental": lambda s, e: G.pagerank_incremental(
+        e.filter(F.col("src") != 7), e, 2
     ),
-    "connected_components": lambda s: G.connected_components(_edges(s), 2),
-    "strongly_connected_components": lambda s: G.strongly_connected_components(
-        _edges(s)
+    "connected_components": lambda s, e: G.connected_components(e, 2),
+    "strongly_connected_components": lambda s, e: G.strongly_connected_components(
+        e
     ),
-    "connected_components_converged": lambda s: G.connected_components_converged(
-        _edges(s)
+    "connected_components_converged": lambda s, e: G.connected_components_converged(
+        e
     ),
-    "personalized_pagerank": lambda s: G.personalized_pagerank(
-        _edges(s), _seeds(s), 2
+    "personalized_pagerank": lambda s, e: G.personalized_pagerank(
+        e, _seeds(s), 2
     ),
-    "kcore_rounds": lambda s: G.kcore_rounds(
-        _edges(s).select(F.col("src").alias("a"), F.col("dst").alias("b")), 2, 2
+    "kcore_rounds": lambda s, e: G.kcore_rounds(
+        e.select(F.col("src").alias("a"), F.col("dst").alias("b")), 2, 2
     ),
-    "hits": lambda s: G.hits(_edges(s), 2),
-    "bfs_distances": lambda s: G.bfs_distances(_edges(s), _seeds(s), 2),
-    "label_propagation": lambda s: G.label_propagation(_edges(s), 2),
+    "hits": lambda s, e: G.hits(e, 2),
+    "bfs_distances": lambda s, e: G.bfs_distances(e, _seeds(s), 2),
+    "label_propagation": lambda s, e: G.label_propagation(e, 2),
 }
+
+# rows on an empty edge frame: BFS keeps its seed at distance 0, and
+# kcore_rounds reports one (round, 0, 0) row per round 0..2
+_EMPTY_ROWS = {"bfs_distances": 1, "kcore_rounds": 3}
 
 _POSTURE_CONFS = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
 
 
-@pytest.mark.parametrize("name", sorted(_OPERATORS))
-def test_graph_operator_leaves_no_cache_and_restores_confs(spark, name):
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "name,inp",
+    [
+        pytest.param(name, inp, id=name if inp == "graph" else f"{name}-{inp}")
+        for name in sorted(_OPERATORS)
+        for inp in _INPUTS
+    ],
+)
+def test_graph_operator_leaves_no_cache_and_restores_confs(spark, name, inp):
     """Every graph operator releases what it persisted and restores the
-    session confs its posture scoped."""
+    session confs its posture scoped — on the test graph and on the
+    degenerate empty and single-edge inputs."""
     spark.catalog.clearCache()
     before = {k: spark.conf.get(k) for k in _POSTURE_CONFS}
-    out = _OPERATORS[name](spark)
-    assert out.count() > 0
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), name
+    edges = spark.createDataFrame(_INPUTS[inp], "src long, dst long")
+    n = _OPERATORS[name](spark, edges).count()
+    if inp == "empty":
+        assert n == _EMPTY_ROWS.get(name, 0)
+    else:
+        assert n > 0
+    assert _cache_is_empty(spark), name
     assert {k: spark.conf.get(k) for k in _POSTURE_CONFS} == before
+
+
+def test_operator_that_raises_releases_what_it_pinned(spark):
+    """A failure inside the loop scope still unpersists the frames the
+    operator pinned before it failed."""
+    spark.catalog.clearCache()
+    edges = spark.createDataFrame(_EDGES, "src long, dst long")
+    with pytest.raises(Exception, match="nope"):
+        G.pagerank(edges, 2, src="nope")
+    assert _cache_is_empty(spark)
+
+
+def test_fixpoint_raises_at_the_round_cap(spark, monkeypatch):
+    """A 40-node directed cycle is one SCC under the default round cap;
+    with the cap at 2 the propagation cannot finish, and the operator
+    raises instead of returning 40 singletons. The converged components
+    loop raises the same way."""
+    cycle = spark.createDataFrame(
+        [(i, (i + 1) % 40) for i in range(40)], "src long, dst long"
+    )
+    got = {r.scc_id for r in G.strongly_connected_components(cycle).collect()}
+    assert got == {0}
+    monkeypatch.setattr(G, "FIXPOINT_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="strongly_connected_components"):
+        G.strongly_connected_components(cycle)
+    monkeypatch.setattr(G, "FIXPOINT_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="connected_components_converged"):
+        G.connected_components_converged(cycle)
 
 
 def test_loop_posture_scales_above_its_floor(spark, tmp_path):

@@ -98,25 +98,28 @@ def test_stream_ewma_multi_batch_matches_closed_form(spark, tmp_path):
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     out = run_stream_to_memory(updated, "update").cache()
-    n_users = ev.select("user_id").distinct().count()
-    # users active in both halves emit one row per micro-batch — if this
-    # fails the run collapsed into a single batch and tested nothing
-    assert out.count() > n_users
+    try:
+        n_users = ev.select("user_id").distinct().count()
+        # users active in both halves emit one row per micro-batch — if this
+        # fails the run collapsed into a single batch and tested nothing
+        assert out.count() > n_users
 
-    got = {
-        r.user_id: (r.n_events, round(r.ewma, 4))
-        for r in out.groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.round(F.max_by("ewma", "n_events"), 4).alias("ewma"),
-        )
-        .collect()
-    }
-    expected = {
-        r.user_id: (r.n_events, r.ewma)
-        for r in events_user_ewma(spark, sf).collect()
-    }
-    assert got == expected
+        got = {
+            r.user_id: (r.n_events, round(r.ewma, 4))
+            for r in out.groupBy("user_id")
+            .agg(
+                F.max("n_events").alias("n_events"),
+                F.round(F.max_by("ewma", "n_events"), 4).alias("ewma"),
+            )
+            .collect()
+        }
+        expected = {
+            r.user_id: (r.n_events, r.ewma)
+            for r in events_user_ewma(spark, sf).collect()
+        }
+        assert got == expected
+    finally:
+        out.unpersist()
 
 
 def test_watermark_drops_late_rows_and_reports_them(spark, tmp_path):

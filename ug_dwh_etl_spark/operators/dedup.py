@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, Window
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.operators import hashing as H
-from ug_dwh_etl_spark.operators.graph import loop_posture
+from ug_dwh_etl_spark.operators.graph import loop_posture, min_label_round
 
 N_MINHASH = 16
 N_BANDS = 4
@@ -539,29 +539,17 @@ def near_dup_labels(
     # the iteration's shuffles to that, not the fact-table session
     # default, and checkpoint the final result eagerly while the posture
     # is active (same pattern + rationale as operators/graph.pagerank)
-    with loop_posture(df, keep_aqe=True):
+    with loop_posture(df, keep_aqe=True) as pin:
         pairs = minhash_lsh_pairs(df, id_col, text_col)
-        edges = (
+        adj = pin(
             pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
             .unionByName(pairs.select(F.col("id_b").alias("a"), F.col("id_a").alias("b")))
-            .persist()
         )
+        # every document is labeled, paired or not
         labels = df.select(F.col(id_col).alias("node"), F.col(id_col).alias("label"))
         for _ in range(iterations):
-            nbr = (
-                edges.join(labels, edges.b == labels.node)
-                .groupBy(F.col("a").alias("nbr_node"))
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            labels = labels.join(nbr, labels.node == F.col("nbr_node"), "left").select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        result = labels.localCheckpoint(eager=True)
-        edges.unpersist()
-        return result
+            labels = min_label_round(adj, labels)
+        return labels.localCheckpoint(eager=True)
 
 
 def near_dup_clusters(

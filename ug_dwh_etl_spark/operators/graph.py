@@ -26,7 +26,7 @@ sf0.001); at 4 decimals the flip probability is ~1e-5 per row.
 from __future__ import annotations
 
 import contextlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
@@ -34,12 +34,14 @@ import pyspark.sql.functions as F
 from ug_dwh_etl_spark.session import conf_scope
 
 DAMPING = 0.85
+# round cap of every run-to-convergence loop (``fixpoint``)
+FIXPOINT_ROUNDS = 50
 
 
 @contextlib.contextmanager
 def loop_posture(
     edges: DataFrame, local_default: int = 16, keep_aqe: bool = False
-) -> Iterator[None]:
+) -> Iterator[Callable[[DataFrame], DataFrame]]:
     """Runtime posture for an iterative |V|-state loop over ``edges``:
     size the loop's shuffles to the (tiny) state AND disable AQE for the
     loop's duration — AQE's per-stage re-optimization and query-stage
@@ -47,12 +49,16 @@ def loop_posture(
     at sf0.1: the 4-round BFS plan 3.9s -> 2.9s with AQE off, 2.3s with
     the state side also broadcast). Operators checkpoint their loop
     state inside the block, so the loop runs at this posture even though
-    the confs are restored on exit, and release what they persisted.
+    the confs are restored on exit.
     ``keep_aqe=True`` sizes the shuffles but leaves AQE on — the right
     posture for loops whose per-round work is E-sized, not |V|-sized
     (the star-contraction rounds measured 5.0s with AQE vs 8.3s without
     at sf0.1: AQE's partition coalescing DOES pay when the loop moves
     the edge relation).
+
+    Yields ``pin``: ``pin(df)`` persists ``df`` and returns it, and the
+    scope unpersists every pinned frame on exit, normal or raised — the
+    loop invariants never outlive the call that needed them.
 
     The partition count comes from ``derive_loop_partitions``: it scales
     with the edge relation's file count, so at warehouse scale the loop
@@ -62,8 +68,40 @@ def loop_posture(
     confs = {"spark.sql.shuffle.partitions": str(n)}
     if not keep_aqe:
         confs["spark.sql.adaptive.enabled"] = "false"
+    pinned: list[DataFrame] = []
+
+    def pin(df: DataFrame) -> DataFrame:
+        pinned.append(df.persist())
+        return pinned[-1]
+
     with conf_scope(edges.sparkSession, confs):
-        yield
+        try:
+            yield pin
+        finally:
+            for df in reversed(pinned):
+                df.unpersist()
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    converged: Callable[[DataFrame, DataFrame], bool],
+    what: str,
+) -> DataFrame:
+    """Run ``state = step(state)`` until ``converged(prev, nxt)``; return
+    the converged state. Each round's state is a LAZY localCheckpoint,
+    so the action inside ``converged`` is the job that materializes it —
+    one Spark job per round, not two (on a |V|-sized state the loop's
+    cost is job overhead, not data). Raises ``RuntimeError`` naming
+    ``what`` after ``FIXPOINT_ROUNDS`` rounds without convergence rather
+    than return a truncated, wrong answer. Superseded generations are
+    freed by the ContextCleaner's periodic GC (session.py), not by
+    ``unpersist()``, which is a no-op on checkpoint blocks."""
+    for _ in range(FIXPOINT_ROUNDS):
+        prev, state = state, step(state).localCheckpoint(eager=False)
+        if converged(prev, state):
+            return state
+    raise RuntimeError(f"{what}: no fixpoint after {FIXPOINT_ROUNDS} rounds")
 
 
 def derive_loop_partitions(
@@ -156,6 +194,24 @@ def _symmetric(
     ).distinct()
 
 
+def min_label_round(adj: DataFrame, labels: DataFrame) -> DataFrame:
+    """One min-label propagation round over the symmetric adjacency
+    ``adj`` (a, b): label(v) <- min(label(v), min label of v's
+    neighbors). ``labels`` is (node, label); nodes absent from ``adj``
+    keep their label."""
+    nbr = (
+        adj.join(labels, adj.b == labels.node)
+        .groupBy(F.col("a").alias("nbr_node"))
+        .agg(F.min("label").alias("nbr_label"))
+    )
+    return labels.join(nbr, labels.node == F.col("nbr_node"), "left").select(
+        "node",
+        F.least(
+            F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+        ).alias("label"),
+    )
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,
@@ -182,21 +238,17 @@ def pagerank(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    with loop_posture(edges):
+    with loop_posture(edges) as pin:
         # edges may be an expensive derivation (e.g. a distinct over a fact
         # table): persist it — it is scanned 3x building the invariants below
-        edges = edges.persist()
+        edges = pin(edges)
         nodes = node_universe(edges, src, dst)
         # contribution edge list: (src, dst, 1/outdeg) — computed once,
         # reused every iteration (cache: it is the loop invariant)
-        contrib_edges = (
-            _contribs(edges, src, dst)
-            # persist hash-partitioned on the join key: every iteration's
-            # join reuses this distribution, so only the (small) inflow side
-            # shuffles per iteration — the edge relation moves ONCE total
-            .repartition("c_src")
-            .persist()
-        )
+        # persist hash-partitioned on the join key: every iteration's
+        # join reuses this distribution, so only the (small) inflow side
+        # shuffles per iteration — the edge relation moves ONCE total
+        contrib_edges = pin(_contribs(edges, src, dst).repartition("c_src"))
         # The loop tracks INFLOW, not ranks: rank_i(u) = (1-d) + d·inflow_i(u)
         # is folded into the next iteration's flow expression, so the
         # dangling-node left join against the full node table happens ONCE at
@@ -226,12 +278,7 @@ def pagerank(
         # partition count (conf is read at action time, which for a
         # lazy return value would be after the posture is restored),
         # and the returned frame carries no lineage to recompute
-        result = result.localCheckpoint(eager=True)
-        # checkpoint severed the lineage — the cached invariants can't
-        # be needed again; free them immediately
-        contrib_edges.unpersist()
-        edges.unpersist()
-        return result
+        return result.localCheckpoint(eager=True)
 
 
 def sql_pagerank(
@@ -316,12 +363,12 @@ def pagerank_incremental(
     run, so per-day cost is the delta phase only."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    with loop_posture(edges_full):
+    with loop_posture(edges_full) as pin:
         d = damping
         rank_of = lambda c: F.lit(1.0 - d) + F.lit(d) * F.coalesce(c, F.lit(0.0))  # noqa: E731
-        eb = edges_base.persist()
-        ef = edges_full.persist()
-        ceb = _contribs(eb, src, dst).repartition("c_src").persist()
+        eb = pin(edges_base)
+        ef = pin(edges_full)
+        ceb = pin(_contribs(eb, src, dst).repartition("c_src"))
         # changed contributions: full-outer on the edge key, keep rows
         # whose weight moved (new edge, or src out-degree changed)
         j = _contribs(ef, src, dst).alias("f").join(
@@ -330,19 +377,17 @@ def pagerank_incremental(
             & (F.col("f.c_dst") == F.col("b.c_dst")),
             "full_outer",
         )
-        chg = (
+        chg = pin(
             j.select(
                 F.coalesce("f.c_src", "b.c_src").alias("c_src"),
                 F.coalesce("f.c_dst", "b.c_dst").alias("c_dst"),
                 F.coalesce("b.w", F.lit(0.0)).alias("w_old"),
                 F.coalesce("f.w", F.lit(0.0)).alias("w_new"),
-            )
-            .filter(F.col("w_old") != F.col("w_new"))
-            .persist()
+            ).filter(F.col("w_old") != F.col("w_new"))
         )
-        unchanged = ceb.join(
-            chg.select("c_src", "c_dst"), ["c_src", "c_dst"], "left_anti"
-        ).persist()
+        unchanged = pin(
+            ceb.join(chg.select("c_src", "c_dst"), ["c_src", "c_dst"], "left_anti")
+        )
 
         # "yesterday's stored state": the base run's per-iteration inflows
         inflow_b = [
@@ -407,13 +452,11 @@ def pagerank_incremental(
                 F.coalesce("binf", F.lit(0.0)) + F.coalesce("dinf", F.lit(0.0))
             ).alias("inflow"),
         )
-        result = nodes.join(merged, "node", "left").select(
-            "node", rank_of(F.col("inflow")).alias("rank")
+        return (
+            nodes.join(merged, "node", "left")
+            .select("node", rank_of(F.col("inflow")).alias("rank"))
+            .localCheckpoint(eager=True)
         )
-        result = result.localCheckpoint(eager=True)
-        for c in (unchanged, chg, ceb, ef, eb):
-            c.unpersist()
-        return result
 
 
 def connected_components(
@@ -427,7 +470,7 @@ def connected_components(
     min-label propagation over the undirected view of the edge list —
     component = the minimum node id reachable within the horizon.
 
-    Same fixed dataflow as the dedup cluster operator
+    Same ``min_label_round`` as the dedup cluster operator
     (operators.dedup.near_dup_labels), generalized to any edge table:
     exactly unrollable into a SQL oracle, shuffles sized to the |V|
     label table by ``loop_posture``, eager localCheckpoint while the
@@ -435,32 +478,18 @@ def connected_components(
     already the symmetric distinct adjacency (skips one shuffle).
     Unbounded-diameter graphs need the large-star/small-star loop over
     the same join shape."""
-    with loop_posture(edges):
-        undirected_df = _symmetric(edges, src, dst, undirected).persist()
+    with loop_posture(edges) as pin:
+        adj = pin(_symmetric(edges, src, dst, undirected))
         labels = (
-            undirected_df.select(F.col("a").alias("node"))
+            adj.select(F.col("a").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("label"))
         )
         for _ in range(iterations):
-            nbr = (
-                undirected_df.join(labels, undirected_df.b == labels.node)
-                .groupBy(F.col("a").alias("nbr_node"))
-                .agg(F.min("label").alias("nbr_label"))
-            )
-            labels = labels.join(nbr, labels.node == F.col("nbr_node"), "left").select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-                ).alias("label"),
-            )
-        result = labels.select("node", F.col("label").alias("component"))
-        # Cut the lineage and release the pinned edge relation —
-        # leaving the adjacency persisted for the session lifetime is
-        # the same leak class fixed in dedup.minhash_lsh_pairs.
-        result = result.localCheckpoint(eager=True)
-        undirected_df.unpersist()
-        return result
+            labels = min_label_round(adj, labels)
+        return labels.select(
+            "node", F.col("label").alias("component")
+        ).localCheckpoint(eager=True)
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -501,7 +530,6 @@ def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 50,
     assume_distinct: bool = False,
 ) -> DataFrame:
     """(node, scc_id) — EXACT strongly connected components of a
@@ -519,11 +547,14 @@ def strongly_connected_components(
     u↔v cycle lies wholly inside the SCC, so color-restricting edges
     never severs an unsettled SCC. Each round removes at least each
     class's minimum's SCC, so the loop terminates; real graphs settle
-    in 2-4 rounds.
+    in 2-4 rounds. Both loops run through ``fixpoint``, which raises
+    ``RuntimeError`` when either has not converged after
+    ``FIXPOINT_ROUNDS`` rounds (a propagation needs about diameter/2
+    rounds) instead of returning unfinished components.
 
     Scale shape: every step is a join on the (color-filtered) edge
     relation + a groupBy(node) min — O(E) shuffle per propagation
-    step, state |V| rows; eager localCheckpoint per step cuts the
+    step, state |V| rows; a localCheckpoint per round cuts the
     growing lineage exactly like the PageRank loop. scc_id is the true
     minimum member, so output is deterministic.
 
@@ -553,9 +584,6 @@ def strongly_connected_components(
         if not assume_distinct:
             e0 = e0.distinct()
         e0 = e0.localCheckpoint(eager=True)
-        active = node_universe(e0, "s", "d").select(
-            "node", F.lit("0").alias("color")
-        ).localCheckpoint(eager=True)
 
         def dirs_min(ea: DataFrame, act: DataFrame) -> DataFrame:
             # min-label propagation to a verified fixpoint: m(u) folds in
@@ -571,10 +599,7 @@ def strongly_connected_components(
             # test stays exact (a no-change double step implies a
             # no-change single step — and a direction that converges
             # first just no-ops its extra steps, min is idempotent).
-            # lazy checkpoint: the first inner step's job materializes
-            # it — no dedicated blocking job (the loop's cost on a
-            # |V|-label state is driver job overhead, not data; round-11
-            # cut every avoidable job out of the round)
+            # e2's lazy checkpoint is materialized by the first round.
             e2 = ea.select("s", "d", F.lit("f").alias("dir")).unionByName(
                 ea.select(
                     F.col("d").alias("s"),
@@ -639,54 +664,35 @@ def strongly_connected_components(
             ).withColumn("dr", F.explode(F.array(F.lit("f"), F.lit("b"))))
             if not bc_state:
                 m = m.repartition("node", "dr")
-            for _ in range(max_rounds):
-                # lazy checkpoint + convergence count in ONE job: the
-                # count below is the action that materializes m2's
-                # checkpoint, so each double-step costs one driver
-                # round-trip, not two. (A quad-step variant was
-                # measured SLOWER at sf0.1 — over-stepping past the
-                # fixpoint pays real broadcast+shuffle stages, and the
-                # 2-hop cadence already lands within one double-step
-                # of the fixpoint on this graph.)
-                m2 = step(step(m)).localCheckpoint(eager=False)
-                prev_m = (
-                    F.broadcast(m.alias("b")) if bc_state else m.alias("b")
-                )
-                changed = (
-                    m2.alias("a")
-                    .join(
-                        prev_m,
-                        (F.col("a.node") == F.col("b.node"))
-                        & (F.col("a.dr") == F.col("b.dr")),
-                    )
-                    .filter(F.col("a.m") != F.col("b.m"))
-                    .count()
-                )
-                m = m2
-                if changed == 0:
-                    break
-            # superseded checkpoint generations are reclaimed by the
-            # ContextCleaner once a JVM GC proves them unreachable —
-            # Dataset.unpersist() does NOT free localCheckpoint RDD
-            # blocks (verified empirically: getRDDStorageInfo unchanged
-            # after unpersist), so session.py pins
-            # spark.cleaner.periodicGC.interval=2min to keep long
-            # sessions from accumulating every fixpoint generation
-            return m
 
-        settled_parts: list[DataFrame] = []
-        n_active = active.count()
-        for _ in range(max_rounds):
-            if n_active == 0:
-                break
+            def unchanged(prev: DataFrame, nxt: DataFrame) -> bool:
+                # (A quad-step variant was measured SLOWER at sf0.1 —
+                # over-stepping past the fixpoint pays real broadcast+
+                # shuffle stages, and the 2-hop cadence already lands
+                # within one double-step of the fixpoint on this graph.)
+                b = F.broadcast(prev.alias("b")) if bc_state else prev.alias("b")
+                same_key = (F.col("a.node") == F.col("b.node")) & (
+                    F.col("a.dr") == F.col("b.dr")
+                )
+                return (
+                    nxt.alias("a").join(b, same_key).filter(F.col("a.m") != F.col("b.m"))
+                ).count() == 0
+
+            return fixpoint(
+                m,
+                lambda x: step(step(x)),
+                unchanged,
+                "strongly_connected_components: min-label propagation",
+            )
+
+        def color_round(lab: DataFrame) -> DataFrame:
+            # lab is (node, color, scc_id); a null scc_id is unsettled.
+            # ea feeds only dirs_min's e2 checkpoint, and the next lab's
+            # lazy checkpoint is materialized by fixpoint's probe — one
+            # blocking job per round where round 10 paid five.
+            active = lab.filter(F.col("scc_id").isNull())
             sa = active.select(F.col("node").alias("s"), F.col("color").alias("cs"))
             da = active.select(F.col("node").alias("d"), F.col("color").alias("cd"))
-            # ea feeds only dirs_min's e2 checkpoint, and lab's lazy
-            # checkpoint is materialized by the n_active count below —
-            # one blocking job per round where round 10 paid five
-            # (ea/lab/settled/active eager checkpoints + the count).
-            # settled and active are cheap filters OVER lab's
-            # checkpoint, so they need no checkpoint of their own.
             ea = (
                 e0.join(sa, "s")
                 .join(da, "d")
@@ -700,38 +706,36 @@ def strongly_connected_components(
             bwd = mm.filter(F.col("dr") == "b").select(
                 "node", F.col("m").alias("bmin")
             )
-            lab = (
+            return lab.filter(F.col("scc_id").isNotNull()).unionByName(
                 active.join(fwd, "node")
                 .join(bwd, "node")
-                .localCheckpoint(eager=False)
-            )
-            settled_parts.append(
-                lab.filter(F.col("fmin") == F.col("bmin")).select(
-                    "node", F.col("fmin").alias("scc_id")
+                .select(
+                    "node",
+                    F.concat_ws("|", "color", "fmin", "bmin").alias("color"),
+                    F.when(F.col("fmin") == F.col("bmin"), F.col("fmin")).alias(
+                        "scc_id"
+                    ),
                 )
             )
-            active = lab.filter(F.col("fmin") != F.col("bmin")).select(
+
+        nodes = node_universe(e0, "s", "d")
+        lab = fixpoint(
+            nodes.select(
                 "node",
-                F.concat_ws("|", "color", "fmin", "bmin").alias("color"),
-            )
-            # this count materializes lab's checkpoint AND sizes the
-            # survivor set. Superseded generations (e2, m2, lab) are
-            # localCheckpoint blocks: freed by the periodic
-            # ContextCleaner GC (session.py), not by unpersist(),
-            # which is a no-op on checkpoint RDDs.
-            n_active = active.count()
-        out = settled_parts[0]
-        for p in settled_parts[1:]:
-            out = out.unionByName(p)
-        result = out.localCheckpoint(eager=True)
-        return result
+                F.lit("0").alias("color"),
+                F.lit(None).cast(nodes.schema["node"].dataType).alias("scc_id"),
+            ).localCheckpoint(eager=True),
+            color_round,
+            lambda _, nxt: nxt.filter(F.col("scc_id").isNull()).count() == 0,
+            "strongly_connected_components",
+        )
+        return lab.select("node", "scc_id").localCheckpoint(eager=True)
 
 
 def connected_components_converged(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 50,
 ) -> DataFrame:
     """(node, component) by alternating large-star/small-star
     contraction to a FIXPOINT — the production unbounded-diameter
@@ -744,11 +748,13 @@ def connected_components_converged(
     combined aggregate, no extra shuffle of the edge relation). When
     the signature is stable the claimed fixpoint is verified EXACTLY
     once with a set difference, so a hash collision cannot produce an
-    early stop — converged iff the star labels are stable.
+    early stop — converged iff the star labels are stable. The loop runs
+    through ``fixpoint``: it raises ``RuntimeError`` after
+    ``FIXPOINT_ROUNDS`` rounds without a fixpoint.
 
     Scale shape: each round is groupBy(node) + one join on the edge
     relation — O(E) shuffle per round, O(log^2 V) rounds on adversarial
-    graphs, 2-5 rounds on real link graphs; eager localCheckpoint per
+    graphs, 2-5 rounds on real link graphs; a localCheckpoint per
     round cuts the growing lineage exactly like the PageRank loop.
     Rounds are E-sized (the star steps move the edge relation), so
     this loop keeps AQE on — see ``loop_posture``."""
@@ -774,28 +780,25 @@ def connected_components_converged(
             ).first()
             return (row["n"], row["h1"], row["h2"])
 
-        sig = signature(e)
-        for _ in range(max_rounds):
-            # lazy checkpoint fused with the signature probe: the
-            # signature aggregate is the action that materializes the
-            # round's checkpoint, so each round is one driver job
-            # instead of two (round-11 job-fusion pass)
-            nxt = _small_star(_large_star(e)).localCheckpoint(eager=False)
-            nsig = signature(nxt)
-            if nsig == sig:
-                # exact fixpoint verification — paid once, not per round
-                if not nxt.exceptAll(e).isEmpty() or not e.exceptAll(nxt).isEmpty():
-                    sig, e = nsig, nxt
-                    continue
-                e = nxt
-                break
-            sig, e = nsig, nxt
-        else:
-            raise RuntimeError(
-                f"connected_components_converged: no fixpoint after "
-                f"{max_rounds} rounds (theoretical bound is O(log^2 V) — "
-                f"raise max_rounds for adversarial graphs)"
+        sigs = [signature(e)]
+
+        def stable(prev: DataFrame, nxt: DataFrame) -> bool:
+            # the signature aggregate is the round's one job (it
+            # materializes the lazy checkpoint); the exact set-difference
+            # verification is paid only when the signature is stable
+            sigs.append(signature(nxt))
+            return (
+                sigs[-1] == sigs[-2]
+                and nxt.exceptAll(prev).isEmpty()
+                and prev.exceptAll(nxt).isEmpty()
             )
+
+        e = fixpoint(
+            e,
+            lambda x: _small_star(_large_star(x)),
+            stable,
+            "connected_components_converged",
+        )
         # fixpoint edge set is a forest of stars (node, root)
         roots = e.select(F.col("v").alias("node"), F.col("v").alias("component"))
         members = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -842,13 +845,13 @@ def personalized_pagerank(
     tiny and broadcast into the node table once."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    with loop_posture(edges):
-        edges = edges.persist()
+    with loop_posture(edges) as pin:
+        edges = pin(edges)
         nodes = node_universe(edges, src, dst)
         n_seeds = seeds.select(F.col("node")).distinct().agg(
             F.count(F.lit(1)).alias("ns")
         )
-        tp = (
+        tp = pin(
             nodes.join(
                 seeds.select(F.col("node")).distinct().withColumn("_is_seed", F.lit(1)),
                 "node",
@@ -861,9 +864,8 @@ def personalized_pagerank(
                 .otherwise(0.0)
                 .alias("p"),
             )
-            .persist()
         )
-        ce = _contribs(edges, src, dst).repartition("c_src").persist()
+        ce = pin(_contribs(edges, src, dst).repartition("c_src"))
         rank = tp.select("node", F.col("p").alias("rank"))
         for _ in range(iterations):
             inflow = (
@@ -879,11 +881,7 @@ def personalized_pagerank(
                     + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
                 ).alias("rank"),
             )
-        result = rank.localCheckpoint(eager=True)
-        ce.unpersist()
-        tp.unpersist()
-        edges.unpersist()
-        return result
+        return rank.localCheckpoint(eager=True)
 
 
 def sql_personalized_pagerank(
@@ -934,8 +932,8 @@ def kcore_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     Lineage is cut per round (localCheckpoint) so the plan stays flat at
     higher round counts; a fixed round count keeps the dataflow exactly
     unrollable as the DuckDB oracle (``sql_kcore_rounds``). The full
-    peel-to-fixpoint variant would loop until the edge count is stable
-    (same convergence harness as ``connected_components_converged``).
+    peel-to-fixpoint variant would run the peel through ``fixpoint``
+    with a stable-edge-count probe.
     Each round's surviving edges are re-keyed on ``a`` into
     ``derive_loop_partitions`` partitions; the result stays lazy, so no
     session setting is scoped around it.
@@ -1024,10 +1022,10 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    with loop_posture(edges):
+    with loop_posture(edges) as pin:
         e = edges.select(F.col(src).alias("s"), F.col(dst).alias("p"))
-        e_by_s = e.repartition("s").persist()
-        e_by_p = e.repartition("p").persist()
+        e_by_s = pin(e.repartition("s"))
+        e_by_p = pin(e.repartition("p"))
         # hub_0 ≡ 1.0 → auth_1 = in-degree: no join on round 1
         auth = e_by_p.groupBy("p").agg(F.sum(F.lit(1.0)).alias("a"))
         hub = None
@@ -1059,10 +1057,7 @@ def hits(
             F.lit("hub").alias("side"),
             (F.col("h") / F.col("_m")).alias("score"),
         )
-        out = a_norm.unionByName(h_norm).localCheckpoint(eager=True)
-        e_by_s.unpersist()
-        e_by_p.unpersist()
-        return out
+        return a_norm.unionByName(h_norm).localCheckpoint(eager=True)
 
 
 def sql_hits(edges_sql: str, iterations: int = 3) -> str:
@@ -1118,9 +1113,8 @@ def bfs_distances(
     once-shuffled edge relation — the adjacency list is persisted
     hash-partitioned on the join key and never moves again. A fixed
     round count keeps the dataflow exactly unrollable as the DuckDB
-    oracle (``sql_bfs``); run-to-fixpoint needs the same convergence
-    harness as ``connected_components_converged`` (stop when the
-    reached count is stable).
+    oracle (``sql_bfs``); run-to-fixpoint would run the relaxation
+    through ``fixpoint`` with a stable-reached-count probe.
     """
     # decide ONCE, from the edge relation's measured footprint, whether
     # the growing reached set may be broadcast (state_broadcast_ok). At
@@ -1129,8 +1123,8 @@ def bfs_distances(
     # shuffle join against the persisted pre-partitioned adjacency —
     # the 100 TB plan (the adjacency side still never moves).
     bc_state = state_broadcast_ok(edges)
-    with loop_posture(edges):
-        und = _symmetric(edges, src, dst, undirected).repartition("a").persist()
+    with loop_posture(edges) as pin:
+        und = pin(_symmetric(edges, src, dst, undirected).repartition("a"))
         dist = seeds.select("node", F.lit(0).alias("dist"))
         for _ in range(rounds):
             reached = F.broadcast(dist) if bc_state else dist
@@ -1142,9 +1136,7 @@ def bfs_distances(
                 .agg(F.min("dist").alias("dist"))
             )
             dist = relaxed
-        out = dist.localCheckpoint(eager=True)
-        und.unpersist()
-        return out
+        return dist.localCheckpoint(eager=True)
 
 
 def sql_bfs(edges_sql: str, seeds_sql: str, rounds: int = 4) -> str:
@@ -1193,8 +1185,8 @@ def label_propagation(
     shuffles sized by ``loop_posture``. Synchronous LPA on bipartite
     graphs can oscillate; a bounded round count is the standard remedy
     (and what makes the result well-defined)."""
-    with loop_posture(edges):
-        und = _symmetric(edges, src, dst).repartition("b").persist()
+    with loop_posture(edges) as pin:
+        und = pin(_symmetric(edges, src, dst).repartition("b"))
         labels = und.select(F.col("a").alias("node")).distinct().select(
             "node", F.col("node").alias("label")
         )
@@ -1223,10 +1215,9 @@ def label_propagation(
                 )
                 .select("node", F.col("m.label").alias("label"))
             )
-        out = labels.select("node", F.col("label").alias("community"))
-        out = out.localCheckpoint(eager=True)
-        und.unpersist()
-        return out
+        return labels.select(
+            "node", F.col("label").alias("community")
+        ).localCheckpoint(eager=True)
 
 
 def sql_label_propagation_ctes(edges_sql: str, rounds: int = 3) -> str:

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.operators.graph import (
+    _symmetric,
     node_universe,
     pagerank,
     pagerank_incremental,
@@ -254,14 +255,7 @@ def _und(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.queries.registry import materialize_once
 
     def build() -> DataFrame:
-        e = _edges(spark, sf_dir)
-        return (
-            e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .unionByName(
-                e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-            )
-            .distinct()
-        )
+        return _symmetric(_edges(spark, sf_dir), "src", "dst")
 
     return materialize_once(spark, sf_dir, "graph_und", build)
 
@@ -271,14 +265,7 @@ def _community_und(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.queries.registry import materialize_once
 
     def build() -> DataFrame:
-        e = _community_edges(spark, sf_dir)
-        return (
-            e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .unionByName(
-                e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-            )
-            .distinct()
-        )
+        return _symmetric(_community_edges(spark, sf_dir), "src", "dst")
 
     return materialize_once(spark, sf_dir, "graph_community_und", build)
 
@@ -1022,12 +1009,7 @@ def graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.operators.hashing import md5_long
 
     e2 = _copurchase_w(spark, sf_dir).filter(F.col("w") >= 2).select("a", "b")
-    und = (
-        e2.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionByName(e2.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-        .persist()
-    )
+    und = _symmetric(e2, "a", "b").toDF("src", "dst").persist()
     t_adj = und.select(F.col("src").alias("ts"), F.col("dst").alias("td"))
     seeds = (
         und.filter(F.col("src") % _N2V_SEED_MOD == 0)
