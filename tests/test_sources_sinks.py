@@ -8,7 +8,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ug_dwh_etl_spark.sinks.writers import append_history, fan_out, overwrite_snapshot
+from ug_dwh_etl_spark.plans.pipeline import Pipeline
+from ug_dwh_etl_spark.sinks.writers import append_history, overwrite_snapshot
 from ug_dwh_etl_spark.sources.rest import paginated_ingest
 
 
@@ -42,10 +43,14 @@ def test_append_and_overwrite_writers(spark, tmp_path):
 
 
 def test_fan_out_single_upstream(spark, tmp_path):
-    df = spark.createDataFrame([(1,)], "id long")
     paths = [str(tmp_path / "a"), str(tmp_path / "b")]
-    fan_out(df, [lambda d: overwrite_snapshot(d, paths[0]),
-                 lambda d: overwrite_snapshot(d, paths[1])])
+    Pipeline(
+        name="fan-out",
+        load=lambda s: s.createDataFrame([(1,)], "id long"),
+        transform=lambda df: df,
+        sinks=[lambda d: overwrite_snapshot(d, paths[0]),
+               lambda d: overwrite_snapshot(d, paths[1])],
+    ).run(spark)
     assert spark.read.parquet(paths[0]).count() == 1
     assert spark.read.parquet(paths[1]).count() == 1
 

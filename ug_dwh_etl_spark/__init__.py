@@ -10,8 +10,8 @@ on the DataFrame / Spark SQL / Catalyst stack:
                    (and ``streaming.jobs.read_events_stream``), which probe
                    its timestamp layout. Drive/IMAP fetches are not on a
                    user path (no network in the build).
-- ``sinks``      — append/overwrite/partitioned writers, multi-sink fan-out,
-                   retention, alert hooks (the reference's BigQuery + Teams
+- ``sinks``      — append/overwrite/partitioned writers, retention, alert
+                   hooks (the reference's BigQuery + Teams
                    surface).
 - ``functions``  — the expression-macro library: every scalar transform the
                    reference performs as a pandas ``.apply`` lambda,
@@ -22,9 +22,10 @@ on the DataFrame / Spark SQL / Catalyst stack:
                    the LLM-data-pipeline operators (dedup, similarity
                    search, text analysis, multimodal plumbing).
 - ``plans``      — declarative Pipeline composition (read → transform →
-                   fan-out write) mirroring the reference's script shape;
-                   ``plans.daily`` holds which tables append and which
-                   replace.
+                   persist → gates → fan-out write) mirroring the
+                   reference's script shape; ``plans.daily`` holds which
+                   tables append and which replace, and runs the day's
+                   pipelines concurrently.
 - ``streaming``  — the incremental surface: Trigger.AvailableNow file
                    streams, watermarked windows, stream dedup.
 

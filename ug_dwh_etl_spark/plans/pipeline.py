@@ -7,10 +7,12 @@ and sinks. ``run`` composes them so that
 
 - the transform chain stays ONE lazy plan (Catalyst sees scan→sink whole
   and pushes filters/prunes columns into the source scan),
-- DQ gates run as cheap ``limit(1)`` existence aggregates BEFORE any sink
-  work starts (§4: gate short-circuit),
-- multi-sink fan-out persists the computed frame once (§2.2 K3), not
-  re-running the transform per sink.
+- the transformed frame is persisted once, before the gates, so a gate's
+  ``limit(1)`` existence check and every sink (§2.2 K3 multi-sink
+  fan-out, `sf_html_data.py:176-185`) read the one computed copy
+  instead of re-running the transform, and a remote load such as E2's
+  paginated REST ingest is fetched once per run,
+- DQ gates run BEFORE any sink work starts (§4: gate short-circuit).
 """
 
 from __future__ import annotations
@@ -19,17 +21,23 @@ from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 from ug_dwh_etl_spark.operators.quality import expect
 from ug_dwh_etl_spark.sinks.alerts import AlertSink
-from ug_dwh_etl_spark.sinks.writers import fan_out
 
 
 @dataclass
 class Gate:
     """DQ assertion (§2.13 Q1): rows matching ``violation`` trigger an
     alert; ``blocking`` aborts the run (the reference's root-URL-not-200
-    check alerts but continues, `sf_html_data.py:95-105`)."""
+    check alerts but continues, `sf_html_data.py:95-105`).
+
+    ``violation`` may read a load column that the transform projects
+    away, as E1's gate reads ``text``: Spark resolves it below the
+    projection, so that gate scans the source (``documents``) rather
+    than the persisted frame. It stays correct, and cheap as long as the
+    column comes straight from the scan."""
 
     violation: Column
     title: str
@@ -50,19 +58,24 @@ class Pipeline:
         return self.transform(self.load(spark))
 
     def run(self, spark: SparkSession, alert: AlertSink | None = None) -> bool:
-        """Gates → sinks. Returns True when every gate passed."""
-        df = self.dataframe(spark)
-        ok = True
-        for gate in self.gates:
-            passed = expect(
-                df,
-                gate.violation,
-                gate.title,
-                gate.message,
-                alert=alert,
-                fail=gate.blocking,
-            )
-            ok = ok and passed
-        if self.sinks:
-            fan_out(df, list(self.sinks))
-        return ok
+        """Persist → gates → sinks, releasing the persisted frame on
+        exit, also when a blocking gate or a sink raises. Returns True
+        when every gate passed."""
+        df = self.dataframe(spark).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            ok = True
+            for gate in self.gates:
+                passed = expect(
+                    df,
+                    gate.violation,
+                    gate.title,
+                    gate.message,
+                    alert=alert,
+                    fail=gate.blocking,
+                )
+                ok = ok and passed
+            for sink in self.sinks:
+                sink(df)
+            return ok
+        finally:
+            df.unpersist()

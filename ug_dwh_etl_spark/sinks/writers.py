@@ -8,8 +8,8 @@ The reference lands every table in BigQuery with ``if_exists='append'``
   ``crawl_date`` so partition pruning skips all but the queried days.
 - snapshot replace → ``mode('overwrite')``.
 - multi-sink fan-out (one upstream, ≥2 tables, `sf_html_data.py:176-185`)
-  → persist the upstream once so the transform chain isn't recomputed
-  per sink.
+  → ``plans/pipeline.Pipeline.run`` persists the upstream once, so the
+  transform chain isn't recomputed per sink.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 
 def swap_dir(staging: str, path: str) -> None:
@@ -61,18 +60,6 @@ def overwrite_snapshot(df: DataFrame, path: str) -> None:
     """K2 — if_exists='replace' snapshot tables
     (`sf_html_data.py:185`, `sf_inlink_bulk_data.py:104`)."""
     df.write.mode("overwrite").parquet(path)
-
-
-def fan_out(df: DataFrame, sinks: list[Callable[[DataFrame], None]]) -> None:
-    """K3 — one computed DataFrame into N sinks with a single upstream
-    computation (`sf_html_data.py:176-185` writes the same frame to the
-    history AND current tables)."""
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        for sink in sinks:
-            sink(df)
-    finally:
-        df.unpersist()
 
 
 def prune_history(
