@@ -9,8 +9,8 @@ module or class scope by def/class statements. A second scan keeps
 temporary session-setting changes behind ``session.conf_scope``, a
 third fails on package definitions no user path reaches, a fourth on
 imports in package ``__init__.py`` files (which would hide such
-definitions from the third), and a fifth on scratch paths keyed by the
-process id.
+definitions from the third), a fifth on scratch paths keyed by the
+process id, and a sixth keeps cached frames behind ``session.pinned``.
 """
 
 from __future__ import annotations
@@ -99,6 +99,27 @@ def test_session_settings_change_only_through_conf_scope():
             continue
         problems.extend(_conf_flips(ast.parse(py.read_text(), filename=str(py)), rel))
     assert not problems, "use session.conf_scope:\n" + "\n".join(problems)
+
+
+def test_frames_are_cached_only_through_pinned():
+    """Every ``.persist(...)``, ``.cache(...)`` and ``.unpersist(...)``
+    call in the package lives in ``session.pinned``, which releases what
+    it pinned on exit, normal or raised; a hand-rolled pair leaks its
+    blocks for the rest of the session when anything between the two
+    raises."""
+    problems: list[str] = []
+    for py in sorted(PKG.rglob("*.py")):
+        rel = py.relative_to(PKG).as_posix()
+        if rel == "session.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text(), filename=str(py))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache", "unpersist")
+            ):
+                problems.append(f"{rel}:{node.lineno} .{node.func.attr}(...)")
+    assert not problems, "use session.pinned:\n" + "\n".join(problems)
 
 
 # --- reachability -----------------------------------------------------------

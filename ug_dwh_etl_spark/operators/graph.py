@@ -31,7 +31,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from ug_dwh_etl_spark.session import conf_scope
+from ug_dwh_etl_spark.session import conf_scope, pinned
 
 DAMPING = 0.85
 # round cap of every run-to-convergence loop (``fixpoint``)
@@ -56,9 +56,9 @@ def loop_posture(
     at sf0.1: AQE's partition coalescing DOES pay when the loop moves
     the edge relation).
 
-    Yields ``pin``: ``pin(df)`` persists ``df`` and returns it, and the
-    scope unpersists every pinned frame on exit, normal or raised — the
-    loop invariants never outlive the call that needed them.
+    Yields ``session.pinned``'s ``pin``: every frame it persists is
+    unpersisted on exit, normal or raised, so the loop invariants never
+    outlive the call that needed them.
 
     The partition count comes from ``derive_loop_partitions``: it scales
     with the edge relation's file count, so at warehouse scale the loop
@@ -68,18 +68,8 @@ def loop_posture(
     confs = {"spark.sql.shuffle.partitions": str(n)}
     if not keep_aqe:
         confs["spark.sql.adaptive.enabled"] = "false"
-    pinned: list[DataFrame] = []
-
-    def pin(df: DataFrame) -> DataFrame:
-        pinned.append(df.persist())
-        return pinned[-1]
-
-    with conf_scope(edges.sparkSession, confs):
-        try:
-            yield pin
-        finally:
-            for df in reversed(pinned):
-                df.unpersist()
+    with conf_scope(edges.sparkSession, confs), pinned() as pin:
+        yield pin
 
 
 def fixpoint(
@@ -94,9 +84,11 @@ def fixpoint(
     one Spark job per round, not two (on a |V|-sized state the loop's
     cost is job overhead, not data). Raises ``RuntimeError`` naming
     ``what`` after ``FIXPOINT_ROUNDS`` rounds without convergence rather
-    than return a truncated, wrong answer. Superseded generations are
-    freed by the ContextCleaner's periodic GC (session.py), not by
-    ``unpersist()``, which is a no-op on checkpoint blocks."""
+    than return a truncated, wrong answer. Round-invariant inputs are
+    cached through ``session.pinned`` (``loop_posture``'s ``pin``), not
+    here; superseded generations are freed by the ContextCleaner's
+    periodic GC (session.py), not by ``unpersist()``, which is a no-op
+    on checkpoint blocks."""
     for _ in range(FIXPOINT_ROUNDS):
         prev, state = state, step(state).localCheckpoint(eager=False)
         if converged(prev, state):
@@ -747,7 +739,8 @@ def connected_components_converged(
     the edge set (count + two independent xxhash64 sums — a map-side
     combined aggregate, no extra shuffle of the edge relation). When
     the signature is stable the claimed fixpoint is verified EXACTLY
-    once with a set difference, so a hash collision cannot produce an
+    once with a one-sided set difference (the signature already matched
+    the counts), so a hash collision cannot produce an
     early stop — converged iff the star labels are stable. The loop runs
     through ``fixpoint``: it raises ``RuntimeError`` after
     ``FIXPOINT_ROUNDS`` rounds without a fixpoint.
@@ -787,11 +780,8 @@ def connected_components_converged(
             # materializes the lazy checkpoint); the exact set-difference
             # verification is paid only when the signature is stable
             sigs.append(signature(nxt))
-            return (
-                sigs[-1] == sigs[-2]
-                and nxt.exceptAll(prev).isEmpty()
-                and prev.exceptAll(nxt).isEmpty()
-            )
+            # equal counts: an empty one-sided difference proves equality
+            return sigs[-1] == sigs[-2] and nxt.exceptAll(prev).isEmpty()
 
         e = fixpoint(
             e,

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from ug_dwh_etl_spark.operators.quality import expect
+from ug_dwh_etl_spark.session import pinned
 from ug_dwh_etl_spark.sinks.alerts import AlertSink
 
 
@@ -61,8 +62,8 @@ class Pipeline:
         """Persist → gates → sinks, releasing the persisted frame on
         exit, also when a blocking gate or a sink raises. Returns True
         when every gate passed."""
-        df = self.dataframe(spark).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
+        with pinned() as pin:
+            df = pin(self.dataframe(spark), StorageLevel.MEMORY_AND_DISK)
             ok = True
             for gate in self.gates:
                 passed = expect(
@@ -77,5 +78,3 @@ class Pipeline:
             for sink in self.sinks:
                 sink(df)
             return ok
-        finally:
-            df.unpersist()

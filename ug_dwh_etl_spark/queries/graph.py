@@ -23,7 +23,7 @@ from ug_dwh_etl_spark.operators.graph import (
     sql_pagerank,
 )
 from ug_dwh_etl_spark.queries.registry import register, table
-from ug_dwh_etl_spark.session import conf_scope
+from ug_dwh_etl_spark.session import conf_scope, pinned
 
 # supplier s<k> links to part p<k>; prefixes keep the two node
 # namespaces disjoint so the graph is a real bipartite link graph
@@ -704,38 +704,38 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = _lpa_communities(spark, sf_dir).select(
         "node", F.col("community").alias("c")
     )
-    und = _und(spark, sf_dir).persist()
-    canon = und.filter(F.col("a") < F.col("b"))
-    m = canon.agg(F.count(F.lit(1)).alias("m"))
-    la = lab.select(F.col("node").alias("a"), F.col("c"))
-    lb = lab.select(F.col("node").alias("b"), F.col("c").alias("cb"))
-    intra = (
-        canon.join(la, "a")
-        .join(lb, "b")
-        .filter(F.col("c") == F.col("cb"))
-        .groupBy("c")
-        .agg(F.count(F.lit(1)).alias("ec"))
-    )
-    deg = und.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
-    dc = deg.join(lab, "node").groupBy("c").agg(F.sum("d").alias("dsum"))
-    out = (
-        dc.join(intra, "c", "left")
-        .crossJoin(F.broadcast(m))
-        .agg(
-            F.count(F.lit(1)).alias("n_communities"),
-            F.first("m").cast("long").alias("n_edges"),
-            F.round(
-                F.sum(
-                    F.coalesce(F.col("ec"), F.lit(0)) * 1.0 / F.col("m")
-                    - (F.col("dsum") / (2.0 * F.col("m")))
-                    * (F.col("dsum") / (2.0 * F.col("m")))
-                ),
-                6,
-            ).alias("modularity"),
+    with pinned() as pin:
+        und = pin(_und(spark, sf_dir))
+        canon = und.filter(F.col("a") < F.col("b"))
+        m = canon.agg(F.count(F.lit(1)).alias("m"))
+        la = lab.select(F.col("node").alias("a"), F.col("c"))
+        lb = lab.select(F.col("node").alias("b"), F.col("c").alias("cb"))
+        intra = (
+            canon.join(la, "a")
+            .join(lb, "b")
+            .filter(F.col("c") == F.col("cb"))
+            .groupBy("c")
+            .agg(F.count(F.lit(1)).alias("ec"))
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    und.unpersist()
+        deg = und.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
+        dc = deg.join(lab, "node").groupBy("c").agg(F.sum("d").alias("dsum"))
+        out = (
+            dc.join(intra, "c", "left")
+            .crossJoin(F.broadcast(m))
+            .agg(
+                F.count(F.lit(1)).alias("n_communities"),
+                F.first("m").cast("long").alias("n_edges"),
+                F.round(
+                    F.sum(
+                        F.coalesce(F.col("ec"), F.lit(0)) * 1.0 / F.col("m")
+                        - (F.col("dsum") / (2.0 * F.col("m")))
+                        * (F.col("dsum") / (2.0 * F.col("m")))
+                    ),
+                    6,
+                ).alias("modularity"),
+            )
+        )
+        out = out.localCheckpoint(eager=True)
     return out
 
 
@@ -825,13 +825,6 @@ def _walk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         li = table(spark, sf_dir, "lineitem")
-        # the shared symmetric-adjacency artifact, persisted for the
-        # _WALK_STEPS frontier joins
-        und = (
-            _und(spark, sf_dir)
-            .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .persist()
-        )
         seeds = (
             li.filter(F.col("l_suppkey") % _WALK_SEED_MOD == 0)
             .select(
@@ -844,23 +837,26 @@ def _walk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = seeds.select("walk_id", F.lit(0).alias("step"), "node")
         cur = seeds.localCheckpoint()
-        for k in range(1, _WALK_STEPS + 1):
-            coin = md5_long(
-                F.concat(F.col("node"), F.lit(f"|{k}|"), F.col("dst"))
-            )
-            nxt = (
-                cur.join(und, cur.node == und.src)
-                .select("walk_id", F.col("dst"), coin.alias("h"))
-                .groupBy("walk_id")
-                .agg(F.min(F.struct(F.col("h"), F.col("dst"))).alias("m"))
-                .select("walk_id", F.col("m.dst").alias("node"))
-                .localCheckpoint()
-            )
-            out = out.unionByName(
-                nxt.select("walk_id", F.lit(k).alias("step"), "node")
-            )
-            cur = nxt
-        und.unpersist()
+        with pinned() as pin:
+            # the shared symmetric-adjacency artifact, pinned for the
+            # _WALK_STEPS frontier joins
+            und = pin(_und(spark, sf_dir).toDF("src", "dst"))
+            for k in range(1, _WALK_STEPS + 1):
+                coin = md5_long(
+                    F.concat(F.col("node"), F.lit(f"|{k}|"), F.col("dst"))
+                )
+                nxt = (
+                    cur.join(und, cur.node == und.src)
+                    .select("walk_id", F.col("dst"), coin.alias("h"))
+                    .groupBy("walk_id")
+                    .agg(F.min(F.struct(F.col("h"), F.col("dst"))).alias("m"))
+                    .select("walk_id", F.col("m.dst").alias("node"))
+                    .localCheckpoint()
+                )
+                out = out.unionByName(
+                    nxt.select("walk_id", F.lit(k).alias("step"), "node")
+                )
+                cur = nxt
         return out
 
     return materialize_once(spark, sf_dir, "graph_walks", build)
@@ -1009,57 +1005,59 @@ def graph_node2vec_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.operators.hashing import md5_long
 
     e2 = _copurchase_w(spark, sf_dir).filter(F.col("w") >= 2).select("a", "b")
-    und = _symmetric(e2, "a", "b").toDF("src", "dst").persist()
-    t_adj = und.select(F.col("src").alias("ts"), F.col("dst").alias("td"))
-    seeds = (
-        und.filter(F.col("src") % _N2V_SEED_MOD == 0)
-        .select(F.col("src").alias("walk_id"))
-        .distinct()
-        .select("walk_id", F.col("walk_id").alias("node"), F.col("walk_id").alias("prev"))
-    )
-    out = seeds.select("walk_id", F.lit(0).alias("step"), "node")
-    cur = seeds.localCheckpoint()
-    for k in range(1, _N2V_STEPS + 1):
-        w = (
-            F.when(F.col("dst") == F.col("prev"), F.lit(_N2V_W_RET))
-            .when(F.col("td").isNotNull(), F.lit(_N2V_W_D1))
-            .otherwise(F.lit(_N2V_W_D2))
+    with pinned() as pin:
+        und = pin(_symmetric(e2, "a", "b").toDF("src", "dst"))
+        t_adj = und.select(F.col("src").alias("ts"), F.col("dst").alias("td"))
+        seeds = (
+            und.filter(F.col("src") % _N2V_SEED_MOD == 0)
+            .select(F.col("src").alias("walk_id"))
+            .distinct()
+            .selectExpr("walk_id", "walk_id AS node", "walk_id AS prev")
         )
-        coin = md5_long(
-            F.concat(
-                F.col("node").cast("string"),
-                F.lit(f"|{k}|"),
-                F.col("dst").cast("string"),
-                F.lit("|"),
-                F.col("i").cast("string"),
+        cur = seeds.localCheckpoint()
+        out = cur.select("walk_id", F.lit(0).alias("step"), "node")
+        for k in range(1, _N2V_STEPS + 1):
+            w = (
+                F.when(F.col("dst") == F.col("prev"), F.lit(_N2V_W_RET))
+                .when(F.col("td").isNotNull(), F.lit(_N2V_W_D1))
+                .otherwise(F.lit(_N2V_W_D2))
             )
-        )
-        nxt = (
-            cur.join(und, und["src"] == cur["node"])
-            .join(
-                t_adj,
-                (F.col("ts") == F.col("prev")) & (F.col("td") == F.col("dst")),
-                "left",
+            coin = md5_long(
+                F.concat(
+                    F.col("node").cast("string"),
+                    F.lit(f"|{k}|"),
+                    F.col("dst").cast("string"),
+                    F.lit("|"),
+                    F.col("i").cast("string"),
+                )
             )
-            .select(
-                "walk_id",
-                "node",
-                "dst",
-                F.explode(F.sequence(F.lit(0), w - 1)).alias("i"),
+            nxt = (
+                cur.join(und, und["src"] == cur["node"])
+                .join(
+                    t_adj,
+                    (F.col("ts") == F.col("prev")) & (F.col("td") == F.col("dst")),
+                    "left",
+                )
+                .select(
+                    "walk_id",
+                    "node",
+                    "dst",
+                    F.explode(F.sequence(F.lit(0), w - 1)).alias("i"),
+                )
+                .select("walk_id", "node", "dst", "i", coin.alias("h"))
+                .groupBy("walk_id", "node")
+                .agg(F.min(F.struct("h", "dst", "i")).alias("m"))
+                .select(
+                    "walk_id",
+                    F.col("m.dst").alias("node"),
+                    F.col("node").alias("prev"),
+                )
+                .localCheckpoint()
             )
-            .select("walk_id", "node", "dst", "i", coin.alias("h"))
-            .groupBy("walk_id", "node")
-            .agg(F.min(F.struct("h", "dst", "i")).alias("m"))
-            .select(
-                "walk_id",
-                F.col("m.dst").alias("node"),
-                F.col("node").alias("prev"),
+            out = out.unionByName(
+                nxt.select("walk_id", F.lit(k).alias("step"), "node")
             )
-            .localCheckpoint()
-        )
-        out = out.unionByName(nxt.select("walk_id", F.lit(k).alias("step"), "node"))
-        cur = nxt
-    und.unpersist()
+            cur = nxt
     return out
 
 

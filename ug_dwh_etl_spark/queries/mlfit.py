@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.queries.registry import register, table
+from ug_dwh_etl_spark.session import pinned
 
 # ---------------------------------------------------------------------------
 # multivariate OLS via normal equations (centered 2x2 Cramer solve)
@@ -1045,6 +1046,47 @@ privacy_randomized_response.__doc__ = privacy_randomized_response.__doc__.replac
 _BISECT_ROUNDS = 8
 
 
+def _bisect(orders: DataFrame, qs: tuple[int, ...], rounds: int) -> DataFrame:
+    """The 1-row state (``lo<q>``, ``hi<q>`` per percentile q, and ``n``)
+    after ``rounds`` bisection rounds over ``o_totalprice``, each bracket
+    halving from [min, max] on the integer test below*100 >= n*q."""
+    init = orders.agg(
+        F.min("o_totalprice").alias("mn"),
+        F.max("o_totalprice").alias("mx"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    state = init.select(
+        *[c for q in qs for c in
+          (F.col("mn").alias(f"lo{q}"), F.col("mx").alias(f"hi{q}"))],
+        "n",
+    ).localCheckpoint()
+    for _ in range(rounds):
+        # broadcast the checkpointed 1-row state itself; midpoints fold
+        # inline so each round is exactly one scan job + one state job
+        counts = orders.crossJoin(F.broadcast(state.drop("n"))).agg(
+            *[
+                F.sum(
+                    F.when(
+                        F.col("o_totalprice")
+                        <= (F.col(f"lo{q}") + F.col(f"hi{q}")) / 2,
+                        1,
+                    ).otherwise(0)
+                ).alias(f"below{q}")
+                for q in qs
+            ]
+        )
+        new_cols = []
+        for q in qs:
+            mid = (F.col(f"lo{q}") + F.col(f"hi{q}")) / 2
+            go_down = F.col(f"below{q}") * 100 >= F.col("n") * q
+            new_cols.append(F.when(go_down, F.col(f"lo{q}")).otherwise(mid).alias(f"lo{q}"))
+            new_cols.append(F.when(go_down, mid).otherwise(F.col(f"hi{q}")).alias(f"hi{q}"))
+        state = (
+            state.crossJoin(F.broadcast(counts)).select(*new_cols, "n").localCheckpoint()
+        )
+    return state
+
+
 def _bisect_sql() -> str:
     parts = [
         """r0 AS (
@@ -1089,37 +1131,13 @@ def agg_median_bisection(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is IEEE-exact, so both engines walk the identical
     bracket sequence. The production pattern when you need a
     guaranteed-precision quantile of a 100 TB column."""
-    orders = table(spark, sf_dir, "orders").select("o_totalprice")
-    state = orders.agg(
-        F.min("o_totalprice").alias("lo"),
-        F.max("o_totalprice").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint()
-    for _ in range(_BISECT_ROUNDS):
-        mid = (F.col("lo") + F.col("hi")) / 2
-        below = (
-            orders.crossJoin(F.broadcast(state.select((
-                (F.col("lo") + F.col("hi")) / 2).alias("mid"))))
-            .filter(F.col("o_totalprice") <= F.col("mid"))
-            .agg(F.count(F.lit(1)).alias("below"))
-        )
-        state = (
-            state.crossJoin(F.broadcast(below))
-            .select(
-                F.when(F.col("below") * 2 >= F.col("n"), F.col("lo"))
-                .otherwise(mid)
-                .alias("lo"),
-                F.when(F.col("below") * 2 >= F.col("n"), mid)
-                .otherwise(F.col("hi"))
-                .alias("hi"),
-                "n",
-            )
-            .localCheckpoint()
-        )
+    state = _bisect(
+        table(spark, sf_dir, "orders").select("o_totalprice"), (50,), _BISECT_ROUNDS
+    )
     return state.select(
         "n",
-        F.round((F.col("lo") + F.col("hi")) / 2, 4).alias("est_median"),
-        F.round(F.col("hi") - F.col("lo"), 4).alias("bracket_width"),
+        F.round((F.col("lo50") + F.col("hi50")) / 2, 4).alias("est_median"),
+        F.round(F.col("hi50") - F.col("lo50"), 4).alias("bracket_width"),
     )
 
 
@@ -1199,58 +1217,58 @@ def sim_facility_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputing them per round tripled the query. |U| x |C| rows is
     # the price; at corpus scale the candidate set stays bounded, so
     # the matrix grows linearly with the universe like the cover state.
-    scores = (
-        base.crossJoin(F.broadcast(cand))
-        .select(
-            "vec_id",
-            "cid",
-            F.greatest(F.round(cosine("e", "ce"), 6), F.lit(0.0)).alias("sim"),
-        )
-        .persist()
-    )
-    picks = None
-    out_rows = []
-    for k in range(1, _FL_K + 1):
-        if picks is None:
-            contrib = scores.select("cid", F.col("sim").alias("g"))
-        else:
-            cover = (
-                scores.join(F.broadcast(picks), "cid")
-                .groupBy("vec_id")
-                .agg(F.max("sim").alias("cover"))
-            )
-            contrib = scores.join(cover, "vec_id").select(
+    with pinned() as pin:
+        scores = pin(
+            base.crossJoin(F.broadcast(cand)).select(
+                "vec_id",
                 "cid",
-                F.greatest(F.col("sim") - F.col("cover"), F.lit(0.0)).alias("g"),
-            )
-        gains = (
-            contrib.groupBy("cid")
-            # round BEFORE the argmax: the gain is a corpus-sized sum
-            # whose engine fold order differs at the ulp — the pick must
-            # compare identically-rounded values or near-tied candidates
-            # argmax differently across engines (same contract as MMR)
-            .agg(F.round(F.sum("g"), 6).alias("gain"))
-        )
-        pick = (
-            gains.agg(
-                F.min(F.struct((-F.col("gain")).alias("ng"), F.col("cid"))).alias("m")
-            )
-            .select(F.col("m.cid").alias("cid"))
-            .localCheckpoint()
-        )
-        out_rows.append(
-            gains.join(F.broadcast(pick), "cid").select(
-                F.lit(k).alias("step"),
-                F.col("cid").alias("vec_id"),
-                F.round("gain", 4).alias("coverage_gain"),
+                F.greatest(F.round(cosine("e", "ce"), 6), F.lit(0.0)).alias("sim"),
             )
         )
-        picks = pick if picks is None else picks.unionByName(pick).localCheckpoint()
-    out = out_rows[0]
-    for r in out_rows[1:]:
-        out = out.unionByName(r)
-    out = out.localCheckpoint()
-    scores.unpersist()
+        picks = None
+        out_rows = []
+        for k in range(1, _FL_K + 1):
+            if picks is None:
+                contrib = scores.select("cid", F.col("sim").alias("g"))
+            else:
+                cover = (
+                    scores.join(F.broadcast(picks), "cid")
+                    .groupBy("vec_id")
+                    .agg(F.max("sim").alias("cover"))
+                )
+                contrib = scores.join(cover, "vec_id").select(
+                    "cid",
+                    F.greatest(F.col("sim") - F.col("cover"), F.lit(0.0)).alias("g"),
+                )
+            gains = (
+                contrib.groupBy("cid")
+                # round BEFORE the argmax: the gain is a corpus-sized sum
+                # whose engine fold order differs at the ulp — the pick must
+                # compare identically-rounded values or near-tied candidates
+                # argmax differently across engines (same contract as MMR)
+                .agg(F.round(F.sum("g"), 6).alias("gain"))
+            )
+            pick = (
+                gains.agg(
+                    F.min(
+                        F.struct((-F.col("gain")).alias("ng"), F.col("cid"))
+                    ).alias("m")
+                )
+                .select(F.col("m.cid").alias("cid"))
+                .localCheckpoint()
+            )
+            out_rows.append(
+                gains.join(F.broadcast(pick), "cid").select(
+                    F.lit(k).alias("step"),
+                    F.col("cid").alias("vec_id"),
+                    F.round("gain", 4).alias("coverage_gain"),
+                )
+            )
+            picks = pick if picks is None else picks.unionByName(pick).localCheckpoint()
+        out = out_rows[0]
+        for r in out_rows[1:]:
+            out = out.unionByName(r)
+        out = out.localCheckpoint()
     return out
 
 
@@ -1503,41 +1521,9 @@ def agg_quantiles_bisection_shared(spark: SparkSession, sf_dir: str) -> DataFram
     quantile, still mergeable counts — the shape that hands you an
     entire deterministic-precision quantile TABLE of a 100 TB column
     for {rounds} cheap scans (cache the column once)."""
-    orders = table(spark, sf_dir, "orders").select("o_totalprice")
-    init = orders.agg(
-        F.min("o_totalprice").alias("mn"),
-        F.max("o_totalprice").alias("mx"),
-        F.count(F.lit(1)).alias("n"),
+    state = _bisect(
+        table(spark, sf_dir, "orders").select("o_totalprice"), _MQ_QS, _MQ_ROUNDS
     )
-    state = init.select(
-        *[c for q in _MQ_QS for c in
-          (F.col("mn").alias(f"lo{q}"), F.col("mx").alias(f"hi{q}"))],
-        "n",
-    ).localCheckpoint()
-    for _ in range(_MQ_ROUNDS):
-        # broadcast the checkpointed 1-row state itself; midpoints fold
-        # inline so each round is exactly one scan job + one state job
-        counts = orders.crossJoin(F.broadcast(state.drop("n"))).agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.col("o_totalprice")
-                        <= (F.col(f"lo{q}") + F.col(f"hi{q}")) / 2,
-                        1,
-                    ).otherwise(0)
-                ).alias(f"below{q}")
-                for q in _MQ_QS
-            ]
-        )
-        new_cols = []
-        for q in _MQ_QS:
-            mid = (F.col(f"lo{q}") + F.col(f"hi{q}")) / 2
-            go_down = F.col(f"below{q}") * 100 >= F.col("n") * q
-            new_cols.append(F.when(go_down, F.col(f"lo{q}")).otherwise(mid).alias(f"lo{q}"))
-            new_cols.append(F.when(go_down, mid).otherwise(F.col(f"hi{q}")).alias(f"hi{q}"))
-        state = (
-            state.crossJoin(F.broadcast(counts)).select(*new_cols, "n").localCheckpoint()
-        )
     out = None
     for q in _MQ_QS:
         row = state.select(

@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 from ug_dwh_etl_spark.operators.bucketing import bucketed_join, write_bucketed
 from ug_dwh_etl_spark.operators.skew import salted_agg
 from ug_dwh_etl_spark.queries.registry import register, scratch_dir, table
+from ug_dwh_etl_spark.session import pinned
 
 
 @register(
@@ -608,34 +609,33 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates and a broadcast cross join, so the fact table is scanned
     once and everything downstream is group-sized at any scale."""
     cust = table(spark, sf_dir, "customer")
-    g = (
-        cust.groupBy("c_nationkey", "c_mktsegment")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist()  # 3 group-sized consumers: glob, gt, grid probe
-    )
-    glob = (
-        g.groupBy("c_mktsegment")
-        .agg(F.sum("n").alias("gn"))
-        .crossJoin(F.broadcast(g.agg(F.sum("n").alias("_t"))))
-        .select("c_mktsegment", (F.col("gn") * 1.0 / F.col("_t")).alias("p"))
-    )
-    gt = g.groupBy("c_nationkey").agg(F.sum("n").alias("tot"))
-    grid = (
-        gt.crossJoin(F.broadcast(glob))
-        .join(g, ["c_nationkey", "c_mktsegment"], "left")
-        .select(
-            "c_nationkey",
-            "tot",
-            "p",
-            F.coalesce(F.col("n"), F.lit(0)).alias("n"),
+    with pinned() as pin:
+        # 3 group-sized consumers: glob, gt, grid probe
+        g = pin(
+            cust.groupBy("c_nationkey", "c_mktsegment").agg(F.count(F.lit(1)).alias("n"))
         )
-    )
-    tvd = F.round(F.sum(F.abs(F.col("n") * 1.0 / F.col("tot") - F.col("p"))) / 2, 6)
-    out = grid.groupBy(F.col("c_nationkey").alias("nationkey")).agg(
-        tvd.alias("tvd"), (tvd > _T_CLOSE).alias("t_violation")
-    )
-    out = out.localCheckpoint(eager=True)
-    g.unpersist()
+        glob = (
+            g.groupBy("c_mktsegment")
+            .agg(F.sum("n").alias("gn"))
+            .crossJoin(F.broadcast(g.agg(F.sum("n").alias("_t"))))
+            .select("c_mktsegment", (F.col("gn") * 1.0 / F.col("_t")).alias("p"))
+        )
+        gt = g.groupBy("c_nationkey").agg(F.sum("n").alias("tot"))
+        grid = (
+            gt.crossJoin(F.broadcast(glob))
+            .join(g, ["c_nationkey", "c_mktsegment"], "left")
+            .select(
+                "c_nationkey",
+                "tot",
+                "p",
+                F.coalesce(F.col("n"), F.lit(0)).alias("n"),
+            )
+        )
+        tvd = F.round(F.sum(F.abs(F.col("n") * 1.0 / F.col("tot") - F.col("p"))) / 2, 6)
+        out = grid.groupBy(F.col("c_nationkey").alias("nationkey")).agg(
+            tvd.alias("tvd"), (tvd > _T_CLOSE).alias("t_violation")
+        )
+        out = out.localCheckpoint(eager=True)
     return out
 
 

@@ -11,9 +11,10 @@ from __future__ import annotations
 
 import contextlib
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 @contextlib.contextmanager
@@ -36,6 +37,26 @@ def conf_scope(spark: SparkSession, confs: dict[str, object]) -> Iterator[None]:
                 c.unset(k)
             else:
                 c.set(k, v)
+
+
+@contextlib.contextmanager
+def pinned() -> Iterator[Callable[..., DataFrame]]:
+    """Yield ``pin``: ``pin(df, level=None)`` persists ``df`` (at
+    ``level``, else the DataFrame default) and returns it. On exit,
+    normal or raised, the scope unpersists every frame it pinned,
+    newest first. The one place in the package that caches a frame —
+    a frame pinned here never outlives the block that needed it."""
+    frames: list[DataFrame] = []
+
+    def pin(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+        frames.append(df.persist() if level is None else df.persist(level))
+        return frames[-1]
+
+    try:
+        yield pin
+    finally:
+        for df in reversed(frames):
+            df.unpersist()
 
 
 def cpu_count() -> int:

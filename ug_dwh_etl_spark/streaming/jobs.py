@@ -30,7 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from ug_dwh_etl_spark.session import conf_scope
+from ug_dwh_etl_spark.session import conf_scope, pinned
 
 # Final StreamingQueryProgress of the most recent run_stream_to_memory
 # run (dict, or None before any run) — state-store row counts for
@@ -641,40 +641,39 @@ def stream_incremental_neardup(
         # hash the batch text exactly once: the SAME persisted band-key
         # and shingle relations feed the match below AND the index
         # appends after it (pre-round-10 each was computed twice)
-        batch_bands = lsh_band_keys(batch, "doc_id", "text").persist()
-        batch_sh = doc_shingle_hashes(spread(batch), "doc_id", "text").persist()
-        pairs = incremental_neardup(
-            batch,
-            spark.read.parquet(bands_path),
-            spark.read.parquet(sh_path),
-            "doc_id",
-            "text",
-            0.5,
-            batch_bands=batch_bands,
-            batch_sh=batch_sh,
-        )
-        got = pairs.limit(max_pairs_per_batch + 1).collect()
-        if len(got) > max_pairs_per_batch:
-            raise RuntimeError(
-                f"micro-batch emitted >{max_pairs_per_batch} near-dup pairs "
-                "— refusing the driver-side materialization; route pairs to "
-                "a table sink for batches this degenerate"
+        with pinned() as pin:
+            batch_bands = pin(lsh_band_keys(batch, "doc_id", "text"))
+            batch_sh = pin(doc_shingle_hashes(spread(batch), "doc_id", "text"))
+            pairs = incremental_neardup(
+                batch,
+                spark.read.parquet(bands_path),
+                spark.read.parquet(sh_path),
+                "doc_id",
+                "text",
+                0.5,
+                batch_bands=batch_bands,
+                batch_sh=batch_sh,
             )
-        collected.extend(got)
-        # expose the real micro-batch work to the plan audit (foreachBatch
-        # bypasses run_stream_to_memory's StreamingQuery.explain capture)
-        global LAST_BATCH_PLAN
-        try:
-            LAST_BATCH_PLAN = (
-                "== Physical Plan ==\n"
-                + pairs._jdf.queryExecution().executedPlan().toString()
-            )
-        except Exception:
-            pass
-        batch_bands.write.mode("append").parquet(bands_path)
-        batch_sh.write.mode("append").parquet(sh_path)
-        batch_bands.unpersist()
-        batch_sh.unpersist()
+            got = pairs.limit(max_pairs_per_batch + 1).collect()
+            if len(got) > max_pairs_per_batch:
+                raise RuntimeError(
+                    f"micro-batch emitted >{max_pairs_per_batch} near-dup pairs "
+                    "— refusing the driver-side materialization; route pairs to "
+                    "a table sink for batches this degenerate"
+                )
+            collected.extend(got)
+            # expose the real micro-batch work to the plan audit (foreachBatch
+            # bypasses run_stream_to_memory's StreamingQuery.explain capture)
+            global LAST_BATCH_PLAN
+            try:
+                LAST_BATCH_PLAN = (
+                    "== Physical Plan ==\n"
+                    + pairs._jdf.queryExecution().executedPlan().toString()
+                )
+            except Exception:
+                pass
+            batch_bands.write.mode("append").parquet(bands_path)
+            batch_sh.write.mode("append").parquet(sh_path)
 
     src = stream_table_source(spark, sf_dir, "documents", docs_schema)
     if max_files_per_trigger is not None:
@@ -1051,115 +1050,117 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     from ug_dwh_etl_spark.operators.textstats import alpha_ratio_col
 
-    # persist the quality relation: every micro-batch joins against it,
-    # and unpersisted it re-scans documents + re-runs the regex per
+    # pin the quality relation: every micro-batch joins against it,
+    # and unpinned it re-scans documents + re-runs the regex per
     # batch — measured as the bulk of the per-batch second (round-10)
-    qual = docs.select(
-        F.col("doc_id").alias("vec_id"), alpha_ratio_col("text").alias("q")
-    ).persist()
-
-    def build_elite():
-        w = Window.partitionBy("cluster").orderBy(F.desc("q"), F.asc("vec_id"))
-        return (
-            ivf_assign(emb)
-            .select("vec_id", "embedding", "cluster")
-            .join(qual, "vec_id")
-            .filter(F.col("vec_id") % 10 != 0)
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _SEMDEDUP_ELITE)
-            .select("vec_id", "embedding", "cluster", "q")
+    with pinned() as pin:
+        qual = pin(
+            docs.select(
+                F.col("doc_id").alias("vec_id"), alpha_ratio_col("text").alias("q")
+            )
         )
 
-    # the SAME per-process index as the batch twin (shared name)
-    elite = materialize_once(spark, sf_dir, "semantic_elite", build_elite)
-    y = F.broadcast(
-        elite.select(
-            F.col("vec_id").alias("yid"),
-            F.col("embedding").alias("ye"),
-            F.col("cluster"),
-            F.col("q").alias("yq"),
-        )
-    )
-
-    work = scratch_dir("sem_ingest", sf_dir)
-    src = os.path.join(work, "src")
-    out = os.path.join(work, "verdicts")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        emb.repartition(8).write.mode("overwrite").parquet(src)
-    # the completion sentinel must NOT be out/_SUCCESS: Spark's file
-    # committer creates that after the FIRST micro-batch append, so it
-    # cannot distinguish a finished run from a crashed one. A separate
-    # marker is written only after awaitTermination; a markerless (i.e.
-    # partial) verdict log is wiped before the retry re-runs the stream,
-    # since re-appending over partial output would duplicate batches.
-    done_marker = os.path.join(work, "_ALL_BATCHES_DONE")
-    if not os.path.exists(done_marker):
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
-
-        # loop-invariant Column expressions hoisted out of the handler:
-        # a Column binds by NAME, so the same objects apply to every
-        # micro-batch — rebuilding them per tick was ~0.4s of pure
-        # py4j/Catalyst construction per batch (round-10 profile)
-        better = (
-            (F.col("yq") > F.col("xq"))
-            | ((F.col("yq") == F.col("xq")) & (F.col("yid") < F.col("xid")))
-        ) & (F.round(cosine("xe", "ye"), 6) >= _SEMDEDUP_TAU)
-
-        def verdicts(batch, batch_id):
-            x = (
-                ivf_assign(batch.filter(F.col("vec_id") % 10 == 0))
+        def build_elite():
+            w = Window.partitionBy("cluster").orderBy(F.desc("q"), F.asc("vec_id"))
+            return (
+                ivf_assign(emb)
                 .select("vec_id", "embedding", "cluster")
                 .join(qual, "vec_id")
-                .select(
-                    F.col("vec_id").alias("xid"),
-                    F.col("embedding").alias("xe"),
-                    F.col("cluster"),
-                    F.col("q").alias("xq"),
-                )
+                .filter(F.col("vec_id") % 10 != 0)
+                .withColumn("rk", F.row_number().over(w))
+                .filter(F.col("rk") <= _SEMDEDUP_ELITE)
+                .select("vec_id", "embedding", "cluster", "q")
             )
-            # verdict in ONE broadcast join + partial aggregate (was
-            # join → distinct → second join): drop x iff ANY same-cell
-            # elite member beats it on (quality, id) within tau — a
-            # left join keeps x rows whose cell has no elite (kept)
-            result = (
-                x.join(y, "cluster", "left")
-                .groupBy(F.col("xid").alias("vec_id"), F.col("cluster"))
-                .agg(
-                    F.max(F.coalesce(better, F.lit(False))).alias("_dropped")
-                )
-                .select(
-                    "vec_id",
-                    F.col("cluster").cast("int").alias("cluster"),
-                    (~F.col("_dropped")).alias("kept"),
-                )
-            )
-            global LAST_BATCH_PLAN
-            try:
-                LAST_BATCH_PLAN = (
-                    "== Physical Plan ==\n"
-                    + result._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception:
-                pass
-            result.write.mode("append").parquet(out)
 
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        with _checkpoint_dir("ckpt_sem_ingest_") as ckpt:
-            (
-                stream.writeStream.foreachBatch(verdicts)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
+        # the SAME per-process index as the batch twin (shared name)
+        elite = materialize_once(spark, sf_dir, "semantic_elite", build_elite)
+        y = F.broadcast(
+            elite.select(
+                F.col("vec_id").alias("yid"),
+                F.col("embedding").alias("ye"),
+                F.col("cluster"),
+                F.col("q").alias("yq"),
             )
-        open(done_marker, "a").close()
-    qual.unpersist()
+        )
+
+        work = scratch_dir("sem_ingest", sf_dir)
+        src = os.path.join(work, "src")
+        out = os.path.join(work, "verdicts")
+        if not os.path.exists(os.path.join(src, "_SUCCESS")):
+            emb.repartition(8).write.mode("overwrite").parquet(src)
+        # the completion sentinel must NOT be out/_SUCCESS: Spark's file
+        # committer creates that after the FIRST micro-batch append, so it
+        # cannot distinguish a finished run from a crashed one. A separate
+        # marker is written only after awaitTermination; a markerless (i.e.
+        # partial) verdict log is wiped before the retry re-runs the stream,
+        # since re-appending over partial output would duplicate batches.
+        done_marker = os.path.join(work, "_ALL_BATCHES_DONE")
+        if not os.path.exists(done_marker):
+            import shutil
+
+            shutil.rmtree(out, ignore_errors=True)
+
+            # loop-invariant Column expressions hoisted out of the handler:
+            # a Column binds by NAME, so the same objects apply to every
+            # micro-batch — rebuilding them per tick was ~0.4s of pure
+            # py4j/Catalyst construction per batch (round-10 profile)
+            better = (
+                (F.col("yq") > F.col("xq"))
+                | ((F.col("yq") == F.col("xq")) & (F.col("yid") < F.col("xid")))
+            ) & (F.round(cosine("xe", "ye"), 6) >= _SEMDEDUP_TAU)
+
+            def verdicts(batch, batch_id):
+                x = (
+                    ivf_assign(batch.filter(F.col("vec_id") % 10 == 0))
+                    .select("vec_id", "embedding", "cluster")
+                    .join(qual, "vec_id")
+                    .select(
+                        F.col("vec_id").alias("xid"),
+                        F.col("embedding").alias("xe"),
+                        F.col("cluster"),
+                        F.col("q").alias("xq"),
+                    )
+                )
+                # verdict in ONE broadcast join + partial aggregate (was
+                # join → distinct → second join): drop x iff ANY same-cell
+                # elite member beats it on (quality, id) within tau — a
+                # left join keeps x rows whose cell has no elite (kept)
+                result = (
+                    x.join(y, "cluster", "left")
+                    .groupBy(F.col("xid").alias("vec_id"), F.col("cluster"))
+                    .agg(
+                        F.max(F.coalesce(better, F.lit(False))).alias("_dropped")
+                    )
+                    .select(
+                        "vec_id",
+                        F.col("cluster").cast("int").alias("cluster"),
+                        (~F.col("_dropped")).alias("kept"),
+                    )
+                )
+                global LAST_BATCH_PLAN
+                try:
+                    LAST_BATCH_PLAN = (
+                        "== Physical Plan ==\n"
+                        + result._jdf.queryExecution().executedPlan().toString()
+                    )
+                except Exception:
+                    pass
+                result.write.mode("append").parquet(out)
+
+            stream = (
+                spark.readStream.schema(emb.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src)
+            )
+            with _checkpoint_dir("ckpt_sem_ingest_") as ckpt:
+                (
+                    stream.writeStream.foreachBatch(verdicts)
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                    .awaitTermination()
+                )
+            open(done_marker, "a").close()
     return spark.read.parquet(out).select("vec_id", "cluster", "kept")
 
 
