@@ -11,6 +11,9 @@ third fails on package definitions no user path reaches, a fourth on
 imports in package ``__init__.py`` files (which would hide such
 definitions from the third), a fifth on scratch paths keyed by the
 process id, and a sixth keeps cached frames behind ``session.pinned``.
+A seventh fails on any block of code written twice: an 8-line window
+of at least 250 characters (blank lines, comments and docstrings
+dropped) that appears at two places in the package.
 """
 
 from __future__ import annotations
@@ -303,3 +306,103 @@ def test_no_pid_keyed_paths_in_the_package():
         if isinstance(node, ast.Attribute) and node.attr == "getpid"
     ]
     assert not found, "os.getpid() in the package:\n" + "\n".join(found)
+
+
+# --- repeated blocks --------------------------------------------------------
+#
+# A block pasted into a second place is a second definition of one idea:
+# a fix to one copy silently misses the other. Lines are compared
+# stripped, with blank lines, comment lines and docstrings dropped, so
+# re-indenting or re-commenting a copy does not hide it.
+
+_WINDOW_LINES = 8
+_WINDOW_CHARS = 250
+
+
+def _code_lines(path: pathlib.Path) -> list[tuple[int, str]]:
+    """(line number, stripped text) of each line of ``path`` that is not
+    blank, a comment or part of a docstring."""
+    src = path.read_text()
+    doc: set[int] = set()
+    for node in ast.walk(ast.parse(src, filename=str(path))):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ) and node.body:
+            first = node.body[0]
+            if (
+                isinstance(first, ast.Expr)
+                and isinstance(first.value, ast.Constant)
+                and isinstance(first.value.value, str)
+            ):
+                doc.update(range(first.lineno, first.end_lineno + 1))
+    return [
+        (i, line.strip())
+        for i, line in enumerate(src.splitlines(), 1)
+        if line.strip() and not line.strip().startswith("#") and i not in doc
+    ]
+
+
+def _repeated_blocks() -> list[str]:
+    """One ``path:first-last`` line per copy of each repeated block,
+    copies of one block on one line; overlapping repeated windows merge
+    into one block."""
+    lines = {
+        py.relative_to(PKG).as_posix(): _code_lines(py)
+        for py in sorted(PKG.rglob("*.py"))
+    }
+    where: dict[tuple[str, ...], list[tuple[str, int]]] = {}
+    for rel, code in lines.items():
+        for i in range(len(code) - _WINDOW_LINES + 1):
+            window = tuple(text for _, text in code[i : i + _WINDOW_LINES])
+            if sum(map(len, window)) < _WINDOW_CHARS:
+                continue
+            seen = where.setdefault(window, [])
+            # a window overlapping an earlier copy in the same file is
+            # one run of repetitive lines, not a second copy
+            if not any(r == rel and i - j < _WINDOW_LINES for r, j in seen):
+                seen.append((rel, i))
+    # union each repeated window with its copies and with the next
+    # window in the same file, so a long copied block is one group
+    parent: dict[tuple[str, int], tuple[str, int]] = {}
+
+    def find(x: tuple[str, int]) -> tuple[str, int]:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    copies = [occ for occ in where.values() if len(occ) > 1]
+    starts = {o for occ in copies for o in occ}
+    for occ in copies:
+        for o in occ[1:]:
+            parent[find(o)] = find(occ[0])
+    for rel, i in starts:
+        if (rel, i + 1) in starts:
+            parent[find((rel, i + 1))] = find((rel, i))
+    groups: dict[tuple[str, int], list[tuple[str, int]]] = {}
+    for o in sorted(starts):
+        groups.setdefault(find(o), []).append(o)
+    found = []
+    for members in groups.values():
+        spans: list[str] = []
+        for rel, i in members:
+            if (rel, i - 1) in members:
+                continue
+            j = i
+            while (rel, j + 1) in members:
+                j += 1
+            code = lines[rel]
+            spans.append(f"{rel}:{code[i][0]}-{code[j + _WINDOW_LINES - 1][0]}")
+        found.append(" = ".join(spans))
+    return sorted(found)
+
+
+def test_no_repeated_code_blocks():
+    """Text scan: no 8-line window of package code (at least 250
+    characters, blank lines, comments and docstrings dropped) appears
+    twice. Share the block instead: a helper for a plan fragment, a
+    constant or generator for an oracle text, the batch twin's constant
+    for a stream twin's oracle."""
+    found = _repeated_blocks()
+    assert not found, (
+        f"{len(found)} repeated blocks:\n" + "\n".join(found)
+    )

@@ -112,3 +112,48 @@ def test_prune_history_drops_only_expired_partitions(spark, tmp_path):
     } == {"2026-02-01"}
     # idempotent: second run drops nothing
     assert prune_history(path, "crawl_date", keep=lambda d: d >= "2026-01-15") == []
+
+
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def test_read_events_reads_a_nanosecond_timestamp_file(spark, tmp_path):
+    """A ``TIMESTAMP(NANOS)`` events file (the layout of early fixture
+    rounds) reads through the nanosAsLong escape hatch, with ``ts``
+    truncated to micros; a fresh session keeps the shared one's
+    settings clean."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ug_dwh_etl_spark.queries.registry import read_events
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_100_000_000_999]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+            }
+        ),
+        str(tmp_path / "events.parquet"),
+    )
+    fresh = spark.newSession()
+    got = read_events(fresh, str(tmp_path)).orderBy("event_id")
+    micros = [r[0] for r in got.select(F.unix_micros("ts")).collect()]
+    assert micros == [v // 1000 for v in ns]
+    assert fresh.conf.get(_NANOS) == "true"
+
+
+def test_read_events_missing_directory_leaves_the_session_untouched(spark, tmp_path):
+    """Only the nanos parquet error turns the escape hatch on: any other
+    failure raises with the session's settings as they were."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from ug_dwh_etl_spark.queries.registry import read_events
+
+    fresh = spark.newSession()
+    before = fresh.conf.get(_NANOS)
+    with pytest.raises(AnalysisException):
+        read_events(fresh, str(tmp_path / "missing"))
+    assert fresh.conf.get(_NANOS) == before != "true"

@@ -5,6 +5,7 @@ semantic bounds asserted here)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 SF = "/root/testdata/sf0.001"
 
@@ -39,29 +40,39 @@ def test_lsh_tuning_rows_are_consistent(spark):
     assert probs == sorted(probs, reverse=True)
 
 
-def test_lsh_tuning_single_document_matches_oracle(spark, tmp_path):
-    """One document has no candidate pairs: the counts are 0, not NULL,
-    exactly as the DuckDB oracle's COUNT(*) reports them."""
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_lsh_tuning_curve",
+        "dedup_ngram_jaccard",
+        "dedup_containment_pairs",
+        "dedup_minhash_accuracy",
+        "dedup_bbit_minhash",
+    ],
+)
+def test_lsh_tuning_single_document_matches_oracle(spark, tmp_path, name):
+    """One document has no candidate pairs: each dedup plan agrees with
+    its DuckDB oracle on that input (for the tuning curve: counts of 0,
+    not NULL, exactly as the oracle's COUNT(*) reports them)."""
     import duckdb
     import pyarrow.parquet as pq
 
+    from tools.check_oracle import normalize
     from ug_dwh_etl_spark.queries.registry import QUERIES
 
     docs = str(tmp_path / "documents.parquet")
     pq.write_table(pq.read_table(f"{SF}/documents.parquet").slice(0, 1), docs)
-    q = QUERIES["dedup_lsh_tuning_curve"]
-    rows = q.fn(spark, str(tmp_path)).collect()
-    assert rows and all(r.n_candidates == 0 and r.true_positives == 0 for r in rows)
+    q = QUERIES[name]
+    got = q.fn(spark, str(tmp_path)).toPandas()
+    if name == "dedup_lsh_tuning_curve":
+        assert len(got) and (got.n_candidates == 0).all() and (got.true_positives == 0).all()
 
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{docs}'")
-    want = con.execute(q.oracle).fetchall()
+    want = con.execute(q.oracle).fetchdf()
     con.close()
 
-    def canon(rs):  # DuckDB returns DECIMAL where Spark returns double
-        return sorted(tuple(None if v is None else float(v) for v in r) for r in rs)
-
-    assert canon(rows) == canon(want)
+    assert normalize(got).equals(normalize(want))
 
 
 def test_langid_confusion_shares_sum_to_one(spark):

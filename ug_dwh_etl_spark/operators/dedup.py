@@ -292,6 +292,18 @@ def ngram_jaccard_pairs(
     crosses the cap the result is bit-identical to the uncapped run;
     hot-shingle cost goes from df² to 0.
     """
+    inter, sizes = _shingle_overlap(df, id_col, text_col, max_shingle_df)
+    return _jaccard_at_least(inter, sizes, id_col, threshold)
+
+
+def _shingle_overlap(
+    df: DataFrame, id_col: str, text_col: str, max_shingle_df: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """``(inter, sizes)``: every document pair's shared-shingle count
+    ``(id_a, id_b, inter)`` with ``id_a < id_b``, from the shingle-hash
+    self-join, and each document's shingle count ``(id_col, sz)``;
+    ``max_shingle_df`` drops the shingles in more documents than that
+    first."""
     # NOT persisted: both self-join sides shuffle on `sh`, so Spark's
     # ReuseExchange already computes the shingle relation once (measured:
     # persisting is ~40% slower — it pays materialization and blocks
@@ -316,6 +328,15 @@ def ngram_jaccard_pairs(
         .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("inter"))
     )
+    return inter, sizes
+
+
+def _jaccard_at_least(
+    inter: DataFrame, sizes: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` for the pairs of ``inter`` whose Jaccard
+    over the set ``sizes``, rounded to 6 places, is at least
+    ``threshold``."""
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     jacc = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
@@ -349,24 +370,7 @@ def containment_pairs(
     more than that many documents are dropped from the sets BEFORE the
     self-join (measured on the 16x probe: 44x growth uncapped — the
     hot-bucket Σdf² term — vs the capped twin's near-linear growth)."""
-    sh = doc_shingle_hashes(spread(df), id_col, text_col)
-    if max_shingle_df is not None:
-        keep = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") <= max_shingle_df)
-            .select("sh")
-        )
-        sh = sh.join(keep, "sh", "left_semi")
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
+    inter, sizes = _shingle_overlap(df, id_col, text_col, max_shingle_df)
     sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
     cont = F.col("inter") / F.least(F.col("sz_a"), F.col("sz_b"))
@@ -513,16 +517,7 @@ def verify_pairs_jaccard(
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
-    sa = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    jacc = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-    return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(jacc, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _jaccard_at_least(inter, sizes, id_col, threshold)
 
 
 def near_dup_labels(

@@ -332,23 +332,53 @@ def knn_join(embeddings: DataFrame, query_mod: int, k: int = 3) -> DataFrame:
     corpus-side scan is one pass regardless of |Q|; when |Q| outgrows
     the broadcast limit, swap the broadcast for SRP-bucket co-grouping
     (``ann_topk``'s bucketing) with the same output contract."""
+    return _knn_ranked(embeddings, "embedding", query_mod, k).select(
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round("cos_raw", 6).alias("cosine"),
+    )
+
+
+def _knn_ranked(vectors: DataFrame, vec_col: str, query_mod: int, k: int) -> DataFrame:
+    """``(q_id, vec_id, cos_raw, rn)``: the ``k`` other vectors of
+    ``vectors`` most cosine-similar to each query vector (``vec_id %
+    query_mod == 0``) by ``vec_col``, ties broken by the lower vec_id."""
     from pyspark.sql import Window
 
-    q = embeddings.filter(F.col("vec_id") % query_mod == 0).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
+    q = vectors.filter(F.col("vec_id") % query_mod == 0).select(
+        F.col("vec_id").alias("q_id"), F.col(vec_col).alias("qe")
     )
-    scored = (
-        embeddings.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", cosine("embedding", "qe").alias("cos_raw"))
-    )
+    scored = vectors.join(
+        F.broadcast(q), F.col("vec_id") != F.col("q_id")
+    ).select("q_id", "vec_id", cosine(vec_col, "qe").alias("cos_raw"))
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def _knn_recall(
+    embeddings: DataFrame, approx: DataFrame, approx_col: str, query_mod: int, k: int
+) -> DataFrame:
+    """``(q_id, n_match, recall_at_<k>)``: how many of each query's exact
+    top-k cosine neighbors the same search over ``approx.<approx_col>``
+    finds too."""
+    exact = _knn_ranked(embeddings, "embedding", query_mod, k).select(
+        "q_id", F.col("vec_id").alias("neighbor_id")
+    )
+    am = _knn_ranked(approx, approx_col, query_mod, k).select(
+        F.col("q_id").alias("mq"), F.col("vec_id").alias("mn_id")
+    )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        exact.join(
+            am,
+            (F.col("q_id") == F.col("mq")) & (F.col("neighbor_id") == F.col("mn_id")),
+            "left",
+        )
+        .groupBy("q_id")
+        .agg(F.count("mn_id").alias("n_match"))
         .select(
             "q_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos_raw", 6).alias("cosine"),
+            "n_match",
+            F.round(F.col("n_match") / float(k), 6).alias(f"recall_at_{k}"),
         )
     )
 
@@ -392,35 +422,7 @@ def quantized_knn_recall(
     100 TB index build, sibling of the MinHash accuracy audit. Runs the
     identical kNN-join plan twice (original vs dequantized vectors) and
     counts per-query overlap of the neighbor sets."""
-    from pyspark.sql import Window
-
-    def topk(vectors: DataFrame, vec_col: str) -> DataFrame:
-        q = vectors.filter(F.col("vec_id") % query_mod == 0).select(
-            F.col("vec_id").alias("q_id"), F.col(vec_col).alias("qe")
-        )
-        scored = vectors.join(
-            F.broadcast(q), F.col("vec_id") != F.col("q_id")
-        ).select("q_id", "vec_id", cosine(vec_col, "qe").alias("cos_raw"))
-        w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("q_id", F.col("vec_id").alias("neighbor_id"))
-        )
-
-    exact = topk(embeddings, "embedding")
-    quant = topk(dequantized_embeddings(embeddings), "dqe")
-    qm = quant.select(F.col("q_id").alias("mq"), F.col("neighbor_id").alias("mn_id"))
-    return (
-        exact.join(
-            qm,
-            (F.col("q_id") == F.col("mq")) & (F.col("neighbor_id") == F.col("mn_id")),
-            "left",
-        )
-        .groupBy("q_id")
-        .agg(F.count("mn_id").alias("n_match"))
-        .select("q_id", "n_match", F.round(F.col("n_match") / float(k), 6).alias(f"recall_at_{k}"))
-    )
+    return _knn_recall(embeddings, dequantized_embeddings(embeddings), "dqe", query_mod, k)
 
 
 # --- product quantization (PQ) -------------------------------------------------
@@ -711,42 +713,10 @@ def matryoshka_knn_recall(
     propose-then-measure discipline as quantized_knn_recall (int8) and
     dedup_minhash_accuracy. Identical kNN-join plan on both
     representations; deterministic (score, vec_id) tiebreaks."""
-    from pyspark.sql import Window
-
-    def topk(vectors: DataFrame, vec_col: str) -> DataFrame:
-        q = vectors.filter(F.col("vec_id") % query_mod == 0).select(
-            F.col("vec_id").alias("q_id"), F.col(vec_col).alias("qe")
-        )
-        scored = vectors.join(
-            F.broadcast(q), F.col("vec_id") != F.col("q_id")
-        ).select("q_id", "vec_id", cosine(vec_col, "qe").alias("cos_raw"))
-        w = Window.partitionBy("q_id").orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("q_id", F.col("vec_id").alias("neighbor_id"))
-        )
-
-    exact = topk(embeddings, "embedding")
     trunc = embeddings.select(
         "vec_id", F.slice("embedding", 1, prefix_dim).alias("te")
     )
-    approx = topk(trunc, "te")
-    am = approx.select(F.col("q_id").alias("mq"), F.col("neighbor_id").alias("mn_id"))
-    return (
-        exact.join(
-            am,
-            (F.col("q_id") == F.col("mq")) & (F.col("neighbor_id") == F.col("mn_id")),
-            "left",
-        )
-        .groupBy("q_id")
-        .agg(F.count("mn_id").alias("n_match"))
-        .select(
-            "q_id",
-            "n_match",
-            F.round(F.col("n_match") / float(k), 6).alias(f"recall_at_{k}"),
-        )
-    )
+    return _knn_recall(embeddings, trunc, "te", query_mod, k)
 
 
 # --- 1-bit (sign) binary quantization + Hamming search --------------------------

@@ -1047,6 +1047,14 @@ class SnapshotTable:
             return True
         return isinstance(a, str) and isinstance(b, str)
 
+    def _snapshot_id(self, snapshot_id: int | None) -> int:
+        """``snapshot_id``, or the latest snapshot's id when it is None;
+        raises on a table with no snapshot."""
+        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
+        if sid is None:
+            raise ValueError(f"empty snapshot table at {self.root}")
+        return sid
+
     def read_as_of(
         self,
         spark: SparkSession,
@@ -1063,9 +1071,7 @@ class SnapshotTable:
             snapshot_id = self.branch_head(branch)
             if snapshot_id is None:
                 raise ValueError(f"no staged commits on branch {branch!r}")
-        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError(f"empty snapshot table at {self.root}")
+        sid = self._snapshot_id(snapshot_id)
         m = self.manifest(sid)
         return self._read_with_deletes(
             spark,
@@ -1267,31 +1273,37 @@ class SnapshotTable:
         step is pure manifest arithmetic — no data I/O — which is what
         makes a needle-in-100 TB scan cheap when the table is
         range-clustered on ``col`` (write with repartitionByRange)."""
-        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError(f"empty snapshot table at {self.root}")
+        sid = self._snapshot_id(snapshot_id)
         m = self.manifest(sid)
         files = m.get("files", [])
         if not files:
             return self.read_as_of(spark, sid), -1, -1
-        # data dirs from commits made WITHOUT stats_cols never appear in
-        # the files list — read them wholesale, never silently drop them
-        # (conservative = keep anything the stats can't prune)
-        covered = {self._data_dir_of(m, f["file"]) for f in files}
-        unstated = [d for d in m["data_dirs"] if d not in covered]
         keep = []
         for f in files:
             mn, mx = f["stats"].get(col, (None, None))
             if mn is None or mx is None or (mx >= lo and mn <= hi):
                 keep.append(f["file"])
+        return self._read_kept(
+            spark, sid, m, [(self._data_dir_of(m, p), p) for p in keep]
+        )
+
+    def _read_kept(
+        self, spark: SparkSession, sid: int, m: dict, kept: list[tuple[str, str]]
+    ) -> tuple[DataFrame, int, int]:
+        """The pruned scans' read: the kept files ``(data dir, rel path)``
+        of snapshot ``sid`` (manifest ``m``), plus every data dir no
+        file stats cover, as ``(df, files_read, files_total)``."""
+        # data dirs from commits made WITHOUT stats_cols never appear in
+        # the files list — read them wholesale, never silently drop them
+        # (conservative = keep anything the stats can't prune)
+        covered = {self._data_dir_of(m, f["file"]) for f in m["files"]}
+        unstated = [d for d in m["data_dirs"] if d not in covered]
         # group kept paths by their data dir so merge-on-read deletes
         # apply with the correct per-dir seq scoping (same read helper
         # as read_as_of; a no-deletes manifest reads paths directly)
         paths_by_dir: dict[str, list[str]] = {}
-        for p in keep:
-            paths_by_dir.setdefault(self._data_dir_of(m, p), []).append(
-                os.path.join(self.root, p)
-            )
+        for d, p in kept:
+            paths_by_dir.setdefault(d, []).append(os.path.join(self.root, p))
         for d in unstated:
             paths_by_dir.setdefault(d, []).append(os.path.join(self.root, d))
         # metrics count ACTUAL parquet files everywhere — a stats-less
@@ -1308,12 +1320,12 @@ class SnapshotTable:
             )
             for d in unstated
         )
-        total = len(files) + n_unstated
+        total = len(m["files"]) + n_unstated
         if not paths_by_dir:  # every file pruned: empty frame, correct schema
             return self.read_as_of(spark, sid).limit(0), 0, total
         return (
             self._read_with_deletes(spark, m, paths_by_dir),
-            len(keep) + n_unstated,
+            len(kept) + n_unstated,
             total,
         )
 
@@ -1338,9 +1350,7 @@ class SnapshotTable:
         production variant); conversion cost is manifest-sized and
         paid once. Returns the DataFrame; callers filter/join it like
         any relation."""
-        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError(f"empty snapshot table at {self.root}")
+        sid = self._snapshot_id(snapshot_id)
         path = os.path.join(self.root, "_manifests_pq", f"v{sid}")
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             m = self.manifest(sid)
@@ -1384,9 +1394,7 @@ class SnapshotTable:
         needle-sized set a range-clustered layout makes small."""
         import pyspark.sql.functions as F
 
-        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError(f"empty snapshot table at {self.root}")
+        sid = self._snapshot_id(snapshot_id)
         m = self.manifest(sid)
         if not m.get("files"):
             return self.read_as_of(spark, sid), -1, -1
@@ -1403,32 +1411,7 @@ class SnapshotTable:
             .join(with_col.select("file"), "file", "left_anti")
         )
         kept = overlap.unionByName(no_bounds).distinct().collect()
-        covered = {self._data_dir_of(m, f["file"]) for f in m["files"]}
-        unstated = [d for d in m["data_dirs"] if d not in covered]
-        paths_by_dir: dict[str, list[str]] = {}
-        for r in kept:
-            paths_by_dir.setdefault(r["dir"], []).append(
-                os.path.join(self.root, r["file"])
-            )
-        for d in unstated:
-            paths_by_dir.setdefault(d, []).append(os.path.join(self.root, d))
-        n_unstated = sum(
-            len(
-                glob.glob(
-                    os.path.join(self.root, d, "**", "*.parquet"),
-                    recursive=True,
-                )
-            )
-            for d in unstated
-        )
-        total = len(m["files"]) + n_unstated
-        if not paths_by_dir:
-            return self.read_as_of(spark, sid).limit(0), 0, total
-        return (
-            self._read_with_deletes(spark, m, paths_by_dir),
-            len(kept) + n_unstated,
-            total,
-        )
+        return self._read_kept(spark, sid, m, [(r["dir"], r["file"]) for r in kept])
 
     def scan_pruned_multi(
         self,
@@ -1448,9 +1431,7 @@ class SnapshotTable:
         but may still be excluded by another; pruning needs only one
         provably-disjoint axis. Returns (df, files_read, files_total);
         callers still apply the residual row filter."""
-        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError(f"empty snapshot table at {self.root}")
+        sid = self._snapshot_id(snapshot_id)
         m = self.manifest(sid)
         files = m.get("files", [])
         if not files:
@@ -1471,31 +1452,8 @@ class SnapshotTable:
             return False
 
         keep = [f["file"] for f in files if not pruned(f)]
-        covered = {self._data_dir_of(m, f["file"]) for f in files}
-        unstated = [d for d in m["data_dirs"] if d not in covered]
-        paths_by_dir: dict[str, list[str]] = {}
-        for p in keep:
-            paths_by_dir.setdefault(self._data_dir_of(m, p), []).append(
-                os.path.join(self.root, p)
-            )
-        for d in unstated:
-            paths_by_dir.setdefault(d, []).append(os.path.join(self.root, d))
-        n_unstated = sum(
-            len(
-                glob.glob(
-                    os.path.join(self.root, d, "**", "*.parquet"),
-                    recursive=True,
-                )
-            )
-            for d in unstated
-        )
-        total = len(files) + n_unstated
-        if not paths_by_dir:
-            return self.read_as_of(spark, sid).limit(0), 0, total
-        return (
-            self._read_with_deletes(spark, m, paths_by_dir),
-            len(keep) + n_unstated,
-            total,
+        return self._read_kept(
+            spark, sid, m, [(self._data_dir_of(m, p), p) for p in keep]
         )
 
     def scan_point(
@@ -1521,9 +1479,7 @@ class SnapshotTable:
         import base64
         import pyspark.sql.functions as F
 
-        sid = self.latest_snapshot_id() if snapshot_id is None else snapshot_id
-        if sid is None:
-            raise ValueError(f"empty snapshot table at {self.root}")
+        sid = self._snapshot_id(snapshot_id)
         m = self.manifest(sid)
         files = m.get("files", [])
         if not files:

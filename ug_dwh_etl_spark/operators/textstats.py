@@ -184,8 +184,17 @@ def langid(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Stopword-hit argmax over {en,de,fr,es}; 'und' when no hits.
     Deterministic tie-break: en > de > fr > es."""
     out = df.withColumn("t", H.tokens(text_col))
-    hits = {lang: _stop_filter_spark("t", words) for lang, words in STOPWORDS.items()}
-    pred = (
+    return out.select(F.col(id_col), stopword_lang("t").alias("predicted_lang"))
+
+
+def stopword_lang(tokens_col: str) -> Column:
+    """The language of the token array ``tokens_col`` by stopword-hit
+    argmax over {en,de,fr,es}; 'und' when no hits, ties broken
+    en > de > fr > es."""
+    hits = {
+        lang: _stop_filter_spark(tokens_col, words) for lang, words in STOPWORDS.items()
+    }
+    return (
         F.when(
             (hits["en"] >= hits["de"]) & (hits["en"] >= hits["fr"])
             & (hits["en"] >= hits["es"]) & (hits["en"] > 0),
@@ -196,7 +205,6 @@ def langid(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .when(hits["es"] > 0, F.lit("es"))
         .otherwise(F.lit("und"))
     )
-    return out.select(F.col(id_col), pred.alias("predicted_lang"))
 
 
 def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:

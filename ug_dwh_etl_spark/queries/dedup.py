@@ -7,7 +7,7 @@ two sides cannot drift.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.operators import hashing as H
@@ -43,6 +43,39 @@ _SHINGLE_HASH_CTES = (
     exh AS (SELECT DISTINCT doc_id, {H.sql_md5_long('shingle', 15)} AS sh
             FROM (SELECT doc_id, unnest(sgl) AS shingle FROM sh))"""
 )
+
+
+def _shingle_overlap_ctes(sets: str) -> str:
+    """The shingle-set overlap every exact-Jaccard oracle joins: each
+    document's set size ``sizes`` and each pair's shared-shingle count
+    ``inter`` over the (doc_id, sh) relation ``sets``."""
+    return f"""sizes AS (SELECT doc_id, COUNT(*) AS sz FROM {sets} GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
+      FROM {sets} a JOIN {sets} b ON a.sh = b.sh AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+    )"""
+
+
+# The shingle sets without the shingles found in more than 5 documents.
+_CAPPED_SHINGLES_CTE = """capped AS (SELECT doc_id, sh FROM exh
+               QUALIFY COUNT(*) OVER (PARTITION BY sh) <= 5)"""
+
+# The near-dup threshold of every Jaccard-pair oracle here.
+_JACCARD_MIN = 0.5
+_JACCARD_PAIRS_SELECT = f"""SELECT id_a, id_b,
+           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
+    FROM inter
+      JOIN sizes sa ON sa.doc_id = id_a
+      JOIN sizes sb ON sb.doc_id = id_b
+    WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= {_JACCARD_MIN}"""
+_CONTAINMENT_PAIRS_SELECT = """SELECT id_a, id_b,
+           ROUND(inter / LEAST(sa.sz, sb.sz), 6) AS containment,
+           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
+    FROM inter
+      JOIN sizes sa ON sa.doc_id = id_a
+      JOIN sizes sb ON sb.doc_id = id_b
+    WHERE ROUND(inter / LEAST(sa.sz, sb.sz), 6) >= 0.8"""
 
 
 # --- exact dedup --------------------------------------------------------------
@@ -86,9 +119,9 @@ def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_pairs_ctes() -> str:
     """Shared CTE chain 'tok → sh → ex → hashed → sig → bands → pairs'
     (no WITH keyword) — the minhash-LSH candidate-pair dataflow every
-    LSH-derived oracle builds on. One definition so the four consumers
-    (_lsh_sql, _label_prop_ctes, _verified_pairs_sql,
-    _minhash_accuracy_sql) cannot drift."""
+    LSH-derived oracle builds on. One definition so its consumers
+    (_lsh_sql, _label_prop_ctes, _candidate_exact_ctes,
+    _candidate_overlap_ctes) cannot drift."""
     h = H.sql_md5_long("shingle", 15)
     mins = ", ".join(
         f"MIN({H.sql_minhash_perm('h', i)}) AS mh{i}" for i in range(N_MINHASH)
@@ -153,18 +186,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_ngram_jaccard",
     f"""
     WITH {_SHINGLE_HASH_CTES},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM exh a JOIN exh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b,
-           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-    FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-    WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= 0.5
+    {_shingle_overlap_ctes("exh")}
+    {_JACCARD_PAIRS_SELECT}
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,20 +199,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_ngram_jaccard_capped",
     f"""
     WITH {_SHINGLE_HASH_CTES},
-    capped AS (SELECT doc_id, sh FROM exh
-               QUALIFY COUNT(*) OVER (PARTITION BY sh) <= 5),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM capped GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM capped a JOIN capped b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b,
-           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-    FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-    WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= 0.5
+    {_CAPPED_SHINGLES_CTE},
+    {_shingle_overlap_ctes("capped")}
+    {_JACCARD_PAIRS_SELECT}
     """,
 )
 def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,19 +393,9 @@ def dedup_corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "split_leakage_check",
     f"""
     WITH {_SHINGLE_HASH_CTES},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM exh a JOIN exh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    {_shingle_overlap_ctes("exh")},
     pairs AS (
-      SELECT id_a, id_b,
-             ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-      FROM inter
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-      WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= 0.5
+      {_JACCARD_PAIRS_SELECT}
     )
     SELECT CASE WHEN substr(md5(CAST(id_a AS VARCHAR)), 1, 2) >= '1a'
                 THEN id_a ELSE id_b END AS train_id,
@@ -439,12 +441,11 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_accuracy_sql() -> str:
-    match_sum = " + ".join(
-        f"(CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END)" for i in range(N_MINHASH)
-    )
-    return f"""
-    WITH {_lsh_pairs_ctes()},
+def _candidate_exact_ctes() -> str:
+    """The LSH candidate pairs with each pair's shared-shingle count
+    ``inter`` and each document's set size ``sizes``: what the two
+    signature-estimate audits compare their estimates with."""
+    return f"""{_lsh_pairs_ctes()},
     exh AS (SELECT DISTINCT doc_id, h AS sh FROM hashed),
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh GROUP BY doc_id),
     inter AS (
@@ -453,7 +454,15 @@ def _minhash_accuracy_sql() -> str:
         JOIN exh a ON a.doc_id = p.id_a
         JOIN exh b ON b.doc_id = p.id_b AND b.sh = a.sh
       GROUP BY p.id_a, p.id_b
-    ),
+    )"""
+
+
+def _minhash_accuracy_sql() -> str:
+    match_sum = " + ".join(
+        f"(CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END)" for i in range(N_MINHASH)
+    )
+    return f"""
+    WITH {_candidate_exact_ctes()},
     est AS (
       SELECT p.id_a, p.id_b, ({match_sum}) / 16.0 AS est
       FROM pairs p
@@ -473,18 +482,13 @@ def _minhash_accuracy_sql() -> str:
     """
 
 
-@register("dedup_minhash_accuracy", _minhash_accuracy_sql())
-def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-accuracy audit: for every LSH candidate pair, the
-    MinHash-ESTIMATED Jaccard (fraction of agreeing signature
-    components) next to the EXACT shingle-set Jaccard, with the
-    absolute error — the measurement that justifies (or rejects) a
-    16-permutation signature before a 100 TB dedup run. The estimate
-    costs only the signature self-join on the candidate pairs; the
-    exact value reuses the hashed-shingle relation, so the audit runs on
-    candidates (tiny), never all pairs."""
-    import pyspark.sql.functions as F
-
+def _signed_candidates(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(hashed, pairs, signed)``: the documents' shingle hashes, their
+    LSH candidate pairs, and those pairs joined to both sides' MinHash
+    components ``a0..`` and ``b0..`` — what the two signature-estimate
+    audits score."""
     from ug_dwh_etl_spark.operators.dedup import (
         lsh_band_keys_from_sig,
         lsh_pairs_from_bands,
@@ -515,15 +519,15 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id_b"),
         *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_MINHASH)],
     )
-    match_sum = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(N_MINHASH)
-    )
-    est = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", (match_sum / 16.0).alias("est"))
-    )
+    return hashed, pairs, pairs.join(sa, "id_a").join(sb, "id_b")
+
+
+def _with_exact_jaccard(
+    est: DataFrame, hashed: DataFrame, pairs: DataFrame
+) -> tuple[DataFrame, Column]:
+    """``est`` (keyed by ``id_a``, ``id_b``) joined to each candidate
+    pair's shared-shingle count and set sizes, and the exact Jaccard
+    over them (0.0 for a pair that shares no shingle hash)."""
     shh = hashed.select("doc_id", F.col("h").alias("sh")).distinct()
     sizes = shh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = shh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sha"))
@@ -541,17 +545,37 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
         F.lit(0.0),
     )
-    return (
+    joined = (
         est.join(inter, ["id_a", "id_b"], "left")
         .join(sz_a, "id_a")
         .join(sz_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round("est", 6).alias("est_jaccard"),
-            F.round(exact, 6).alias("exact_jaccard"),
-            F.round(F.abs(F.col("est") - exact), 6).alias("abs_err"),
-        )
+    )
+    return joined, exact
+
+
+@register("dedup_minhash_accuracy", _minhash_accuracy_sql())
+def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch-accuracy audit: for every LSH candidate pair, the
+    MinHash-ESTIMATED Jaccard (fraction of agreeing signature
+    components) next to the EXACT shingle-set Jaccard, with the
+    absolute error — the measurement that justifies (or rejects) a
+    16-permutation signature before a 100 TB dedup run. The estimate
+    costs only the signature self-join on the candidate pairs; the
+    exact value reuses the hashed-shingle relation, so the audit runs on
+    candidates (tiny), never all pairs."""
+    hashed, pairs, signed = _signed_candidates(spark, sf_dir)
+    match_sum = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(N_MINHASH)
+    )
+    est = signed.select("id_a", "id_b", (match_sum / 16.0).alias("est"))
+    joined, exact = _with_exact_jaccard(est, hashed, pairs)
+    return joined.select(
+        "id_a",
+        "id_b",
+        F.round("est", 6).alias("est_jaccard"),
+        F.round(exact, 6).alias("exact_jaccard"),
+        F.round(F.abs(F.col("est") - exact), 6).alias("abs_err"),
     )
 
 
@@ -617,27 +641,30 @@ def lsh_corpus_index(spark: SparkSession, sf_dir: str):
         lambda: doc_shingle_hashes(spread(existing), "doc_id", "text"),
     )
     return bands, shingles
-def _incremental_neardup_sql(threshold: float = 0.5) -> str:
-    # The oracle is the FULL-corpus verified-pairs computation restricted
-    # to pairs touching a batch id — exactly the new pairs a daily batch
-    # introduces, which is what the incremental index-lookup must find.
-    return f"""
-    WITH {_lsh_pairs_ctes()},
+def _candidate_overlap_ctes() -> str:
+    """The LSH candidate pairs (``_lsh_pairs_ctes``), each document's
+    distinct shingle-hash count ``sizes`` and an open ``inter`` CTE
+    joining every candidate pair's shared hashes, which each caller
+    filters, groups and closes."""
+    return f"""{_lsh_pairs_ctes()},
     exh2 AS (SELECT DISTINCT doc_id, h FROM hashed),
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh2 GROUP BY doc_id),
     inter AS (
       SELECT p.id_a, p.id_b, COUNT(*) AS inter
       FROM pairs p
         JOIN exh2 a ON a.doc_id = p.id_a
-        JOIN exh2 b ON b.doc_id = p.id_b AND b.h = a.h
+        JOIN exh2 b ON b.doc_id = p.id_b AND b.h = a.h"""
+
+
+def _incremental_neardup_sql() -> str:
+    # The oracle is the FULL-corpus verified-pairs computation restricted
+    # to pairs touching a batch id — exactly the new pairs a daily batch
+    # introduces, which is what the incremental index-lookup must find.
+    return f"""
+    WITH {_candidate_overlap_ctes()}
       WHERE p.id_a % 10 = 0 OR p.id_b % 10 = 0
       GROUP BY p.id_a, p.id_b)
-    SELECT id_a, id_b,
-           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-    FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-    WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= {threshold}
+    {_JACCARD_PAIRS_SELECT}
     """
 
 
@@ -670,23 +697,11 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- candidate-restricted Jaccard verification ---------------------------------
-def _verified_pairs_sql(threshold: float = 0.5) -> str:
+def _verified_pairs_sql() -> str:
     return f"""
-    WITH {_lsh_pairs_ctes()},
-    exh2 AS (SELECT DISTINCT doc_id, h FROM hashed),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh2 GROUP BY doc_id),
-    inter AS (
-      SELECT p.id_a, p.id_b, COUNT(*) AS inter
-      FROM pairs p
-        JOIN exh2 a ON a.doc_id = p.id_a
-        JOIN exh2 b ON b.doc_id = p.id_b AND b.h = a.h
+    WITH {_candidate_overlap_ctes()}
       GROUP BY p.id_a, p.id_b)
-    SELECT id_a, id_b,
-           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-    FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-    WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= {threshold}
+    {_JACCARD_PAIRS_SELECT}
     """
 
 
@@ -707,14 +722,7 @@ def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- dedup-threshold decision curve ----------------------------------------------
 def _threshold_curve_sql() -> str:
     return f"""
-    WITH {_lsh_pairs_ctes()},
-    exh2 AS (SELECT DISTINCT doc_id, h FROM hashed),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh2 GROUP BY doc_id),
-    inter AS (
-      SELECT p.id_a, p.id_b, COUNT(*) AS inter
-      FROM pairs p
-        JOIN exh2 a ON a.doc_id = p.id_a
-        JOIN exh2 b ON b.doc_id = p.id_b AND b.h = a.h
+    WITH {_candidate_overlap_ctes()}
       GROUP BY p.id_a, p.id_b),
     vp AS (
       SELECT id_a, id_b,
@@ -1091,19 +1099,8 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_containment_pairs",
     f"""
     WITH {_SHINGLE_HASH_CTES},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM exh a JOIN exh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b,
-           ROUND(inter / LEAST(sa.sz, sb.sz), 6) AS containment,
-           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-    FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-    WHERE ROUND(inter / LEAST(sa.sz, sb.sz), 6) >= 0.8
+    {_shingle_overlap_ctes("exh")}
+    {_CONTAINMENT_PAIRS_SELECT}
     """,
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1374,21 +1371,9 @@ def dedup_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_containment_capped",
     f"""
     WITH {_SHINGLE_HASH_CTES},
-    capped AS (SELECT doc_id, sh FROM exh
-               QUALIFY COUNT(*) OVER (PARTITION BY sh) <= 5),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM capped GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-      FROM capped a JOIN capped b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT id_a, id_b,
-           ROUND(inter / LEAST(sa.sz, sb.sz), 6) AS containment,
-           ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
-    FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-    WHERE ROUND(inter / LEAST(sa.sz, sb.sz), 6) >= 0.8
+    {_CAPPED_SHINGLES_CTE},
+    {_shingle_overlap_ctes("capped")}
+    {_CONTAINMENT_PAIRS_SELECT}
     """,
 )
 def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1406,23 +1391,16 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- quality-aware survivorship over near-dup clusters ---------------------------
-def _quality_survivors_sql(threshold: float = 0.5) -> str:
+def _quality_survivors_sql() -> str:
     return f"""
-    WITH RECURSIVE {_lsh_pairs_ctes()},
-    exh2 AS (SELECT DISTINCT doc_id, h FROM hashed),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh2 GROUP BY doc_id),
-    inter AS (
-      SELECT p.id_a, p.id_b, COUNT(*) AS inter
-      FROM pairs p
-        JOIN exh2 a ON a.doc_id = p.id_a
-        JOIN exh2 b ON b.doc_id = p.id_b AND b.h = a.h
+    WITH RECURSIVE {_candidate_overlap_ctes()}
       GROUP BY p.id_a, p.id_b),
     vp AS (
       SELECT id_a, id_b
       FROM inter
         JOIN sizes sa ON sa.doc_id = id_a
         JOIN sizes sb ON sb.doc_id = id_b
-      WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= {threshold}),
+      WHERE ROUND(inter / (sa.sz + sb.sz - inter), 6) >= {_JACCARD_MIN}),
     und AS (SELECT id_a AS a, id_b AS b FROM vp
             UNION SELECT id_b, id_a FROM vp),
     reach(node, r) AS (
@@ -1498,16 +1476,7 @@ def _bbit_minhash_sql() -> str:
         for i in range(N_MINHASH)
     )
     return f"""
-    WITH {_lsh_pairs_ctes()},
-    exh AS (SELECT DISTINCT doc_id, h AS sh FROM hashed),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh GROUP BY doc_id),
-    inter AS (
-      SELECT p.id_a, p.id_b, COUNT(*) AS inter
-      FROM pairs p
-        JOIN exh a ON a.doc_id = p.id_a
-        JOIN exh b ON b.doc_id = p.id_b AND b.sh = a.sh
-      GROUP BY p.id_a, p.id_b
-    ),
+    WITH {_candidate_exact_ctes()},
     est AS (
       SELECT p.id_a, p.id_b,
              ({full_sum}) / {float(N_MINHASH)} AS est_full,
@@ -1543,38 +1512,7 @@ def dedup_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape as dedup_minhash_accuracy (never all pairs). Parity bit via
     `& 1` (two's-complement low bit — identical for negative bigints on
     both engines)."""
-    import pyspark.sql.functions as F
-
-    from ug_dwh_etl_spark.operators.dedup import (
-        lsh_band_keys_from_sig,
-        lsh_pairs_from_bands,
-        minhash_signatures_from_hashed,
-        shingle_hashes_raw,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    # r12 subtree sharing (guide 2.4/5): the r11 plan tokenized the
-    # corpus THREE times (lsh pairs, signatures, shingle sets) and ran
-    # the LSH bucket self-join TWICE (`pairs` feeds both the estimator
-    # join and the exact-jaccard join). Checkpoint the shared stages -
-    # one text pass, one signature aggregation, one bucket self-join.
-    hashed = shingle_hashes_raw(docs, "doc_id", "text").localCheckpoint(
-        eager=False
-    )
-    sig = minhash_signatures_from_hashed(hashed, "doc_id").localCheckpoint(
-        eager=False
-    )
-    pairs = lsh_pairs_from_bands(
-        lsh_band_keys_from_sig(sig, "doc_id"), "doc_id"
-    ).localCheckpoint(eager=False)
-    sa = sig.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(N_MINHASH)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(N_MINHASH)],
-    )
+    hashed, pairs, signed = _signed_candidates(spark, sf_dir)
     full_sum = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         for i in range(N_MINHASH)
@@ -1586,46 +1524,21 @@ def dedup_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(0)
         for i in range(N_MINHASH)
     )
-    est = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (full_sum / float(N_MINHASH)).alias("est_full"),
-            F.greatest(
-                2.0 * (bit_sum / float(N_MINHASH)) - 1.0, F.lit(0.0)
-            ).alias("est_1bit"),
-        )
+    est = signed.select(
+        "id_a",
+        "id_b",
+        (full_sum / float(N_MINHASH)).alias("est_full"),
+        F.greatest(2.0 * (bit_sum / float(N_MINHASH)) - 1.0, F.lit(0.0)).alias(
+            "est_1bit"
+        ),
     )
-    shh = hashed.select("doc_id", F.col("h").alias("sh")).distinct()
-    sizes = shh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = shh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sha"))
-    b = shh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("shb"))
-    inter = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .filter(F.col("sha") == F.col("shb"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sz_a = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    exact = F.coalesce(
-        F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")),
-        F.lit(0.0),
-    )
-    return (
-        est.join(inter, ["id_a", "id_b"], "left")
-        .join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round("est_full", 6).alias("est_full"),
-            F.round("est_1bit", 6).alias("est_1bit"),
-            F.round(exact, 6).alias("exact_jaccard"),
-        )
+    joined, exact = _with_exact_jaccard(est, hashed, pairs)
+    return joined.select(
+        "id_a",
+        "id_b",
+        F.round("est_full", 6).alias("est_full"),
+        F.round("est_1bit", 6).alias("est_1bit"),
+        F.round(exact, 6).alias("exact_jaccard"),
     )
 
 

@@ -69,9 +69,7 @@ def events_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- sessionization: 30-minute inactivity gap --------------------------------
-@register(
-    "events_sessionize",
-    """
+SESSIONIZE_ORACLE = """
     WITH flagged AS (
       SELECT user_id, ts,
              CASE WHEN LAG(ts) OVER w IS NULL
@@ -82,8 +80,10 @@ def events_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
     FROM flagged GROUP BY user_id
-    """,
-)
+    """
+
+
+@register("events_sessionize", SESSIONIZE_ORACLE)
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -140,9 +140,7 @@ def events_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- sliding window (2h width, 1h slide): each event lands in 2 windows ------
-@register(
-    "events_sliding_2h",
-    """
+SLIDING_2H_ORACLE = """
     WITH expanded AS (
       SELECT date_trunc('hour', ts) AS ws, event_type, value FROM events
       UNION ALL
@@ -152,8 +150,10 @@ def events_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
            COUNT(*) AS n,
            CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
     FROM expanded GROUP BY window_start, event_type
-    """,
-)
+    """
+
+
+@register("events_sliding_2h", SLIDING_2H_ORACLE)
 def events_sliding_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F.window(width=2h, slide=1h); the oracle unrolls the 2-window
     membership as a UNION ALL of the two shifted hourly buckets."""
@@ -615,9 +615,20 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- seasonal anomaly detection: hour-of-day baseline ---------------------------
+# Each hour's count against its hour-of-day baseline, z-score > 2
+# flagged: the answer of the batch and the stream anomaly oracles.
+HOURLY_ZSCORE_SELECT = """SELECT strftime(h.hr, '%Y-%m-%d %H:%M:%S') AS hour_start,
+           h.n,
+           ROUND(b.mu, 6) AS expected,
+           ROUND(CASE WHEN b.sigma > 0 THEN (h.n - b.mu) / b.sigma END, 6) AS zscore,
+           COALESCE(b.sigma > 0 AND ABS((h.n - b.mu) / b.sigma) > 2.0, FALSE)
+             AS is_anomaly
+    FROM hourly h JOIN baseline b USING (hod)"""
+
+
 @register(
     "events_hourly_anomaly",
-    """
+    f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS hr, hour(ts) AS hod,
              CAST(COUNT(*) AS BIGINT) AS n
@@ -627,13 +638,7 @@ def events_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
              COALESCE(STDDEV_SAMP(n), 0.0) AS sigma,
              COUNT(*) AS n_days
       FROM hourly GROUP BY hod)
-    SELECT strftime(h.hr, '%Y-%m-%d %H:%M:%S') AS hour_start,
-           h.n,
-           ROUND(b.mu, 6) AS expected,
-           ROUND(CASE WHEN b.sigma > 0 THEN (h.n - b.mu) / b.sigma END, 6) AS zscore,
-           COALESCE(b.sigma > 0 AND ABS((h.n - b.mu) / b.sigma) > 2.0, FALSE)
-             AS is_anomaly
-    FROM hourly h JOIN baseline b USING (hod)
+    {HOURLY_ZSCORE_SELECT}
     """,
 )
 def events_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -833,9 +838,7 @@ def asof_event_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- event-type transition matrix ---------------------------------------------
-@register(
-    "events_transition_matrix",
-    """
+TRANSITION_MATRIX_ORACLE = """
     WITH seq AS (
       SELECT user_id, event_type,
              LEAD(event_type) OVER (PARTITION BY user_id
@@ -847,8 +850,10 @@ def asof_event_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS prob
     FROM seq WHERE next_type IS NOT NULL
     GROUP BY event_type, next_type
-    """,
-)
+    """
+
+
+@register("events_transition_matrix", TRANSITION_MATRIX_ORACLE)
 def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over per-user event
     sequences: P(next_type | type), the behavioral fingerprint behind
@@ -1130,9 +1135,7 @@ def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_attribution_last_touch",
-    """
+ATTRIBUTION_LAST_TOUCH_ORACLE = """
     WITH seq AS (
       SELECT user_id, ts, event_id, event_type, value,
              last_value(CASE WHEN event_type <> 'purchase'
@@ -1152,8 +1155,10 @@ def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
     FROM seq WHERE event_type = 'purchase'
     GROUP BY channel
-    """,
-)
+    """
+
+
+@register("events_attribution_last_touch", ATTRIBUTION_LAST_TOUCH_ORACLE)
 def events_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch attribution: each purchase is credited to the user's
     most recent preceding NON-purchase event within a 7-day lookback

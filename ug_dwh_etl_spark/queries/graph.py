@@ -1294,12 +1294,46 @@ def _anf_run(spark: SparkSession, sf_dir: str, H) -> DataFrame:
 
 
 # --- Louvain local-move sweep (Blondel et al. 2008, synchronous variant) --------
-@register(
-    "graph_louvain_move",
-    """
-    WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-    e AS (SELECT a.p AS a, b.p AS b, COUNT(*) AS w
-          FROM op a JOIN op b ON a.o = b.o AND a.p < b.p GROUP BY a.p, b.p),
+def _lv_best(e: DataFrame, deg: DataFrame, mm: DataFrame) -> DataFrame:
+    """(node, comm): each edge endpoint's best-gain community after one
+    synchronous Louvain local move over the weighted canonical edges
+    ``e``, by the integer score 2m*w_uv - k_u*k_v, ties to the smaller
+    id; a node with no positive gain keeps its own id."""
+    from pyspark.sql.window import Window
+
+    cand = e.select(F.col("a").alias("u"), F.col("b").alias("v"), "w").unionByName(
+        e.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
+    )
+    ku = deg.select(F.col("node").alias("u"), F.col("k").alias("ku"))
+    kv = deg.select(F.col("node").alias("v"), F.col("k").alias("kv"))
+    scored = (
+        cand.join(ku, "u")
+        .join(kv, "v")
+        .crossJoin(F.broadcast(mm))
+        .select(
+            "u",
+            "v",
+            (
+                F.lit(2) * F.col("m") * F.col("w") - F.col("ku") * F.col("kv")
+            ).alias("score"),
+        )
+    )
+    w_rank = Window.partitionBy("u").orderBy(F.desc("score"), "v")
+    return (
+        scored.withColumn("rn", F.row_number().over(w_rank))
+        .filter(F.col("rn") == 1)
+        .select(
+            F.col("u").alias("node"),
+            F.when(F.col("score") > 0, F.col("v")).otherwise(F.col("u")).alias(
+                "comm"
+            ),
+        )
+    )
+
+
+# One synchronous local-move sweep over the weighted edges ``e``: the
+# best-gain neighbor community of every node (``assign``).
+_LOUVAIN_SWEEP_CTES = """
     mm AS (SELECT SUM(w) AS m FROM e),
     deg AS (SELECT node, SUM(w) AS k FROM (
               SELECT a AS node, w FROM e UNION ALL SELECT b, w FROM e)
@@ -1316,7 +1350,17 @@ def _anf_run(spark: SparkSession, sf_dir: str, H) -> DataFrame:
       FROM scored),
     assign AS (
       SELECT u AS node, CASE WHEN score > 0 THEN v ELSE u END AS comm
-      FROM ranked WHERE rn = 1),
+      FROM ranked WHERE rn = 1)
+"""
+
+
+@register(
+    "graph_louvain_move",
+    f"""
+    WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
+    e AS (SELECT a.p AS a, b.p AS b, COUNT(*) AS w
+          FROM op a JOIN op b ON a.o = b.o AND a.p < b.p GROUP BY a.p, b.p),
+    {_LOUVAIN_SWEEP_CTES.rstrip()},
     a_in AS (
       SELECT COALESCE(SUM(e.w), 0) AS a_in
       FROM e JOIN assign ca ON ca.node = e.a
@@ -1359,8 +1403,6 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic beyond the order-width-bounded projection every
     co-purchase query shares. At 100 TB-graph scale the integer score
     wants decimal(38) headroom (2m*w and k*k both fit int64 here)."""
-    from pyspark.sql.window import Window
-
     e = _copurchase_w(spark, sf_dir)
     mm = e.agg(F.sum("w").alias("m"))
     deg = (
@@ -1369,35 +1411,7 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("node")
         .agg(F.sum("w").alias("k"))
     )
-    cand = e.select(F.col("a").alias("u"), F.col("b").alias("v"), "w").unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
-    )
-    ku = deg.select(F.col("node").alias("u"), F.col("k").alias("ku"))
-    kv = deg.select(F.col("node").alias("v"), F.col("k").alias("kv"))
-    scored = (
-        cand.join(ku, "u")
-        .join(kv, "v")
-        .crossJoin(F.broadcast(mm))
-        .select(
-            "u",
-            "v",
-            (F.lit(2) * F.col("m") * F.col("w") - F.col("ku") * F.col("kv")).alias(
-                "score"
-            ),
-        )
-    )
-    w_rank = Window.partitionBy("u").orderBy(F.desc("score"), "v")
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("u").alias("node"),
-            F.when(F.col("score") > 0, F.col("v")).otherwise(F.col("u")).alias(
-                "comm"
-            ),
-        )
-        .localCheckpoint(eager=False)
-    )
+    assign = _lv_best(e, deg, mm).localCheckpoint(eager=False)
     ca = assign.select(F.col("node").alias("a"), F.col("comm").alias("comm_a"))
     cb = assign.select(F.col("node").alias("b"), F.col("comm").alias("comm_b"))
     a_in = (
@@ -1443,25 +1457,6 @@ def graph_louvain_move(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- full multi-level Louvain (2 levels: sweep -> coarsen -> sweep) -------------
-_LOUVAIN_SWEEP_CTES = """
-    mm AS (SELECT SUM(w) AS m FROM e),
-    deg AS (SELECT node, SUM(w) AS k FROM (
-              SELECT a AS node, w FROM e UNION ALL SELECT b, w FROM e)
-            GROUP BY node),
-    cand AS (SELECT a AS u, b AS v, w FROM e UNION ALL SELECT b, a, w FROM e),
-    scored AS (
-      SELECT c.u, c.v, 2 * mm.m * c.w - ku.k * kv.k AS score
-      FROM cand c
-      JOIN deg ku ON ku.node = c.u
-      JOIN deg kv ON kv.node = c.v, mm),
-    ranked AS (
-      SELECT u, v, score,
-             ROW_NUMBER() OVER (PARTITION BY u ORDER BY score DESC, v) AS rn
-      FROM scored),
-    assign AS (
-      SELECT u AS node, CASE WHEN score > 0 THEN v ELSE u END AS comm
-      FROM ranked WHERE rn = 1)
-"""
 
 _LOUVAIN_SQL = f"""
     WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -1540,39 +1535,9 @@ def _lv_sweep(e: DataFrame, deg: DataFrame, mm: DataFrame) -> DataFrame:
     excluded by the caller): (node, comm). Integer argmax score
     2m*w_uv - k_u*k_v (see graph_louvain_move); nodes with no non-self
     candidate keep their own community via the LEFT join against deg."""
-    from pyspark.sql.window import Window
-
-    cand = e.select(F.col("a").alias("u"), F.col("b").alias("v"), "w").unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
-    )
-    ku = deg.select(F.col("node").alias("u"), F.col("k").alias("ku"))
-    kv = deg.select(F.col("node").alias("v"), F.col("k").alias("kv"))
-    scored = (
-        cand.join(ku, "u")
-        .join(kv, "v")
-        .crossJoin(F.broadcast(mm))
-        .select(
-            "u",
-            "v",
-            (
-                F.lit(2) * F.col("m") * F.col("w") - F.col("ku") * F.col("kv")
-            ).alias("score"),
-        )
-    )
-    w_rank = Window.partitionBy("u").orderBy(F.desc("score"), "v")
-    best = (
-        scored.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("u").alias("node"),
-            F.when(F.col("score") > 0, F.col("v")).otherwise(F.col("u")).alias(
-                "comm"
-            ),
-        )
-    )
     return (
         deg.select("node")
-        .join(best, "node", "left")
+        .join(_lv_best(e, deg, mm), "node", "left")
         .select("node", F.coalesce("comm", "node").alias("comm"))
     )
 

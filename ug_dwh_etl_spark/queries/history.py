@@ -118,15 +118,20 @@ def history_metric_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "history_gap_fill",
-    """
-    WITH bounds AS (
+# Every day between the first and last order date, and the priority
+# keys to fill it for: the grid both gap-filling oracles left-join to.
+_DAY_SPINE_SQL = """bounds AS (
       SELECT MIN(CAST(o_orderdate AS DATE)) AS d0, MAX(CAST(o_orderdate AS DATE)) AS d1
       FROM orders),
     spine AS (
       SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS day FROM bounds),
-    keys AS (SELECT DISTINCT o_orderpriority FROM orders),
+    keys AS (SELECT DISTINCT o_orderpriority FROM orders)"""
+
+
+@register(
+    "history_gap_fill",
+    f"""
+    WITH {_DAY_SPINE_SQL},
     obs AS (
       SELECT o_orderpriority, CAST(o_orderdate AS DATE) AS day,
              MAX(o_totalprice) AS day_max
@@ -178,10 +183,9 @@ def history_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "history_scd2",
-    f"""
-    WITH {_HIST_DUCK},
+# The two crawls as one history, cut to the rows where an address's
+# metric changed: the versions both SCD2 oracles read.
+_SCD_CHANGES_SQL = f"""{_HIST_DUCK},
     hist AS (SELECT * FROM c1 UNION ALL SELECT * FROM c2),
     flagged AS (
       SELECT address, metric, crawl_date AS valid_from,
@@ -192,7 +196,13 @@ def history_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes AS (
       SELECT address, metric, valid_from FROM flagged
       WHERE prev_metric IS NULL OR metric <> prev_metric
-    )
+    )"""
+
+
+@register(
+    "history_scd2",
+    f"""
+    WITH {_SCD_CHANGES_SQL}
     SELECT address, metric, valid_from,
            COALESCE(LEAD(valid_from) OVER w2, '9999-12-31') AS valid_to,
            LEAD(valid_from) OVER w2 IS NULL AS is_current
@@ -240,13 +250,8 @@ def history_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "history_interpolate",
-    """
-    WITH bounds AS (
-      SELECT MIN(CAST(o_orderdate AS DATE)) AS d0, MAX(CAST(o_orderdate AS DATE)) AS d1
-      FROM orders),
-    spine AS (
-      SELECT UNNEST(generate_series(d0, d1, INTERVAL 1 DAY))::DATE AS day FROM bounds),
-    keys AS (SELECT DISTINCT o_orderpriority FROM orders),
+    f"""
+    WITH {_DAY_SPINE_SQL},
     obs AS (
       -- decimal-sum parity: SUM(DECIMAL) is exact and order-independent
       -- on both engines; one double division then yields bit-identical
@@ -352,18 +357,7 @@ _ASOF_DATE = "2026-01-02"
 @register(
     "history_asof_read",
     f"""
-    WITH {_HIST_DUCK},
-    hist AS (SELECT * FROM c1 UNION ALL SELECT * FROM c2),
-    flagged AS (
-      SELECT address, metric, crawl_date AS valid_from,
-             LAG(metric) OVER w AS prev_metric
-      FROM hist
-      WINDOW w AS (PARTITION BY address ORDER BY crawl_date)
-    ),
-    changes AS (
-      SELECT address, metric, valid_from FROM flagged
-      WHERE prev_metric IS NULL OR metric <> prev_metric
-    ),
+    WITH {_SCD_CHANGES_SQL},
     scd AS (
       SELECT address, metric, valid_from,
              COALESCE(LEAD(valid_from) OVER w2, '9999-12-31') AS valid_to
@@ -699,10 +693,9 @@ def history_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HW_A, _HW_B, _HW_G = 0.3, 0.1, 0.2
 
 
-@register(
-    "history_holt_winters",
-    f"""
-    WITH RECURSIVE monthly AS (
+# The monthly series, the classical level/trend/season seed and the
+# level/trend/season step that both Holt-Winters oracles recurse on.
+_HW_SEED_SQL = """monthly AS (
       SELECT date_trunc('month', o_orderdate) AS m,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x,
              SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS xd
@@ -717,18 +710,70 @@ _HW_A, _HW_B, _HW_G = 0.3, 0.1, 0.2
              (SELECT l FROM l0) AS l,
              (SELECT b FROM b0) AS b,
              (SELECT LIST(x - (SELECT l FROM l0) ORDER BY rn)
-              FROM series WHERE rn <= 12) AS s),
-    rec AS (
-      SELECT rn, l, b, s FROM seed
-      UNION ALL
-      SELECT sr.rn,
+              FROM series WHERE rn <= 12) AS s"""
+_HW_STEP_SQL = f"""sr.rn,
              {_HW_A} * (sr.x - r.s[1]) + {1 - _HW_A} * (r.l + r.b),
              {_HW_B} * (({_HW_A} * (sr.x - r.s[1]) + {1 - _HW_A} * (r.l + r.b)) - r.l)
                + {1 - _HW_B} * r.b,
              list_concat(r.s[2:12],
                [{_HW_G} * (sr.x - ({_HW_A} * (sr.x - r.s[1])
                                    + {1 - _HW_A} * (r.l + r.b)))
-                + {1 - _HW_G} * r.s[1]])
+                + {1 - _HW_G} * r.s[1]]"""
+
+
+def _hw_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The monthly revenue series ``xs`` with the Holt-Winters seed state
+    ``l0``/``b0``/``s0`` that both Holt-Winters queries fold from."""
+    orders = table(spark, sf_dir, "orders")
+    monthly = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("m")).agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("xd")
+    )
+    ser = monthly.groupBy().agg(
+        F.expr("array_sort(collect_list(struct(m, xd)))").alias("sx")
+    ).select(
+        F.expr("transform(sx, s -> CAST(s.xd AS DOUBLE))").alias("xs"),
+        F.expr("transform(sx, s -> s.xd)").alias("xsd"),
+    )
+    # decimal partial sums -> deterministic init level/trend
+    return ser.select(
+        "xs",
+        F.expr(
+            "CAST(aggregate(slice(xsd, 1, 12), CAST(0 AS DECIMAL(28,2)),"
+            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0"
+        ).alias("l0"),
+        F.expr(
+            "(CAST(aggregate(slice(xsd, 13, 12), CAST(0 AS DECIMAL(28,2)),"
+            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0"
+            " - CAST(aggregate(slice(xsd, 1, 12), CAST(0 AS DECIMAL(28,2)),"
+            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0) / 12.0"
+        ).alias("b0"),
+    ).select(
+        "xs",
+        "l0",
+        "b0",
+        F.expr("transform(slice(xs, 1, 12), x -> x - l0)").alias("s0"),
+    )
+
+
+# One Holt-Winters step of the fold state ``acc`` on month ``x``: the
+# level, trend and season fields of the next ``named_struct``.
+_HW_LNEW = f"{_HW_A} * (x - element_at(acc.s, 1)) + {1 - _HW_A} * (acc.l + acc.b)"
+_HW_FOLD_STEP = (
+    f"   'l', {_HW_LNEW},"
+    f"   'b', {_HW_B} * (({_HW_LNEW}) - acc.l) + {1 - _HW_B} * acc.b,"
+    f"   's', concat(slice(acc.s, 2, 11),"
+    f"        array({_HW_G} * (x - ({_HW_LNEW})) + {1 - _HW_G} * element_at(acc.s, 1)))"
+)
+
+
+@register(
+    "history_holt_winters",
+    f"""
+    WITH RECURSIVE {_HW_SEED_SQL}),
+    rec AS (
+      SELECT rn, l, b, s FROM seed
+      UNION ALL
+      SELECT {_HW_STEP_SQL})
       FROM rec r JOIN series sr ON sr.rn = r.rn + 1),
     fin AS (SELECT MAX(rn) AS mx FROM rec)
     SELECT CAST(f.mx AS BIGINT) AS n_months,
@@ -754,45 +799,12 @@ def history_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold is a codegen'd `aggregate` lambda carrying a constant-size
     state struct — the oracle runs the same arithmetic as a genuine
     recursive CTE, so every IEEE intermediate matches."""
-    orders = table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("m")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("xd")
-    )
-    ser = monthly.groupBy().agg(
-        F.expr("array_sort(collect_list(struct(m, xd)))").alias("sx")
-    ).select(
-        F.expr("transform(sx, s -> CAST(s.xd AS DOUBLE))").alias("xs"),
-        F.expr("transform(sx, s -> s.xd)").alias("xsd"),
-    )
-    # decimal partial sums -> deterministic init level/trend
-    prep = ser.select(
-        "xs",
-        F.expr(
-            "CAST(aggregate(slice(xsd, 1, 12), CAST(0 AS DECIMAL(28,2)),"
-            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0"
-        ).alias("l0"),
-        F.expr(
-            "(CAST(aggregate(slice(xsd, 13, 12), CAST(0 AS DECIMAL(28,2)),"
-            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0"
-            " - CAST(aggregate(slice(xsd, 1, 12), CAST(0 AS DECIMAL(28,2)),"
-            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0) / 12.0"
-        ).alias("b0"),
-    ).select(
-        "xs",
-        "l0",
-        "b0",
-        F.expr("transform(slice(xs, 1, 12), x -> x - l0)").alias("s0"),
-    )
-    a, b, g = _HW_A, _HW_B, _HW_G
-    lnew = f"{a} * (x - element_at(acc.s, 1)) + {1 - a} * (acc.l + acc.b)"
+    prep = _hw_prep(spark, sf_dir)
     fold = F.expr(
         "aggregate(slice(xs, 13, size(xs) - 12),"
         " named_struct('l', l0, 'b', b0, 's', s0),"
         " (acc, x) -> named_struct("
-        f"   'l', {lnew},"
-        f"   'b', {b} * (({lnew}) - acc.l) + {1 - b} * acc.b,"
-        f"   's', concat(slice(acc.s, 2, 11),"
-        f"        array({g} * (x - ({lnew})) + {1 - g} * element_at(acc.s, 1)))))"
+        f"{_HW_FOLD_STEP}))"
     )
     return prep.select(F.size("xs").cast("long").alias("n_months"), fold.alias("st")).select(
         "n_months",
@@ -811,34 +823,12 @@ def history_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "history_holt_winters_backtest",
     f"""
-    WITH RECURSIVE monthly AS (
-      SELECT date_trunc('month', o_orderdate) AS m,
-             CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x,
-             SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS xd
-      FROM orders GROUP BY m),
-    series AS (SELECT x, xd, ROW_NUMBER() OVER (ORDER BY m) AS rn FROM monthly),
-    l0 AS (SELECT CAST(SUM(xd) AS DOUBLE) / 12.0 AS l FROM series WHERE rn <= 12),
-    b0 AS (SELECT (CAST(SUM(CASE WHEN rn BETWEEN 13 AND 24 THEN xd END) AS DOUBLE) / 12.0
-                   - CAST(SUM(CASE WHEN rn <= 12 THEN xd END) AS DOUBLE) / 12.0) / 12.0 AS b
-           FROM series WHERE rn <= 24),
-    seed AS (
-      SELECT 12 AS rn,
-             (SELECT l FROM l0) AS l,
-             (SELECT b FROM b0) AS b,
-             (SELECT LIST(x - (SELECT l FROM l0) ORDER BY rn)
-              FROM series WHERE rn <= 12) AS s,
+    WITH RECURSIVE {_HW_SEED_SQL},
              CAST(0.0 AS DOUBLE) AS e),
     rec AS (
       SELECT rn, l, b, s, e FROM seed
       UNION ALL
-      SELECT sr.rn,
-             {_HW_A} * (sr.x - r.s[1]) + {1 - _HW_A} * (r.l + r.b),
-             {_HW_B} * (({_HW_A} * (sr.x - r.s[1]) + {1 - _HW_A} * (r.l + r.b)) - r.l)
-               + {1 - _HW_B} * r.b,
-             list_concat(r.s[2:12],
-               [{_HW_G} * (sr.x - ({_HW_A} * (sr.x - r.s[1])
-                                   + {1 - _HW_A} * (r.l + r.b)))
-                + {1 - _HW_G} * r.s[1]]),
+      SELECT {_HW_STEP_SQL}),
              r.e + ABS(sr.x - (r.l + r.b + r.s[1]))
       FROM rec r JOIN series sr ON sr.rn = r.rn + 1),
     fin AS (SELECT MAX(rn) AS mx FROM rec),
@@ -867,44 +857,12 @@ def history_holt_winters_backtest(spark: SparkSession, sf_dir: str) -> DataFrame
     not worth its state). Both error sums fold in a fixed order on
     identical IEEE sequences, so the oracle's recursive CTE matches
     bit-for-bit before the cents floor."""
-    orders = table(spark, sf_dir, "orders")
-    monthly = orders.groupBy(F.date_trunc("month", "o_orderdate").alias("m")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("xd")
-    )
-    ser = monthly.groupBy().agg(
-        F.expr("array_sort(collect_list(struct(m, xd)))").alias("sx")
-    ).select(
-        F.expr("transform(sx, s -> CAST(s.xd AS DOUBLE))").alias("xs"),
-        F.expr("transform(sx, s -> s.xd)").alias("xsd"),
-    )
-    prep = ser.select(
-        "xs",
-        F.expr(
-            "CAST(aggregate(slice(xsd, 1, 12), CAST(0 AS DECIMAL(28,2)),"
-            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0"
-        ).alias("l0"),
-        F.expr(
-            "(CAST(aggregate(slice(xsd, 13, 12), CAST(0 AS DECIMAL(28,2)),"
-            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0"
-            " - CAST(aggregate(slice(xsd, 1, 12), CAST(0 AS DECIMAL(28,2)),"
-            " (a, v) -> CAST(a + v AS DECIMAL(28,2))) AS DOUBLE) / 12.0) / 12.0"
-        ).alias("b0"),
-    ).select(
-        "xs",
-        "l0",
-        "b0",
-        F.expr("transform(slice(xs, 1, 12), x -> x - l0)").alias("s0"),
-    )
-    a, b, g = _HW_A, _HW_B, _HW_G
-    lnew = f"{a} * (x - element_at(acc.s, 1)) + {1 - a} * (acc.l + acc.b)"
+    prep = _hw_prep(spark, sf_dir)
     fold = F.expr(
         "aggregate(slice(xs, 13, size(xs) - 12),"
         " named_struct('l', l0, 'b', b0, 's', s0, 'e', CAST(0.0 AS DOUBLE)),"
         " (acc, x) -> named_struct("
-        f"   'l', {lnew},"
-        f"   'b', {b} * (({lnew}) - acc.l) + {1 - b} * acc.b,"
-        f"   's', concat(slice(acc.s, 2, 11),"
-        f"        array({g} * (x - ({lnew})) + {1 - g} * element_at(acc.s, 1))),"
+        f"{_HW_FOLD_STEP},"
         "    'e', acc.e + abs(x - (acc.l + acc.b + element_at(acc.s, 1)))))"
     )
     snaive = F.expr(

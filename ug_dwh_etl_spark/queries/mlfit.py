@@ -22,7 +22,7 @@ moment aggregates the relational layer already proves
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from ug_dwh_etl_spark.queries.registry import register, table
@@ -36,9 +36,8 @@ from ug_dwh_etl_spark.session import pinned
 # one shuffle regardless of input size. The 2x2 solve happens on the
 # single aggregated row.
 
-_OLS_SQL = """
-    WITH m AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
+# The means and population (co)variances of quantity, discount and price.
+_OLS_MOMENTS_SQL = """SELECT CAST(COUNT(*) AS BIGINT) AS n,
              AVG(l_quantity)       AS mx1,
              AVG(l_discount)       AS mx2,
              AVG(l_extendedprice)  AS my,
@@ -46,7 +45,11 @@ _OLS_SQL = """
              var_pop(l_discount)   AS s22,
              covar_pop(l_quantity, l_discount)      AS s12,
              covar_pop(l_quantity, l_extendedprice) AS s1y,
-             covar_pop(l_discount, l_extendedprice) AS s2y,
+             covar_pop(l_discount, l_extendedprice) AS s2y"""
+
+_OLS_SQL = f"""
+    WITH m AS (
+      {_OLS_MOMENTS_SQL},
              var_pop(l_extendedprice) AS syy
       FROM lineitem),
     b AS (
@@ -108,15 +111,7 @@ _RIDGE_LAMBDA = 0.5
 
 _RIDGE_SQL = f"""
     WITH m AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             AVG(l_quantity)       AS mx1,
-             AVG(l_discount)       AS mx2,
-             AVG(l_extendedprice)  AS my,
-             var_pop(l_quantity)   AS s11,
-             var_pop(l_discount)   AS s22,
-             covar_pop(l_quantity, l_discount)      AS s12,
-             covar_pop(l_quantity, l_extendedprice) AS s1y,
-             covar_pop(l_discount, l_extendedprice) AS s2y
+      {_OLS_MOMENTS_SQL}
       FROM lineitem),
     b AS (
       SELECT n, mx1, mx2, my,
@@ -241,8 +236,10 @@ def fit_logreg_newton_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # ROC-AUC + calibration readout for in-warehouse classifiers
 # ---------------------------------------------------------------------------
-_AUC_SQL = """
-    WITH raw AS (
+# Each order's day ``d`` and its propensity label ``y`` (a hash coin
+# weighted by where ``d`` falls between the first and last order day):
+# the scored fixture of the AUC oracles, left open for extra columns.
+_AUC_LABEL_SQL = """raw AS (
       SELECT date_diff('day', DATE '1970-01-01', o_orderdate) AS d,
              ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
                % 10000 AS u
@@ -251,7 +248,9 @@ _AUC_SQL = """
     base AS (
       SELECT d,
              CASE WHEN u < ((d - dmin) * 10000) // (dmax - dmin)
-                  THEN 1 ELSE 0 END AS y
+                  THEN 1 ELSE 0 END AS y"""
+_AUC_SQL = f"""
+    WITH {_AUC_LABEL_SQL}
       FROM raw, bounds),
     pv AS (SELECT d,
                   CAST(SUM(y) AS BIGINT) AS ca,
@@ -726,24 +725,36 @@ def aqp_sampled_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole thing is one partial-aggregated groupBy. The oracle runs
     the identical estimator, so determinism — not luck — makes it
     engine-exact."""
+    return aqp_estimates(aqp_sample_sums(table(spark, sf_dir, "orders")))
+
+
+def aqp_sample_sums(orders: DataFrame) -> DataFrame:
+    """Per priority, the md5-Bernoulli sample's row count ``n_sample``
+    and the sums ``sx``/``sxx`` of its prices and squared prices:
+    mergeable aggregates, batch or stream."""
     from ug_dwh_etl_spark.operators.hashing import md5_long
 
-    f = _AQP_RATE
-    orders = table(spark, sf_dir, "orders")
     u = md5_long(
         F.concat(F.col("o_orderkey").cast("string"), F.lit("|aqp"))
     ) / F.lit(_AQP_DENOM)
     # decimal-sum parity rule: sum x and x^2 as exact DECIMAL (order-
     # independent), cast to double only at the aggregate edge
     x = F.col("o_totalprice").cast("decimal(18,2)")
-    s = orders.filter(u < f).select("o_orderpriority", x.alias("x"))
-    agg = s.groupBy("o_orderpriority").agg(
+    s = orders.filter(u < _AQP_RATE).select("o_orderpriority", x.alias("x"))
+    return s.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_sample"),
         F.sum("x").cast("double").alias("sx"),
         F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
     )
+
+
+def aqp_estimates(sums: DataFrame) -> DataFrame:
+    """The Horvitz-Thompson count and revenue estimates, the revenue's
+    standard error and its relative 95% CI half-width from
+    ``aqp_sample_sums``."""
+    f = _AQP_RATE
     se = F.sqrt((1.0 - f) / (f * f) * F.col("sxx"))
-    return agg.select(
+    return sums.select(
         "o_orderpriority",
         "n_sample",
         F.round(F.col("n_sample") / f, 2).alias("est_count"),
@@ -907,23 +918,29 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # OHLC bars: open/high/low/close resampling of the event value series
 # ---------------------------------------------------------------------------
-_OHLC_SQL = """
-    WITH w AS (
+# Each event's hour with its first/last-in-hour ranks, and the hourly
+# open/high/low/close bars over them: shared with the stream twin
+# stream_ohlc_hourly.
+OHLC_RANKED_CTE = """w AS (
       SELECT date_trunc('hour', ts) AS h, value,
              row_number() OVER (PARTITION BY date_trunc('hour', ts)
                                 ORDER BY ts, event_id) AS rn_a,
              row_number() OVER (PARTITION BY date_trunc('hour', ts)
                                 ORDER BY ts DESC, event_id DESC) AS rn_d
-      FROM events)
-    SELECT h,
-           MAX(CASE WHEN rn_a = 1 THEN value END) AS open,
+      FROM events)"""
+OHLC_BARS_SQL = """MAX(CASE WHEN rn_a = 1 THEN value END) AS open,
            MAX(value) AS high,
            MIN(value) AS low,
            MAX(CASE WHEN rn_d = 1 THEN value END) AS close,
            CAST(COUNT(*) AS BIGINT) AS volume,
            CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
              AS total_value
-    FROM w GROUP BY h
+    FROM w GROUP BY h"""
+
+_OHLC_SQL = f"""
+    WITH {OHLC_RANKED_CTE}
+    SELECT h,
+           {OHLC_BARS_SQL}
 """
 
 
@@ -1306,6 +1323,15 @@ _ABC_SQL = """
 """
 
 
+def part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each part's decimal-exact line revenue ``r``: the rollup both ABC
+    classifications rank."""
+    li = table(spark, sf_dir, "lineitem")
+    return li.groupBy("l_partkey").agg(
+        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("r")
+    )
+
+
 @register("orders_abc_classification", _ABC_SQL)
 def orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC / Pareto classification of parts by revenue: cumulative
@@ -1320,12 +1346,8 @@ def orders_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     no single window task ever holds the rollup."""
     from ug_dwh_etl_spark.operators.ranking import global_running_sum
 
-    li = table(spark, sf_dir, "lineitem")
-    rev = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("r")
-    )
     ranked = global_running_sum(
-        rev,
+        part_revenue(spark, sf_dir),
         [F.desc("r"), F.asc("l_partkey")],
         "r",
         out="cum",
@@ -1840,10 +1862,10 @@ def fit_kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- one gradient-boosting round: the best regression stump ----------------------
 
 
-@register(
-    "fit_boost_stump",
-    """
-    WITH perx AS (
+# The per-quantity counts and sums with their running left-side totals,
+# and the normalized split score over them: the search both tree
+# oracles run.
+_STUMP_CUM_CTES = """perx AS (
       SELECT CAST(l_quantity AS BIGINT) AS x, CAST(COUNT(*) AS BIGINT) AS n,
              SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS s
       FROM lineitem GROUP BY 1),
@@ -1852,13 +1874,79 @@ def fit_kfold_cv_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT x AS threshold,
              SUM(n) OVER (ORDER BY x) AS nl,
              SUM(s) OVER (ORDER BY x) AS sl
-      FROM perx),
-    sc AS (
-      SELECT threshold, CAST(nl AS BIGINT) AS n_left,
-             ROUND((CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) / nl
+      FROM perx)"""
+_STUMP_SCORE_SQL = """ROUND((CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) / nl
                     + CAST(ts - sl AS DOUBLE) * CAST(ts - sl AS DOUBLE)
                       / (tn - nl))
-                   / (CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / tn), 6)
+                   / (CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / tn), 6)"""
+
+
+def _per_quantity(li: DataFrame) -> DataFrame:
+    """Per distinct integer quantity ``x``: the row count ``n`` and the
+    decimal-exact price sum ``s`` the split search runs on."""
+    return li.groupBy(F.col("l_quantity").cast("long").alias("x")).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("s"),
+    )
+
+
+def _split_curve(perx: DataFrame, part_cols: list[str]) -> DataFrame:
+    """Every candidate split ``x <= threshold`` of ``perx`` within each
+    ``part_cols`` group that leaves rows on both sides: the running
+    left count ``nl`` and sum ``sl`` next to the group totals ``tn`` and
+    ``ts``."""
+    tot = perx.groupBy(*part_cols).agg(
+        F.sum("n").alias("tn"), F.sum("s").alias("ts")
+    ) if part_cols else perx.agg(F.sum("n").alias("tn"), F.sum("s").alias("ts"))
+    w = (
+        Window.partitionBy(*part_cols).orderBy("x")
+        if part_cols
+        else Window.orderBy("x")
+    ).rowsBetween(Window.unboundedPreceding, 0)
+    cum = perx.select(
+        *part_cols,
+        F.col("x").alias("threshold"),
+        F.sum("n").over(w).alias("nl"),
+        F.sum("s").over(w).alias("sl"),
+    )
+    joined = (
+        cum.join(F.broadcast(tot), part_cols)
+        if part_cols
+        else cum.crossJoin(F.broadcast(tot))
+    )
+    return joined.filter(F.col("nl") < F.col("tn"))
+
+
+def _split_stats() -> list[Column]:
+    """A split's normalized variance-reduction ``score`` and the two
+    leaf means, each rounded to 6 places, over ``_split_curve``'s
+    columns."""
+    d = lambda c: c.cast("double")  # noqa: E731
+    score = F.round(
+        (
+            d(F.col("sl")) * d(F.col("sl")) / F.col("nl")
+            + d(F.col("ts") - F.col("sl")) * d(F.col("ts") - F.col("sl"))
+            / (F.col("tn") - F.col("nl"))
+        )
+        / (d(F.col("ts")) * d(F.col("ts")) / F.col("tn")),
+        6,
+    )
+    return [
+        score.alias("score"),
+        F.round(d(F.col("sl")) / F.col("nl"), 6).alias("gamma_left"),
+        F.round(
+            d(F.col("ts") - F.col("sl")) / (F.col("tn") - F.col("nl")), 6
+        ).alias("gamma_right"),
+    ]
+
+
+@register(
+    "fit_boost_stump",
+    f"""
+    WITH {_STUMP_CUM_CTES},
+    sc AS (
+      SELECT threshold, CAST(nl AS BIGINT) AS n_left,
+             {_STUMP_SCORE_SQL}
                AS score,
              ROUND(CAST(sl AS DOUBLE) / nl, 6) AS gamma_left,
              ROUND(CAST(ts - sl AS DOUBLE) / (tn - nl), 6) AS gamma_right
@@ -1891,38 +1979,11 @@ def fit_boost_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     agree on the winner; emitting the full candidate curve makes the
     search auditable, not just its argmax."""
     li = table(spark, sf_dir, "lineitem")
-    perx = li.groupBy(F.col("l_quantity").cast("long").alias("x")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("s"),
-    )
-    tot = perx.agg(F.sum("n").alias("tn"), F.sum("s").alias("ts"))
-    w = Window.orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
-    cum = perx.select(
-        F.col("x").alias("threshold"),
-        F.sum("n").over(w).alias("nl"),
-        F.sum("s").over(w).alias("sl"),
-    )
-    d = lambda c: c.cast("double")  # noqa: E731
-    sc = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.col("nl") < F.col("tn"))
-        .select(
-            "threshold",
-            F.col("nl").cast("long").alias("n_left"),
-            F.round(
-                (
-                    d(F.col("sl")) * d(F.col("sl")) / F.col("nl")
-                    + d(F.col("ts") - F.col("sl")) * d(F.col("ts") - F.col("sl"))
-                    / (F.col("tn") - F.col("nl"))
-                )
-                / (d(F.col("ts")) * d(F.col("ts")) / F.col("tn")),
-                6,
-            ).alias("score"),
-            F.round(d(F.col("sl")) / F.col("nl"), 6).alias("gamma_left"),
-            F.round(
-                d(F.col("ts") - F.col("sl")) / (F.col("tn") - F.col("nl")), 6
-            ).alias("gamma_right"),
-        )
+    perx = _per_quantity(li)
+    sc = _split_curve(perx, []).select(
+        "threshold",
+        F.col("nl").cast("long").alias("n_left"),
+        *_split_stats(),
     )
     best = sc.agg(
         F.min_by(
@@ -2077,23 +2138,11 @@ def fit_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "fit_tree_depth2",
-    """
-    WITH perx AS (
-      SELECT CAST(l_quantity AS BIGINT) AS x, CAST(COUNT(*) AS BIGINT) AS n,
-             SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS s
-      FROM lineitem GROUP BY 1),
-    tot AS (SELECT SUM(n) AS tn, SUM(s) AS ts FROM perx),
-    cum AS (
-      SELECT x AS threshold,
-             SUM(n) OVER (ORDER BY x) AS nl,
-             SUM(s) OVER (ORDER BY x) AS sl
-      FROM perx),
+    f"""
+    WITH {_STUMP_CUM_CTES},
     sc AS (
       SELECT threshold,
-             ROUND((CAST(sl AS DOUBLE) * CAST(sl AS DOUBLE) / nl
-                    + CAST(ts - sl AS DOUBLE) * CAST(ts - sl AS DOUBLE)
-                      / (tn - nl))
-                   / (CAST(ts AS DOUBLE) * CAST(ts AS DOUBLE) / tn), 6)
+             {_STUMP_SCORE_SQL}
                AS score
       FROM cum CROSS JOIN tot WHERE nl < tn),
     root AS (SELECT MIN(threshold) AS t0 FROM sc
@@ -2145,52 +2194,8 @@ def fit_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     above double noise. All windows run on the <=50-row (side x
     threshold) relation — domain-bounded, never data-bounded."""
     li = table(spark, sf_dir, "lineitem")
-    d = lambda c: c.cast("double")  # noqa: E731
-
-    def curve(perx: DataFrame, part_cols: list[str]) -> DataFrame:
-        tot = perx.groupBy(*part_cols).agg(
-            F.sum("n").alias("tn"), F.sum("s").alias("ts")
-        ) if part_cols else perx.agg(F.sum("n").alias("tn"), F.sum("s").alias("ts"))
-        w = (
-            Window.partitionBy(*part_cols).orderBy("x")
-            if part_cols
-            else Window.orderBy("x")
-        ).rowsBetween(Window.unboundedPreceding, 0)
-        cum = perx.select(
-            *part_cols,
-            F.col("x").alias("threshold"),
-            F.sum("n").over(w).alias("nl"),
-            F.sum("s").over(w).alias("sl"),
-        )
-        joined = (
-            cum.join(F.broadcast(tot), part_cols)
-            if part_cols
-            else cum.crossJoin(F.broadcast(tot))
-        )
-        score = F.round(
-            (
-                d(F.col("sl")) * d(F.col("sl")) / F.col("nl")
-                + d(F.col("ts") - F.col("sl")) * d(F.col("ts") - F.col("sl"))
-                / (F.col("tn") - F.col("nl"))
-            )
-            / (d(F.col("ts")) * d(F.col("ts")) / F.col("tn")),
-            6,
-        )
-        return joined.filter(F.col("nl") < F.col("tn")).select(
-            *part_cols,
-            "threshold",
-            score.alias("score"),
-            F.round(d(F.col("sl")) / F.col("nl"), 6).alias("gamma_left"),
-            F.round(
-                d(F.col("ts") - F.col("sl")) / (F.col("tn") - F.col("nl")), 6
-            ).alias("gamma_right"),
-        )
-
-    perx = li.groupBy(F.col("l_quantity").cast("long").alias("x")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("s"),
-    )
-    sc = curve(perx, [])
+    perx = _per_quantity(li)
+    sc = _split_curve(perx, []).select("threshold", *_split_stats())
     root = sc.agg(
         F.min_by(
             "threshold", F.struct((-F.col("score")).alias("ns"), F.col("threshold"))
@@ -2209,7 +2214,7 @@ def fit_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("s"),
         )
     )
-    sc2 = curve(perx2, ["side"])
+    sc2 = _split_curve(perx2, ["side"]).select("side", "threshold", *_split_stats())
     best2 = sc2.groupBy("side").agg(
         F.min_by(
             "threshold", F.struct((-F.col("score")).alias("ns"), F.col("threshold"))
@@ -2333,17 +2338,8 @@ def fit_gmm_em_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PR-AUC (average precision) + calibration report — share fit_auc_roc's
 # propensity-labeled fixture
 # ---------------------------------------------------------------------------
-_AUC_BASE_CTES = """
-    raw AS (
-      SELECT date_diff('day', DATE '1970-01-01', o_orderdate) AS d,
-             ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
-               % 10000 AS u
-      FROM orders),
-    bounds AS (SELECT MIN(d) AS dmin, MAX(d) AS dmax FROM raw),
-    base AS (
-      SELECT d,
-             CASE WHEN u < ((d - dmin) * 10000) // (dmax - dmin)
-                  THEN 1 ELSE 0 END AS y,
+_AUC_BASE_CTES = f"""
+    {_AUC_LABEL_SQL},
              dmin, dmax
       FROM raw, bounds)
 """

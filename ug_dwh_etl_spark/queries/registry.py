@@ -38,13 +38,19 @@ def events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     type: the generator has shipped events.ts as both TIMESTAMP(NANOS)
     (which Spark's reader rejects without the nanosAsLong escape hatch,
     then reads as long) and TIMESTAMP(MICROS). Probe the footer schema
-    and turn the escape hatch on only when the file needs it. Batch and
-    stream readers both start here."""
+    and turn the escape hatch on only when the file needs it, that is
+    when the probe fails with ``PARQUET_TYPE_ILLEGAL``; any other
+    failure (a missing directory, say) raises with the session
+    untouched. Batch and stream readers both start here."""
+    from pyspark.errors import AnalysisException
+
     path = f"{sf_dir}/events.parquet"
     try:
         df = spark.read.parquet(path)
         df.schema  # force footer conversion so a nanos file fails HERE
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
     return df

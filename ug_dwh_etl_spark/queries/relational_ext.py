@@ -10,7 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from ug_dwh_etl_spark.queries.mlfit import part_revenue
 from ug_dwh_etl_spark.queries.registry import register, table
+from ug_dwh_etl_spark.queries.streaming import BENFORD_ORACLE
 from ug_dwh_etl_spark.session import conf_scope
 
 
@@ -778,6 +780,23 @@ def window_dense_rank_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- bag-semantics set ops (INTERSECT ALL / EXCEPT ALL) --------------------------
+def _nation_name_bags(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The nation name of every customer and of every supplier, as two
+    bags for the bag-semantics set operations."""
+    nation = table(spark, sf_dir, "nation")
+    cust = (
+        table(spark, sf_dir, "customer")
+        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
+        .select("n_name")
+    )
+    supp = (
+        table(spark, sf_dir, "supplier")
+        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .select("n_name")
+    )
+    return cust, supp
+
+
 @register(
     "setop_nation_bag_overlap",
     """
@@ -795,17 +814,7 @@ def setop_nation_bag_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage lacks. Spark plans both ALL variants as an aggregate of
     per-side counts, not a pairwise join — one shuffle per side at any
     scale."""
-    nation = table(spark, sf_dir, "nation")
-    cust = (
-        table(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("n_name")
-    )
-    supp = (
-        table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("n_name")
-    )
+    cust, supp = _nation_name_bags(spark, sf_dir)
     return cust.intersectAll(supp)
 
 
@@ -823,17 +832,7 @@ def setop_nation_bag_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT ALL: customer-side multiplicity minus supplier-side
     multiplicity per nation (floor 0) — e.g. 40 customers and 3
     suppliers in GERMANY leaves 37 rows."""
-    nation = table(spark, sf_dir, "nation")
-    cust = (
-        table(spark, sf_dir, "customer")
-        .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("n_name")
-    )
-    supp = (
-        table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("n_name")
-    )
+    cust, supp = _nation_name_bags(spark, sf_dir)
     return cust.exceptAll(supp)
 
 
@@ -1319,6 +1318,33 @@ def copurchase_top_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COP_MIN_SUP = 30
 
 
+def _supported_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(op, qual, pairs)``: the distinct (order ``o``, part ``p``)
+    rows, each part in at least ``_COP_MIN_SUP`` orders with its order
+    count ``n``, and every pair ``p1 < p2`` of those parts with the
+    count ``n_ab`` of orders holding both."""
+    li = table(spark, sf_dir, "lineitem")
+    op = li.select(
+        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+    ).distinct()
+    f = op.groupBy("p").agg(F.count(F.lit(1)).alias("n"))
+    qual = f.filter(F.col("n") >= _COP_MIN_SUP)
+    # parts-sized (never orders-sized) and support-filtered: broadcast
+    # the qualifying ids into the semi-join so the (order, part) table
+    # is pruned map-side with no extra shuffle of op
+    opq = op.join(F.broadcast(qual.select("p")), "p", "semi")
+    a = opq.select(F.col("o"), F.col("p").alias("p1"))
+    b = opq.select(F.col("o").alias("o2"), F.col("p").alias("p2"))
+    pairs = (
+        a.join(b, (F.col("o") == F.col("o2")) & (F.col("p1") < F.col("p2")))
+        .groupBy("p1", "p2")
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+    )
+    return op, qual, pairs
+
+
 @register(
     "copurchase_capped",
     f"""
@@ -1348,23 +1374,7 @@ def copurchase_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical support filter, so this twin is exact too. At sf0.01 the
     median part support is 30 — the filter genuinely removes ~half the
     parts (SCALE.md measures the growth cut at 16x)."""
-    li = table(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    f = op.groupBy("p").agg(F.count(F.lit(1)).alias("n"))
-    qual = f.filter(F.col("n") >= _COP_MIN_SUP)
-    # parts-sized (never orders-sized) and support-filtered: broadcast
-    # the qualifying ids into the semi-join so the (order, part) table
-    # is pruned map-side with no extra shuffle of op
-    opq = op.join(F.broadcast(qual.select("p")), "p", "semi")
-    a = opq.select(F.col("o"), F.col("p").alias("p1"))
-    b = opq.select(F.col("o").alias("o2"), F.col("p").alias("p2"))
-    pairs = (
-        a.join(b, (F.col("o") == F.col("o2")) & (F.col("p1") < F.col("p2")))
-        .groupBy("p1", "p2")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
+    _, qual, pairs = _supported_pairs(spark, sf_dir)
     top = pairs.orderBy(F.desc("n_ab"), F.asc("p1"), F.asc("p2")).limit(20)
     fa = qual.select(F.col("p").alias("_pa"), F.col("n").alias("n1"))
     fb = qual.select(F.col("p").alias("_pb"), F.col("n").alias("n2"))
@@ -2037,12 +2047,8 @@ def parts_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     serializes through one window task."""
     from ug_dwh_etl_spark.operators.ranking import global_running_sum
 
-    li = table(spark, sf_dir, "lineitem")
-    rev = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("r")
-    )
     ranked = global_running_sum(
-        rev,
+        part_revenue(spark, sf_dir),
         [F.desc("r"), F.asc("l_partkey")],
         "r",
         out="cum_r",
@@ -2066,21 +2072,7 @@ def parts_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Benford first-digit audit (fraud/anomaly DQ screen) ------------------------
-@register(
-    "dq_benford_totalprice",
-    """
-    WITH digits AS (
-      SELECT substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1)::INT
-               AS digit
-      FROM orders),
-    obs AS (SELECT digit, COUNT(*) AS n FROM digits GROUP BY digit),
-    tot AS (SELECT SUM(n) AS t FROM obs)
-    SELECT digit, CAST(n AS BIGINT) AS n,
-           ROUND(n * 1.0 / t, 6) AS observed_share,
-           ROUND(ln(1 + 1.0 / digit) / ln(10), 6) AS benford_share
-    FROM obs, tot
-    """,
-)
+@register("dq_benford_totalprice", BENFORD_ORACLE)
 def dq_benford_totalprice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit over order totals — the classic
     fabricated-data / ingestion-anomaly screen (a pipeline that
@@ -2229,21 +2221,8 @@ def copurchase_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking key is ROUNDED lift with (antecedent, consequent)
     tiebreaks; pair-relation cost is the same bounded
     per-order fan-out as the parent query."""
-    li = table(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
+    op, qual, pairs = _supported_pairs(spark, sf_dir)
     nn = op.agg(F.countDistinct("o").alias("n_orders"))
-    f = op.groupBy("p").agg(F.count(F.lit(1)).alias("n"))
-    qual = f.filter(F.col("n") >= _COP_MIN_SUP)
-    opq = op.join(F.broadcast(qual.select("p")), "p", "semi")
-    a = opq.select(F.col("o"), F.col("p").alias("p1"))
-    b = opq.select(F.col("o").alias("o2"), F.col("p").alias("p2"))
-    pairs = (
-        a.join(b, (F.col("o") == F.col("o2")) & (F.col("p1") < F.col("p2")))
-        .groupBy("p1", "p2")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
     rules = pairs.select(
         F.col("p1").alias("antecedent"), F.col("p2").alias("consequent"), "n_ab"
     ).unionByName(

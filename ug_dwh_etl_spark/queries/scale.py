@@ -886,9 +886,9 @@ def storage_manifest_df_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "storage_merge_upsert",
-    """
+# The orders after the merge twins' upsert: 1995 restated at +10.00,
+# 1996 inserted, later years never loaded.
+_MERGE_ORACLE = """
     WITH effective AS (
       SELECT o_orderkey, o_orderstatus,
              CASE WHEN o_orderdate >= DATE '1995-01-01'
@@ -901,8 +901,33 @@ def storage_manifest_df_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(ROUND(SUM(CAST(price AS DECIMAL(18,2))), 2) AS DOUBLE)
              AS total_price
     FROM effective GROUP BY o_orderstatus
-    """,
-)
+    """
+
+
+def _merge_changes(o: DataFrame) -> DataFrame:
+    """The one batch both merge twins upsert by ``o_orderkey``: the 1995
+    orders restated at +10.00 and the 1996 orders as inserts."""
+    updates = o.filter(
+        (F.col("o_orderdate") >= "1995-01-01")
+        & (F.col("o_orderdate") < "1996-01-01")
+    ).withColumn("o_totalprice", F.col("o_totalprice") + 10.0)
+    inserts = o.filter(
+        (F.col("o_orderdate") >= "1996-01-01")
+        & (F.col("o_orderdate") < "1997-01-01")
+    )
+    return updates.unionByName(inserts)
+
+
+def _status_totals(df: DataFrame) -> DataFrame:
+    return df.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).cast("long").alias("n_orders"),
+        F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
+        .cast("double")
+        .alias("total_price"),
+    )
+
+
+@register("storage_merge_upsert", _MERGE_ORACLE)
 def storage_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO on the snapshot table (copy-on-write upsert,
     operators/snapshot_table.py:commit_merge): snapshot 1 lands the
@@ -930,44 +955,11 @@ def storage_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
         t = SnapshotTable(root)
         t.commit_overwrite(o.filter(F.col("o_orderdate") < "1996-01-01"))
-        updates = o.filter(
-            (F.col("o_orderdate") >= "1995-01-01")
-            & (F.col("o_orderdate") < "1996-01-01")
-        ).withColumn("o_totalprice", F.col("o_totalprice") + 10.0)
-        inserts = o.filter(
-            (F.col("o_orderdate") >= "1996-01-01")
-            & (F.col("o_orderdate") < "1997-01-01")
-        )
-        t.commit_merge(updates.unionByName(inserts), key_cols=["o_orderkey"])
-    return (
-        t.read_as_of(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
+        t.commit_merge(_merge_changes(o), key_cols=["o_orderkey"])
+    return _status_totals(t.read_as_of(spark))
 
 
-@register(
-    "storage_merge_on_read",
-    """
-    WITH effective AS (
-      SELECT o_orderkey, o_orderstatus,
-             CASE WHEN o_orderdate >= DATE '1995-01-01'
-                   AND o_orderdate < DATE '1996-01-01'
-                  THEN o_totalprice + 10.0 ELSE o_totalprice END AS price
-      FROM orders
-      WHERE o_orderdate < DATE '1997-01-01')
-    SELECT o_orderstatus,
-           CAST(COUNT(*) AS BIGINT) AS n_orders,
-           CAST(ROUND(SUM(CAST(price AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS total_price
-    FROM effective GROUP BY o_orderstatus
-    """,
-)
+@register("storage_merge_on_read", _MERGE_ORACLE)
 def storage_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME upsert as storage_merge_upsert, committed MERGE-ON-READ
     (operators/snapshot_table.py:commit_merge_on_read — Iceberg v2
@@ -996,28 +988,9 @@ def storage_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
         t = SnapshotTable(root)
         t.commit_overwrite(o.filter(F.col("o_orderdate") < "1996-01-01"))
-        updates = o.filter(
-            (F.col("o_orderdate") >= "1995-01-01")
-            & (F.col("o_orderdate") < "1996-01-01")
-        ).withColumn("o_totalprice", F.col("o_totalprice") + 10.0)
-        inserts = o.filter(
-            (F.col("o_orderdate") >= "1996-01-01")
-            & (F.col("o_orderdate") < "1997-01-01")
-        )
-        t.commit_merge_on_read(
-            updates.unionByName(inserts), key_cols=["o_orderkey"]
-        )
+        t.commit_merge_on_read(_merge_changes(o), key_cols=["o_orderkey"])
         t.compact_deletes(spark)
-    return (
-        t.read_as_of(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
+    return _status_totals(t.read_as_of(spark))
 
 
 @register(
@@ -1226,16 +1199,7 @@ def storage_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fail=True,
             )
         t.publish_branch("audit")
-    return (
-        t.read_as_of(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
+    return _status_totals(t.read_as_of(spark))
 
 
 @register(

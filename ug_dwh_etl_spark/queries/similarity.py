@@ -21,9 +21,9 @@ from ug_dwh_etl_spark.queries.registry import register, table
 
 
 # --- exact brute-force cosine top-k ------------------------------------------
-@register(
-    "sim_cosine_topk",
-    """
+# The exact top-10 cosine neighbors of vector 0: the oracle of both the
+# native and the pandas-UDF cosine top-k.
+COSINE_TOPK_SQL = """
     WITH q AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0)
     SELECT vec_id,
            ROUND(list_dot_product(embedding::DOUBLE[], q)
@@ -35,8 +35,10 @@ from ug_dwh_etl_spark.queries.registry import register, table
              / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
                 * sqrt(list_dot_product(q, q))) DESC, vec_id
     LIMIT 10
-    """,
-)
+    """
+
+
+@register("sim_cosine_topk", COSINE_TOPK_SQL)
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(table(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
@@ -83,37 +85,31 @@ def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Pandas-UDF cosine: same oracle as the native fold -------------------------
-@register(
-    "sim_cosine_topk_pandas",
-    """
-    WITH q AS (SELECT embedding::DOUBLE[] AS q FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id,
-           ROUND(list_dot_product(embedding::DOUBLE[], q)
-                 / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                    * sqrt(list_dot_product(q, q))), 6) AS cosine
-    FROM embeddings, q
-    WHERE vec_id != 0
-    ORDER BY list_dot_product(embedding::DOUBLE[], q)
-             / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
-                * sqrt(list_dot_product(q, q))) DESC, vec_id
-    LIMIT 10
-    """,
-)
+@register("sim_cosine_topk_pandas", COSINE_TOPK_SQL)
 def sim_cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow-batched numpy kernel; must reproduce the JVM fold to 6 dp.
     return cosine_topk_pandas(table(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
+# The IVF oracles' SQL pieces: each vector's squared distance to every
+# centroid (d0..), their minimum, the nearest-centroid CASE over them,
+# and the query vector's distance to each centroid.
+_IVF_DISTS = ", ".join(f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS))
+_IVF_LEAST = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
+_IVF_CASE = " ".join(f"WHEN d{j} = m THEN {j}" for j in range(N_CENTROIDS))
+_IVF_QDIST_ROWS = "\n      UNION ALL\n      ".join(
+    f"SELECT {j} AS cluster, {sql_centroid_dist('qe', j)} AS qdist FROM q"
+    for j in range(N_CENTROIDS)
+)
+
+
 # --- IVF cluster assignment -----------------------------------------------------
 def _ivf_assign_sql() -> str:
-    dists = ", ".join(f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS))
-    least = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
-    case = " ".join(f"WHEN d{j} = m THEN {j}" for j in range(N_CENTROIDS))
     return f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    d AS (SELECT vec_id, {dists} FROM base),
-    m AS (SELECT vec_id, {least} AS m, * FROM d)
-    SELECT vec_id, CASE {case} END AS cluster FROM m
+    d AS (SELECT vec_id, {_IVF_DISTS} FROM base),
+    m AS (SELECT vec_id, {_IVF_LEAST} AS m, * FROM d)
+    SELECT vec_id, CASE {_IVF_CASE} END AS cluster FROM m
     """
 
 
@@ -125,21 +121,14 @@ def sim_ivf_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVF top-k (probe the 2 nearest clusters) -----------------------------------
 def _ivf_topk_sql() -> str:
-    dists = ", ".join(f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS))
-    least = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
-    case = " ".join(f"WHEN d{j} = m THEN {j}" for j in range(N_CENTROIDS))
-    qdist_rows = "\n      UNION ALL\n      ".join(
-        f"SELECT {j} AS cluster, {sql_centroid_dist('qe', j)} AS qdist FROM q"
-        for j in range(N_CENTROIDS)
-    )
     return f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    d AS (SELECT vec_id, e, {dists} FROM base),
-    m AS (SELECT vec_id, e, {least} AS m, * EXCLUDE (vec_id, e) FROM d),
-    a AS (SELECT vec_id, e, CASE {case} END AS cluster FROM m),
+    d AS (SELECT vec_id, e, {_IVF_DISTS} FROM base),
+    m AS (SELECT vec_id, e, {_IVF_LEAST} AS m, * EXCLUDE (vec_id, e) FROM d),
+    a AS (SELECT vec_id, e, CASE {_IVF_CASE} END AS cluster FROM m),
     q AS (SELECT e AS qe FROM base WHERE vec_id = 0),
     qd AS (
-      {qdist_rows}
+      {_IVF_QDIST_ROWS}
     ),
     probe AS (SELECT cluster FROM qd ORDER BY qdist, cluster LIMIT 2)
     SELECT vec_id,
@@ -297,9 +286,38 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quantize_recall_sql(k: int = 3) -> str:
+# The recall audits' neighbor count and the Matryoshka prefix width.
+_RECALL_K = 3
+_MATRYOSHKA_DIM = 16
+
+
+def _knn_stage_sql(src: str) -> str:
+    """The top-``_RECALL_K`` cosine neighbors ``(q_id, neighbor_id)`` of
+    every query vector (``vec_id % 97 = 0``) among the vectors
+    ``(vec_id, e)`` of relation ``src``."""
     cos = ("list_dot_product(e, qe) / (sqrt(list_dot_product(e, e))"
            " * sqrt(list_dot_product(qe, qe)))")
+    return f"""
+      SELECT q_id, vec_id AS neighbor_id FROM (
+        SELECT q.vec_id AS q_id, {src}.vec_id, {cos} AS cos_raw,
+               ROW_NUMBER() OVER (PARTITION BY q.vec_id
+                                  ORDER BY {cos} DESC, {src}.vec_id) AS rn
+        FROM (SELECT vec_id, e AS qe FROM {src} WHERE vec_id % 97 = 0) q
+          JOIN {src} ON {src}.vec_id <> q.vec_id)
+      WHERE rn <= {_RECALL_K}"""
+
+
+def _recall_select_sql(approx: str) -> str:
+    """Per query, how many of its ``exact`` neighbors the ``approx``
+    neighbor relation finds too."""
+    return f"""SELECT e.q_id, CAST(COUNT(m.neighbor_id) AS BIGINT) AS n_match,
+           ROUND(COUNT(m.neighbor_id) / {_RECALL_K}.0, 6) AS recall_at_{_RECALL_K}
+    FROM exact e
+      LEFT JOIN {approx} m ON m.q_id = e.q_id AND m.neighbor_id = e.neighbor_id
+    GROUP BY e.q_id"""
+
+
+def _quantize_recall_sql() -> str:
     return f"""
     WITH flat AS (
       SELECT vec_id,
@@ -314,27 +332,9 @@ def _quantize_recall_sql(k: int = 3) -> str:
       FROM flat f JOIN dims d USING (dim)),
     dq AS (SELECT vec_id, list(dv ORDER BY dim) AS e FROM dqflat GROUP BY vec_id),
     c AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    exact AS (
-      SELECT q_id, vec_id AS neighbor_id FROM (
-        SELECT q.vec_id AS q_id, c.vec_id, {cos} AS cos_raw,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {cos} DESC, c.vec_id) AS rn
-        FROM (SELECT vec_id, e AS qe FROM c WHERE vec_id % 97 = 0) q
-          JOIN c ON c.vec_id <> q.vec_id)
-      WHERE rn <= {k}),
-    quant AS (
-      SELECT q_id, vec_id AS neighbor_id FROM (
-        SELECT q.vec_id AS q_id, dq.vec_id, {cos} AS cos_raw,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {cos} DESC, dq.vec_id) AS rn
-        FROM (SELECT vec_id, e AS qe FROM dq WHERE vec_id % 97 = 0) q
-          JOIN dq ON dq.vec_id <> q.vec_id)
-      WHERE rn <= {k})
-    SELECT e.q_id, CAST(COUNT(m.neighbor_id) AS BIGINT) AS n_match,
-           ROUND(COUNT(m.neighbor_id) / {k}.0, 6) AS recall_at_{k}
-    FROM exact e
-      LEFT JOIN quant m ON m.q_id = e.q_id AND m.neighbor_id = e.neighbor_id
-    GROUP BY e.q_id
+    exact AS ({_knn_stage_sql('c')}),
+    quant AS ({_knn_stage_sql('dq')})
+    {_recall_select_sql('quant')}
     """
 
 
@@ -347,7 +347,9 @@ def sim_quantize_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak keeps the comparison engine-exact."""
     from ug_dwh_etl_spark.operators.similarity import quantized_knn_recall
 
-    return quantized_knn_recall(table(spark, sf_dir, "embeddings"), query_mod=97, k=3)
+    return quantized_knn_recall(
+        table(spark, sf_dir, "embeddings"), query_mod=97, k=_RECALL_K
+    )
 
 
 # --- per-dimension distribution audit (feature normalization stats) -----------
@@ -461,22 +463,15 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivfpq_sql(query_id: int = 0, k: int = 10, n_probe: int = 2) -> str:
     from ug_dwh_etl_spark.operators.similarity import sql_pq_ctes
 
-    dists = ", ".join(f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS))
-    least = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
-    case = " ".join(f"WHEN d{j} = m THEN {j}" for j in range(N_CENTROIDS))
-    qdist_rows = "\n      UNION ALL\n      ".join(
-        f"SELECT {j} AS cluster, {sql_centroid_dist('qe', j)} AS qdist FROM q"
-        for j in range(N_CENTROIDS)
-    )
     return f"""
     WITH {sql_pq_ctes()},
     base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    dd AS (SELECT vec_id, e, {dists} FROM base),
-    m AS (SELECT vec_id, e, {least} AS m, * EXCLUDE (vec_id, e) FROM dd),
-    assigned AS (SELECT vec_id, CASE {case} END AS cluster FROM m),
+    dd AS (SELECT vec_id, e, {_IVF_DISTS} FROM base),
+    m AS (SELECT vec_id, e, {_IVF_LEAST} AS m, * EXCLUDE (vec_id, e) FROM dd),
+    assigned AS (SELECT vec_id, CASE {_IVF_CASE} END AS cluster FROM m),
     q AS (SELECT e AS qe FROM base WHERE vec_id = {query_id}),
     qd AS (
-      {qdist_rows}
+      {_IVF_QDIST_ROWS}
     ),
     probe AS (SELECT cluster FROM qd ORDER BY qdist, cluster LIMIT {n_probe}),
     lut AS (
@@ -515,8 +510,6 @@ def _kmeans_step_sql() -> str:
         sql_centroid_literal,
     )
 
-    dists = ", ".join(f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS))
-    least = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
     case = " ".join(f"WHEN d{j} = mind THEN {j}" for j in range(N_CENTROIDS))
     avgs = ", ".join(f"ROUND(AVG(e[{i + 1}]), 6) AS a{i}" for i in range(EMBED_DIM))
     clist = "list_value(" + ", ".join(f"a{i}" for i in range(EMBED_DIM)) + ")"
@@ -535,8 +528,8 @@ def _kmeans_step_sql() -> str:
     )
     return f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    d AS (SELECT vec_id, e, {dists} FROM base),
-    m AS (SELECT vec_id, e, {least} AS mind, * EXCLUDE (vec_id, e) FROM d),
+    d AS (SELECT vec_id, e, {_IVF_DISTS} FROM base),
+    m AS (SELECT vec_id, e, {_IVF_LEAST} AS mind, * EXCLUDE (vec_id, e) FROM d),
     a AS (SELECT vec_id, e, mind, CASE {case} END AS cluster FROM m),
     g AS (SELECT cluster, COUNT(*) AS n_vecs, ROUND(SUM(mind), 3) AS inertia, {avgs}
           FROM a GROUP BY cluster),
@@ -574,31 +567,14 @@ def sim_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Matryoshka prefix-truncation recall audit --------------------------------
-def _matryoshka_recall_sql(prefix_dim: int = 16, k: int = 3) -> str:
-    cos = ("list_dot_product(e, qe) / (sqrt(list_dot_product(e, e))"
-           " * sqrt(list_dot_product(qe, qe)))")
-
-    def stage(src: str) -> str:
-        return f"""
-      SELECT q_id, vec_id AS neighbor_id FROM (
-        SELECT q.vec_id AS q_id, {src}.vec_id, {cos} AS cos_raw,
-               ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                                  ORDER BY {cos} DESC, {src}.vec_id) AS rn
-        FROM (SELECT vec_id, e AS qe FROM {src} WHERE vec_id % 97 = 0) q
-          JOIN {src} ON {src}.vec_id <> q.vec_id)
-      WHERE rn <= {k}"""
-
+def _matryoshka_recall_sql() -> str:
     return f"""
     WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    t AS (SELECT vec_id, list_slice(embedding::DOUBLE[], 1, {prefix_dim}) AS e
+    t AS (SELECT vec_id, list_slice(embedding::DOUBLE[], 1, {_MATRYOSHKA_DIM}) AS e
           FROM embeddings),
-    exact AS ({stage('c')}),
-    approx AS ({stage('t')})
-    SELECT e.q_id, CAST(COUNT(m.neighbor_id) AS BIGINT) AS n_match,
-           ROUND(COUNT(m.neighbor_id) / {k}.0, 6) AS recall_at_{k}
-    FROM exact e
-      LEFT JOIN approx m ON m.q_id = e.q_id AND m.neighbor_id = e.neighbor_id
-    GROUP BY e.q_id
+    exact AS ({_knn_stage_sql('c')}),
+    approx AS ({_knn_stage_sql('t')})
+    {_recall_select_sql('approx')}
     """
 
 
@@ -609,7 +585,10 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.operators.similarity import matryoshka_knn_recall
 
     return matryoshka_knn_recall(
-        table(spark, sf_dir, "embeddings"), prefix_dim=16, query_mod=97, k=3
+        table(spark, sf_dir, "embeddings"),
+        prefix_dim=_MATRYOSHKA_DIM,
+        query_mod=97,
+        k=_RECALL_K,
     )
 
 
@@ -722,8 +701,6 @@ def _ivf_recall_curve_sql(probes=(1, 2, 4), k: int = 3) -> str:
            " * sqrt(list_dot_product(q.qe, q.qe)))")
     cos_exact = ("list_dot_product(c.e, q.qe) / (sqrt(list_dot_product(c.e, c.e))"
                  " * sqrt(list_dot_product(q.qe, q.qe)))")
-    dists = ", ".join(f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS))
-    least = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
     case = " ".join(f"WHEN d{j} = mind THEN {j}" for j in range(N_CENTROIDS))
     qd_rows = "\n      UNION ALL\n      ".join(
         f"SELECT q_id, {j} AS cluster, {sql_centroid_dist('qe', j)} AS qdist FROM q"
@@ -748,8 +725,8 @@ def _ivf_recall_curve_sql(probes=(1, 2, 4), k: int = 3) -> str:
         )
     return f"""
     WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    d AS (SELECT vec_id, e, {dists} FROM base),
-    m AS (SELECT vec_id, e, {least} AS mind, * EXCLUDE (vec_id, e) FROM d),
+    d AS (SELECT vec_id, e, {_IVF_DISTS} FROM base),
+    m AS (SELECT vec_id, e, {_IVF_LEAST} AS mind, * EXCLUDE (vec_id, e) FROM d),
     a AS (SELECT vec_id, e, CASE {case} END AS cluster FROM m),
     q AS (SELECT vec_id AS q_id, e AS qe FROM base WHERE vec_id % 97 = 0),
     qd AS (
@@ -1330,19 +1307,14 @@ _IVF_BATCH_MOD = 10  # batch = vec_id % 10 == 7 (the "newly arrived" tenth)
 
 
 def _ivf_incr_sql() -> str:
-    dists = ", ".join(
-        f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS)
-    )
-    least = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
-    case = " ".join(f"WHEN d{j} = m THEN {j}" for j in range(N_CENTROIDS))
     return f"""
     WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS e,
              CASE WHEN vec_id % {_IVF_BATCH_MOD} = 7 THEN 1 ELSE 0 END AS is_new
       FROM embeddings),
-    d AS (SELECT vec_id, e, is_new, {dists} FROM base),
-    m AS (SELECT vec_id, e, is_new, {least} AS m, * FROM d),
-    assigned AS (SELECT vec_id, e, is_new, CASE {case} END AS cluster FROM m),
+    d AS (SELECT vec_id, e, is_new, {_IVF_DISTS} FROM base),
+    m AS (SELECT vec_id, e, is_new, {_IVF_LEAST} AS m, * FROM d),
+    assigned AS (SELECT vec_id, e, is_new, CASE {_IVF_CASE} END AS cluster FROM m),
     pos AS (
       SELECT cluster, is_new,
              generate_subscripts(e, 1) AS p, unnest(e) AS v
@@ -1491,10 +1463,6 @@ def sim_quantize_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kmeans_converged_sql(rounds: int = 3) -> str:
     from ug_dwh_etl_spark.operators.similarity import EMBED_DIM
 
-    dists = ", ".join(
-        f"{sql_centroid_dist('e', j)} AS d{j}" for j in range(N_CENTROIDS)
-    )
-    least = f"LEAST({', '.join(f'd{j}' for j in range(N_CENTROIDS))})"
     case = " ".join(f"WHEN d{j} = mind THEN {j}" for j in range(N_CENTROIDS))
     avgs = ", ".join(
         f"ROUND(AVG(e[{k + 1}]), 6) AS a{k}" for k in range(EMBED_DIM)
@@ -1502,8 +1470,8 @@ def _kmeans_converged_sql(rounds: int = 3) -> str:
     clist = "list_value(" + ", ".join(f"a{k}" for k in range(EMBED_DIM)) + ")"
     parts = [
         "base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)",
-        f"d0 AS (SELECT vec_id, e, {dists} FROM base)",
-        f"m0 AS (SELECT vec_id, e, {least} AS mind, * EXCLUDE (vec_id, e) FROM d0)",
+        f"d0 AS (SELECT vec_id, e, {_IVF_DISTS} FROM base)",
+        f"m0 AS (SELECT vec_id, e, {_IVF_LEAST} AS mind, * EXCLUDE (vec_id, e) FROM d0)",
         f"a0 AS MATERIALIZED (SELECT vec_id, e, CASE {case} END AS cluster FROM m0)",
     ]
     stats = []

@@ -8,6 +8,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ug_dwh_etl_spark.queries.events import (
+    ATTRIBUTION_LAST_TOUCH_ORACLE,
+    HOURLY_ZSCORE_SELECT,
+    SESSIONIZE_ORACLE,
+    SLIDING_2H_ORACLE,
+    TRANSITION_MATRIX_ORACLE,
+)
 from ug_dwh_etl_spark.queries.registry import register
 from ug_dwh_etl_spark.streaming.jobs import (
     stream_dedup_events,
@@ -48,27 +55,17 @@ def q_stream_aqp_sampled_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_aqp_sampled_revenue(spark, sf_dir)
 
 
-@register(
-    "stream_ohlc_hourly",
-    """
-    WITH w AS (
-      SELECT date_trunc('hour', ts) AS h, value,
-             row_number() OVER (PARTITION BY date_trunc('hour', ts)
-                                ORDER BY ts, event_id) AS rn_a,
-             row_number() OVER (PARTITION BY date_trunc('hour', ts)
-                                ORDER BY ts DESC, event_id DESC) AS rn_d
-      FROM events)
-    SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS window_start,
-           MAX(CASE WHEN rn_a = 1 THEN value END) AS open,
-           MAX(value) AS high,
-           MIN(value) AS low,
-           MAX(CASE WHEN rn_d = 1 THEN value END) AS close,
-           CAST(COUNT(*) AS BIGINT) AS volume,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE)
-             AS total_value
-    FROM w GROUP BY h
-    """,
-)
+def _ohlc_oracle() -> str:
+    from ug_dwh_etl_spark.queries.mlfit import OHLC_BARS_SQL, OHLC_RANKED_CTE
+
+    return f"""
+        WITH {OHLC_RANKED_CTE}
+        SELECT strftime(h, '%Y-%m-%d %H:%M:%S') AS window_start,
+               {OHLC_BARS_SQL}
+        """
+
+
+@register("stream_ohlc_hourly", _ohlc_oracle())
 def q_stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # min_by/max_by on the (ts, event_id) struct replace the batch
     # twin's row_number picks — order-insensitive, so any micro-batch
@@ -76,21 +73,7 @@ def q_stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_ohlc_hourly(spark, sf_dir)
 
 
-@register(
-    "stream_sessionize",
-    """
-    WITH flagged AS (
-      SELECT user_id, ts,
-             CASE WHEN LAG(ts) OVER w IS NULL
-                    OR date_diff('second', LAG(ts) OVER w, ts) > 1800
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
-    FROM flagged GROUP BY user_id
-    """,
-)
+@register("stream_sessionize", SESSIONIZE_ORACLE)
 def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session_window merges on a >30min gap; LAG uses >1800s — identical
     # boundaries, so streaming session counts equal the batch window SQL.
@@ -223,20 +206,7 @@ def q_stream_user_median_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             return stream_user_median(spark, sf_dir)
 
 
-@register(
-    "stream_sliding_2h",
-    """
-    WITH expanded AS (
-      SELECT date_trunc('hour', ts) AS ws, event_type, value FROM events
-      UNION ALL
-      SELECT date_trunc('hour', ts) - INTERVAL 1 HOUR AS ws, event_type, value
-      FROM events)
-    SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS window_start, event_type,
-           COUNT(*) AS n,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
-    FROM expanded GROUP BY window_start, event_type
-    """,
-)
+@register("stream_sliding_2h", SLIDING_2H_ORACLE)
 def q_stream_sliding_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.streaming.jobs import stream_sliding_counts
 
@@ -304,7 +274,7 @@ def q_stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_hourly_anomaly",
-    """
+    f"""
     WITH hourly AS (
       SELECT date_trunc('hour', ts) AS hr, hour(ts) AS hod,
              CAST(COUNT(*) AS BIGINT) AS n
@@ -313,13 +283,7 @@ def q_stream_corpus_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT hod, AVG(n) AS mu,
              COALESCE(STDDEV_SAMP(n), 0.0) AS sigma
       FROM hourly GROUP BY hod)
-    SELECT strftime(h.hr, '%Y-%m-%d %H:%M:%S') AS hour_start,
-           h.n,
-           ROUND(b.mu, 6) AS expected,
-           ROUND(CASE WHEN b.sigma > 0 THEN (h.n - b.mu) / b.sigma END, 6) AS zscore,
-           COALESCE(b.sigma > 0 AND ABS((h.n - b.mu) / b.sigma) > 2.0, FALSE)
-             AS is_anomaly
-    FROM hourly h JOIN baseline b USING (hod)
+    {HOURLY_ZSCORE_SELECT}
     """,
 )
 def q_stream_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -446,30 +410,7 @@ def q_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_stream_left_outer_join(spark, sf_dir)
 
 
-@register(
-    "stream_attribution_last_touch",
-    """
-    WITH seq AS (
-      SELECT user_id, ts, event_id, event_type, value,
-             last_value(CASE WHEN event_type <> 'purchase'
-                             THEN ts END IGNORE NULLS)
-               OVER w AS touch_ts,
-             last_value(CASE WHEN event_type <> 'purchase'
-                             THEN event_type END IGNORE NULLS)
-               OVER w AS touch_type
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-    )
-    SELECT CASE WHEN touch_ts IS NOT NULL
-                     AND touch_ts >= ts - INTERVAL 7 DAY
-                THEN touch_type ELSE 'direct' END AS channel,
-           COUNT(*) AS n_purchases,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(18,2))), 2) AS DOUBLE) AS total_value
-    FROM seq WHERE event_type = 'purchase'
-    GROUP BY channel
-    """,
-)
+@register("stream_attribution_last_touch", ATTRIBUTION_LAST_TOUCH_ORACLE)
 def q_stream_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stateful streaming twin of events_attribution_last_touch — SAME
     # oracle; state per user is one (ts, type) touch + the enforced
@@ -479,22 +420,7 @@ def q_stream_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFra
     return stream_attribution_last_touch(spark, sf_dir)
 
 
-@register(
-    "stream_transition_matrix",
-    """
-    WITH seq AS (
-      SELECT user_id, event_type,
-             LEAD(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS next_type
-      FROM events)
-    SELECT event_type AS from_type, next_type AS to_type,
-           CAST(COUNT(*) AS BIGINT) AS n,
-           ROUND(COUNT(*)::DOUBLE / SUM(COUNT(*)) OVER (PARTITION BY event_type), 6)
-             AS prob
-    FROM seq WHERE next_type IS NOT NULL
-    GROUP BY event_type, next_type
-    """,
-)
+@register("stream_transition_matrix", TRANSITION_MATRIX_ORACLE)
 def q_stream_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stateful streaming twin of events_transition_matrix — SAME oracle;
     # state per user is one event type + the order high-watermark, each
@@ -526,11 +452,11 @@ def q_stream_kmv_viewers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_kmv_viewers(spark, sf_dir)
 
 
-@register(
-    "stream_dq_benford",
-    # same oracle as the batch twin dq_benford_totalprice — streaming
-    # result must equal the batch SQL (SURVEY.md §5 step 2)
-    """
+# The first-digit audit of order totals, also the oracle of the batch
+# twin dq_benford_totalprice (defined here, in the first module of the
+# registry to use it): streaming result must equal the batch SQL
+# (SURVEY.md §5 step 2).
+BENFORD_ORACLE = """
     WITH digits AS (
       SELECT substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1)::INT
                AS digit
@@ -541,8 +467,10 @@ def q_stream_kmv_viewers(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(n * 1.0 / t, 6) AS observed_share,
            ROUND(ln(1 + 1.0 / digit) / ln(10), 6) AS benford_share
     FROM obs, tot
-    """,
-)
+    """
+
+
+@register("stream_dq_benford", BENFORD_ORACLE)
 def q_stream_dq_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ug_dwh_etl_spark.streaming.jobs import stream_benford_totalprice
 

@@ -829,7 +829,12 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     that upsamples low-resource languages. One tiny groupBy(lang) plus
     two scalar broadcasts; corpus-size-linear with a 5-row tail."""
     docs = table(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
+    return mixture_weights(docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs")))
+
+
+def mixture_weights(counts: DataFrame) -> DataFrame:
+    """Each language's raw share and temperature-scaled sampling weight
+    from its document count ``(lang, n_docs)``."""
     tot = counts.agg(F.sum("n_docs").alias("total"))
     powed = counts.crossJoin(F.broadcast(tot)).withColumn(
         "p_alpha", F.pow(F.col("n_docs").cast("double") / F.col("total"), _MIX_ALPHA)
@@ -1095,10 +1100,10 @@ _BM25_K1 = 1.2
 _BM25_B = 0.75
 
 
-@register(
-    "text_bm25_topdocs",
-    f"""
-    WITH terms AS (
+# The probe-term postings (``tf``) with document lengths (``dl``) and
+# corpus stats, and the BM25 score summed over a document's probe terms:
+# shared by the top-docs and the nDCG oracles.
+_BM25_POSTINGS_CTES = f"""terms AS (
       SELECT doc_id, term
       FROM (SELECT doc_id,
                    unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
@@ -1112,44 +1117,16 @@ _BM25_B = 0.75
       SELECT doc_id, term, COUNT(*) AS tf FROM terms
       WHERE term IN {_BM25_PROBE!r}
       GROUP BY doc_id, term
-    ),
-    df AS (
-      SELECT term, COUNT(DISTINCT doc_id) AS df FROM terms
-      WHERE term IN {_BM25_PROBE!r}
-      GROUP BY term
-    ),
-    scored AS (
-      SELECT tf.doc_id,
-             SUM(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
+    )"""
+_BM25_SCORE_SQL = f"""SUM(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
                  * tf * ({_BM25_K1} + 1.0)
                  / (tf + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * dl / avgdl)))
-               AS s
-      FROM tf
-      JOIN df USING (term)
-      JOIN dl USING (doc_id)
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
-    )
-    SELECT doc_id, bm25, rnk FROM (
-      SELECT doc_id, ROUND(s, 4) AS bm25,
-             ROW_NUMBER() OVER (ORDER BY ROUND(s, 4) DESC, doc_id) AS rnk
-      FROM scored)
-    WHERE rnk <= 20
-    """,
-)
-def text_bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 retrieval (k1=1.2, b=0.75) for a fixed probe query over the
-    corpus, top 20 docs with a deterministic (rounded-score, doc_id)
-    tiebreak. Scale shape: the probe-term filter lands BEFORE both
-    groupBys, so the tf and df relations are proportional to the probe
-    terms' postings, not the corpus; df (|probe| rows) and the 1-row
-    N/avgdl aggregate join in as broadcasts; the only full-corpus passes
-    are the tokenize + per-doc length count, which is the same single
-    narrow aggregation every BM25 index build pays. No Python, no UDFs —
-    the scoring expression is whole-stage-codegen arithmetic. The global
-    top-20 goes through orderBy+limit (TakeOrderedAndProject — per-
-    partition partial top-k, no all-rows single-partition window); the
-    rank window then runs over only the 20 survivors."""
+               AS s"""
+
+
+def _bm25_scores(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """``(scored, tf)``: each document's BM25 score ``s`` for the probe
+    query, and the probe-term postings ``(doc_id, term, tf)`` it sums."""
     docs = table(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id",
@@ -1178,6 +1155,48 @@ def text_bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum(idf * F.col("tf") * (_BM25_K1 + 1.0) / denom).alias("s"))
     )
+    return scored, tf
+
+
+@register(
+    "text_bm25_topdocs",
+    f"""
+    WITH {_BM25_POSTINGS_CTES},
+    df AS (
+      SELECT term, COUNT(DISTINCT doc_id) AS df FROM terms
+      WHERE term IN {_BM25_PROBE!r}
+      GROUP BY term
+    ),
+    scored AS (
+      SELECT tf.doc_id,
+             {_BM25_SCORE_SQL}
+      FROM tf
+      JOIN df USING (term)
+      JOIN dl USING (doc_id)
+      CROSS JOIN stats
+      GROUP BY tf.doc_id
+    )
+    SELECT doc_id, bm25, rnk FROM (
+      SELECT doc_id, ROUND(s, 4) AS bm25,
+             ROW_NUMBER() OVER (ORDER BY ROUND(s, 4) DESC, doc_id) AS rnk
+      FROM scored)
+    WHERE rnk <= 20
+    """,
+)
+def text_bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 retrieval (k1=1.2, b=0.75) for a fixed probe query over the
+    corpus, top 20 docs with a deterministic (rounded-score, doc_id)
+    tiebreak. Scale shape: the probe-term filter lands BEFORE both
+    groupBys, so the tf and df relations are proportional to the probe
+    terms' postings, not the corpus; df (|probe| rows) and the 1-row
+    N/avgdl aggregate join in as broadcasts; the only full-corpus passes
+    are the tokenize + per-doc length count, which is the same single
+    narrow aggregation every BM25 index build pays. No Python, no UDFs —
+    the scoring expression is whole-stage-codegen arithmetic. The global
+    top-20 goes through orderBy+limit (TakeOrderedAndProject — per-
+    partition partial top-k, no all-rows single-partition window); the
+    rank window then runs over only the 20 survivors."""
+    scored, _ = _bm25_scores(spark, sf_dir)
     from pyspark.sql import Window
 
     top = (
@@ -1630,7 +1649,7 @@ def text_code_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd array intersections, no UDFs."""
     from pyspark.sql import functions as FN
 
-    from ug_dwh_etl_spark.operators.textstats import STOPWORDS, _stop_filter_spark
+    from ug_dwh_etl_spark.operators.textstats import stopword_lang
 
     docs = table(spark, sf_dir, "documents")
     nz = docs.select("doc_id", H.tokens("text").alias("t")).filter(
@@ -1641,20 +1660,10 @@ def text_code_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.expr("sequence(1, size(t), 16)")).alias("s"),
         "t",
     ).select("doc_id", F.expr("slice(t, s, 16)").alias("ct"))
-    hits = {lang: _stop_filter_spark("ct", words) for lang, words in STOPWORDS.items()}
-    lang = (
-        F.when(
-            (hits["en"] >= hits["de"]) & (hits["en"] >= hits["fr"])
-            & (hits["en"] >= hits["es"]) & (hits["en"] > 0),
-            F.lit("en"),
-        )
-        .when((hits["de"] >= hits["fr"]) & (hits["de"] >= hits["es"]) & (hits["de"] > 0), F.lit("de"))
-        .when((hits["fr"] >= hits["es"]) & (hits["fr"] > 0), F.lit("fr"))
-        .when(hits["es"] > 0, F.lit("es"))
-        .otherwise(F.lit("und"))
-    )
-    per = chunks.select("doc_id", lang.alias("lang")).groupBy("doc_id", "lang").agg(
-        F.count(F.lit(1)).alias("c")
+    per = (
+        chunks.select("doc_id", stopword_lang("ct").alias("lang"))
+        .groupBy("doc_id", "lang")
+        .agg(F.count(F.lit(1)).alias("c"))
     )
     return per.groupBy("doc_id").agg(
         F.sum("c").alias("n_chunks"),
@@ -1757,29 +1766,12 @@ def text_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_ndcg_bm25",
     f"""
-    WITH terms AS (
-      SELECT doc_id, term
-      FROM (SELECT doc_id,
-                   unnest(string_split_regex(lower(text), '[^a-z]+')) AS term
-            FROM documents)
-      WHERE term <> ''
-    ),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM terms GROUP BY doc_id),
-    stats AS (SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-                     (SELECT AVG(dl) FROM dl) AS avgdl),
-    tf AS (
-      SELECT doc_id, term, COUNT(*) AS tf FROM terms
-      WHERE term IN {_BM25_PROBE!r}
-      GROUP BY doc_id, term
-    ),
+    WITH {_BM25_POSTINGS_CTES},
     df AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM terms
            WHERE term IN {_BM25_PROBE!r} GROUP BY term),
     scored AS (
       SELECT tf.doc_id,
-             SUM(LN((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-                 * tf * ({_BM25_K1} + 1.0)
-                 / (tf + {_BM25_K1} * (1.0 - {_BM25_B} + {_BM25_B} * dl / avgdl)))
-               AS s
+             {_BM25_SCORE_SQL}
       FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
       GROUP BY tf.doc_id),
     rel AS (SELECT doc_id, COUNT(*) AS rel FROM tf GROUP BY doc_id),
@@ -1812,28 +1804,7 @@ def text_ndcg_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     relations — eval cost is index-build cost, not corpus-squared."""
     from pyspark.sql import Window
 
-    docs = table(spark, sf_dir, "documents")
-    terms = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("term")
-    ).filter(F.col("term") != "")
-    dl = terms.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    stats = docs.agg(F.count(F.lit(1)).alias("n_docs")).crossJoin(
-        dl.agg(F.avg("dl").alias("avgdl"))
-    )
-    probed = terms.filter(F.col("term").isin(*_BM25_PROBE))
-    tf = probed.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    denom = F.col("tf") + _BM25_K1 * (
-        1.0 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl")
-    )
-    scored = (
-        tf.join(F.broadcast(df), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * F.col("tf") * (_BM25_K1 + 1.0) / denom).alias("s"))
-    )
+    scored, tf = _bm25_scores(spark, sf_dir)
     rel = tf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("rel"))
     top = (
         scored.select("doc_id", F.round("s", 4).alias("r4"))

@@ -45,6 +45,20 @@ def _checkpoint_dir(prefix: str) -> tempfile.TemporaryDirectory:
     return tempfile.TemporaryDirectory(prefix=prefix, ignore_cleanup_errors=True)
 
 
+def _record_batch_plan(df: DataFrame) -> None:
+    """Expose a ``foreachBatch`` handler's micro-batch plan to the plan
+    audit as ``LAST_BATCH_PLAN``: foreachBatch bypasses
+    ``run_stream_to_memory``'s ``StreamingQuery.explain`` capture."""
+    global LAST_BATCH_PLAN
+    try:
+        LAST_BATCH_PLAN = (
+            "== Physical Plan ==\n"
+            + df._jdf.queryExecution().executedPlan().toString()
+        )
+    except Exception:
+        pass
+
+
 def stream_table_source(
     spark: SparkSession, sf_dir: str, name: str, schema: StructType
 ) -> DataFrame:
@@ -201,35 +215,13 @@ def stream_aqp_sampled_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     every micro-batch, which is exactly how an AQP dashboard over a
     100 TB/day feed stays interactive. Complete-mode global aggregate
     over ~5 priority keys: state is keys-sized, no watermark needed."""
-    from ug_dwh_etl_spark.operators.hashing import md5_long
-    from ug_dwh_etl_spark.queries.mlfit import _AQP_DENOM, _AQP_RATE
+    from ug_dwh_etl_spark.queries.mlfit import aqp_estimates, aqp_sample_sums
 
-    f = _AQP_RATE
     schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
     orders = stream_table_source(spark, sf_dir, "orders", schema)
-    u = md5_long(
-        F.concat(F.col("o_orderkey").cast("string"), F.lit("|aqp"))
-    ) / F.lit(_AQP_DENOM)
-    # decimal-sum parity rule, same as the batch twin: exact DECIMAL
-    # sums are arrival-order-independent, which is doubly load-bearing
-    # here — micro-batch fold order differs from any batch plan
-    x = F.col("o_totalprice").cast("decimal(18,2)")
-    s = orders.filter(u < f).select("o_orderpriority", x.alias("x"))
-    agg = s.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_sample"),
-        F.sum("x").cast("double").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("double").alias("sxx"),
-    )
-    out = run_stream_to_memory(agg, "complete")
-    se = F.sqrt((1.0 - f) / (f * f) * F.col("sxx"))
-    return out.select(
-        "o_orderpriority",
-        "n_sample",
-        F.round(F.col("n_sample") / f, 2).alias("est_count"),
-        F.round(F.col("sx") / f, 2).alias("est_revenue"),
-        F.round(se, 2).alias("se_revenue"),
-        F.round(F.lit(1.96) * se / (F.col("sx") / f), 6).alias("rel_ci95"),
-    )
+    # exact DECIMAL sums are arrival-order-independent, which is doubly
+    # load-bearing here: micro-batch fold order differs from any batch plan
+    return aqp_estimates(run_stream_to_memory(aqp_sample_sums(orders), "complete"))
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,18 +303,10 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_to_memory(agg, "complete")
 
 
-def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join with watermarks on BOTH sides and a
-    time-range join condition — the attribution shape (view → purchase
-    by the same user within 1 hour).
-
-    State bounds (the whole point at 100 TB/day): the range condition
-    plus both watermarks lets Spark evict view-side state older than
-    (watermark + 1 hour) and purchase-side state older than the
-    watermark, so the join state is a sliding 3-hour slice of each
-    stream, not unbounded history. The joined output is appended to the
-    sink as matches become final; the per-user rollup happens batch-side
-    on the materialized appends."""
+def _view_purchase_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The attribution join of the stream-stream join family: each view
+    stream row joined ``how`` to the same user's purchases within the
+    hour after it, both streams watermarked at 2 hours."""
     views = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -335,14 +319,51 @@ def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFram
         .select(F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts"))
         .withWatermark("purchase_ts", "2 hours")
     )
-    joined = views.join(
+    return views.join(
         purchases,
         (views.user_id == purchases.p_user_id)
         & (purchases.purchase_ts >= views.view_ts)
         & (purchases.purchase_ts <= views.view_ts + F.expr("INTERVAL 1 HOUR")),
-        "inner",
+        how,
     )
-    out = run_stream_to_memory(joined, "append")
+
+
+def _join_emit_cutoff(spark: SparkSession, sf_dir: str):
+    """The outer joins' emission bound: 4 hours before the last
+    timestamp of the side whose events end first, one static scalar
+    read from the batch fixture before the stream starts. The final
+    global watermark is the MIN across both sides' maxima minus the 2h
+    delay; deriving the cutoff from the global max would silently
+    under-emit NULL verdicts whenever the lagging side trails by more
+    than the slack."""
+    from ug_dwh_etl_spark.queries.registry import read_events
+
+    return (
+        read_events(spark, sf_dir)
+        .agg(
+            F.least(
+                F.max(F.when(F.col("event_type") == "view", F.col("ts"))),
+                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
+            ).alias("m")
+        )
+        .selectExpr("m - INTERVAL 4 HOURS AS c")
+        .first()["c"]
+    )
+
+
+def stream_stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join with watermarks on BOTH sides and a
+    time-range join condition — the attribution shape (view → purchase
+    by the same user within 1 hour).
+
+    State bounds (the whole point at 100 TB/day): the range condition
+    plus both watermarks lets Spark evict view-side state older than
+    (watermark + 1 hour) and purchase-side state older than the
+    watermark, so the join state is a sliding 3-hour slice of each
+    stream, not unbounded history. The joined output is appended to the
+    sink as matches become final; the per-user rollup happens batch-side
+    on the materialized appends."""
+    out = run_stream_to_memory(_view_purchase_join(spark, sf_dir, "inner"), "append")
     return out.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_attributed"))
 
 
@@ -383,24 +404,12 @@ def stream_language_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-corpus-to-date number), with the temperature weighting applied
     to the final 5-row result batch-side. The dashboard a data-mixing
     team watches during a multi-day ingest."""
-    import pyspark.sql.functions as F  # noqa: F811
+    from ug_dwh_etl_spark.queries.textstats import mixture_weights
 
     schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     raw = stream_table_source(spark, sf_dir, "documents", schema)
     counts = raw.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
-    out = run_stream_to_memory(counts, "complete")
-    alpha = 0.3
-    tot = out.agg(F.sum("n_docs").alias("total"))
-    powed = out.crossJoin(F.broadcast(tot)).withColumn(
-        "p_alpha", F.pow(F.col("n_docs").cast("double") / F.col("total"), alpha)
-    )
-    z = powed.agg(F.sum("p_alpha").alias("z"))
-    return powed.crossJoin(F.broadcast(z)).select(
-        "lang",
-        "n_docs",
-        F.round(F.col("n_docs").cast("double") / F.col("total"), 6).alias("raw_share"),
-        F.round(F.col("p_alpha") / F.col("z"), 6).alias("sample_weight"),
-    )
+    return mixture_weights(run_stream_to_memory(counts, "complete"))
 
 
 def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -474,42 +483,8 @@ def stream_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     the batch fixture, computed before the stream starts."""
     import pyspark.sql.functions as F  # noqa: F811
 
-    from ug_dwh_etl_spark.queries.registry import read_events
-
-    # the final global watermark is the MIN across both sides' maxima
-    # minus the 2h delay; deriving the cutoff from the global max would
-    # silently under-emit NULL verdicts whenever the lagging side trails
-    # by more than the slack
-    ev = read_events(spark, sf_dir)
-    cutoff = (
-        ev.agg(
-            F.least(
-                F.max(F.when(F.col("event_type") == "view", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            ).alias("m")
-        )
-        .selectExpr("m - INTERVAL 4 HOURS AS c")
-        .first()["c"]
-    )
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select("user_id", F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        (views.user_id == purchases.p_user_id)
-        & (purchases.purchase_ts >= views.view_ts)
-        & (purchases.purchase_ts <= views.view_ts + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    )
+    cutoff = _join_emit_cutoff(spark, sf_dir)
+    joined = _view_purchase_join(spark, sf_dir, "left_outer")
     out = run_stream_to_memory(joined, "append")
     return (
         out.filter(F.col("view_ts") <= F.lit(cutoff))
@@ -662,16 +637,7 @@ def stream_incremental_neardup(
                     "a table sink for batches this degenerate"
                 )
             collected.extend(got)
-            # expose the real micro-batch work to the plan audit (foreachBatch
-            # bypasses run_stream_to_memory's StreamingQuery.explain capture)
-            global LAST_BATCH_PLAN
-            try:
-                LAST_BATCH_PLAN = (
-                    "== Physical Plan ==\n"
-                    + pairs._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception:
-                pass
+            _record_batch_plan(pairs)
             batch_bands.write.mode("append").parquet(bands_path)
             batch_sh.write.mode("append").parquet(sh_path)
 
@@ -831,16 +797,7 @@ def stream_cdc_count_distinct(
             .groupBy("event_type", "user_id")
             .agg(F.sum("dmult").cast("long").alias("dmult"))
         )
-        # expose the real micro-batch work to the plan audit
-        # (foreachBatch bypasses run_stream_to_memory's plan capture)
-        global LAST_BATCH_PLAN
-        try:
-            LAST_BATCH_PLAN = (
-                "== Physical Plan ==\n"
-                + delta._jdf.queryExecution().executedPlan().toString()
-            )
-        except Exception:
-            pass
+        _record_batch_plan(delta)
         delta.write.mode("append").parquet(log_path)
 
     with _checkpoint_dir("ckpt_cdc_cd_") as ckpt:
@@ -879,38 +836,8 @@ def stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame
     stream starts, same rationale as the left-outer twin."""
     import pyspark.sql.functions as F  # noqa: F811
 
-    from ug_dwh_etl_spark.queries.registry import read_events
-
-    ev = read_events(spark, sf_dir)
-    cutoff = (
-        ev.agg(
-            F.least(
-                F.max(F.when(F.col("event_type") == "view", F.col("ts"))),
-                F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-            ).alias("m")
-        )
-        .selectExpr("m - INTERVAL 4 HOURS AS c")
-        .first()["c"]
-    )
-    views = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
-        .select("user_id", F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "2 hours")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("p_user_id"), F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = views.join(
-        purchases,
-        (views.user_id == purchases.p_user_id)
-        & (purchases.purchase_ts >= views.view_ts)
-        & (purchases.purchase_ts <= views.view_ts + F.expr("INTERVAL 1 HOUR")),
-        "full_outer",
-    )
+    cutoff = _join_emit_cutoff(spark, sf_dir)
+    joined = _view_purchase_join(spark, sf_dir, "full_outer")
     out = run_stream_to_memory(joined, "append")
     bounded = out.filter(
         (F.col("view_ts").isNull() | (F.col("view_ts") <= F.lit(cutoff)))
@@ -946,14 +873,27 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     torn-read test's guarantee). At 100 TB this is the streaming
     lakehouse landing path: micro-batch appends, snapshot isolation for
     readers, no rewrite of old data."""
-    import os
 
-    import pyspark.sql.functions as F  # noqa: F811
+    def land(table, batch, batch_id):
+        table.commit_append(batch, batch_id=batch_id)
+        _record_batch_plan(batch)
+
+    return _ingest_orders(spark, sf_dir, "snap_ingest", land)
+
+
+def _ingest_orders(spark: SparkSession, sf_dir: str, name: str, land) -> DataFrame:
+    """Stream the orders fixture, staged as 8 files read one per
+    trigger, into a ``SnapshotTable`` under the scratch dir ``name``,
+    calling ``land(table, batch, batch_id)`` per micro-batch, then read
+    the table back as per-status totals. A completed ingest is kept and
+    only read back on later calls."""
+    import os
 
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
     from ug_dwh_etl_spark.queries.registry import scratch_dir
+    from ug_dwh_etl_spark.queries.scale import _status_totals
 
-    work = scratch_dir("snap_ingest", sf_dir)
+    work = scratch_dir(name, sf_dir)
     src = os.path.join(work, "src")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     if not os.path.exists(os.path.join(src, "_SUCCESS")):
@@ -983,40 +923,18 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-
-        def land(batch, batch_id):
-            table.commit_append(batch, batch_id=batch_id)
-            # expose the micro-batch work to the plan audit (foreachBatch
-            # bypasses run_stream_to_memory's explain capture — the
-            # incremental-neardup precedent above)
-            global LAST_BATCH_PLAN
-            try:
-                LAST_BATCH_PLAN = (
-                    "== Physical Plan ==\n"
-                    + batch._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception:
-                pass
-
-        with _checkpoint_dir("ckpt_snap_ingest_") as ckpt:
+        with _checkpoint_dir(f"ckpt_{name}_") as ckpt:
             (
-                stream.writeStream.foreachBatch(land)
+                stream.writeStream.foreachBatch(
+                    lambda batch, batch_id: land(table, batch, batch_id)
+                )
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
                 .awaitTermination()
             )
         open(done_marker, "a").close()
-    return (
-        table.read_as_of(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
+    return _status_totals(table.read_as_of(spark))
 
 
 def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1137,14 +1055,7 @@ def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                         (~F.col("_dropped")).alias("kept"),
                     )
                 )
-                global LAST_BATCH_PLAN
-                try:
-                    LAST_BATCH_PLAN = (
-                        "== Physical Plan ==\n"
-                        + result._jdf.queryExecution().executedPlan().toString()
-                    )
-                except Exception:
-                    pass
+                _record_batch_plan(result)
                 result.write.mode("append").parquet(out)
 
             stream = (
@@ -1184,101 +1095,49 @@ def stream_wap_gated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate-then-abort cron (`sf_html_data.py:95-105`) upgraded to a
     landing path where 'abort' costs a pointer delete instead of a
     restore."""
-    import os
-
-    import pyspark.sql.functions as F  # noqa: F811
-
     from ug_dwh_etl_spark.operators.quality import expect
-    from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
-    from ug_dwh_etl_spark.queries.registry import scratch_dir
 
-    work = scratch_dir("snap_wap_ingest", sf_dir)
-    src = os.path.join(work, "src")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    if not os.path.exists(os.path.join(src, "_SUCCESS")):
-        orders.repartition(8).write.mode("overwrite").parquet(src)
-    table_dir = os.path.join(work, "table")
-    # same wipe-partial-output discipline as stream_snapshot_ingest: a
-    # retry after a mid-stream crash restages from a fresh checkpoint,
-    # so any partially published table is wiped first
-    done_marker = os.path.join(work, "_INGEST_DONE")
-    if not os.path.exists(done_marker):
-        import shutil
-
-        shutil.rmtree(table_dir, ignore_errors=True)
-    table = SnapshotTable(table_dir)
     junk = F.col("o_orderdate") >= "1997-01-01"
-    if not os.path.exists(done_marker):
-        stream = (
-            spark.readStream.schema(orders.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+
+    def land(table, batch, batch_id):
+        base = table.latest_snapshot_id() or 0
+        table.stage_append(batch, branch="audit", batch_id=batch_id)
+        if table.branch_head("audit") is None:
+            # batch_id already in the published lineage — a
+            # same-checkpoint replay; nothing staged, nothing to do
+            return
+        spark_b = batch.sparkSession
+
+        def staged():
+            # audit the INCREMENT, not the table: at 100 TB the gate
+            # must cost O(batch), and the branch ids are a contiguous
+            # append-only range above the published head
+            return table.read_incremental(
+                spark_b, from_id=base, to_id=table.branch_head("audit")
+            )
+
+        ok = expect(
+            staged(),
+            junk,
+            "freshness",
+            f"batch {batch_id} carries post-1996 rows",
         )
-
-        def land(batch, batch_id):
-            base = table.latest_snapshot_id() or 0
-            table.stage_append(batch, branch="audit", batch_id=batch_id)
-            if table.branch_head("audit") is None:
-                # batch_id already in the published lineage — a
-                # same-checkpoint replay; nothing staged, nothing to do
-                return
-            spark_b = batch.sparkSession
-
-            def staged():
-                # audit the INCREMENT, not the table: at 100 TB the gate
-                # must cost O(batch), and the branch ids are a contiguous
-                # append-only range above the published head
-                return table.read_incremental(
-                    spark_b, from_id=base, to_id=table.branch_head("audit")
-                )
-
-            ok = expect(
+        if not ok:
+            table.drop_branch("audit")
+            table.stage_append(
+                batch.filter(~junk), branch="audit", batch_id=batch_id
+            )
+            expect(
                 staged(),
                 junk,
                 "freshness",
-                f"batch {batch_id} carries post-1996 rows",
+                f"batch {batch_id} still dirty after remediation",
+                fail=True,
             )
-            if not ok:
-                table.drop_branch("audit")
-                table.stage_append(
-                    batch.filter(~junk), branch="audit", batch_id=batch_id
-                )
-                expect(
-                    staged(),
-                    junk,
-                    "freshness",
-                    f"batch {batch_id} still dirty after remediation",
-                    fail=True,
-                )
-            table.publish_branch("audit")
-            global LAST_BATCH_PLAN
-            try:
-                LAST_BATCH_PLAN = (
-                    "== Physical Plan ==\n"
-                    + batch._jdf.queryExecution().executedPlan().toString()
-                )
-            except Exception:
-                pass
+        table.publish_branch("audit")
+        _record_batch_plan(batch)
 
-        with _checkpoint_dir("ckpt_wap_ingest_") as ckpt:
-            (
-                stream.writeStream.foreachBatch(land)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        open(done_marker, "a").close()
-    return (
-        table.read_as_of(spark)
-        .groupBy("o_orderstatus")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-            F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
-            .cast("double")
-            .alias("total_price"),
-        )
-    )
+    return _ingest_orders(spark, sf_dir, "snap_wap_ingest", land)
 
 
 def stream_hll_event_ids(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -59,6 +59,14 @@ def _update_user_totals(
 ) -> Iterator[pd.DataFrame]:
     (user_id,) = key
     n, cents = state.get if state.exists else (0, 0)
+    yield from _fold_user_totals(user_id, n, cents, batches, state)
+
+
+def _fold_user_totals(
+    user_id: int, n: int, cents: int, batches: Iterable[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    """Fold a user's micro-batches into the running (count, cents) state
+    from ``(n, cents)`` and emit the new cumulative row."""
     for batch in batches:
         n += len(batch)
         cents += int(batch["value"].mul(100).round().sum())
@@ -68,22 +76,34 @@ def _update_user_totals(
     )
 
 
-def stream_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running (count, sum) per user via the custom state op; the final
-    max-per-user equals the batch aggregate exactly."""
-    ev = read_events_stream(spark, sf_dir).select("user_id", "value")
-    updated = ev.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
+def _final_totals(out: DataFrame) -> DataFrame:
+    """Each user's totals from a stream of cumulative rows: the largest
+    (latest) running count and value."""
+    return out.groupBy("user_id").agg(
+        F.max("n_events_cum").alias("n_events"),
+        F.round(F.max("total_value_cum"), 2).alias("total_value"),
+    )
+
+
+def _apply_user_totals(ev: DataFrame, update) -> DataFrame:
+    """``update`` as the per-user ``applyInPandasWithState`` operator over
+    the ``(user_id, value)`` stream ``ev``, in update mode."""
+    return ev.groupBy("user_id").applyInPandasWithState(
+        update,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def stream_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running (count, sum) per user via the custom state op; the final
+    max-per-user equals the batch aggregate exactly."""
+    ev = read_events_stream(spark, sf_dir).select("user_id", "value")
+    updated = _apply_user_totals(ev, _update_user_totals)
     out = run_stream_to_memory(updated, "update")
-    return out.groupBy("user_id").agg(
-        F.max("n_events_cum").alias("n_events"),
-        F.round(F.max("total_value_cum"), 2).alias("total_value"),
-    )
+    return _final_totals(out)
 
 
 # --- transformWithStateInPandas (the Spark 4 successor API) --------------------
@@ -139,10 +159,7 @@ def stream_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="None",
     )
     out = _with_rocksdb(spark, lambda: run_stream_to_memory(updated, "update"))
-    return out.groupBy("user_id").agg(
-        F.max("n_events_cum").alias("n_events"),
-        F.round(F.max("total_value_cum"), 2).alias("total_value"),
-    )
+    return _final_totals(out)
 
 
 # --- transformWithStateInPandas MAP STATE: per-user event-type counters --------
@@ -1298,10 +1315,7 @@ def stream_user_totals_ttl_tws(
     out = _with_rocksdb(
         spark, lambda: _run_stream_drain_then_stop(updated, "update")
     )
-    return out.groupBy("user_id").agg(
-        F.max("n_events_cum").alias("n_events"),
-        F.round(F.max("total_value_cum"), 2).alias("total_value"),
-    )
+    return _final_totals(out)
 
 
 # --- transformWithState INITIAL STATE: warehouse -> stream handoff ------------
@@ -1382,10 +1396,7 @@ def stream_user_totals_bootstrap_tws(
         initialState=_bootstrap_totals(spark, sf_dir).groupBy("user_id"),
     )
     out = _with_rocksdb(spark, lambda: run_stream_to_memory(updated, "update"))
-    return out.groupBy("user_id").agg(
-        F.max("n_events_cum").alias("n_events"),
-        F.round(F.max("total_value_cum"), 2).alias("total_value"),
-    )
+    return _final_totals(out)
 
 
 def stream_user_totals_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1406,30 +1417,11 @@ def stream_user_totals_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             n, cents = state.get
         else:
             n, cents = bseeds.value.get(user_id, (0, 0))
-        for batch in batches:
-            n += len(batch)
-            cents += int(batch["value"].mul(100).round().sum())
-        state.update((n, cents))
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events_cum": [n],
-                "total_value_cum": [cents / 100.0],
-            }
-        )
+        yield from _fold_user_totals(user_id, n, cents, batches, state)
 
     ev = read_events_stream(spark, sf_dir).filter(
         F.col("event_id") % 3 == 0
     ).select("user_id", "value")
-    updated = ev.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    updated = _apply_user_totals(ev, update)
     out = run_stream_to_memory(updated, "update")
-    return out.groupBy("user_id").agg(
-        F.max("n_events_cum").alias("n_events"),
-        F.round(F.max("total_value_cum"), 2).alias("total_value"),
-    )
+    return _final_totals(out)
