@@ -61,7 +61,8 @@ def _shingle_overlap_ctes(sets: str) -> str:
 _CAPPED_SHINGLES_CTE = """capped AS (SELECT doc_id, sh FROM exh
                QUALIFY COUNT(*) OVER (PARTITION BY sh) <= 5)"""
 
-# The near-dup threshold of every Jaccard-pair oracle here.
+# The near-dup threshold of every Jaccard-pair query here, in the oracle
+# and in the Spark plan alike.
 _JACCARD_MIN = 0.5
 _JACCARD_PAIRS_SELECT = f"""SELECT id_a, id_b,
            ROUND(inter / (sa.sz + sb.sz - inter), 6) AS jaccard
@@ -191,7 +192,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ngram_jaccard_pairs(table(spark, sf_dir, "documents"), "doc_id", "text", 0.5)
+    return ngram_jaccard_pairs(
+        table(spark, sf_dir, "documents"), "doc_id", "text", _JACCARD_MIN
+    )
 
 
 # --- df-capped n-gram Jaccard (the bounded-quadratic scale path) -----------------
@@ -214,7 +217,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard becomes safe at corpus scale, not just as a post-LSH
     verifier."""
     return ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"), "doc_id", "text", 0.5, max_shingle_df=5
+        table(spark, sf_dir, "documents"), "doc_id", "text", _JACCARD_MIN, max_shingle_df=5
     )
 
 
@@ -425,7 +428,7 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.substring(F.md5(F.col(c).cast("string")), 1, 2) >= "1a"
 
     pairs = ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"), "doc_id", "text", 0.5
+        table(spark, sf_dir, "documents"), "doc_id", "text", _JACCARD_MIN
     )
     return (
         pairs.filter(is_train("id_a") != is_train("id_b"))
@@ -641,16 +644,20 @@ def lsh_corpus_index(spark: SparkSession, sf_dir: str):
         lambda: doc_shingle_hashes(spread(existing), "doc_id", "text"),
     )
     return bands, shingles
+
+
 def _candidate_overlap_ctes() -> str:
     """The LSH candidate pairs (``_lsh_pairs_ctes``), each document's
-    distinct shingle-hash count ``sizes`` and an open ``inter`` CTE
-    joining every candidate pair's shared hashes, which each caller
-    filters, groups and closes."""
+    distinct shingle hashes ``exh2`` and their count ``sizes``."""
     return f"""{_lsh_pairs_ctes()},
     exh2 AS (SELECT DISTINCT doc_id, h FROM hashed),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh2 GROUP BY doc_id),
-    inter AS (
-      SELECT p.id_a, p.id_b, COUNT(*) AS inter
+    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM exh2 GROUP BY doc_id)"""
+
+
+# The SELECT and FROM clauses of every candidate pair's shared-hash count
+# over ``_candidate_overlap_ctes``; the caller adds its own WHERE, if any,
+# and the ``GROUP BY p.id_a, p.id_b``.
+_CANDIDATE_INTER_FROM = """SELECT p.id_a, p.id_b, COUNT(*) AS inter
       FROM pairs p
         JOIN exh2 a ON a.doc_id = p.id_a
         JOIN exh2 b ON b.doc_id = p.id_b AND b.h = a.h"""
@@ -661,7 +668,9 @@ def _incremental_neardup_sql() -> str:
     # to pairs touching a batch id — exactly the new pairs a daily batch
     # introduces, which is what the incremental index-lookup must find.
     return f"""
-    WITH {_candidate_overlap_ctes()}
+    WITH {_candidate_overlap_ctes()},
+    inter AS (
+      {_CANDIDATE_INTER_FROM}
       WHERE p.id_a % 10 = 0 OR p.id_b % 10 = 0
       GROUP BY p.id_a, p.id_b)
     {_JACCARD_PAIRS_SELECT}
@@ -692,14 +701,16 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same build instead of recomputing its own per-process copy)
     corpus_index, corpus_shingles = lsh_corpus_index(spark, sf_dir)
     return incremental_neardup(
-        batch, corpus_index, corpus_shingles, "doc_id", "text", 0.5
+        batch, corpus_index, corpus_shingles, "doc_id", "text", _JACCARD_MIN
     )
 
 
 # --- candidate-restricted Jaccard verification ---------------------------------
 def _verified_pairs_sql() -> str:
     return f"""
-    WITH {_candidate_overlap_ctes()}
+    WITH {_candidate_overlap_ctes()},
+    inter AS (
+      {_CANDIDATE_INTER_FROM}
       GROUP BY p.id_a, p.id_b)
     {_JACCARD_PAIRS_SELECT}
     """
@@ -716,13 +727,15 @@ def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, "doc_id", "text")
-    return verify_pairs_jaccard(docs, pairs, "doc_id", "text", 0.5)
+    return verify_pairs_jaccard(docs, pairs, "doc_id", "text", _JACCARD_MIN)
 
 
 # --- dedup-threshold decision curve ----------------------------------------------
 def _threshold_curve_sql() -> str:
     return f"""
-    WITH {_candidate_overlap_ctes()}
+    WITH {_candidate_overlap_ctes()},
+    inter AS (
+      {_CANDIDATE_INTER_FROM}
       GROUP BY p.id_a, p.id_b),
     vp AS (
       SELECT id_a, id_b,
@@ -1393,7 +1406,9 @@ def dedup_containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- quality-aware survivorship over near-dup clusters ---------------------------
 def _quality_survivors_sql() -> str:
     return f"""
-    WITH RECURSIVE {_candidate_overlap_ctes()}
+    WITH RECURSIVE {_candidate_overlap_ctes()},
+    inter AS (
+      {_CANDIDATE_INTER_FROM}
       GROUP BY p.id_a, p.id_b),
     vp AS (
       SELECT id_a, id_b
@@ -1445,7 +1460,7 @@ def dedup_quality_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs, "doc_id", "text")
-    vp = verify_pairs_jaccard(docs, pairs, "doc_id", "text", 0.5).select(
+    vp = verify_pairs_jaccard(docs, pairs, "doc_id", "text", _JACCARD_MIN).select(
         "id_a", "id_b"
     )
     comp = connected_components_converged(vp, src="id_a", dst="id_b")

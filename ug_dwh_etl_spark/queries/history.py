@@ -695,6 +695,10 @@ _HW_A, _HW_B, _HW_G = 0.3, 0.1, 0.2
 
 # The monthly series, the classical level/trend/season seed and the
 # level/trend/season step that both Holt-Winters oracles recurse on.
+# _HW_SEED_SQL ends inside the ``seed`` CTE's SELECT list, after its ``s``
+# column: the caller may add columns and closes the CTE with ``)``.
+# _HW_STEP_SQL is the recursive step's SELECT list with no FROM: the
+# caller may add columns and writes the FROM.
 _HW_SEED_SQL = """monthly AS (
       SELECT date_trunc('month', o_orderdate) AS m,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS x,
@@ -718,7 +722,7 @@ _HW_STEP_SQL = f"""sr.rn,
              list_concat(r.s[2:12],
                [{_HW_G} * (sr.x - ({_HW_A} * (sr.x - r.s[1])
                                    + {1 - _HW_A} * (r.l + r.b)))
-                + {1 - _HW_G} * r.s[1]]"""
+                + {1 - _HW_G} * r.s[1]])"""
 
 
 def _hw_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -773,7 +777,7 @@ _HW_FOLD_STEP = (
     rec AS (
       SELECT rn, l, b, s FROM seed
       UNION ALL
-      SELECT {_HW_STEP_SQL})
+      SELECT {_HW_STEP_SQL}
       FROM rec r JOIN series sr ON sr.rn = r.rn + 1),
     fin AS (SELECT MAX(rn) AS mx FROM rec)
     SELECT CAST(f.mx AS BIGINT) AS n_months,
@@ -828,7 +832,7 @@ def history_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     rec AS (
       SELECT rn, l, b, s, e FROM seed
       UNION ALL
-      SELECT {_HW_STEP_SQL}),
+      SELECT {_HW_STEP_SQL},
              r.e + ABS(sr.x - (r.l + r.b + r.s[1]))
       FROM rec r JOIN series sr ON sr.rn = r.rn + 1),
     fin AS (SELECT MAX(rn) AS mx FROM rec),

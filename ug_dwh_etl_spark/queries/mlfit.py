@@ -36,7 +36,9 @@ from ug_dwh_etl_spark.session import pinned
 # one shuffle regardless of input size. The 2x2 solve happens on the
 # single aggregated row.
 
-# The means and population (co)variances of quantity, discount and price.
+# The means and population (co)variances of quantity, discount and price:
+# a SELECT list with no FROM, to which the caller may add columns before
+# its ``FROM lineitem``.
 _OLS_MOMENTS_SQL = """SELECT CAST(COUNT(*) AS BIGINT) AS n,
              AVG(l_quantity)       AS mx1,
              AVG(l_discount)       AS mx2,
@@ -238,7 +240,9 @@ def fit_logreg_newton_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Each order's day ``d`` and its propensity label ``y`` (a hash coin
 # weighted by where ``d`` falls between the first and last order day):
-# the scored fixture of the AUC oracles, left open for extra columns.
+# the scored fixture of the AUC oracles. It ends inside the ``base`` CTE's
+# SELECT list, after ``y``: the caller may add columns and closes the CTE
+# with ``FROM raw, bounds)``.
 _AUC_LABEL_SQL = """raw AS (
       SELECT date_diff('day', DATE '1970-01-01', o_orderdate) AS d,
              ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
@@ -920,7 +924,9 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Each event's hour with its first/last-in-hour ranks, and the hourly
 # open/high/low/close bars over them: shared with the stream twin
-# stream_ohlc_hourly.
+# stream_ohlc_hourly. OHLC_BARS_SQL is the SELECT list after the hour
+# column, with its FROM and GROUP BY: the caller writes ``SELECT`` and
+# the hour column before it.
 OHLC_RANKED_CTE = """w AS (
       SELECT date_trunc('hour', ts) AS h, value,
              row_number() OVER (PARTITION BY date_trunc('hour', ts)

@@ -918,7 +918,9 @@ def _merge_changes(o: DataFrame) -> DataFrame:
     return updates.unionByName(inserts)
 
 
-def _status_totals(df: DataFrame) -> DataFrame:
+def status_totals(df: DataFrame) -> DataFrame:
+    """Order count and total price per ``o_orderstatus``: the read-back of
+    every orders snapshot table, here and in the orders ingest streams."""
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
         F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")), 2)
@@ -956,7 +958,7 @@ def storage_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = SnapshotTable(root)
         t.commit_overwrite(o.filter(F.col("o_orderdate") < "1996-01-01"))
         t.commit_merge(_merge_changes(o), key_cols=["o_orderkey"])
-    return _status_totals(t.read_as_of(spark))
+    return status_totals(t.read_as_of(spark))
 
 
 @register("storage_merge_on_read", _MERGE_ORACLE)
@@ -990,7 +992,7 @@ def storage_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.commit_overwrite(o.filter(F.col("o_orderdate") < "1996-01-01"))
         t.commit_merge_on_read(_merge_changes(o), key_cols=["o_orderkey"])
         t.compact_deletes(spark)
-    return _status_totals(t.read_as_of(spark))
+    return status_totals(t.read_as_of(spark))
 
 
 @register(
@@ -1199,7 +1201,7 @@ def storage_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fail=True,
             )
         t.publish_branch("audit")
-    return _status_totals(t.read_as_of(spark))
+    return status_totals(t.read_as_of(spark))
 
 
 @register(

@@ -101,6 +101,9 @@ _IVF_QDIST_ROWS = "\n      UNION ALL\n      ".join(
     f"SELECT {j} AS cluster, {sql_centroid_dist('qe', j)} AS qdist FROM q"
     for j in range(N_CENTROIDS)
 )
+# The probe of both IVF top-k queries: the _IVF_K nearest neighbors of
+# vector _IVF_QUERY_ID among its _IVF_N_PROBE nearest clusters.
+_IVF_QUERY_ID, _IVF_K, _IVF_N_PROBE = 0, 10, 2
 
 
 # --- IVF cluster assignment -----------------------------------------------------
@@ -126,25 +129,30 @@ def _ivf_topk_sql() -> str:
     d AS (SELECT vec_id, e, {_IVF_DISTS} FROM base),
     m AS (SELECT vec_id, e, {_IVF_LEAST} AS m, * EXCLUDE (vec_id, e) FROM d),
     a AS (SELECT vec_id, e, CASE {_IVF_CASE} END AS cluster FROM m),
-    q AS (SELECT e AS qe FROM base WHERE vec_id = 0),
+    q AS (SELECT e AS qe FROM base WHERE vec_id = {_IVF_QUERY_ID}),
     qd AS (
       {_IVF_QDIST_ROWS}
     ),
-    probe AS (SELECT cluster FROM qd ORDER BY qdist, cluster LIMIT 2)
+    probe AS (SELECT cluster FROM qd ORDER BY qdist, cluster LIMIT {_IVF_N_PROBE})
     SELECT vec_id,
            ROUND(list_dot_product(e, qe)
                  / (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(qe, qe))), 6) AS cosine
     FROM a JOIN probe USING (cluster), q
-    WHERE vec_id != 0
+    WHERE vec_id != {_IVF_QUERY_ID}
     ORDER BY list_dot_product(e, qe)
              / (sqrt(list_dot_product(e, e)) * sqrt(list_dot_product(qe, qe))) DESC, vec_id
-    LIMIT 10
+    LIMIT {_IVF_K}
     """
 
 
 @register("sim_ivf_topk", _ivf_topk_sql())
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ivf_topk(table(spark, sf_dir, "embeddings"), query_id=0, k=10, n_probe=2)
+    return ivf_topk(
+        table(spark, sf_dir, "embeddings"),
+        query_id=_IVF_QUERY_ID,
+        k=_IVF_K,
+        n_probe=_IVF_N_PROBE,
+    )
 
 
 # --- centroid distance per label (grouped vector aggregation) ----------------------
@@ -460,7 +468,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(table(spark, sf_dir, "embeddings"), query_id=0, k=10)
 
 
-def _ivfpq_sql(query_id: int = 0, k: int = 10, n_probe: int = 2) -> str:
+def _ivfpq_sql() -> str:
     from ug_dwh_etl_spark.operators.similarity import sql_pq_ctes
 
     return f"""
@@ -469,25 +477,25 @@ def _ivfpq_sql(query_id: int = 0, k: int = 10, n_probe: int = 2) -> str:
     dd AS (SELECT vec_id, e, {_IVF_DISTS} FROM base),
     m AS (SELECT vec_id, e, {_IVF_LEAST} AS m, * EXCLUDE (vec_id, e) FROM dd),
     assigned AS (SELECT vec_id, CASE {_IVF_CASE} END AS cluster FROM m),
-    q AS (SELECT e AS qe FROM base WHERE vec_id = {query_id}),
+    q AS (SELECT e AS qe FROM base WHERE vec_id = {_IVF_QUERY_ID}),
     qd AS (
       {_IVF_QDIST_ROWS}
     ),
-    probe AS (SELECT cluster FROM qd ORDER BY qdist, cluster LIMIT {n_probe}),
+    probe AS (SELECT cluster FROM qd ORDER BY qdist, cluster LIMIT {_IVF_N_PROBE}),
     lut AS (
       SELECT f.s, cb.c, SUM((f.v - cb.w) * (f.v - cb.w)) AS qd2
       FROM flat f JOIN cb ON cb.s = f.s AND cb.dim = f.dim
-      WHERE f.vec_id = {query_id}
+      WHERE f.vec_id = {_IVF_QUERY_ID}
       GROUP BY f.s, cb.c)
     SELECT c.vec_id, ROUND(SUM(l.qd2), 6) AS approx_d2
     FROM assigned a
       JOIN probe USING (cluster)
       JOIN codes c ON c.vec_id = a.vec_id
       JOIN lut l ON l.s = c.s AND l.c = c.code
-    WHERE a.vec_id != {query_id}
+    WHERE a.vec_id != {_IVF_QUERY_ID}
     GROUP BY c.vec_id
     ORDER BY ROUND(SUM(l.qd2), 6), c.vec_id
-    LIMIT {k}
+    LIMIT {_IVF_K}
     """
 
 
@@ -499,7 +507,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a shortlist as the optional final stage)."""
     from ug_dwh_etl_spark.operators.similarity import ivfpq_topk
 
-    return ivfpq_topk(table(spark, sf_dir, "embeddings"), query_id=0, k=10, n_probe=2)
+    return ivfpq_topk(
+        table(spark, sf_dir, "embeddings"),
+        query_id=_IVF_QUERY_ID,
+        k=_IVF_K,
+        n_probe=_IVF_N_PROBE,
+    )
 
 
 # --- one Lloyd iteration of k-means (centroid update + movement count) ---------
@@ -694,7 +707,11 @@ def sim_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- IVF tuning curve: recall@3 as a function of n_probe ------------------------
-def _ivf_recall_curve_sql(probes=(1, 2, 4), k: int = 3) -> str:
+# The probe depths the curve is measured at.
+_IVF_CURVE_PROBES = (1, 2, 4)
+
+
+def _ivf_recall_curve_sql() -> str:
     from ug_dwh_etl_spark.operators.similarity import N_CENTROIDS
 
     cos = ("list_dot_product(a.e, q.qe) / (sqrt(list_dot_product(a.e, a.e))"
@@ -708,7 +725,7 @@ def _ivf_recall_curve_sql(probes=(1, 2, 4), k: int = 3) -> str:
     )
     appr = []
     recs = []
-    for np_ in probes:
+    for np_ in _IVF_CURVE_PROBES:
         appr.append(f"""appr{np_} AS (
       SELECT q_id, vec_id FROM (
         SELECT q.q_id, a.vec_id, {cos} AS cs,
@@ -717,7 +734,7 @@ def _ivf_recall_curve_sql(probes=(1, 2, 4), k: int = 3) -> str:
         FROM q
           JOIN qprobe p ON p.q_id = q.q_id AND p.crnk <= {np_}
           JOIN a ON a.cluster = p.cluster AND a.vec_id <> q.q_id)
-      WHERE rn <= {k})""")
+      WHERE rn <= {_RECALL_K})""")
         recs.append(
             f"SELECT {np_} AS nprobe, e.q_id, COUNT(m.vec_id) AS n_match "
             f"FROM exact e LEFT JOIN appr{np_} m "
@@ -742,10 +759,10 @@ def _ivf_recall_curve_sql(probes=(1, 2, 4), k: int = 3) -> str:
                ROW_NUMBER() OVER (PARTITION BY q.q_id
                                   ORDER BY {cos_exact} DESC, c.vec_id) AS rn
         FROM q JOIN base c ON c.vec_id <> q.q_id)
-      WHERE rn <= {k}),
+      WHERE rn <= {_RECALL_K}),
     {','.join(appr)}
     SELECT nprobe, COUNT(*) AS n_queries,
-           ROUND(AVG(n_match / {k}.0), 6) AS avg_recall
+           ROUND(AVG(n_match / {_RECALL_K}.0), 6) AS avg_recall
     FROM ({' UNION ALL '.join(recs)})
     GROUP BY nprobe
     """
@@ -787,11 +804,11 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = Window.partitionBy("q_id").orderBy("qdist", "cluster")
     qprobe = qd.select("q_id", "cluster", F.row_number().over(wq).alias("crnk"))
 
-    def topk(cand, k=3):
+    def topk(cand):
         w = Window.partitionBy("q_id").orderBy(F.desc("cs"), F.asc("vec_id"))
         return (
             cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
+            .filter(F.col("rn") <= _RECALL_K)
             .select("q_id", F.col("vec_id").alias("neighbor_id"))
         )
 
@@ -810,7 +827,9 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     cand_all = (
         a.join(
-            F.broadcast(qprobe.filter(F.col("crnk") <= 4).join(q, "q_id")),
+            F.broadcast(
+                qprobe.filter(F.col("crnk") <= max(_IVF_CURVE_PROBES)).join(q, "q_id")
+            ),
             "cluster",
         )
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -820,7 +839,7 @@ def sim_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     curves = []
-    for np_ in (1, 2, 4):
+    for np_ in _IVF_CURVE_PROBES:
         # each vec_id lives in exactly one cluster and qprobe has one
         # row per (q_id, cluster), so filtering the shared relation on
         # crnk <= np_ IS the original per-depth join, row for row
@@ -1460,7 +1479,11 @@ def sim_quantize_binary_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_converged_sql(rounds: int = 3) -> str:
+# The Lloyd rounds of the k-means convergence trace.
+_KMEANS_ROUNDS = 3
+
+
+def _kmeans_converged_sql() -> str:
     from ug_dwh_etl_spark.operators.similarity import EMBED_DIM
 
     case = " ".join(f"WHEN d{j} = mind THEN {j}" for j in range(N_CENTROIDS))
@@ -1475,7 +1498,7 @@ def _kmeans_converged_sql(rounds: int = 3) -> str:
         f"a0 AS MATERIALIZED (SELECT vec_id, e, CASE {case} END AS cluster FROM m0)",
     ]
     stats = []
-    for i in range(1, rounds + 1):
+    for i in range(1, _KMEANS_ROUNDS + 1):
         p = i - 1
         parts.append(
             f"g{i} AS MATERIALIZED (SELECT cluster AS cand, {clist} AS c FROM "
@@ -1524,4 +1547,4 @@ def sim_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the shared cross-engine discipline of ivf_assign/kmeans_step)."""
     from ug_dwh_etl_spark.operators.similarity import kmeans_iterate
 
-    return kmeans_iterate(table(spark, sf_dir, "embeddings"), rounds=3)
+    return kmeans_iterate(table(spark, sf_dir, "embeddings"), rounds=_KMEANS_ROUNDS)

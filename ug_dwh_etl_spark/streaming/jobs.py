@@ -891,7 +891,7 @@ def _ingest_orders(spark: SparkSession, sf_dir: str, name: str, land) -> DataFra
 
     from ug_dwh_etl_spark.operators.snapshot_table import SnapshotTable
     from ug_dwh_etl_spark.queries.registry import scratch_dir
-    from ug_dwh_etl_spark.queries.scale import _status_totals
+    from ug_dwh_etl_spark.queries.scale import status_totals
 
     work = scratch_dir(name, sf_dir)
     src = os.path.join(work, "src")
@@ -934,7 +934,7 @@ def _ingest_orders(spark: SparkSession, sf_dir: str, name: str, land) -> DataFra
                 .awaitTermination()
             )
         open(done_marker, "a").close()
-    return _status_totals(table.read_as_of(spark))
+    return status_totals(table.read_as_of(spark))
 
 
 def stream_semantic_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
